@@ -10,8 +10,7 @@ the driver can't parse is an artifact that doesn't exist):
      "queries": {<name>: median_sec, ...}, "sf": 0.1,
      "headline_rounds": R,
      "extract": {"rows": N, "scaling_efficiency": e, "window_valid":
-                 true, "normalized_efficiency": e_n,
-                 "skew": {"salt1_spread": s1, "salt8_spread": s8}},
+                 true, "skew": {"salt1_spread": s1, "salt8_spread": s8}},
      "detail_file": "BENCH_DETAIL_r{N}.json"}
 
 The full evidence — every attempt with its run/steal series and
@@ -55,9 +54,12 @@ Three parts:
    spread (median/min) is ≤ 1.2 (residual contention the steal
    counter didn't see; quiet median/min is 1.0-1.1, and median/min
    rather than max/min keeps one slow outlier from voiding a
-   trustworthy median), AND the measured efficiency is in (0, 1.05]
-   (super-unit 4→16 scaling is physically implausible — a low level
-   poisoned by steal, not a fast engine).
+   trustworthy median), AND the first lo arm of the A-B-A schedule
+   (below) contributed at least one clean run (otherwise every clean
+   lo run lands after the hi block and the mirror symmetry is lost —
+   the attempt is stamped ``schedule_asymmetric``), AND the measured
+   efficiency is in (0, 1.05] (super-unit 4→16 scaling is physically
+   implausible — a low level poisoned by steal, not a fast engine).
    A SECOND bounded attempt runs **unconditionally whenever the
    wall-clock budget projection allows** (ADVICE r3: retrying only on
    low/invalid first readings is one-sided resampling; firing on a
@@ -71,29 +73,6 @@ Three parts:
    is window-valid the artifact says so (``window_valid: false``)
    instead of laundering a noisy number.
 
-   **Time-matched normalization (round 4):** this VM exhibits a slow
-   host-side per-core speed drift the steal counter cannot see (r4
-   window: the bare-kernel 4-process rate fell 25% across the window
-   while the 16-process rate held within 5% — the signature of
-   few-active-core frequency boost decaying under sustained load; no
-   cpufreq visibility, the guest reports a fixed 2100 MHz). Because
-   the lo level runs before the hi level, monotone drift deflates the
-   raw efficiency and trips the bracket. So every timed run is now
-   immediately preceded by a ~1 s bare-kernel probe at the SAME
-   process count, and a **time-matched efficiency** is computed from
-   per-run engine-rate / machine-rate ratios: eff_tm =
-   median(hi_rate_i / hw_hi_i) / median(lo_rate_j / hw_lo_j) over the
-   same steal-clean runs. In a quiet window this equals
-   raw / hw_ceiling (the already-recorded ``normalized_efficiency``);
-   in a drifting window the matched divisor cancels the drift to
-   first order. It is reported ALWAYS (symmetric — in quiet windows it
-   is typically slightly LOWER than raw since the hw ratio sits near
-   1.0), alongside raw, with its own validity flag ``tm_valid``
-   (probes self-consistent per level: min ≥ 0.55 × max — a collapsed
-   probe inflates its run and voids the estimate — plus the same
-   steal/eff-plausibility gates). ``window_valid`` keeps its bracket
-   meaning unchanged.
-
    Measured necessities retained from round 2 (details in BASELINE.md):
    full-job untimed warm runs; the SAME number of timed runs at both
    levels; efficiency from MEDIANS; forced double full-GCs between
@@ -102,13 +81,22 @@ Three parts:
    shuffle compression off (local mode has no network); fixed
    num_buckets across levels (byte-identical plan).
 
-   Round 5 adds the mirror-symmetric A-B-A schedule: the lo level is
+   **One drift correction: the A-B-A schedule.** This VM drifts in a
+   way the steal counter cannot see (few-active-core frequency boost
+   decaying or recovering under sustained load). The lo level is
    split into equal arms around the hi level (lo×m → hi×runs → lo×m,
-   m = ceil(runs/2), each arm a fresh JVM with its own warms), so the
-   lo median over the merged runs sits at the hi block's time-center
-   and a LINEAR clock drift cancels exactly in the raw ratio — the
-   drift-bias fix applied to RAW efficiency itself, complementing the
-   per-run time-matched estimator. See ``_scaling_attempt``.
+   each arm a fresh JVM with its own warms), so the lo median over the
+   merged runs sits at the hi block's time-center and a LINEAR clock
+   drift cancels exactly in the raw ratio. Together with the per-run
+   steal filter it is the only correction applied to the timings; the
+   bracketing probes above are a validity gate, never a divisor. See
+   ``_scaling_attempt``.
+
+   The level pair is LO_CORES=4 vs HI_CORES=min(16, CPUS). When
+   hi ≤ lo (a host with 4 or fewer CPUs) the scaling attempts are
+   skipped: the artifact carries the warning "scaling not measurable
+   on this host" and no efficiency. The protocol arithmetic takes the
+   two core counts as parameters, so it is testable on any host.
 
 2. **Skew/straggler evidence** (VERDICT r2 item 6): the same job at
    ``salt_buckets`` 1 vs 8 on the Zipf corpus (3 forced 50k-turn
@@ -135,20 +123,10 @@ head-clipped oversized lines) — full evidence always lands in the
 committed ``BENCH_DETAIL_r{N}.json`` side file.
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-BENCH_CONVS (default 100000 ≈ 0.62M turns incl. the mega tail — short
-runs × more of them beats long runs × few on this noise profile, and
-the bench MUST finish inside the driver's ~10-min kill even with
-steal-induced top-up runs),
-BENCH_SCALING=0 / BENCH_SKEW=0 / BENCH_HEADLINE=0 to skip parts,
-BENCH_RUNS (timed runs per level, default 3 — same at both levels,
-steal-contaminated levels top up with ≤2 extra runs),
-BENCH_QUERY_RUNS (default 3; the first 2 rounds are guaranteed, the
-3rd runs only when the measured round time projects inside budget),
-BENCH_LO_CORES / BENCH_HI_CORES (default 4 / 16), BENCH_RETRY=0 to
-disable the bounded retry, BENCH_COVERAGE=0 to skip the coverage tier
-(BENCH_COVERAGE_SF_DIR, default /root/testdata/sf0.01),
-BENCH_BUDGET_S (wall-clock budget guard, default 500 — the driver
-kills ~10 min).
+BENCH_SCALING=0 / BENCH_SKEW=0 / BENCH_HEADLINE=0 / BENCH_COVERAGE=0
+to skip parts, BENCH_COVERAGE_SF_DIR (see COVERAGE_SF_DIR below).
+Everything else is a constant below (corpus size, runs per level,
+query rounds, core counts, wall-clock budget and kill guard).
 """
 
 from __future__ import annotations
@@ -165,12 +143,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_CONVS = int(os.environ.get("BENCH_CONVS", "100000"))
-RUNS = int(os.environ.get("BENCH_RUNS", "3"))
-QUERY_RUNS = int(os.environ.get("BENCH_QUERY_RUNS", "3"))
-LO_CORES = int(os.environ.get("BENCH_LO_CORES", "4"))
-HI_CORES = min(int(os.environ.get("BENCH_HI_CORES", "16")), CPUS)
-BUDGET_S = float(os.environ.get("BENCH_BUDGET_S", "500"))
+# ≈ 0.62M turns incl. the mega tail — short runs × more of them beats
+# long runs × few on this noise profile, and the bench MUST finish
+# inside its caller's ~10-min kill even with steal-induced top-ups.
+N_CONVS = 100000
+RUNS = 3  # timed runs per level (same at both levels)
+QUERY_RUNS = 3  # headline rounds: 2 guaranteed, the 3rd budget-gated
+LO_CORES = 4
+HI_CORES = min(16, CPUS)
+BUDGET_S = 500.0  # soft wall-clock budget (the bench is killed at ~10 min)
 SEED = 42
 MEGA, MEGA_TURNS = 3, 50000  # forced skew: salting must earn its keep
 NUM_BUCKETS, SALT_BUCKETS = 256, 8
@@ -200,7 +181,7 @@ RETRY_COST_FRACTION = 0.85
 # The driver kills the bench process at ~10 min; a killed bench records
 # NO artifact, which is strictly worse than a 1-round flagged one, so
 # every phase-start decision also respects this hard wall.
-KILL_GUARD_S = float(os.environ.get("BENCH_KILL_GUARD_S", "585"))
+KILL_GUARD_S = 585.0
 
 T_START = time.time()
 
@@ -399,6 +380,40 @@ MIN_CLEAN_RUNS = 2
 MAX_EXTRA_RUNS = 2
 
 
+def _level_stats(times: list, rows: int, cores: int,
+                 min_clean: int = MIN_CLEAN_RUNS) -> dict:
+    """One parallelism level's dict from its ``(sec, steal_pct)`` runs:
+    the median over steal-clean runs, or over all runs (flagged
+    ``steal_contaminated``) when fewer than ``min_clean`` are clean."""
+    clean = [t for t, s in times if s <= STEAL_CLEAN_PCT]
+    contaminated = len(clean) < min_clean
+    med = statistics.median(clean if not contaminated else [t for t, _ in times])
+    best = min(t for t, _ in times)
+    return {
+        "sec": round(med, 3),
+        "best_sec": round(best, 3),
+        "all_runs_sec": [round(t, 2) for t, _ in times],
+        "run_steal_pct": [s for _, s in times],
+        "clean_runs": len(clean),
+        "steal_contaminated": contaminated,
+        "turns_per_sec": round(rows / med, 1),
+        "best_turns_per_sec": round(rows / best, 1),
+        "cores": cores,
+    }
+
+
+def _clean_runs(levels: list) -> list:
+    """Steal-clean run seconds pooled over ``levels`` (all runs when
+    nothing is clean)."""
+    clean = [
+        t
+        for lv in levels
+        for t, s in zip(lv["all_runs_sec"], lv["run_steal_pct"])
+        if s <= STEAL_CLEAN_PCT
+    ]
+    return clean or [t for lv in levels for t in lv["all_runs_sec"]]
+
+
 def _time_extract(master: str, cores: int, rows: int, runs: int,
                   max_extra: int = MAX_EXTRA_RUNS,
                   min_clean: int = MIN_CLEAN_RUNS) -> dict:
@@ -430,41 +445,23 @@ def _time_extract(master: str, cores: int, rows: int, runs: int,
         if cores >= 8:
             _noop(out)
             _noop(out)
-        times: list = []  # (sec, steal_pct, hw_rows_per_sec)
+        times: list = []  # (sec, steal_pct)
         budget_runs = runs + max_extra
         while len(times) < runs or (
-            sum(1 for _, s, _h in times if s <= STEAL_CLEAN_PCT) < min_clean
+            sum(1 for _, s in times if s <= STEAL_CLEAN_PCT) < min_clean
             and len(times) < budget_runs
         ):
             _double_gc(spark)
-            # time-matched machine-capability divisor for THIS run
-            # (JVM is idle here — post-GC, pre-run)
-            hw = _hw_probe_rate(cores)
             j0, s0 = _steal_counters()
             t0 = time.time()
             _noop(out)
             dt = time.time() - t0
             j1, s1 = _steal_counters()
             steal = 100.0 * (s1 - s0) / max(j1 - j0, 1)
-            times.append((dt, round(steal, 1), hw))
+            times.append((dt, round(steal, 1)))
     finally:
         spark.stop()
-    clean = [t for t, s, _h in times if s <= STEAL_CLEAN_PCT]
-    contaminated = len(clean) < min_clean
-    basis = clean if not contaminated else [t for t, _, _h in times]
-    med = statistics.median(basis)
-    return {
-        "sec": round(med, 3),
-        "best_sec": round(min(t for t, _, _h in times), 3),
-        "all_runs_sec": [round(t, 2) for t, _, _h in times],
-        "run_steal_pct": [s for _, s, _h in times],
-        "run_hw_rows_per_sec": [round(h) for _, _, h in times],
-        "clean_runs": len(clean),
-        "steal_contaminated": contaminated,
-        "turns_per_sec": round(rows / med, 1),
-        "best_turns_per_sec": round(rows / min(t for t, _, _h in times), 1),
-        "cores": cores,
-    }
+    return _level_stats(times, rows, cores, min_clean)
 
 
 def _hw_work(seed_ix: int) -> float:
@@ -481,22 +478,6 @@ def _hw_work(seed_ix: int) -> float:
     for r in rows:
         extract_turn(r["role"], r["text"])
     return len(rows) / (time.time() - t0)
-
-
-def _hw_probe_rate(procs: int) -> float:
-    """One best-of-2 bare-kernel rate reading at ``procs`` processes
-    (~1 s): the machine's concurrent capability at that parallelism,
-    taken immediately before a timed run so the run's engine rate can
-    be divided by a time-matched divisor. Best-of-2 because the probe
-    is a divisor — a contaminated (low) reading would inflate the
-    normalized rate, and contamination can only lower a reading."""
-    import multiprocessing as mp
-
-    totals = []
-    for _ in range(2):
-        with mp.Pool(procs) as pool:
-            totals.append(sum(pool.map(_hw_work, range(procs))))
-    return max(totals)
 
 
 def _hardware_ceiling(lo: int, hi: int) -> dict:
@@ -545,196 +526,86 @@ def _subprocess_json(args: list) -> dict:
     return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
-PROBE_CONSISTENCY = 0.55  # per-level min/max probe self-consistency
-
-
-def _tm_norm_rates(level: dict, rows: int) -> list:
-    """Per-run (engine rate / time-matched machine rate) ratios over
-    the level's steal-clean runs (all runs when nothing is clean —
-    same fallback as the raw pooling). Empty if the level carries no
-    per-run probes (pre-r4 artifact shape)."""
-    hw = level.get("run_hw_rows_per_sec")
-    if not hw:
-        return []
-    trip = list(zip(level["all_runs_sec"], level["run_steal_pct"], hw))
-    clean = [(t, h) for t, s, h in trip if s <= STEAL_CLEAN_PCT]
-    use = clean or [(t, h) for t, _s, h in trip]
-    return [(rows / t) / h for t, h in use]
-
-
-def _probes_consistent(level: dict) -> bool:
-    hw = level.get("run_hw_rows_per_sec") or []
-    return bool(hw) and min(hw) >= PROBE_CONSISTENCY * max(hw)
-
-
-def _pooled_tm(attempts: list, rows: int) -> dict | None:
-    """Time-matched efficiency pooled across attempts: median over
-    per-run normalized rates from tm-valid attempts (all probe-bearing
-    attempts when none is tm-valid — recorded with tm_valid false)."""
-    valid = [a for a in attempts if a.get("tm_valid")]
-    usable = valid or [
-        a for a in attempts
-        if a[f"local{LO_CORES}"].get("run_hw_rows_per_sec")
-    ]
-    lo = [r for a in usable for r in _tm_norm_rates(a[f"local{LO_CORES}"], rows)]
-    hi = [r for a in usable for r in _tm_norm_rates(a[f"local{HI_CORES}"], rows)]
-    if not lo or not hi:
-        return None
-    return {
-        "efficiency_time_matched": round(
-            statistics.median(hi) / statistics.median(lo), 3
-        ),
-        "tm_valid": bool(valid),
-        "n_attempts_pooled": len(usable),
-    }
-
-
 def _merge_levels(a: dict, b: dict, rows: int) -> dict:
     """Merge two timed sub-levels of the SAME parallelism (the two lo
     arms of the A-B-A schedule) into one level dict: run lists
-    concatenate, the clean/contaminated decision and the median basis
-    are recomputed over the union — identical math to
-    ``_time_extract``'s tail."""
+    concatenate, and the clean/contaminated decision and the median
+    basis are recomputed over the union."""
     times = [
-        (t, s, h)
+        (t, s)
         for lv in (a, b)
-        for t, s, h in zip(
-            lv["all_runs_sec"], lv["run_steal_pct"], lv["run_hw_rows_per_sec"]
-        )
+        for t, s in zip(lv["all_runs_sec"], lv["run_steal_pct"])
     ]
-    clean = [t for t, s, _h in times if s <= STEAL_CLEAN_PCT]
-    contaminated = len(clean) < MIN_CLEAN_RUNS
-    basis = clean if not contaminated else [t for t, _, _h in times]
-    med = statistics.median(basis)
-    return {
-        "sec": round(med, 3),
-        "best_sec": round(min(t for t, _, _h in times), 3),
-        "all_runs_sec": [round(t, 2) for t, _, _h in times],
-        "run_steal_pct": [s for _, s, _h in times],
-        "run_hw_rows_per_sec": [round(h) for _, _, h in times],
-        "clean_runs": len(clean),
-        "steal_contaminated": contaminated,
-        "turns_per_sec": round(rows / med, 1),
-        "best_turns_per_sec": round(rows / min(t for t, _, _h in times), 1),
-        "cores": a["cores"],
-    }
+    return _level_stats(times, rows, a["cores"])
 
 
-def _scaling_attempt(runs: int, rows: int, idx: int) -> dict:
-    """One bracketed scaling pass: hw probe → lo → hi → lo → hw probe
-    (A-B-A), each Spark level arm in its own subprocess. Window-valid
-    iff both probes are sane, both levels have enough steal-clean
-    runs, and the efficiency is physically plausible. Extra top-up
+def _scaling_attempt(runs: int, rows: int, idx: int, lo: int, hi: int) -> dict:
+    """One bracketed scaling pass at ``lo`` vs ``hi`` cores: hw probe →
+    lo×m → hi×runs → lo×m → hw probe, each Spark level arm in its own
+    subprocess (see the module docstring for the gates). Extra top-up
     runs are granted only while the global wall-clock budget allows —
-    a killed bench records NO artifact, which is strictly worse than a
-    flagged one.
+    a killed bench records NO artifact.
 
-    The A-B-A split (round 5): running ALL lo runs before ALL hi runs
-    puts the lo level's time-centroid a full level-width before the
-    hi level's, so this VM's monotone clock drift (few-active-core
-    boost decaying or recovering, BASELINE.md) lands asymmetrically
-    and biases RAW efficiency in whichever direction the drift points.
-    The fix is SYMMETRIC arms: lo×m → hi×runs → lo×m with
-    m = ceil(runs/2). The lo median over the merged 2m runs is the
-    mean of the two middle runs, which by the schedule's mirror
-    symmetry sits at the hi block's time-center — so a linear drift
-    shifts both level medians by the SAME factor and cancels exactly
-    in the ratio (pinned by unit test; the residual is second-order
-    drift curvature). Direction-neutral by construction — it was not
-    chosen after seeing a favorable number, and every attempt is
-    recorded. Cost: one extra JVM + warms; the arm size m adapts to
-    the budget — m=1 inside a full bench (2 lo runs total, roughly
-    cost-neutral vs the old 3-run block, protecting the headline and
-    coverage tiers from the 585 s kill guard) and m=ceil(runs/2) in a
-    scaling-only pass (4 lo runs, the stronger sample). Either way the
-    mirror symmetry — equal arms around a centered hi block — is what
-    buys the cancellation; hi keeps ``runs`` runs."""
+    Why A-B-A: with ALL lo runs before ALL hi runs, this VM's monotone
+    clock drift lands asymmetrically and biases raw efficiency. With
+    equal lo arms around a centered hi block, the lo median over the
+    merged 2m runs sits at the hi block's time-center, so a linear
+    drift shifts both level medians by the SAME factor and cancels in
+    the ratio (pinned by unit test; the residual is second-order). The
+    arm size adapts to the budget: m=1 inside a full bench (protecting
+    the headline and coverage tiers from the kill guard), m=ceil(runs/2)
+    in a scaling-only pass. If arm A yields no clean run, every clean lo
+    run lands after the hi block: the attempt is stamped
+    ``schedule_asymmetric`` and is not window-valid."""
     def extra_allowance() -> int:
         return MAX_EXTRA_RUNS if _elapsed() < BUDGET_S * 0.55 else 0
 
+    def level(cores: int, n: int, extra: int,
+              min_clean: int = MIN_CLEAN_RUNS) -> dict:
+        return _subprocess_json(
+            ["--time-level", f"local[{cores}]", str(cores), str(rows),
+             str(n), str(extra), str(min_clean)]
+        )
+
     headline_on = os.environ.get("BENCH_HEADLINE", "1") != "0"
-    hw_pre = _hardware_ceiling(LO_CORES, HI_CORES)
+    hw_pre = _hardware_ceiling(lo, hi)
     arm = 1 if headline_on else max(1, (runs + 1) // 2)
     # Per-arm clean quota: the MIN_CLEAN_RUNS=2 requirement applies to
     # the MERGED lo level (recomputed in _merge_levels), so a 1-run arm
     # must not top itself up to 2 — that cost ~22 s/pass and left the
     # arms 1-vs-2 asymmetric. Arm A runs its exact count; arm B tops up
     # only what the merged level still needs given arm A's clean runs.
-    lo_a = _subprocess_json(
-        ["--time-level", f"local[{LO_CORES}]", str(LO_CORES), str(rows),
-         str(arm), "0", str(min(MIN_CLEAN_RUNS, arm))]
-    )
-    hi = _subprocess_json(
-        ["--time-level", f"local[{HI_CORES}]", str(HI_CORES), str(rows),
-         str(runs), str(extra_allowance())]
-    )
-    lo_b = _subprocess_json(
-        ["--time-level", f"local[{LO_CORES}]", str(LO_CORES), str(rows),
-         str(arm), str(extra_allowance()),
-         str(max(1, MIN_CLEAN_RUNS - lo_a["clean_runs"]))]
-    )
-    lo = _merge_levels(lo_a, lo_b, rows)
-    hw_post = _hardware_ceiling(LO_CORES, HI_CORES)
-    eff = (hi["turns_per_sec"] / lo["turns_per_sec"]) / (HI_CORES / LO_CORES)
+    lo_a = level(lo, arm, 0, min(MIN_CLEAN_RUNS, arm))
+    hi_lv = level(hi, runs, extra_allowance())
+    lo_b = level(lo, arm, extra_allowance(),
+                 max(1, MIN_CLEAN_RUNS - lo_a["clean_runs"]))
+    lo_lv = _merge_levels(lo_a, lo_b, rows)
+    hw_post = _hardware_ceiling(lo, hi)
+    eff = (hi_lv["turns_per_sec"] / lo_lv["turns_per_sec"]) / (hi / lo)
     hw_ok = all(
         SANE_HW[0] <= p["efficiency"] <= SANE_HW[1] for p in (hw_pre, hw_post)
     )
-    steal_ok = not (lo["steal_contaminated"] or hi["steal_contaminated"])
-    # Residual-spread gate over the CLEAN runs, MEDIAN/MIN (not
-    # max/min): one slow outlier among 4 runs leaves the median
-    # trustworthy and should not void the attempt, but a clean-run
-    # median pulled >20% above the fastest run means something the
-    # steal counter didn't see contaminated the middle of the
-    # distribution (quiet-window median/min is 1.0-1.1). Round 5:
-    # each run is drift-normalized by its own bracketing machine
-    # probe (t_i · hw_i = the run's machine-work units) before the
-    # spread is taken — the A-B-A schedule deliberately spaces the lo
-    # arms across the window, so a clock drift between arms is
-    # EXPECTED and cancelled by the mirror design, and it must not
-    # void the window; what the gate hunts is residual contamination
-    # the steal counter and the probes BOTH missed. Runs without a
-    # probe (pre-r4 shape) fall back to raw seconds.
-    def _clean(level):
-        hw = level.get("run_hw_rows_per_sec") or [None] * len(
-            level["all_runs_sec"]
-        )
-        med_hw = statistics.median([h for h in hw if h]) if any(hw) else None
-        runs_ = [
-            t * (h / med_hw if h and med_hw else 1.0)
-            for t, s, h in zip(level["all_runs_sec"], level["run_steal_pct"], hw)
-            if s <= STEAL_CLEAN_PCT
-        ]
-        return runs_ or [
-            t * (h / med_hw if h and med_hw else 1.0)
-            for t, h in zip(level["all_runs_sec"], hw)
-        ]
-
+    steal_ok = not (lo_lv["steal_contaminated"] or hi_lv["steal_contaminated"])
+    asymmetric = lo_a["clean_runs"] == 0
+    # Residual-spread gate over each level's raw steal-clean seconds,
+    # MEDIAN/MIN (not max/min): one slow outlier among 4 runs leaves
+    # the median trustworthy and should not void the attempt, but a
+    # clean-run median pulled >20% above the fastest run means
+    # something the steal counter didn't see contaminated the middle
+    # of the distribution (quiet-window median/min is 1.0-1.1).
     spread = max(
-        statistics.median(_clean(x)) / max(min(_clean(x)), 1e-9)
-        for x in (lo, hi)
+        statistics.median(c) / max(min(c), 1e-9)
+        for c in (_clean_runs([lo_lv]), _clean_runs([hi_lv]))
     )
     spread_ok = spread <= MAX_RUN_SPREAD
-    lo_norm = _tm_norm_rates(lo, rows)
-    hi_norm = _tm_norm_rates(hi, rows)
-    eff_tm = (
-        round(statistics.median(hi_norm) / statistics.median(lo_norm), 3)
-        if lo_norm and hi_norm
-        else None
-    )
-    tm_ok = bool(
-        eff_tm is not None
-        and _probes_consistent(lo)
-        and _probes_consistent(hi)
-        and steal_ok
-        and 0 < eff_tm <= MAX_EFF
-    )
     return {
         "attempt": idx,
         "runs_per_level": runs,
         "schedule": f"lo×{arm} → hi×{runs} → lo×{arm}"
                     " (A-B-A, mirror-symmetric)",
-        f"local{LO_CORES}": lo,
-        f"local{HI_CORES}": hi,
+        "schedule_asymmetric": asymmetric,
+        "lo": lo_lv,
+        "hi": hi_lv,
         "hw_probe_before": hw_pre,
         "hw_probe_after": hw_post,
         "efficiency": round(eff, 3),
@@ -742,32 +613,21 @@ def _scaling_attempt(runs: int, rows: int, idx: int) -> dict:
         "steal_clean": steal_ok,
         "run_spread": round(spread, 2),
         "run_spread_sane": spread_ok,
-        "efficiency_time_matched": eff_tm,
-        "tm_valid": tm_ok,
         "window_valid": bool(
-            hw_ok and steal_ok and spread_ok and 0 < eff <= MAX_EFF
+            hw_ok and steal_ok and spread_ok and not asymmetric
+            and 0 < eff <= MAX_EFF
         ),
     }
 
 
-def _pooled_efficiency(attempts: list, rows: int) -> dict:
+def _pooled_efficiency(attempts: list, rows: int, lo: int, hi: int) -> dict:
     """Headline from the MEDIAN over per-level CLEAN (steal-filtered)
     runs pooled across the given attempts (ADVICE r2: never promote
     max-of-attempts; falls back to all runs when nothing is clean)."""
-
-    def pool(key):
-        clean = [
-            t
-            for a in attempts
-            for t, s in zip(a[key]["all_runs_sec"], a[key]["run_steal_pct"])
-            if s <= STEAL_CLEAN_PCT
-        ]
-        return clean or [t for a in attempts for t in a[key]["all_runs_sec"]]
-
-    lo_all = pool(f"local{LO_CORES}")
-    hi_all = pool(f"local{HI_CORES}")
+    lo_all = _clean_runs([a["lo"] for a in attempts])
+    hi_all = _clean_runs([a["hi"] for a in attempts])
     lo_med, hi_med = statistics.median(lo_all), statistics.median(hi_all)
-    eff = (lo_med / hi_med) / (HI_CORES / LO_CORES)
+    eff = (lo_med / hi_med) / (hi / lo)
     return {
         "lo_median_sec": round(lo_med, 3),
         "hi_median_sec": round(hi_med, 3),
@@ -998,6 +858,13 @@ def main() -> int:
 
     # ---- parts 1-2: corpus → skew → scaling attempts -----------------
     if os.environ.get("BENCH_SCALING", "1") != "0":
+        measurable = HI_CORES > LO_CORES
+        if not measurable:
+            # appended first: _fit_line keeps the first two warnings
+            warnings.append(
+                f"scaling not measurable on this host ({CPUS} CPUs: "
+                f"lo {LO_CORES} vs hi {HI_CORES} cores)"
+            )
         rows = _ensure_corpus()
         phases["corpus"] = round(_elapsed(), 1)
 
@@ -1019,104 +886,75 @@ def main() -> int:
                 warnings.append("skew_evidence skipped: wall-clock budget")
         phases["skew_done_at"] = round(_elapsed(), 1)
 
-        # ---- part 1a: first scaling attempt --------------------------
-        t_a1 = time.time()
-        attempts = [_scaling_attempt(RUNS, rows, 1)]
-        attempt1_sec = time.time() - t_a1
-        phases["attempt1_done_at"] = round(_elapsed(), 1)
+        cores = {"lo": LO_CORES, "hi": HI_CORES}
+        detail["extract"] = {"rows": rows, "cores": cores}
+        # Compact carries only the headline scaling numbers + validity
+        # flags; attempts and per-run evidence are in the DETAIL file
+        # (the final line must fit LINE_BUDGET).
+        compact["extract"] = {"rows": rows, "cores": cores}
+        if measurable:
+            # ---- part 1a: first scaling attempt ----------------------
+            t_a1 = time.time()
+            attempts = [_scaling_attempt(RUNS, rows, 1, LO_CORES, HI_CORES)]
+            attempt1_sec = time.time() - t_a1
+            phases["attempt1_done_at"] = round(_elapsed(), 1)
 
-        # ---- part 1b: symmetric second attempt, budget-projected -----
-        # Fires on a projection made WITHOUT reading attempt 1's
-        # efficiency (ADVICE r3: a retry conditioned on a low first
-        # reading is one-sided resampling), and only if a 2-round
-        # headline still fits afterwards (VERDICT r3 item 1: the cap
-        # includes the retry; skew already ran above). At the default
-        # 500 s budget a cold round typically cannot afford it — the
-        # warning records that the skip was budget-driven, not
-        # reading-driven.
-        projected_retry = attempt1_sec * RETRY_COST_FRACTION
-        if (
-            os.environ.get("BENCH_RETRY", "1") != "0"
-            and _elapsed() + projected_retry <= BUDGET_S - headline_reserve(2)
-        ):
-            attempts.append(_scaling_attempt(2, rows, 2))
-        else:
-            warnings.append(
-                "second scaling attempt skipped: budget projection "
-                f"({round(_elapsed())}s elapsed + ~{round(projected_retry)}s "
-                "retry would starve the skew/headline reserve)"
-            )
-        phases["scaling_done_at"] = round(_elapsed(), 1)
-
-        valid = [a for a in attempts if a["window_valid"]]
-        pool = valid if valid else attempts
-        pooled = _pooled_efficiency(pool, rows)
-        hw_effs = [
-            p["efficiency"]
-            for a in valid
-            for p in (a["hw_probe_before"], a["hw_probe_after"])
-        ]
-        hw_mean = round(statistics.mean(hw_effs), 3) if hw_effs else None
-        if hw_mean is not None and 0 < hw_mean <= SANE_HW[1]:
-            # ceiling is a capability bound: cap the divisor at 1.0
-            normalized = round(pooled["efficiency"] / min(1.0, hw_mean), 3)
-        else:
-            normalized = None
-            if valid:
-                warnings.append("normalization skipped: implausible hw ceiling")
-        tm = _pooled_tm(attempts, rows)
-        if not valid:
-            if tm and tm["tm_valid"]:
-                warnings.append(
-                    "no bracket-valid scaling attempt (raw headline is "
-                    "drift-deflated); the time-matched normalized "
-                    "efficiency stands — per-run probes were "
-                    "self-consistent and steal-clean"
+            # ---- part 1b: symmetric second attempt, budget-projected -
+            # Fires on a projection made WITHOUT reading attempt 1's
+            # efficiency (ADVICE r3: a retry conditioned on a low first
+            # reading is one-sided resampling), and only if a 2-round
+            # headline still fits afterwards (VERDICT r3 item 1: the
+            # cap includes the retry; skew already ran above). At the
+            # default 500 s budget a cold round typically cannot afford
+            # it — the warning records that the skip was budget-driven,
+            # not reading-driven.
+            projected_retry = attempt1_sec * RETRY_COST_FRACTION
+            if _elapsed() + projected_retry <= BUDGET_S - headline_reserve(2):
+                attempts.append(
+                    _scaling_attempt(2, rows, 2, LO_CORES, HI_CORES)
                 )
             else:
+                warnings.append(
+                    "second scaling attempt skipped: budget projection "
+                    f"({round(_elapsed())}s elapsed + "
+                    f"~{round(projected_retry)}s retry would starve the "
+                    "skew/headline reserve)"
+                )
+            phases["scaling_done_at"] = round(_elapsed(), 1)
+
+            valid = [a for a in attempts if a["window_valid"]]
+            pooled = _pooled_efficiency(
+                valid or attempts, rows, LO_CORES, HI_CORES
+            )
+            if not valid:
                 warnings.append(
                     "no window-valid scaling attempt: headline pooled over "
                     "all attempts; treat as measurement failure, not an "
                     "engine number"
                 )
-        detail["extract"] = {
-            "rows": rows,
-            "cores": {"lo": LO_CORES, "hi": HI_CORES},
-            "scaling_efficiency": pooled["efficiency"],
-            "window_valid": bool(valid),
-            "first_attempt_efficiency": attempts[0]["efficiency"],
-            "pooled": pooled,
-            "time_matched": tm,
-            "attempts": attempts,
-            "hw_ceiling_mean": hw_mean,
-            "normalized_efficiency": normalized,
-            "selection_rule": (
-                "headline = median over all per-level runs pooled from "
-                f"window-valid attempts (both bracketing hw probes in "
-                f"[{SANE_HW[0]}, {SANE_HW[1]}] and eff in (0, {MAX_EFF}]); "
-                "never max-of-attempts; all attempts recorded; second "
-                "attempt fires on budget projection alone (symmetric); "
-                "time_matched = median(per-run engine/machine rate) ratio "
-                "hi/lo, ALWAYS reported alongside raw (drift-cancelling "
-                "— see module docstring)"
-            ),
-        }
-        # Compact carries only the headline scaling numbers + validity
-        # flags; attempt counts / hw ceiling / per-run evidence are in
-        # the DETAIL file (the final line must fit LINE_BUDGET).
-        compact["extract"] = {
-            "rows": rows,
-            "cores": {"lo": LO_CORES, "hi": HI_CORES},
-            "scaling_efficiency": pooled["efficiency"],
-            "window_valid": bool(valid),
-            "normalized_efficiency": normalized,
-            "scaling_efficiency_time_matched": (
-                tm and tm["efficiency_time_matched"]
-            ),
-            "tm_valid": bool(tm and tm["tm_valid"]),
-            "lo_turns_per_sec": pooled["lo_turns_per_sec"],
-            "hi_turns_per_sec": pooled["hi_turns_per_sec"],
-        }
+            detail["extract"].update({
+                "scaling_efficiency": pooled["efficiency"],
+                "window_valid": bool(valid),
+                "first_attempt_efficiency": attempts[0]["efficiency"],
+                "pooled": pooled,
+                "attempts": attempts,
+                "selection_rule": (
+                    "headline = median over steal-clean per-level runs "
+                    "pooled from window-valid attempts (both bracketing "
+                    f"hw probes in [{SANE_HW[0]}, {SANE_HW[1]}], "
+                    f">= {MIN_CLEAN_RUNS} clean runs per level, clean-run "
+                    f"median/min <= {MAX_RUN_SPREAD}, symmetric A-B-A "
+                    f"arms, eff in (0, {MAX_EFF}]); never max-of-attempts; "
+                    "all attempts recorded; second attempt fires on "
+                    "budget projection alone (symmetric)"
+                ),
+            })
+            compact["extract"].update({
+                "scaling_efficiency": pooled["efficiency"],
+                "window_valid": bool(valid),
+                "lo_turns_per_sec": pooled["lo_turns_per_sec"],
+                "hi_turns_per_sec": pooled["hi_turns_per_sec"],
+            })
         skew = detail.get("skew_evidence") or {}
         if "salt1" in skew and "salt8" in skew:
             compact["extract"]["skew"] = {

@@ -138,15 +138,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.array_distinct(acc)
 
 
-def shingles_col(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles of the normalized token stream.
-
-    Callers doing heavy shingle work should materialize
-    ``tokens_col(text)`` in a projection first and use
-    ``shingles_from_tokens`` so the tokenizer runs once per row."""
-    return shingles_from_tokens(tokens_col(text), k)
-
-
 def simhash_cols(hash_col: Column, bits: int = 60):
     """Per-bit ±1 vote aggregates for SimHash. Returns the list of agg
     expressions (sum per bit) to use in a groupBy, and a finisher that

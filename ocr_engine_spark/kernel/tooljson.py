@@ -1,9 +1,12 @@
 """Tool-output JSON probe + stable flatten (SURVEY.md §2.3 F6).
 
-``first_json_object`` reproduces the reference's probe exactly
-(/root/reference/app.py:214-224, ocr_any.py:164-176): empty text →
-``{}``; first DOTALL match of ``\\{.*\\}`` (greedy — spans from the
-first "{" to the *last* "}"); ``json.loads`` failure → ``{}``.
+``first_json_object`` reproduces the reference app's probe exactly:
+empty text → ``{}``; the first DOTALL match of the greedy ``\\{.*\\}``,
+which spans from the first "{" to the *last* "}"; ``json.loads``
+failure → ``{}``. The span is found with ``find`` / ``rfind`` rather
+than the regex: same result, but linear time — the regex rescans to
+the end of the input from every "{" when no "}" follows, which is
+quadratic on brace-heavy text.
 
 ``flatten_json`` renders the probed object to deterministic
 ``path: value`` lines, depth-first in insertion order (``json.loads``
@@ -16,26 +19,23 @@ rendering round-trips.
 from __future__ import annotations
 
 import json
-import re
 from typing import Any, Dict, List
-
-_JSON_OBJ_RE = re.compile(r"\{.*\}", re.DOTALL)
 
 
 def first_json_object(text: str | None) -> Dict:
     """Parity: /root/reference/app.py:214-224."""
     if not text:
         return {}
-    m = _JSON_OBJ_RE.search(text)
-    if not m:
+    i, j = text.find("{"), text.rfind("}")
+    if i < 0 or j < i:  # no "{", or no "}" after the first "{"
         return {}
     try:
-        obj = json.loads(m.group(0))
+        obj = json.loads(text[i:j + 1])
     except Exception:
         return {}
-    # json.loads can return non-dict only if the regex matched an
-    # object-looking region; with a {...} match the root is a dict or
-    # the parse fails, but guard anyway.
+    # json.loads can return non-dict only if the span is not
+    # object-looking; with a {...} span the root is a dict or the
+    # parse fails, but guard anyway.
     return obj if isinstance(obj, dict) else {}
 
 

@@ -59,11 +59,3 @@ def sort_within_buckets(df: DataFrame) -> DataFrame:
     the extraction *output* (see shuffle_by_bucket on why after)."""
     return df.sortWithinPartitions("conv_id", "turn_idx")
 
-
-def partition_by_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
-    """Shuffle + sort in one step (pre-extraction ordering). Kept for
-    callers that need sorted *input*; the extraction plan uses
-    shuffle_by_bucket → extract → sort_within_buckets instead."""
-    return shuffle_by_bucket(df, num_buckets).sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )

@@ -6,10 +6,12 @@
   ``ORDER BY score LIMIT k`` which Spark executes as TakeOrdered
   (per-partition top-k, tiny shuffle of k·partitions rows — no global
   sort).
-- ``lsh_buckets`` / ``lsh_topk``: random-hyperplane LSH — the scale
-  path. Hyperplane weights are derived from md5(plane, dim) parity, so
-  the bucketing is engine-portable (exact DuckDB oracle) and needs no
-  stored model. Search touches only the query's bucket.
+- ``lsh_bucket_col`` / ``lsh_buckets_literal``: random-hyperplane
+  LSH — the scale path. Hyperplane weights are derived from
+  md5(plane, dim) parity, so the bucketing is engine-portable (exact
+  DuckDB oracle) and needs no stored model. Search computes the
+  query's bucket in plain Python with ``bucket_of`` and ranks only
+  that bucket.
 
 Scores are rounded to 6 dp before ranking so results are stable across
 engines' float summation orders; ties break on vec_id.
@@ -19,7 +21,7 @@ from __future__ import annotations
 
 from typing import List, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,10 +55,10 @@ def cosine_topk(emb: DataFrame, query: Sequence[float], k: int = 10,
 
 def plane_weight_lists(num_planes: int = 8, dims: int = 64) -> List[List[int]]:
     """Deterministic ±1 hyperplanes as Python lists: w[j][d] = +1 iff
-    the first md5 hex byte of "j_d" is even. Same formula as
-    ``plane_weights`` (engine md5 == hashlib md5), usable to embed the
-    planes as literals in both Spark plans and DuckDB oracle SQL —
-    which makes the fold order explicit and the result engine-exact."""
+    the first md5 hex byte of "j_d" is even (engine md5 == hashlib
+    md5), usable to embed the planes as literals in both Spark plans
+    and DuckDB oracle SQL — which makes the fold order explicit and the
+    result engine-exact."""
     import hashlib
 
     return [
@@ -104,58 +106,6 @@ def lsh_buckets_literal(emb: DataFrame, planes: List[List[int]],
     """Sign-bucket with literal hyperplanes. Scale: one projection over
     the scan, no joins, no shuffle at all."""
     return emb.select(F.col(id_col), lsh_bucket_col(planes, vec_col).alias("bucket"))
-
-
-def plane_weights(spark: SparkSession, num_planes: int = 8, dims: int = 64) -> DataFrame:
-    """Deterministic ±1 hyperplanes: w[j,d] = +1 iff the first hex byte
-    of md5('j_d') is even. A (planes×dims) table — broadcast-sized at
-    any realistic dimensionality."""
-    planes = spark.range(num_planes).select(F.col("id").alias("plane"))
-    dim = spark.range(dims).select(F.col("id").alias("dim"))
-    return planes.crossJoin(dim).select(
-        "plane",
-        "dim",
-        F.when(
-            F.conv(
-                F.substring(F.md5(F.concat_ws("_", "plane", "dim")), 1, 2), 16, 10
-            ).cast("int") % 2 == 0,
-            F.lit(1),
-        ).otherwise(F.lit(-1)).alias("w"),
-    )
-
-
-def lsh_buckets(emb: DataFrame, weights: DataFrame,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                num_planes: int = 8) -> DataFrame:
-    """Sign-bucket every vector: bucket = Σ_j 2^j · [v·w_j > 0].
-
-    Shape: posexplode(vec) ⋈ broadcast(weights) → per-(vec, plane)
-    dot partials → two partial-aggregating groupBys. The big side is
-    touched exactly once; everything shuffled is pre-aggregated."""
-    comps = emb.select(
-        F.col(id_col), F.posexplode(F.col(vec_col)).alias("dim", "v")
-    )
-    dots = (
-        comps.join(F.broadcast(weights), "dim")
-        .groupBy(id_col, "plane")
-        .agg(F.sum(F.col("v").cast("double") * F.col("w")).alias("dot"))
-    )
-    return dots.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("dot") > 0, F.shiftleft(F.lit(1).cast("long"), F.col("plane").cast("int"))).otherwise(0)
-        ).alias("bucket")
-    )
-
-
-def lsh_topk(emb: DataFrame, weights: DataFrame, query: Sequence[float],
-             query_bucket: int, k: int = 10,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN: rank by cosine only within the query's LSH bucket."""
-    buckets = lsh_buckets(emb, weights, id_col, vec_col)
-    in_bucket = emb.join(
-        buckets.filter(F.col("bucket") == query_bucket).select(id_col), id_col
-    )
-    return cosine_topk(in_bucket, query, k, id_col, vec_col)
 
 
 def multiprobe_masks(num_planes: int, radius: int = 1) -> List[int]:

@@ -319,10 +319,6 @@ def transcripts_from_documents_malformed(spark: SparkSession, sf_dir: str) -> Da
     )
 
 
-def write_extracted(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).format(table_format()).save(path)
-
-
 def read_audit(spark: SparkSession, path: str) -> Optional[DataFrame]:
     try:
         return (

@@ -13,6 +13,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 import bench
 
+# Explicit core counts: the protocol arithmetic takes them as
+# parameters, so these tests do not depend on the host's CPU count.
+LO, HI = 4, 16
+
 
 def _level(runs_sec, steal_pct, cores):
     import statistics
@@ -33,8 +37,8 @@ def _level(runs_sec, steal_pct, cores):
 
 def _attempt(lo_runs, lo_steal, hi_runs, hi_steal):
     return {
-        f"local{bench.LO_CORES}": _level(lo_runs, lo_steal, bench.LO_CORES),
-        f"local{bench.HI_CORES}": _level(hi_runs, hi_steal, bench.HI_CORES),
+        "lo": _level(lo_runs, lo_steal, LO),
+        "hi": _level(hi_runs, hi_steal, HI),
     }
 
 
@@ -43,7 +47,7 @@ def test_pooled_efficiency_uses_only_steal_clean_runs():
     # pool it would inflate lo_median and therefore the efficiency.
     a = _attempt([20.0, 20.0, 40.0], [1.0, 2.0, 20.0],
                  [5.0, 5.0, 5.0], [0.0, 0.0, 0.0])
-    out = bench._pooled_efficiency([a], rows=1000)
+    out = bench._pooled_efficiency([a], rows=1000, lo=LO, hi=HI)
     assert out["lo_median_sec"] == 20.0  # 40s run excluded
     assert out["efficiency"] == round((20.0 / 5.0) / 4, 3)
     assert out["n_clean_runs_pooled"] == {"lo": 2, "hi": 3}
@@ -54,7 +58,7 @@ def test_pooled_efficiency_is_median_not_max_across_attempts():
     # their runs (median), never pick the better attempt.
     a1 = _attempt([20.0, 20.0, 20.0], [0, 0, 0], [6.0, 6.0, 6.0], [0, 0, 0])
     a2 = _attempt([24.0, 24.0, 24.0], [0, 0, 0], [5.0, 5.0, 5.0], [0, 0, 0])
-    out = bench._pooled_efficiency([a1, a2], rows=1000)
+    out = bench._pooled_efficiency([a1, a2], rows=1000, lo=LO, hi=HI)
     assert out["lo_median_sec"] == 22.0  # median of pooled [20x3, 24x3]
     assert out["hi_median_sec"] == 5.5
     e1 = (20.0 / 6.0) / 4
@@ -64,7 +68,7 @@ def test_pooled_efficiency_is_median_not_max_across_attempts():
 
 def test_pooled_efficiency_falls_back_to_all_runs_when_nothing_clean():
     a = _attempt([20.0, 22.0, 21.0], [9, 9, 9], [5.0, 5.0, 5.0], [0, 0, 0])
-    out = bench._pooled_efficiency([a], rows=1000)
+    out = bench._pooled_efficiency([a], rows=1000, lo=LO, hi=HI)
     assert out["lo_median_sec"] == 21.0  # all-runs fallback
 
 
@@ -97,80 +101,6 @@ def test_prev_round_loader_handles_missing_artifacts(tmp_path, monkeypatch):
     assert bench._load_prev_queries() == ("", {})
 
 
-# ---- time-matched normalization (round 4) ---------------------------
-
-def _level_hw(runs_sec, steal_pct, hw, cores):
-    lv = _level(runs_sec, steal_pct, cores)
-    lv["run_hw_rows_per_sec"] = list(hw)
-    return lv
-
-
-def _attempt_hw(lo, hi):
-    return {f"local{bench.LO_CORES}": lo, f"local{bench.HI_CORES}": hi}
-
-
-def test_time_matched_cancels_monotone_drift():
-    # A machine whose per-core speed decays 20% while the lo level
-    # runs (the measured r4 signature): raw efficiency is deflated,
-    # but dividing each run by its concurrent machine rate recovers
-    # the true engine efficiency exactly.
-    rows = 1000
-    true_eff = 0.9
-    # machine capability (relative): lo window 1.0 -> 0.8, hi steady 0.8
-    lo_caps = [1.0, 0.9, 0.8]
-    hi_caps = [0.8, 0.8, 0.8]
-    # engine rate scales with capability: lo_rate = k*cap, hi_rate =
-    # 4*true_eff*k*cap (same k). Use hw probe = 100*cap rows/s.
-    k = 50.0
-    lo_runs = [round(rows / (k * c), 3) for c in lo_caps]
-    hi_runs = [round(rows / (4 * true_eff * k * c), 3) for c in hi_caps]
-    lo = _level_hw(lo_runs, [0, 0, 0], [100 * c for c in lo_caps],
-                   bench.LO_CORES)
-    # the probe at the hi level runs at 4x the processes, so the
-    # machine's own 4x parallelism is inside the hi probe reading
-    hi4 = _level_hw(hi_runs, [0, 0, 0], [400 * c for c in hi_caps],
-                    bench.HI_CORES)
-    out = bench._pooled_tm([_attempt_hw(lo, hi4)], rows)
-    assert abs(out["efficiency_time_matched"] - true_eff) < 0.005
-    # and the raw pooled efficiency IS deflated by the drift
-    raw = bench._pooled_efficiency([_attempt_hw(lo, hi4)], rows)
-    assert raw["efficiency"] < true_eff - 0.02
-
-
-def test_time_matched_matches_raw_over_hw_in_quiet_window():
-    rows = 1000
-    lo = _level_hw([20.0, 20.0, 20.0], [0, 0, 0], [100, 100, 100],
-                   bench.LO_CORES)
-    hi = _level_hw([6.0, 6.0, 6.0], [0, 0, 0], [380, 380, 380],
-                   bench.HI_CORES)
-    out = bench._pooled_tm([_attempt_hw(lo, hi)], rows)
-    raw = bench._pooled_efficiency([_attempt_hw(lo, hi)], rows)
-    hw_eff = (380 / 100) / 4
-    assert abs(out["efficiency_time_matched"]
-               - raw["efficiency"] / hw_eff) < 0.005
-
-
-def test_collapsed_probe_voids_tm_validity():
-    lo_ok = _level_hw([20.0, 20.0], [0, 0], [100, 100], bench.LO_CORES)
-    lo_bad = _level_hw([20.0, 20.0], [0, 0], [100, 40], bench.LO_CORES)
-    assert bench._probes_consistent(lo_ok)
-    assert not bench._probes_consistent(lo_bad)  # 40 < 0.55*100
-
-
-def test_tm_norm_rates_filters_steal_like_raw_pool():
-    rows = 1000
-    lv = _level_hw([20.0, 20.0, 40.0], [0, 0, 20.0], [100, 100, 100],
-                   bench.LO_CORES)
-    rates = bench._tm_norm_rates(lv, rows)
-    assert len(rates) == 2  # contaminated run excluded
-    assert all(abs(r - (1000 / 20.0) / 100) < 1e-9 for r in rates)
-
-
-def test_tm_absent_on_pre_r4_attempt_shape():
-    a = _attempt([20.0, 20.0], [0, 0], [5.0, 5.0], [0, 0])
-    assert bench._pooled_tm([a], 1000) is None
-
-
 # ---- final-line budget (round 5: driver tail capture is 2000 chars) --
 
 def _worst_case_compact():
@@ -191,9 +121,6 @@ def _worst_case_compact():
             "cores": {"lo": 4, "hi": 16},
             "scaling_efficiency": 0.865,
             "window_valid": False,
-            "normalized_efficiency": None,
-            "scaling_efficiency_time_matched": 0.979,
-            "tm_valid": True,
             "lo_turns_per_sec": 31092.8,
             "hi_turns_per_sec": 107549.6,
             "skew": {
@@ -240,7 +167,6 @@ def test_fit_line_worst_case_fits_driver_tail_capture():
     assert parsed["metric"] == "headline_queries_total"
     assert parsed["value"] == 123.456
     assert parsed["extract"]["scaling_efficiency"] == 0.865
-    assert parsed["extract"]["tm_valid"] is True
     assert parsed["extract"]["skew"]["salt8_spread"] == 4.77
     assert parsed["detail_file"] == "BENCH_DETAIL_r05.json"
 
@@ -321,7 +247,7 @@ def test_prev_round_loader_prefers_queries_median_key(tmp_path, monkeypatch):
 # ------------------------------------------------- A-B-A level schedule
 
 
-def _arm(runs_sec, steal_pct, hw, cores, rows=1000.0):
+def _arm(runs_sec, steal_pct, cores, rows=1000.0):
     import statistics
 
     clean = [t for t, s in zip(runs_sec, steal_pct) if s <= bench.STEAL_CLEAN_PCT]
@@ -332,7 +258,6 @@ def _arm(runs_sec, steal_pct, hw, cores, rows=1000.0):
         "best_sec": round(min(runs_sec), 3),
         "all_runs_sec": list(runs_sec),
         "run_steal_pct": list(steal_pct),
-        "run_hw_rows_per_sec": list(hw),
         "clean_runs": len(clean),
         "steal_contaminated": len(clean) < bench.MIN_CLEAN_RUNS,
         "turns_per_sec": round(rows / med, 1),
@@ -343,8 +268,8 @@ def _arm(runs_sec, steal_pct, hw, cores, rows=1000.0):
 
 def test_merge_levels_recomputes_union_median_and_clean_flag():
     # arm A: one clean + one steal-dirty run; arm B: one clean run.
-    a = _arm([10.0, 30.0], [0.5, 9.9], [100.0, 100.0], 4)
-    b = _arm([12.0], [0.4], [110.0], 4)
+    a = _arm([10.0, 30.0], [0.5, 9.9], 4)
+    b = _arm([12.0], [0.4], 4)
     m = bench._merge_levels(a, b, rows=1000.0)
     # union clean basis = [10.0, 12.0] -> median 11.0; dirty run kept
     # in the lists but out of the basis
@@ -354,13 +279,12 @@ def test_merge_levels_recomputes_union_median_and_clean_flag():
     assert m["sec"] == 11.0
     assert m["turns_per_sec"] == round(1000.0 / 11.0, 1)
     assert m["best_sec"] == 10.0
-    assert m["run_hw_rows_per_sec"] == [100, 100, 110]
     assert m["cores"] == 4
 
 
 def test_merge_levels_contaminated_union_falls_back_to_all_runs():
-    a = _arm([10.0], [9.9], [100.0], 4)
-    b = _arm([20.0], [9.8], [100.0], 4)
+    a = _arm([10.0], [9.9], 4)
+    b = _arm([20.0], [9.8], 4)
     m = bench._merge_levels(a, b, rows=1000.0)
     assert m["steal_contaminated"] is True
     assert m["sec"] == 15.0  # median over ALL runs when nothing clean
@@ -404,39 +328,6 @@ def test_aba_schedule_cancels_linear_drift_where_sequential_does_not():
     assert err_seq > 10.0 * err_aba, (err_seq, err_aba)
 
 
-def _mkattempt_for_spread(lo_runs, lo_hw, hi_runs, hi_hw):
-    lo = _level_hw(lo_runs, [0.0] * len(lo_runs), lo_hw, bench.LO_CORES)
-    hi = _level_hw(hi_runs, [0.0] * len(hi_runs), hi_hw, bench.HI_CORES)
-    return lo, hi
-
-
-def test_spread_gate_forgives_probe_tracked_drift():
-    """A 25% cross-arm clock drift that the per-run probes track must
-    NOT void the window (the A-B-A mirror cancels it), but the same
-    timing spread WITHOUT probe corroboration — residual contamination
-    — still must. Exercises _scaling_attempt's normalized _clean via
-    the same arithmetic (kept in sync by the assertions on
-    MAX_RUN_SPREAD)."""
-    import statistics
-
-    def norm_spread(runs_sec, hw):
-        med_hw = statistics.median(hw)
-        normed = [t * (h / med_hw) for t, h in zip(runs_sec, hw)]
-        return statistics.median(normed) / min(normed)
-
-    # lo arms: 24 s at machine rate 100, then 16 s at rate 150
-    # (machine sped up 50%; work units 2400 == 2400 -> spread 1.0)
-    drift_tracked = norm_spread([24.0, 24.0, 16.0, 16.0],
-                                [100, 100, 150, 150])
-    assert drift_tracked <= bench.MAX_RUN_SPREAD
-    # an arm slowed 50% with NO probe corroboration: residual
-    # contamination, must still trip (median over 4 = mean of the
-    # middle two = 30 over min 24 = 1.25 > 1.2)
-    contaminated = norm_spread([24.0, 24.0, 36.0, 36.0],
-                               [100, 100, 100, 100])
-    assert contaminated > bench.MAX_RUN_SPREAD
-
-
 def test_coverage_cost_hints_merge_and_unknown_first(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "REPO", str(tmp_path))
     (tmp_path / "BENCH_DETAIL_r04.json").write_text(json.dumps(
@@ -453,18 +344,24 @@ def test_coverage_cost_hints_merge_and_unknown_first(tmp_path, monkeypatch):
     assert ordered == ["new_query", "b", "a"]
 
 
-def test_scaling_attempt_aba_plumbing(monkeypatch):
-    """The A-B-A attempt must: call lo/hi/lo with the right runs and
-    min-clean args, merge the lo arms, and stamp the schedule."""
+def _fake_levels(monkeypatch, lo_arms, hi_runs=(5.5, 5.5, 5.5)):
+    """Fake the level subprocesses: lo arms are served in order from
+    ``lo_arms`` ((runs_sec, steal_pct) pairs; ``None`` = steal-free
+    20 s runs, as many as the call asks for), hi gets ``hi_runs``.
+    Returns the recorded subprocess argument lists."""
     calls = []
+    arms = iter(lo_arms)
 
     def fake_subprocess(args):
         calls.append(args)
         cores = int(args[2])
-        if cores == bench.LO_CORES:
+        if cores == HI:
+            return _arm(list(hi_runs), [0.0] * len(hi_runs), cores)
+        spec = next(arms)
+        if spec is None:
             n = int(args[4])
-            return _arm([20.0] * n, [0.0] * n, [100.0] * n, cores)
-        return _arm([5.5, 5.5, 5.5], [0.0] * 3, [400.0] * 3, cores)
+            spec = ([20.0] * n, [0.0] * n)
+        return _arm(*spec, cores)
 
     monkeypatch.setattr(bench, "_subprocess_json", fake_subprocess)
     monkeypatch.setattr(
@@ -473,22 +370,104 @@ def test_scaling_attempt_aba_plumbing(monkeypatch):
                         "hi_rows_per_sec": 380},
     )
     monkeypatch.setattr(bench, "_elapsed", lambda: 0.0)
+    return calls
+
+
+def test_scaling_attempt_aba_plumbing(monkeypatch):
+    """The A-B-A attempt must: call lo/hi/lo with the right runs and
+    min-clean args, merge the lo arms, and stamp the schedule."""
+    calls = _fake_levels(monkeypatch, [None] * 4)
     monkeypatch.setenv("BENCH_HEADLINE", "0")  # scaling-only: arm=2
-    att = bench._scaling_attempt(runs=3, rows=1000, idx=1)
-    lo_calls = [c for c in calls if int(c[2]) == bench.LO_CORES]
+    att = bench._scaling_attempt(runs=3, rows=1000, idx=1, lo=LO, hi=HI)
+    lo_calls = [c for c in calls if int(c[2]) == LO]
     assert [int(c[4]) for c in lo_calls] == [2, 2]   # mirror arms
     assert int(lo_calls[0][6]) == 2  # arm A clean quota = min(2, arm)
     assert int(lo_calls[1][6]) == 1  # arm B tops up what A left: 2-2
-    lo = att[f"local{bench.LO_CORES}"]
-    assert len(lo["all_runs_sec"]) == 4  # merged 2+2
+    assert len(att["lo"]["all_runs_sec"]) == 4  # merged 2+2
+    assert att["lo"]["cores"] == LO and att["hi"]["cores"] == HI
     assert "A-B-A" in att["schedule"]
+    assert att["schedule_asymmetric"] is False
     assert att["window_valid"] is True
     # eff = (1000/5.5) / (1000/20) / 4
     assert abs(att["efficiency"] - (20.0 / 5.5) / 4) < 0.01
 
     monkeypatch.setenv("BENCH_HEADLINE", "1")  # full bench: arm=1
     calls.clear()
-    bench._scaling_attempt(runs=3, rows=1000, idx=1)
-    lo_calls = [c for c in calls if int(c[2]) == bench.LO_CORES]
+    bench._scaling_attempt(runs=3, rows=1000, idx=1, lo=LO, hi=HI)
+    lo_calls = [c for c in calls if int(c[2]) == LO]
     assert [int(c[4]) for c in lo_calls] == [1, 1]
     assert int(lo_calls[0][6]) == 1
+
+
+def test_scaling_attempt_flags_asymmetric_when_arm_a_has_no_clean_run(
+    monkeypatch,
+):
+    """Arm A all steal-dirty: arm B's top-up puts every clean lo run
+    after the hi block, so the merged level reads clean but the mirror
+    cancellation is lost — flagged, and never window-valid."""
+    monkeypatch.setenv("BENCH_HEADLINE", "0")
+    _fake_levels(monkeypatch, [
+        ([20.0, 20.0], [9.0, 9.0]),                 # arm A: dirty
+        ([20.0, 20.0, 20.0], [0.0, 0.0, 0.0]),      # arm B: tops up
+    ])
+    att = bench._scaling_attempt(runs=3, rows=1000, idx=1, lo=LO, hi=HI)
+    assert att["lo"]["steal_contaminated"] is False  # merged looks clean
+    assert att["schedule_asymmetric"] is True
+    assert att["window_valid"] is False
+    # every other gate passes: the asymmetry alone voids the window
+    assert att["hw_window_sane"] and att["steal_clean"]
+    assert att["run_spread_sane"] and 0 < att["efficiency"] <= bench.MAX_EFF
+
+
+def test_spread_gate_uses_raw_clean_seconds(monkeypatch):
+    """The run-spread gate reads raw steal-clean seconds: lo arms that
+    drift 50% apart (median over 4 = 30 s vs min 24 s = 1.25) void
+    the window; a steal-dirty slow run does not enter the spread."""
+    monkeypatch.setenv("BENCH_HEADLINE", "0")
+    _fake_levels(monkeypatch, [
+        ([24.0, 24.0], [0.0, 0.0]),
+        ([36.0, 36.0], [0.0, 0.0]),
+    ])
+    att = bench._scaling_attempt(runs=3, rows=1000, idx=1, lo=LO, hi=HI)
+    assert att["run_spread"] == 1.25
+    assert att["run_spread_sane"] is False
+    assert att["window_valid"] is False
+
+    _fake_levels(monkeypatch, [
+        ([24.0, 24.0], [0.0, 0.0]),
+        ([24.0, 60.0], [0.0, 20.0]),  # slow run is steal-dirty
+    ])
+    att = bench._scaling_attempt(runs=3, rows=1000, idx=1, lo=LO, hi=HI)
+    assert att["run_spread"] == 1.0
+    assert att["run_spread_sane"] is True
+
+
+def test_main_reports_no_efficiency_when_hi_not_above_lo(
+    monkeypatch, tmp_path, capsys,
+):
+    """On a host where hi <= lo (4 CPUs: 4 vs 4) main must not time
+    4 against 4: no scaling attempt, no efficiency, and the warning
+    survives into the parseable final line."""
+    def no_attempt(*a, **k):
+        raise AssertionError("scaling attempt on an unmeasurable host")
+
+    monkeypatch.setattr(bench, "CPUS", 4)
+    monkeypatch.setattr(bench, "LO_CORES", 4)
+    monkeypatch.setattr(bench, "HI_CORES", 4)
+    monkeypatch.setattr(bench, "_scaling_attempt", no_attempt)
+    monkeypatch.setattr(bench, "_ensure_corpus", lambda: 1000)
+    monkeypatch.setattr(
+        bench, "_detail_path", lambda: str(tmp_path / "BENCH_DETAIL_r99.json")
+    )
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    monkeypatch.setenv("BENCH_SKEW", "0")
+    monkeypatch.setenv("BENCH_HEADLINE", "0")
+    assert bench.main() == 0
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(line) <= bench.LINE_BUDGET
+    out = json.loads(line)
+    assert out["warnings"][0].startswith("scaling not measurable on this host")
+    assert out["extract"] == {"rows": 1000, "cores": {"lo": 4, "hi": 4}}
+    detail = json.loads((tmp_path / "BENCH_DETAIL_r99.json").read_text())
+    assert "scaling_efficiency" not in detail["extract"]
+    assert "attempts" not in detail["extract"]

@@ -115,6 +115,60 @@ def test_json_probe_malformed():
     assert J.first_json_object("{broken: [}") == {}
 
 
+def _brace_families(k):
+    return [
+        "{" * k,                      # unterminated: no "}" at all
+        "{" * k + "}",
+        "}" * k + "{" * k,            # every "}" before the first "{"
+        "x}" * k + '{"a": 1}',
+        '{"a":' * k + "}",
+        "{" + "a" * k,
+        '{"k": "' + "{" * k + '"}',   # braces inside a valid string
+        "{" * k + '"a": 1' + "}" * k,
+    ]
+
+
+def test_json_probe_matches_greedy_regex_on_adversarial_families():
+    import json
+    import re
+
+    greedy = re.compile(r"\{.*\}", re.DOTALL)
+
+    def reference(text):
+        m = greedy.search(text) if text else None
+        if not m:
+            return {}
+        try:
+            obj = json.loads(m.group(0))
+        except Exception:
+            return {}
+        return obj if isinstance(obj, dict) else {}
+
+    for text in _brace_families(2000) + ["}", "}{", 'a}{"b": 1}', "}{}"]:
+        assert J.first_json_object(text) == reference(text), text[:40]
+
+
+def test_json_probe_linear_in_brace_count():
+    """Cost grows linearly from 5k to 20k braces (a quadratic probe
+    grows 16×; the greedy regex took ~0.25 s at 20k)."""
+    import time
+
+    def cost(k):
+        payloads = _brace_families(k)
+        best = float("inf")
+        for _ in range(7):
+            t0 = time.perf_counter()
+            for _ in range(5):
+                for p in payloads:
+                    J.first_json_object(p)
+            best = min(best, time.perf_counter() - t0)
+        return best
+
+    small, large = cost(5000), cost(20000)
+    assert large < 8 * small, (small, large)
+    assert large < 0.05, large
+
+
 def test_flatten_json_order_and_rendering():
     obj = {"b": 1, "a": {"x": "s"}, "l": [True, None], "e": {}, "m": []}
     assert J.flatten_json(obj) == [

@@ -101,3 +101,37 @@ def test_bucketed_join_elides_both_exchanges(spark):
         assert got == {i: (i * 3, i + 7) for i in range(200)}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_bucketed_join_query_raises_when_an_exchange_is_planned(
+    spark, tmp_path
+):
+    """The catalog query's co-location check is a raise, not an assert,
+    so it holds under ``python -O``: with bucketed reads disabled the
+    planner shuffles both sides, and the query refuses to build."""
+    from pyspark.sql import functions as F
+
+    from ocr_engine_spark.catalog import queries
+
+    docs = spark.range(0, 40).select(
+        F.col("id").alias("doc_id"), F.lit("en").alias("lang"),
+        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
+    )
+    emb = spark.range(0, 40).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("float"), F.lit(1.0).cast("float"))
+        .alias("embedding"),
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    emb.write.parquet(str(tmp_path / "embeddings.parquet"))
+    q = queries()["bucketed_join_doc_embeddings"]
+    assert q(spark, str(tmp_path)).count() == 40  # co-located: builds
+
+    key = "spark.sql.sources.bucketing.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="Exchange"):
+            q(spark, str(tmp_path))
+    finally:
+        spark.conf.set(key, prev)
