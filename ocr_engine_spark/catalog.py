@@ -3298,15 +3298,20 @@ ORDER BY doc_id
 """.replace("{tok}", TOKENS_SQL),
 )
 def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality metrics (Rae et al. 2021 app.
-    A1.1): duplicate-line fraction, most-frequent word 2-gram + the
-    character fraction it covers, duplicate-5-gram character fraction.
-    Spark side is ZERO-shuffle (sorted-array run folds via
-    ``aggregate`` HOFs — no explode, no groupBy); the oracle replays
-    the semantics with the opposite mechanism (unnest → GROUP BY),
-    so the hash pins the metrics, not the formulation."""
+    """Three representative Gopher-style repetition metrics (Rae et
+    al. 2021 app. A1.1, stream-fraction variants — see
+    ``textstats.repetition_stats_full``): duplicate-line fraction,
+    most-frequent word 2-gram + the character fraction it covers,
+    duplicate-5-gram character fraction. Six columns of the one
+    repetition operator; column pruning leaves only the line, 2-gram
+    and 5-gram arrays to build. Spark side is ZERO-shuffle; the oracle
+    replays the semantics with the opposite mechanism (unnest → GROUP
+    BY), so the hash pins the metrics, not the formulation."""
     docs = _t(spark, sf_dir, "documents")
-    return textstats.repetition_stats(docs).orderBy("doc_id")
+    return textstats.repetition_stats_full(docs).select(
+        "doc_id", "n_lines", "dup_line_frac", "top_2gram",
+        "top_2gram_frac", "dup_5gram_frac",
+    ).orderBy("doc_id")
 
 
 def _gopher_full_oracle() -> str:
@@ -3407,16 +3412,21 @@ ORDER BY b.doc_id
 
 @_register("gopher_repetition_full_documents", oracle=_gopher_full_oracle())
 def q_gopher_repetition_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The complete Gopher repetition battery (Rae et al. 2021 app.
-    A1.1, Table A1): duplicate line/paragraph fractions by item AND by
+    """The Gopher repetition battery (Rae et al. 2021 app. A1.1, Table
+    A1, as stream-fraction variants — published thresholds do not
+    transfer): duplicate line/paragraph fractions by item AND by
     character coverage, top-{2,3,4}-gram character fractions,
-    duplicate-{5..10}-gram character fractions — the 13 metrics a
-    Gopher-style quality gate thresholds per document. Spark side is
-    ZERO-shuffle (one sorted-array fold per metric, each fold carrying
-    its own denominator); the oracle replays every metric via
-    unnest → GROUP BY — mechanism-independent hash."""
+    duplicate-{5..10}-gram character fractions — 13 metrics per
+    document. Spark side is ZERO-shuffle (one sorted-array fold per
+    metric, each fold carrying its own denominator); the oracle replays
+    every metric via unnest → GROUP BY — mechanism-independent hash."""
     docs = _t(spark, sf_dir, "documents")
-    return textstats.repetition_stats_full(docs).orderBy("doc_id")
+    return textstats.repetition_stats_full(docs).select(
+        "doc_id", "dup_line_frac", "dup_line_char_frac", "dup_para_frac",
+        "dup_para_char_frac",
+        *[f"top_{k}gram_frac" for k in (2, 3, 4)],
+        *[f"dup_{k}gram_frac" for k in range(5, 11)],
+    ).orderBy("doc_id")
 
 
 @_register(

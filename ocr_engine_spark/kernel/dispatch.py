@@ -30,8 +30,8 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Tuple
 
-from . import htmlblocks, pdfstream, tooljson
-from .textutil import ASCII_TRAIL, ASCII_WS, normalize_lines
+from . import htmlblocks, lines, pdfstream, tooljson
+from .textutil import ASCII_TRAIL, ASCII_WS
 
 KIND_PDF = "pdf"
 KIND_TOOL = "tool"
@@ -92,13 +92,8 @@ def extract_turn(role: Optional[str], text: Optional[str]) -> Dict:
     if kind == KIND_PDF:
         try:
             pages = pdfstream.extract_pages(text)  # type: ignore[arg-type]
-            kept_pages = []
-            for pno, ptxt in pages:
-                if ptxt and ptxt.strip():
-                    kept_pages.append(("pdf_page", f"Page {pno}:\n{ptxt.strip()}"))
-                else:
-                    dropped += 1
-            blocks = kept_pages
+            blocks = [("pdf_page", b) for _, b in lines.page_blocks(pages)]
+            dropped = len(pages) - len(blocks)
         except pdfstream.PdfStreamError:
             parse_failed = 1
             blocks = _text_paragraph_blocks(text)

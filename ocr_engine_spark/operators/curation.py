@@ -292,9 +292,12 @@ def redact_pii(docs: DataFrame, id_col: str = "doc_id",
 
 def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
-    """C4-style heuristic cleaning (Raffel et al. 2020 §2.2 — the
-    rule set behind the C4 corpus, applied line-by-line then
-    document-wide):
+    """C4-inspired heuristic cleaning (after Raffel et al. 2020 §2.2),
+    applied line-by-line then document-wide. It is not the C4 rule
+    set: lines need at least 3 words where the paper asks for 5, and
+    the paper's page rule (drop pages with fewer than 3 sentences) is
+    absent. The oracle mirrors these rules, so the hash gate pins them,
+    not the paper's:
 
     line rules (a line survives iff ALL hold, on the trimmed line):
       - ends in terminal punctuation (``.`` ``!`` ``?`` ``"``);

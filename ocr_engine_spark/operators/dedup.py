@@ -352,7 +352,7 @@ def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
     """Exact-substring dedup in its distributed windowed-fingerprint
     form (Lee et al., "Deduplicating Training Data Makes Language
     Models Better", ACL 2022 — their single-node suffix array replaced
-    by the shuffle-friendly equivalent): every length-``k`` token
+    by shuffle-friendly hashed windows): every length-``k`` token
     window is fingerprinted; a window that occurs >= 2 times anywhere
     in the corpus is *duplicated*; per document we report how many
     windows are duplicated and what fraction of the document's tokens
@@ -360,6 +360,12 @@ def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
     cut).
 
     Per doc: n_tokens, n_windows, n_dup_windows, dup_token_coverage.
+
+    Probabilistic, not exact: windows are compared by 60-bit md5
+    fingerprints, so two distinct windows collide with probability
+    2⁻⁶⁰ per pair — about n²/2⁶¹ expected false "duplicated" windows
+    among n distinct ones (≈ 0.43 at n = 10⁹, ≈ 4·10⁵ at n = 10¹²),
+    each one inflating n_dup_windows and the coverage it adds.
 
     Coverage without materializing spans: with duplicated window start
     positions sorted per doc, window i covers

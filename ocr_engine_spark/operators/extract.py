@@ -25,41 +25,41 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.dispatch import extract_turn
 
-# Arrow-side output schema. Must stay in lock-step with
-# sources.tableio.EXTRACTED_SCHEMA (+ leading bucket passthrough).
-_SPAN_STRUCT = pa.struct(
+# The output schema, declared once (FIXTURES.md §2 + metrics columns,
+# led by the bucket passthrough): Spark's return type for mapInArrow;
+# the Arrow schema the batches are built with is derived from it.
+OUT_SCHEMA = T.StructType(
     [
-        pa.field("span_idx", pa.int32(), nullable=False),
-        pa.field("kind", pa.string(), nullable=False),
-        pa.field("text", pa.string(), nullable=False),
-        pa.field("start", pa.int32(), nullable=False),
-        pa.field("end", pa.int32(), nullable=False),
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("kind", T.StringType()),
+        T.StructField("extracted_text", T.StringType()),
+        T.StructField(
+            "spans",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("span_idx", T.IntegerType()),
+                        T.StructField("kind", T.StringType()),
+                        T.StructField("text", T.StringType()),
+                        T.StructField("start", T.IntegerType()),
+                        T.StructField("end", T.IntegerType()),
+                    ]
+                )
+            ),
+        ),
+        T.StructField("blocks_kept", T.LongType()),
+        T.StructField("blocks_dropped", T.LongType()),
+        T.StructField("parse_failed", T.IntegerType()),
     ]
 )
-
-_OUT_SCHEMA = pa.schema(
-    [
-        pa.field("bucket", pa.int32()),
-        pa.field("conv_id", pa.string()),
-        pa.field("turn_idx", pa.int32()),
-        pa.field("kind", pa.string()),
-        pa.field("extracted_text", pa.string()),
-        pa.field("spans", pa.list_(_SPAN_STRUCT)),
-        pa.field("blocks_kept", pa.int64()),
-        pa.field("blocks_dropped", pa.int64()),
-        pa.field("parse_failed", pa.int32()),
-    ]
-)
-
-OUT_DDL = (
-    "bucket int, conv_id string, turn_idx int, kind string, "
-    "extracted_text string, "
-    "spans array<struct<span_idx:int,kind:string,text:string,start:int,end:int>>, "
-    "blocks_kept long, blocks_dropped long, parse_failed int"
-)
+_ARROW_SCHEMA = to_arrow_schema(OUT_SCHEMA)
 
 
 def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -82,19 +82,12 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             dropped.append(res["blocks_dropped"])
             failed.append(res["parse_failed"])
 
+        passthrough = [batch.column(c) for c in ("bucket", "conv_id", "turn_idx")]
+        computed = [kinds, etexts, spans_col, kept, dropped, failed]
         yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("bucket"),
-                batch.column("conv_id"),
-                batch.column("turn_idx"),
-                pa.array(kinds, pa.string()),
-                pa.array(etexts, pa.string()),
-                pa.array(spans_col, pa.list_(_SPAN_STRUCT)),
-                pa.array(kept, pa.int64()),
-                pa.array(dropped, pa.int64()),
-                pa.array(failed, pa.int32()),
-            ],
-            schema=_OUT_SCHEMA,
+            passthrough
+            + [pa.array(v, t) for v, t in zip(computed, _ARROW_SCHEMA.types[3:])],
+            schema=_ARROW_SCHEMA,
         )
 
 
@@ -103,5 +96,5 @@ def extract_arrow(df: DataFrame) -> DataFrame:
     ``(bucket, conv_id, turn_idx, role, text)``; bucket is passed
     through for per-partition audit grouping."""
     return df.select("bucket", "conv_id", "turn_idx", "role", "text").mapInArrow(
-        _extract_batches, OUT_DDL
+        _extract_batches, OUT_SCHEMA
     )

@@ -12,9 +12,10 @@ scheduling, or AQE decisions).
 - ``S > 1`` → a conversation's turns spread over (at most) S
   consecutive buckets: mega-conversations (Zipf tail, FIXTURES.md §1)
   can no longer pin a single straggler partition. Extraction is
-  per-turn pure, so splitting a conversation is safe; global
-  ``(conv_id, turn_idx)`` order is re-imposed only at fixture-diff /
-  consumer time (SURVEY.md §2.6 O3).
+  per-turn pure, so splitting a conversation is safe; each bucket's
+  rows stay in ``(conv_id, turn_idx)`` order (``sort_within_buckets``),
+  and order across buckets is imposed only at fixture-diff / consumer
+  time (SURVEY.md §2.6 O3).
 
 AQE's skew handling only splits *join/agg* shuffle partitions; a
 skewed map-stage input to a Python stage is our own problem — hence
@@ -47,15 +48,21 @@ def shuffle_by_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     they stream in. A pre-extraction sortWithinPartitions would be a
     full-partition barrier in front of the Python workers (the sorter
     must drain the partition before the first Arrow batch is emitted);
-    sorting *after* extraction gives the same deterministic
-    (conv_id, turn_idx) order per partition while overlapping the sort
-    with Python compute."""
+    sorting *after* extraction (``sort_within_buckets``) gives the same
+    deterministic order while overlapping the sort with Python
+    compute."""
     return df.repartition(num_buckets, F.col("bucket"))
 
 
 def sort_within_buckets(df: DataFrame) -> DataFrame:
-    """Partition-local, spillable (conv_id, turn_idx) sort — the
-    deterministic turn order guarantee (SURVEY.md §2.6 O3), applied to
-    the extraction *output* (see shuffle_by_bucket on why after)."""
-    return df.sortWithinPartitions("conv_id", "turn_idx")
+    """Partition-local, spillable (bucket, conv_id, turn_idx) sort —
+    the deterministic turn order guarantee (SURVEY.md §2.6 O3), applied
+    to the extraction *output* (see shuffle_by_bucket on why after).
+
+    ``bucket`` leads because ``partitionBy("bucket")`` needs its input
+    ordered by bucket: this one sort satisfies the writer, so Spark
+    plans no second sort of its own and every written bucket file
+    keeps (conv_id, turn_idx) order. A partition may then also hold
+    several buckets without losing that order."""
+    return df.sortWithinPartitions("bucket", "conv_id", "turn_idx")
 

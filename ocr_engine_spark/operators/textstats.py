@@ -201,202 +201,50 @@ def vocab_pair_counts(docs: DataFrame, k: int = 50, id_col: str = "doc_id",
     )
 
 
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Gopher-style repetition metrics (Rae et al. 2021, appendix
-    A1.1 — the repetition family of quality filters every large
-    text-curation pipeline applies before training):
-
-    - ``dup_line_frac`` — fraction of non-empty (trimmed) lines that
-      are repeats of an earlier line;
-    - ``top_2gram`` / ``top_2gram_frac`` — the most frequent word
-      2-gram (ties → lexicographically smallest) and the fraction of
-      2-gram-stream characters its occurrences cover;
-    - ``dup_5gram_frac`` — fraction of 5-gram-stream characters
-      covered by 5-grams occurring more than once.
-
-    Scale: ZERO shuffle — no explode, no groupBy. Per-document mode /
-    duplicate counts come from sorting the per-row n-gram ARRAY
-    (``array_sort``) and folding runs of equal neighbours with
-    ``aggregate`` higher-order functions, so the whole operator is a
-    scan-side JVM projection with per-row bounded state (HOFs execute
-    as codegen'd expression trees per row, outside the whole-stage
-    fusion span — still no Python, no Arrow crossing). The
-    explode→count formulation shuffles the full n-gram stream —
-    corpus-sized; this one moves nothing.
-
-    The work is STAGED across three ``select``s so each expensive
-    array (sorted gram arrays, trimmed lines) and each fold result is
-    a named column computed exactly once per row: HOF ``aggregate``
-    expressions are CodegenFallback — referencing one three times in
-    a single projection re-evaluates the whole interpreted subtree
-    three times (and every task re-instantiates the 3× larger tree).
-    CollapseProject leaves the stages alone because the aliased
-    expressions are non-cheap and multiply referenced; measured 4.8×
-    faster cold / 1.2× warm at sf0.01, byte-identical output.
-    """
-    t = X.tokens_col(text_col)
-    n = F.size(t)
-    empty = F.array().cast("array<string>")
-    lines = F.filter(
-        F.transform(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n"),
-            lambda x: F.trim(x),
-        ),
-        lambda x: x != "",
-    )
-
-    g2 = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(t, 1, n - 1),
-            F.slice(t, 2, n - 1),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        ),
-    ).otherwise(empty)
-    g5 = F.when(
-        n >= 5,
-        F.transform(
-            F.sequence(F.lit(1), n - 4),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(t, i),
-                F.element_at(t, i + 1),
-                F.element_at(t, i + 2),
-                F.element_at(t, i + 3),
-                F.element_at(t, i + 4),
-            ),
-        ),
-    ).otherwise(empty)
-
-    # stage 1: each heavy array materialized once per row
-    staged = spread_to_parallelism(docs).select(
-        F.col(id_col),
-        lines.alias("_lines"),
-        F.array_sort(g2).alias("_g2s"),
-        F.array_sort(g5).alias("_g5s"),
-    )
-
-    zero = F.lit(0).cast("long")
-
-    def _char_sum(arr):
-        return F.aggregate(arr, zero, lambda acc, x: acc + F.length(x))
-
-    # mode of the sorted 2-gram array: fold runs of equal neighbours,
-    # updating the best run eagerly (strict > keeps the FIRST — i.e.
-    # lexicographically smallest — gram at the max count)
-    def _top_step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        better = run > acc["best"]
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.when(better, run).otherwise(acc["best"]).alias("best"),
-            F.when(better, x).otherwise(acc["bestg"]).alias("bestg"),
-        )
-
-    top2 = F.aggregate(
-        F.col("_g2s"),
-        F.struct(
-            F.lit("").alias("prev"), zero.alias("run"),
-            zero.alias("best"), F.lit("").alias("bestg"),
-        ),
-        _top_step,
-    )
-
-    # duplicate-5gram chars: a run of length r >= 2 contributes
-    # r * len(gram) (charge ALL occurrences once the gram repeats)
-    def _dup_step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        add = (
-            F.when(run == 2, F.length(x) * 2)
-            .when(run > 2, F.length(x))
-            .otherwise(F.lit(0))
-        ).cast("long")
-        return F.struct(
-            x.alias("prev"), run.alias("run"),
-            (acc["dup"] + add).alias("dup"),
-        )
-
-    dup5 = F.aggregate(
-        F.col("_g5s"),
-        F.struct(F.lit("").alias("prev"), zero.alias("run"),
-                 zero.alias("dup")),
-        _dup_step,
-    )
-
-    nl = F.size(F.col("_lines"))
-    dup_line = F.when(
-        nl > 0,
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct(F.col("_lines"))) / nl, 6
-        ),
-    ).otherwise(F.lit(0.0))
-
-    # stage 2: one column per fold result (each aggregate evaluated
-    # exactly once); stage 3: cheap field extraction / arithmetic
-    folded = staged.select(
-        F.col(id_col),
-        nl.cast("int").alias("n_lines"),
-        dup_line.alias("dup_line_frac"),
-        top2.alias("_top2"),
-        dup5.alias("_dup5"),
-        _char_sum(F.col("_g2s")).alias("_den2"),
-        _char_sum(F.col("_g5s")).alias("_den5"),
-    )
-    return folded.select(
-        F.col(id_col),
-        F.col("n_lines"),
-        F.col("dup_line_frac"),
-        F.col("_top2")["bestg"].alias("top_2gram"),
-        F.when(
-            F.col("_den2") > 0,
-            F.round(
-                F.col("_top2")["best"]
-                * F.length(F.col("_top2")["bestg"])
-                / F.col("_den2"),
-                6,
-            ),
-        ).otherwise(F.lit(0.0)).alias("top_2gram_frac"),
-        F.when(
-            F.col("_den5") > 0,
-            F.round(F.col("_dup5")["dup"] / F.col("_den5"), 6),
-        ).otherwise(F.lit(0.0)).alias("dup_5gram_frac"),
-    )
-
-
 def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
-    """The COMPLETE Gopher repetition-filter family (Rae et al. 2021,
-    appendix A1.1, Table A1 — the full 13-metric battery, of which
-    ``repetition_stats`` computes the three representatives):
+    """The repetition-filter family of Gopher (Rae et al. 2021,
+    appendix A1.1, Table A1), as **stream-fraction variants** of its 13
+    metrics — the one repetition operator; callers select the columns
+    they need and column pruning drops the arrays the rest would
+    build:
 
+    - ``n_lines`` — non-empty trimmed lines;
     - ``dup_line_frac`` / ``dup_para_frac`` — fraction of non-empty
       trimmed lines / paragraphs that repeat an earlier one;
     - ``dup_line_char_frac`` / ``dup_para_char_frac`` — fraction of
       line/paragraph characters inside items occurring more than once
       (ALL occurrences charged once the item repeats);
+    - ``top_2gram`` — the most frequent word 2-gram (ties break toward
+      the lexicographically smallest gram);
     - ``top_{2,3,4}gram_frac`` — fraction of n-gram-stream characters
-      covered by the most frequent word n-gram (ties break toward the
-      lexicographically smallest gram);
+      covered by the most frequent word n-gram (same tie-break);
     - ``dup_{5..10}gram_frac`` — fraction of n-gram-stream characters
       inside n-grams occurring more than once.
 
-    Same scale contract as ``repetition_stats``: ZERO shuffle, no
-    explode/groupBy — per-row sorted-array run folds. Each of the 11
-    sorted arrays (lines, paragraphs, grams n=2..10) is materialized
-    exactly once in a staged projection, and each fold carries its
-    denominator in the accumulator struct so every array is traversed
-    exactly once. Paragraphs split on a literal blank line ("\\n\\n"),
-    trimmed, empties dropped — mirrored verbatim in the oracle.
+    The paper charges the union of duplicated characters over the
+    document's characters; these columns charge every occurrence of a
+    duplicated n-gram (overlaps count again) over the characters of the
+    n-gram stream. Published gate thresholds (e.g. dup_5gram ≤ 0.15)
+    therefore do not transfer to them.
+
+    Scale: ZERO shuffle, no explode/groupBy — per-row sorted-array run
+    folds (``array_sort`` + ``aggregate`` HOFs), a scan-side JVM
+    projection; the explode→count formulation would shuffle the
+    corpus-sized n-gram stream. The work is staged in ``select``s so
+    each expensive array is a named column computed at most once per
+    row: HOF ``aggregate`` and ``transform`` are CodegenFallback, and an
+    inlined array re-evaluates its whole subtree at every reference —
+    the gram lambdas index the token array per element, so inlined
+    tokens would re-split the text per gram (at sf0.01 on 4 cores,
+    6× slower for 3 metrics and 40× slower for all 13). Tokens, lines
+    and paragraphs come first, then the 11 sorted arrays (lines,
+    paragraphs, grams n=2..10), then one fold per metric that carries
+    its denominator in the accumulator struct, so every array is
+    traversed exactly once. Paragraphs split on a literal blank line
+    ("\\n\\n"), trimmed, empties dropped — mirrored verbatim in the
+    oracle.
     """
-    t = X.tokens_col(text_col)
-    n = F.size(t)
-    empty = F.array().cast("array<string>")
     txt = F.coalesce(F.col(text_col), F.lit(""))
 
     def _items(sep: str):
@@ -404,6 +252,19 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
             F.transform(F.split(txt, sep), lambda x: F.trim(x)),
             lambda x: x != "",
         )
+
+    # stage 0: tokens, lines and paragraphs once per row — every gram
+    # array below indexes the token array, which must not be re-split
+    # per element
+    base = spread_to_parallelism(docs).select(
+        F.col(id_col),
+        X.tokens_col(text_col).alias("_t"),
+        _items("\n").alias("_lines"),
+        _items("\n\n").alias("_paras"),
+    )
+    t, lines, paras = F.col("_t"), F.col("_lines"), F.col("_paras")
+    n = F.size(t)
+    empty = F.array().cast("array<string>")
 
     def _grams(k: int):
         if k == 2:
@@ -424,8 +285,6 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
             ),
         ).otherwise(empty)
 
-    lines, paras = _items("\n"), _items("\n\n")
-
     def _dup_item_frac(items):
         cnt = F.size(items)
         return F.when(
@@ -434,8 +293,9 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
         ).otherwise(F.lit(0.0))
 
     # stage 1: every sorted array once; the cheap scalar fracs inline
-    staged = spread_to_parallelism(docs).select(
+    staged = base.select(
         F.col(id_col),
+        F.size(lines).cast("int").alias("n_lines"),
         _dup_item_frac(lines).alias("dup_line_frac"),
         _dup_item_frac(paras).alias("dup_para_frac"),
         F.array_sort(lines).alias("_ls"),
@@ -493,7 +353,8 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
 
     # stage 2: one fold column per metric family
     folded = staged.select(
-        F.col(id_col), F.col("dup_line_frac"), F.col("dup_para_frac"),
+        F.col(id_col), F.col("n_lines"), F.col("dup_line_frac"),
+        F.col("dup_para_frac"),
         _dup_fold(F.col("_ls")).alias("_lf"),
         _dup_fold(F.col("_ps")).alias("_pf"),
         *[_top_fold(F.col(f"_g{k}s")).alias(f"_t{k}") for k in (2, 3, 4)],
@@ -516,10 +377,12 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
     # stage 3: cheap field arithmetic
     return folded.select(
         F.col(id_col),
+        F.col("n_lines"),
         F.col("dup_line_frac"),
         _dup_frac("_lf").alias("dup_line_char_frac"),
         F.col("dup_para_frac"),
         _dup_frac("_pf").alias("dup_para_char_frac"),
+        F.col("_t2")["bestg"].alias("top_2gram"),
         *[_top_frac(f"_t{k}").alias(f"top_{k}gram_frac") for k in (2, 3, 4)],
         *[_dup_frac(f"_d{k}").alias(f"dup_{k}gram_frac")
           for k in range(5, 11)],

@@ -8,10 +8,12 @@
       └─ mapInArrow(extract_batches)                         [the one Python crossing —
                                                               streams off the shuffle
                                                               fetch, no sort barrier]
-      └─ sortWithinPartitions(conv_id, turn_idx)             [deterministic order on
-                                                              the OUTPUT, overlapped
-                                                              with Python compute]
-      └─ write results partitionBy(bucket), dynamic overwrite [idempotent per-bucket sink]
+      └─ sortWithinPartitions(bucket, conv_id, turn_idx)     [THE sort, on the OUTPUT:
+                                                              turn order per bucket, and
+                                                              the bucket order the
+                                                              partitioned writer needs]
+      └─ write results partitionBy(bucket), dynamic overwrite [idempotent per-bucket sink;
+                                                              no sort of its own]
       └─ audit append from written data                      [write-then-audit lineage]
 """
 
@@ -22,7 +24,6 @@ from dataclasses import dataclass
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators import audit as audit_ops
 from ..operators.extract import extract_arrow
@@ -56,9 +57,9 @@ def build_extracted(df: DataFrame, num_buckets: int, salt_buckets: int,
     remaining = audit_ops.resume_filter(bucketed, done_buckets)
     placed = shuffle_by_bucket(remaining, num_buckets)
     # Extraction is per-turn pure → run it on the raw shuffle stream and
-    # impose deterministic (conv_id, turn_idx) order on the OUTPUT: the
-    # Python workers start on the first fetched block instead of waiting
-    # behind a full-partition sort barrier.
+    # impose deterministic (bucket, conv_id, turn_idx) order on the
+    # OUTPUT: the Python workers start on the first fetched block instead
+    # of waiting behind a full-partition sort barrier.
     return sort_within_buckets(extract_arrow(placed))
 
 
@@ -73,10 +74,11 @@ def run_extract(spark: SparkSession, cfg: ExtractConfig) -> dict:
     extracted = build_extracted(df, cfg.num_buckets, cfg.salt_buckets, done)
 
     # Idempotent per-bucket sink: dynamic partition overwrite replaces
-    # exactly the buckets present in this run's output.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # exactly the buckets present in this run's output. It is a writer
+    # option, so the caller's session keeps its own overwrite mode.
     (
         extracted.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .format(tableio.table_format())
         .save(cfg.output_path)
@@ -88,9 +90,9 @@ def run_extract(spark: SparkSession, cfg: ExtractConfig) -> dict:
         # only the 5 metric columns — column pruning makes this cheap
         # relative to re-running the kernels.
         written = spark.read.format(tableio.table_format()).load(cfg.output_path)
-        if done:
-            written = written.filter(~F.col("bucket").isin(done))
-        metrics = audit_ops.audit_metrics(written, run_id)
+        metrics = audit_ops.audit_metrics(
+            audit_ops.resume_filter(written, done), run_id
+        )
         tableio.append_audit(metrics, cfg.audit_path)
         processed = metrics.count()
 

@@ -31,30 +31,6 @@ TRANSCRIPTS_SCHEMA = T.StructType(
     ]
 )
 
-SPAN_TYPE = T.StructType(
-    [
-        T.StructField("span_idx", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-# Output of the extraction stage (FIXTURES.md §2 + metrics columns).
-EXTRACTED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("spans", T.ArrayType(SPAN_TYPE)),
-        T.StructField("blocks_kept", T.LongType()),
-        T.StructField("blocks_dropped", T.LongType()),
-        T.StructField("parse_failed", T.IntegerType()),
-    ]
-)
-
 # Per-partition lineage/metrics (FIXTURES.md §3).
 AUDIT_SCHEMA = T.StructType(
     [

@@ -2,14 +2,18 @@
 pipeline at local[2], tiny Arrow batches and salted buckets must be
 byte-equal per turn to the committed sequential-oracle fixtures."""
 
+import glob
 import os
+import re
+import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from ocr_engine_spark.kernel.oracle import read_golden_jsonl
 from ocr_engine_spark.kernel.textutil import to_min_json
 from ocr_engine_spark.plans.extract_plan import ExtractConfig, build_extracted, run_extract
-from ocr_engine_spark.sources.tableio import read_transcripts
+from ocr_engine_spark.sources.tableio import AUDIT_SCHEMA, read_transcripts
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden_tiny.jsonl")
 
@@ -113,11 +117,7 @@ def test_partial_resume_idempotence(spark, tiny_transcripts, tmp_path):
     run_extract(spark, cfg)
     audit_df = spark.read.parquet(audit).filter(F.col("bucket") < 4)
     kept_audit = audit_df.collect()
-    import shutil
-
     shutil.rmtree(audit)
-    from ocr_engine_spark.sources.tableio import AUDIT_SCHEMA
-
     spark.createDataFrame(kept_audit, schema=AUDIT_SCHEMA).write.parquet(audit)
     for b in range(4, 8):
         p = os.path.join(out, f"bucket={b}")
@@ -127,4 +127,53 @@ def test_partial_resume_idempotence(spark, tiny_transcripts, tmp_path):
     stats = run_extract(spark, cfg)
     assert stats["resumed_buckets_skipped"] == 4
     assert stats["buckets_processed"] == 4
+    assert_matches_golden(collect_results(spark.read.parquet(out)))
+
+
+def test_one_sort_leading_with_bucket(spark, tiny_transcripts):
+    """The turn-order sort also gives the partitioned writer its bucket
+    order, so it is the only sort in the plan."""
+    df = read_transcripts(spark, tiny_transcripts)
+    plan = build_extracted(df, 8, 4)._jdf.queryExecution().executedPlan().toString()
+    sorts = [ln for ln in plan.splitlines() if "Sort [" in ln]
+    assert len(sorts) == 1, sorts
+    assert re.search(r"Sort \[bucket#\d+ ASC NULLS FIRST, conv_id#\d+ ASC NULLS FIRST, "
+                     r"turn_idx#\d+ ASC", sorts[0]), sorts[0]
+
+
+def test_written_bucket_files_keep_turn_order(spark, tiny_transcripts, tmp_path):
+    """Every data file the job writes is in (conv_id, turn_idx) order —
+    read as written, with no orderBy in between."""
+    out = str(tmp_path / "out")
+    run_extract(spark, ExtractConfig(input_path=tiny_transcripts, output_path=out,
+                                     num_buckets=8, salt_buckets=4))
+    files = glob.glob(os.path.join(out, "bucket=*", "*.parquet"))
+    assert len({os.path.dirname(f) for f in files}) == 8
+    for f in files:
+        rows = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
+        keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
+        assert keys == sorted(keys), f
+
+
+def test_dynamic_overwrite_is_scoped_to_the_write(spark, tiny_transcripts, tmp_path):
+    """run_extract leaves the session's partitionOverwriteMode alone,
+    and its own write still replaces only the buckets it redoes."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = str(tmp_path / "out")
+    audit = str(tmp_path / "audit")
+    cfg = ExtractConfig(input_path=tiny_transcripts, output_path=out, audit_path=audit,
+                        num_buckets=8, salt_buckets=4)
+    spark.conf.set(key, "STATIC")
+    try:
+        run_extract(spark, cfg)
+        assert spark.conf.get(key) == "STATIC"
+        # forget bucket 0 only: the resume rewrites it and keeps 1..7
+        kept = spark.read.parquet(audit).filter(F.col("bucket") != 0).collect()
+        shutil.rmtree(audit)
+        spark.createDataFrame(kept, schema=AUDIT_SCHEMA).write.parquet(audit)
+        stats = run_extract(spark, cfg)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+    assert stats["buckets_processed"] == 1
     assert_matches_golden(collect_results(spark.read.parquet(out)))

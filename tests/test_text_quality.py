@@ -9,10 +9,10 @@ import pytest
 
 
 def _rep(spark, text):
-    from ocr_engine_spark.operators.textstats import repetition_stats
+    from ocr_engine_spark.operators.textstats import repetition_stats_full
 
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    return repetition_stats(df).collect()[0].asDict()
+    return repetition_stats_full(df).collect()[0].asDict()
 
 
 def _c4(spark, text):
@@ -35,12 +35,6 @@ def test_repetition_all_duplicate_lines(spark):
     # 5-grams (2): 'same line same line same', 'line same line same line'
     # both unique -> no duplicate 5-gram chars
     assert r["dup_5gram_frac"] == 0.0
-
-
-def test_repetition_duplicate_5grams():
-    # separate spark-less arithmetic pin lives in the oracle; here the
-    # repeated sentence makes every 5-gram appear twice
-    pass
 
 
 def test_repetition_repeated_sentence(spark):
@@ -96,16 +90,9 @@ def test_c4_null_text(spark):
     )
 
 
-def _repfull(spark, text):
-    from ocr_engine_spark.operators.textstats import repetition_stats_full
-
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    return repetition_stats_full(df).collect()[0].asDict()
-
-
 def test_repetition_full_paragraph_metrics(spark):
     # paragraphs split on a literal blank line; "dup para" repeats
-    r = _repfull(spark, "dup para\n\nunique one\n\ndup para")
+    r = _rep(spark, "dup para\n\nunique one\n\ndup para")
     assert r["dup_para_frac"] == pytest.approx(0.333333)
     # para chars: dup para(8)*2 + unique one(10) = 26; dup = 16
     assert r["dup_para_char_frac"] == pytest.approx(round(16 / 26, 6))
@@ -118,7 +105,7 @@ def test_repetition_full_gram_family(spark):
     # "a b a b a b a b a b" (10 tokens): for k=5..7 every k-gram
     # repeats (fully duplicated stream); k=8 leaves one unique middle
     # gram of 3 (2/3 of chars dup); k=9,10 have too few grams to repeat
-    r = _repfull(spark, "a b a b a b a b a b")
+    r = _rep(spark, "a b a b a b a b a b")
     for k in (5, 6, 7):
         assert r[f"dup_{k}gram_frac"] == pytest.approx(1.0), k
     assert r["dup_8gram_frac"] == pytest.approx(0.666667)
@@ -126,29 +113,37 @@ def test_repetition_full_gram_family(spark):
     assert r["dup_10gram_frac"] == 0.0
     # 2-grams: "a b" x5 + "b a" x4; top covers 15 of 27 chars
     assert r["top_2gram_frac"] == pytest.approx(round(15 / 27, 6))
-    # agrees with the 3-representative operator on the shared metrics
-    from ocr_engine_spark.operators.textstats import repetition_stats
-
-    df = spark.createDataFrame(
-        [(1, "a b a b a b a b a b")], "doc_id long, text string"
-    )
-    r3 = repetition_stats(df).collect()[0].asDict()
-    assert r["top_2gram_frac"] == r3["top_2gram_frac"]
-    assert r["dup_5gram_frac"] == r3["dup_5gram_frac"]
-    assert r["dup_line_frac"] == r3["dup_line_frac"]
 
 
 def test_repetition_full_short_and_null_docs(spark):
     for text in (None, "", "one two three"):
-        r = _repfull(spark, text)
+        r = _rep(spark, text)
         for k in range(5, 11):
             if text == "one two three":
                 # fewer tokens than k -> empty stream -> 0.0
                 assert r[f"dup_{k}gram_frac"] == 0.0
         if text in (None, ""):
+            assert r["top_2gram"] == "", r
             assert all(
-                v == 0.0 for c, v in r.items() if c != "doc_id"
+                v == 0.0 for c, v in r.items() if c not in ("doc_id", "top_2gram")
             ), r
+
+
+def test_gopher_repetition_query_builds_only_its_arrays(spark, tmp_path):
+    """The 6-column query selects from the one repetition operator;
+    column pruning must drop the paragraph array and every gram array
+    but the 2- and 5-grams (k >= 3 grams are the concat_ws arrays)."""
+    from ocr_engine_spark import catalog
+
+    spark.createDataFrame(
+        [(1, "a b c d e\n\nf g")], "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    q = catalog.q_gopher_repetition(spark, str(tmp_path))
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert "_paras" not in plan
+    assert plan.count("concat_ws") == 1
+    assert q.columns == ["doc_id", "n_lines", "dup_line_frac", "top_2gram",
+                         "top_2gram_frac", "dup_5gram_frac"]
 
 
 # ----------------------------------------------- Gopher quality signals
