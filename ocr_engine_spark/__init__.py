@@ -15,6 +15,10 @@ Layout
                   audit/resume, dedup, similarity search, text stats.
 - ``plans/``      end-to-end pipeline assembly.
 - ``streaming/``  Structured Streaming variant of the extraction stage.
+- ``zipcache``    keeps Python workers from re-reading unchanged zip
+                  archives on every task; installed on import below.
 """
+
+from . import zipcache  # noqa: F401  (patches zipimport on import)
 
 __version__ = "0.1.0"

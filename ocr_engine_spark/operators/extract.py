@@ -14,9 +14,16 @@ Scale notes:
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` regardless of
   partition size — a mega-conversation partition streams through in
   bounded batches;
-- the Python worker is reused across batches
+- the Python worker is reused across batches and tasks
   (``spark.python.worker.reuse`` default), so kernel import cost is
-  amortized per executor, not per batch.
+  paid once per worker. Reuse alone did not make a task cheap: PySpark
+  calls ``importlib.invalidate_caches()`` on every task, and on
+  CPython 3.11 that re-read every zip archive on the worker's path
+  (``pyspark.zip``, the ``spark-core`` jar, py4j; about 27k directory
+  entries, 0.2-0.3 s of worker CPU per task). ``ocr_engine_spark/
+  zipcache.py``, installed when a worker imports this package to
+  unpickle the operator, skips the re-read while an archive's
+  ``(mtime_ns, size)`` is unchanged.
 """
 
 from __future__ import annotations
