@@ -16,6 +16,7 @@ golden-fixture pytest suite instead.
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Callable, Dict, Optional
 
@@ -56,6 +57,9 @@ _ORACLES: Dict[str, str] = {}
 
 
 def _register(name: str, oracle: Optional[str] = None):
+    if name in _QUERIES:
+        raise ValueError(f"catalog query {name!r} is already registered")
+
     def deco(fn):
         _QUERIES[name] = fn
         if oracle is not None:
@@ -962,25 +966,93 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- similarity search
+#
+# Every ANN oracle is built from the fragments below, each spelled once:
+# the DOUBLE-cast vectors ``v`` and query vector 0 ``q``, the cosine
+# ranking of ``v`` against ``q``, the LSH sign fold, the seed-centroid
+# IVF assignment and the PQ ADC score. The oracles stay plain DuckDB
+# SQL; only their text is generated from shared pieces.
 
-_ANN_BRUTE_ORACLE = """
-WITH q AS (SELECT list_transform(embedding, x -> x::DOUBLE) AS qe
-           FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-       round(list_dot_product(list_transform(e.embedding, x -> x::DOUBLE), q.qe)
-             / (sqrt(list_dot_product(list_transform(e.embedding, x -> x::DOUBLE),
-                                      list_transform(e.embedding, x -> x::DOUBLE)))
-                * sqrt(list_dot_product(q.qe, q.qe))), 6) AS cosine
-FROM embeddings e, q
-ORDER BY cosine DESC, vec_id
+_V_CTE = """v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
+           FROM embeddings)"""
+_VQ_CTES = _V_CTE + ",\nq AS (SELECT e AS qe FROM v WHERE vec_id = 0)"
+
+# Cosine of each ``v`` row against ``q``, rounded as in
+# similarity.cosine_scores.
+_COS_RANK = """SELECT v.vec_id,
+       round(list_dot_product(v.e, q.qe)
+             / (sqrt(list_dot_product(v.e, v.e))
+                * sqrt(list_dot_product(q.qe, q.qe))), 6) AS cosine"""
+
+_ANN_BRUTE_ORACLE = f"""
+WITH {_VQ_CTES}
+{_COS_RANK}
+FROM v, q
+ORDER BY cosine DESC, v.vec_id
 LIMIT 10
 """
 
 
-@_register("ann_cosine_topk", oracle=_ANN_BRUTE_ORACLE)
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _probed_topk_sql(lists: str, list_col: str, probes: str, k: int) -> str:
+    """Cosine top-k over the vectors whose ``lists.list_col`` is one of
+    the values of the one-column CTE ``probes``."""
+    return f"""{_COS_RANK}
+FROM v JOIN {lists} ON v.vec_id = {lists}.vec_id, q
+WHERE {lists}.{list_col} IN (SELECT * FROM {probes})
+ORDER BY cosine DESC, v.vec_id
+LIMIT {k}"""
+
+
+def _hits_sql(topk_sql: str) -> str:
+    """How many ids of a top-k subquery are in the brute-force top-10."""
+    return (
+        f"(SELECT count(*) FROM ({topk_sql}) t\n"
+        f"          JOIN ({_ANN_BRUTE_ORACLE}) b USING (vec_id))::BIGINT"
+    )
+
+
+def _recall_sweep_sql(branches, cols: str, k: int = 10) -> str:
+    """UNION ALL of one-row ``branches`` (each ending in ``hits``) with
+    ``recall = hits / k``, ordered by the first of ``cols``."""
+    body = "\n  UNION ALL\n".join(branches)
+    return (
+        f"SELECT {cols}, hits, round(hits / {k}.0, 6) AS recall\n"
+        f"FROM (\n{body}\n)\nORDER BY 1\n"
+    )
+
+
+def _ann_query(spark: SparkSession, sf_dir: str):
+    """The embeddings table and its vector 0, the query of every ANN
+    entry (a one-row driver-side fetch)."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
+    return emb, qvec
+
+
+def _recall_rows(emb: DataFrame, qvec, keyed_topks) -> DataFrame:
+    """One row per ``(keys, topk)`` pair: the literal ``keys`` columns,
+    ``n_retrieved`` (rows in ``topk``), ``hits`` (its ids in the
+    brute-force cosine top-10) and ``recall = hits / 10``, ordered by
+    the first key."""
+    brute = similarity.cosine_topk(emb, qvec, k=10).select(
+        "vec_id", F.lit(1).alias("hit")
+    )
+    parts = [
+        topk.select("vec_id")
+        .join(F.broadcast(brute), "vec_id", "left")
+        .agg(F.count(F.lit(1)).alias("n_retrieved"), F.count("hit").alias("hits"))
+        .select(*[F.lit(v).alias(c) for c, v in keys.items()], "n_retrieved", "hits")
+        for keys, topk in keyed_topks
+    ]
+    out = functools.reduce(DataFrame.unionByName, parts)
+    return out.withColumn("recall", F.round(F.col("hits") / 10.0, 6)).orderBy(
+        out.columns[0]
+    )
+
+
+@_register("ann_cosine_topk", oracle=_ANN_BRUTE_ORACLE)
+def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb, qvec = _ann_query(spark, sf_dir)
     return similarity.cosine_topk(emb, qvec, k=10)
 
 
@@ -999,11 +1071,11 @@ def _lsh_fold_sql(planes, vec_sql: str) -> str:
 
 
 def _lsh_bucket_oracle(num_planes: int = 8, dims: int = 64) -> str:
-    planes = similarity.plane_weight_lists(num_planes, dims)
-    fold = _lsh_fold_sql(planes, "list_transform(embedding, x -> x::DOUBLE)")
+    fold = _lsh_fold_sql(similarity.plane_weight_lists(num_planes, dims), "e")
     return f"""
+WITH {_V_CTE}
 SELECT vec_id, ({fold})::BIGINT AS bucket
-FROM embeddings
+FROM v
 ORDER BY vec_id
 """
 
@@ -1015,109 +1087,21 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_buckets_literal(emb, planes).orderBy("vec_id")
 
 
-def _ann_lsh_topk_oracle(num_planes: int = 8, dims: int = 64, k: int = 10) -> str:
-    planes = similarity.plane_weight_lists(num_planes, dims)
-    fold = _lsh_fold_sql(planes, "e")
-    cos = (
-        "round(list_dot_product(v.e, q.qe)"
-        " / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.qe, q.qe))), 6)"
-    )
-    return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-b AS (SELECT vec_id, ({fold})::BIGINT AS bucket FROM v),
-q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-qb AS (SELECT bucket FROM b WHERE vec_id = 0)
-SELECT v.vec_id, {cos} AS cosine
-FROM v JOIN b ON v.vec_id = b.vec_id, q, qb
-WHERE b.bucket = qb.bucket
-ORDER BY cosine DESC, v.vec_id
-LIMIT {k}
-"""
-
-
-@_register("ann_lsh_topk", oracle=_ann_lsh_topk_oracle(8, 64, 10))
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path: cosine top-k restricted to the query's LSH
-    bucket. The query's bucket is computed driver-side from the literal
-    hyperplanes (pure Python — no extra Spark job; the only cluster
-    work is the single bucket-filtered ranking scan)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    planes = similarity.plane_weight_lists(8, 64)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    qb = similarity.bucket_of(qvec, planes)
-    buckets = similarity.lsh_buckets_literal(emb, planes)
-    in_bucket = emb.join(
-        buckets.filter(F.col("bucket") == qb).select("vec_id"), "vec_id"
-    )
-    return similarity.cosine_topk(in_bucket, qvec, k=10)
-
-
-# recall@k of the LSH scale path vs the (oracled) brute-force baseline
-# (VERDICT r2 item 5): the quantity a user tuning num_planes hits
-# first. Both sides are existing oracled CTEs; recall = |lsh ∩ brute|/k.
-def _ann_lsh_recall_oracle(num_planes: int = 8, dims: int = 64, k: int = 10) -> str:
-    return f"""
-WITH brute AS (SELECT vec_id FROM ({_ANN_BRUTE_ORACLE}) b),
-lsh AS (SELECT vec_id FROM ({_ann_lsh_topk_oracle(num_planes, dims, k)}) l)
-SELECT {k}::INT AS k,
-       (SELECT count(*) FROM lsh)::BIGINT AS n_retrieved,
-       (SELECT count(*) FROM lsh JOIN brute USING (vec_id))::BIGINT AS hits,
-       round((SELECT count(*) FROM lsh JOIN brute USING (vec_id)) / {k}.0, 6) AS recall
-"""
-
-
-@_register("ann_lsh_recall", oracle=_ann_lsh_recall_oracle(8, 64, 10))
-def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the single-bucket LSH path against brute-force
-    cosine top-10 — quantifies what the zero-shuffle bucket restriction
-    costs in recall (PLANS.md §9 documents the planes-vs-recall
-    trade)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    planes = similarity.plane_weight_lists(8, 64)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
-    qb = similarity.bucket_of(qvec, planes)
-    buckets = similarity.lsh_buckets_literal(emb, planes)
-    in_bucket = emb.join(
-        buckets.filter(F.col("bucket") == qb).select("vec_id"), "vec_id"
-    )
-    lsh = similarity.cosine_topk(in_bucket, qvec, k=10).select("vec_id")
-    n_retrieved = lsh.agg(F.count(F.lit(1)).alias("n_retrieved"))
-    hits = lsh.join(brute, "vec_id").agg(F.count(F.lit(1)).alias("hits"))
-    return n_retrieved.crossJoin(hits).select(
-        F.lit(10).alias("k"),
-        "n_retrieved",
-        "hits",
-        F.round(F.col("hits") / 10.0, 6).alias("recall"),
-    )
-
-
 def _lsh_multiprobe_topk_oracle(num_planes: int = 8, dims: int = 64,
                                 radius: int = 1, k: int = 10) -> str:
-    """Multi-probe LSH top-k: the single-bucket oracle widened to every
-    bucket within hamming ``radius`` of the query's (probe set = qb XOR
-    each popcount≤radius mask)."""
+    """Multi-probe LSH top-k: cosine top-k over every bucket within
+    hamming ``radius`` of the query's (probe set = qb XOR each
+    popcount≤radius mask); radius 0 is the single-bucket search."""
     planes = similarity.plane_weight_lists(num_planes, dims)
     fold = _lsh_fold_sql(planes, "e")
     masks = similarity.multiprobe_masks(num_planes, radius)
     mask_vals = ", ".join(f"({m})" for m in masks)
-    cos = (
-        "round(list_dot_product(v.e, q.qe)"
-        " / (sqrt(list_dot_product(v.e, v.e)) * sqrt(list_dot_product(q.qe, q.qe))), 6)"
-    )
     return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
+WITH {_VQ_CTES},
 b AS (SELECT vec_id, ({fold})::BIGINT AS bucket FROM v),
-q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
 qb AS (SELECT bucket FROM b WHERE vec_id = 0),
 probe AS (SELECT xor(qb.bucket, t.m) AS bucket FROM qb, (VALUES {mask_vals}) t(m))
-SELECT v.vec_id, {cos} AS cosine
-FROM v JOIN b ON v.vec_id = b.vec_id, q
-WHERE b.bucket IN (SELECT bucket FROM probe)
-ORDER BY cosine DESC, v.vec_id
-LIMIT {k}
+{_probed_topk_sql("b", "bucket", "probe", k)}
 """
 
 
@@ -1127,9 +1111,8 @@ def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's bucket plus the 8 hamming-1-adjacent buckets — the
     standard recall fix that keeps the zero-shuffle literal-IN scan
     prune (9/256 of the corpus at 8 planes)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb, qvec = _ann_query(spark, sf_dir)
     planes = similarity.plane_weight_lists(8, 64)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     return similarity.lsh_multiprobe_topk(emb, planes, qvec, k=10, radius=1)
 
 
@@ -1142,48 +1125,27 @@ def _lsh_multiprobe_recall_oracle(num_planes: int = 8, dims: int = 64,
         branches.append(
             f"  SELECT {radius}::INT AS radius, {n_buckets}::INT AS n_buckets,\n"
             f"         (SELECT count(*) FROM ({mp}) x)::BIGINT AS n_retrieved,\n"
-            f"         (SELECT count(*) FROM ({mp}) x\n"
-            f"          JOIN ({_ANN_BRUTE_ORACLE}) b USING (vec_id))::BIGINT AS hits"
+            f"         {_hits_sql(mp)} AS hits"
         )
-    body = "\n  UNION ALL\n".join(branches)
-    return (
-        "SELECT radius, n_buckets, n_retrieved, hits, round(hits / "
-        f"{k}.0, 6) AS recall\nFROM (\n{body}\n)\nORDER BY radius\n"
-    )
+    return _recall_sweep_sql(branches, "radius, n_buckets, n_retrieved", k)
 
 
 @_register("ann_lsh_multiprobe_recall", oracle=_lsh_multiprobe_recall_oracle(8, 64, 10))
 def q_ann_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of multi-probe LSH vs brute force, swept over probe
-    radius 0 (single bucket) / 1 (9 buckets) / 2 (37 buckets) — the
-    recall-vs-scan-fraction trade a user tunes (PLANS.md §9)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    radius 0 (the single query bucket) / 1 (9 buckets) / 2 (37
+    buckets) — the recall-vs-scan-fraction trade a user tunes
+    (PLANS.md §9). The radius-0 row is the single-bucket LSH search's
+    recall."""
+    emb, qvec = _ann_query(spark, sf_dir)
     planes = similarity.plane_weight_lists(8, 64)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
-    parts = []
-    for radius in (0, 1, 2):
-        topk = similarity.lsh_multiprobe_topk(
-            emb, planes, qvec, k=10, radius=radius
-        ).select("vec_id")
-        n_buckets = len(similarity.multiprobe_masks(8, radius))
-        retrieved = topk.agg(F.count(F.lit(1)).alias("n_retrieved"))
-        hits = topk.join(brute, "vec_id").agg(F.count(F.lit(1)).alias("hits"))
-        parts.append(
-            retrieved.crossJoin(hits).select(
-                F.lit(radius).alias("radius"),
-                F.lit(n_buckets).alias("n_buckets"),
-                "n_retrieved",
-                "hits",
-            )
+    return _recall_rows(emb, qvec, [
+        (
+            {"radius": r, "n_buckets": len(similarity.multiprobe_masks(8, r))},
+            similarity.lsh_multiprobe_topk(emb, planes, qvec, k=10, radius=r),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "radius", "n_buckets", "n_retrieved", "hits",
-        F.round(F.col("hits") / 10.0, 6).alias("recall"),
-    ).orderBy("radius")
+        for r in (0, 1, 2)
+    ])
 
 
 @_register(
@@ -1334,20 +1296,9 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _embedding_pairs_oracle(num_planes: int = 8, dims: int = 64,
                             threshold: float = 0.5) -> str:
-    planes = similarity.plane_weight_lists(num_planes, dims)
-    terms = []
-    for j, w in enumerate(planes):
-        lit = "[" + ", ".join(f"{float(x):.1f}" for x in w) + "]"
-        terms.append(
-            f"CASE WHEN list_dot_product(e, {lit}) > 0 "
-            f"THEN (1::BIGINT << {j}) ELSE 0 END"
-        )
-    fold = "\n         + ".join(terms)
+    fold = _lsh_fold_sql(similarity.plane_weight_lists(num_planes, dims), "e")
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-  FROM embeddings
-),
+WITH {_V_CTE},
 b AS (SELECT vec_id, e, ({fold})::BIGINT AS bucket FROM v)
 SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
        round(list_dot_product(a.e, bb.e)
@@ -1615,24 +1566,44 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVF_CENTROID_IDS = (1, 2, 3, 4)
 
-_IVF_ASSIGN_ORACLE = """
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-c1 AS (SELECT e FROM v WHERE vec_id = 1),
+# The seed centroids c1..c4 (vectors _IVF_CENTROID_IDS) and each
+# vector's inverted list: the 1-based argmax dot, first max on ties
+# (similarity.ivf_assign_col). Needs ``v``.
+_IVF_SEED_CTES = """c1 AS (SELECT e FROM v WHERE vec_id = 1),
 c2 AS (SELECT e FROM v WHERE vec_id = 2),
 c3 AS (SELECT e FROM v WHERE vec_id = 3),
-c4 AS (SELECT e FROM v WHERE vec_id = 4)
-SELECT vec_id, list_position(dots, list_max(dots))::INT AS centroid
-FROM (
-  SELECT v.vec_id,
-         [list_dot_product(v.e, c1.e), list_dot_product(v.e, c2.e),
-          list_dot_product(v.e, c3.e), list_dot_product(v.e, c4.e)] AS dots
-  FROM v, c1, c2, c3, c4)
+c4 AS (SELECT e FROM v WHERE vec_id = 4),
+assign AS (
+  SELECT vec_id, list_position(dots, list_max(dots))::INT AS centroid
+  FROM (
+    SELECT v.vec_id,
+           [list_dot_product(v.e, c1.e), list_dot_product(v.e, c2.e),
+            list_dot_product(v.e, c3.e), list_dot_product(v.e, c4.e)] AS dots
+    FROM v, c1, c2, c3, c4)
+)"""
+
+
+def _ivf_probe_ctes(nprobe: int) -> str:
+    """``probes``: the ``nprobe`` seed lists nearest the query (by dot,
+    ties to the lower list). Needs ``q`` and the seed CTEs."""
+    return f"""qd AS (
+  SELECT [list_dot_product(q.qe, c1.e), list_dot_product(q.qe, c2.e),
+          list_dot_product(q.qe, c3.e), list_dot_product(q.qe, c4.e)] AS dots
+  FROM q, c1, c2, c3, c4
+),
+probes AS (
+  SELECT i FROM qd, (SELECT unnest(generate_series(1, 4)) AS i)
+  ORDER BY qd.dots[i] DESC, i
+  LIMIT {nprobe}
+)"""
+
+
+@_register("ann_ivf_assignments", oracle=f"""
+WITH {_V_CTE},
+{_IVF_SEED_CTES}
+SELECT vec_id, centroid FROM assign
 ORDER BY vec_id
-"""
-
-
-@_register("ann_ivf_assignments", oracle=_IVF_ASSIGN_ORACLE)
+""")
 def q_ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF inverted-list assignment: argmax dot against literal
     centroids — one projection, no join, no shuffle."""
@@ -1642,43 +1613,11 @@ def q_ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_topk_oracle(nprobe: int = 2, k: int = 10) -> str:
-    return _IVF_TOPK_ORACLE_TMPL.format(nprobe=nprobe, k=k)
-
-
-_IVF_TOPK_ORACLE_TMPL = """
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-c1 AS (SELECT e FROM v WHERE vec_id = 1),
-c2 AS (SELECT e FROM v WHERE vec_id = 2),
-c3 AS (SELECT e FROM v WHERE vec_id = 3),
-c4 AS (SELECT e FROM v WHERE vec_id = 4),
-q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-assign AS (
-  SELECT vec_id, list_position(dots, list_max(dots))::INT AS centroid
-  FROM (
-    SELECT v.vec_id,
-           [list_dot_product(v.e, c1.e), list_dot_product(v.e, c2.e),
-            list_dot_product(v.e, c3.e), list_dot_product(v.e, c4.e)] AS dots
-    FROM v, c1, c2, c3, c4)
-),
-qd AS (
-  SELECT [list_dot_product(q.qe, c1.e), list_dot_product(q.qe, c2.e),
-          list_dot_product(q.qe, c3.e), list_dot_product(q.qe, c4.e)] AS dots
-  FROM q, c1, c2, c3, c4
-),
-probes AS (
-  SELECT i FROM qd, (SELECT unnest(generate_series(1, 4)) AS i)
-  ORDER BY qd.dots[i] DESC, i
-  LIMIT {nprobe}
-)
-SELECT v.vec_id,
-       round(list_dot_product(v.e, q.qe)
-             / (sqrt(list_dot_product(v.e, v.e))
-                * sqrt(list_dot_product(q.qe, q.qe))), 6) AS cosine
-FROM v JOIN assign ON v.vec_id = assign.vec_id, q
-WHERE assign.centroid IN (SELECT i FROM probes)
-ORDER BY cosine DESC, v.vec_id
-LIMIT {k}
+    return f"""
+WITH {_VQ_CTES},
+{_IVF_SEED_CTES},
+{_ivf_probe_ctes(nprobe)}
+{_probed_topk_sql("assign", "centroid", "probes", k)}
 """
 
 
@@ -1689,28 +1628,23 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberate collect); the cluster does one assignment-filtered
     ranking scan. Oracle = the oracled assignment CTE + the same probe
     rule + cosine ORDER BY/LIMIT."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb, qvec = _ann_query(spark, sf_dir)
     cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     return similarity.ivf_topk(emb, cents, qvec, k=10, nprobe=2)
 
 
-def _ivf_recall_oracle(k: int = 10) -> str:
-    branches = []
-    for np_ in (1, 2, 3, 4):
-        branches.append(
-            f"  SELECT {np_}::INT AS nprobe,\n"
-            f"         (SELECT count(*) FROM ({_ivf_topk_oracle(np_, k)}) i\n"
-            f"          JOIN ({_ANN_BRUTE_ORACLE}) b USING (vec_id))::BIGINT AS hits"
-        )
-    body = "\n  UNION ALL\n".join(branches)
-    return (
-        "SELECT nprobe, hits, round(hits / "
-        f"{k}.0, 6) AS recall\nFROM (\n{body}\n)\nORDER BY nprobe\n"
-    )
+def _nprobe_recall_oracle(topk_oracle: Callable[[int, int], str],
+                          k: int = 10) -> str:
+    """recall@k of ``topk_oracle(nprobe, k)`` swept over nprobe 1..4."""
+    branches = [
+        f"  SELECT {np_}::INT AS nprobe,\n"
+        f"         {_hits_sql(topk_oracle(np_, k))} AS hits"
+        for np_ in (1, 2, 3, 4)
+    ]
+    return _recall_sweep_sql(branches, "nprobe", k)
 
 
-@_register("ann_ivf_recall", oracle=_ivf_recall_oracle(10))
+@_register("ann_ivf_recall", oracle=_nprobe_recall_oracle(_ivf_topk_oracle))
 def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of IVF search vs brute-force, swept over nprobe 1..4
     (VERDICT r2 item 5): nprobe=4 probes every inverted list and must
@@ -1719,9 +1653,8 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE assignment pass (``similarity.ivf_topk_sweep`` — probe sets are
     nested, so a sequence-explode fans each vector to its member
     sweeps; VERDICT r3 item 5 — the per-branch form scanned 8×)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb, qvec = _ann_query(spark, sf_dir)
     cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
     sweep = similarity.ivf_topk_sweep(emb, cents, qvec, k=10)
     nprobes = spark.range(1, 5).select(F.col("id").cast("int").alias("nprobe"))
@@ -1843,11 +1776,25 @@ def q_streaming_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------- product quantization
 
-_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES = 16, 4, 4
+# 16 segments × 4 dims, 4 codewords each: 2 bits per segment.
+_PQ_CODEBOOKS = similarity.pq_codebooks(16, 4, 4)
 
 
 def _pq_w_sql(w) -> str:
     return "[" + ", ".join(str(float(x)) for x in w) + "]"
+
+
+def _pq_segment_dots(codebooks, vec: str):
+    """Per segment s, the SQL list of dots of ``vec``'s 1-based slice
+    s*sub+1..s*sub+sub against each literal codeword."""
+    out = []
+    for s, words in enumerate(codebooks):
+        sub = len(words[0])
+        lo, hi = s * sub + 1, s * sub + sub
+        out.append("[" + ", ".join(
+            f"list_dot_product({vec}[{lo}:{hi}], {_pq_w_sql(w)})" for w in words
+        ) + "]")
+    return out
 
 
 def _pq_code_terms_sql(codebooks, vec: str = "e") -> str:
@@ -1855,32 +1802,45 @@ def _pq_code_terms_sql(codebooks, vec: str = "e") -> str:
     codeword index (list_position finds the FIRST max — same
     lowest-index tie rule as Spark's array_position) minus 1, scaled
     by 4^s."""
-    terms = []
-    for s, words in enumerate(codebooks):
-        sub = len(words[0])
-        lo, hi = s * sub + 1, s * sub + sub
-        dots = ", ".join(
-            f"list_dot_product({vec}[{lo}:{hi}], {_pq_w_sql(w)})" for w in words
-        )
-        terms.append(
-            f"(list_position([{dots}], list_max([{dots}])) - 1)::BIGINT * {4 ** s}"
-        )
-    return "\n         + ".join(terms)
+    return "\n         + ".join(
+        f"(list_position({d}, list_max({d})) - 1)::BIGINT * {4 ** s}"
+        for s, d in enumerate(_pq_segment_dots(codebooks, vec))
+    )
 
 
-def _pq_codes_oracle() -> str:
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
+def _pq_adc_topk_oracle(nprobe: Optional[int] = None, k: int = 10) -> str:
+    """ADC top-k: each vector scored from its packed code alone, by
+    looking its per-segment codeword up in the query's dot table. With
+    ``nprobe``, only the vectors in the query's ``nprobe`` nearest
+    seed IVF lists are scored (IVFADC)."""
+    score = "\n              + ".join(
+        f"({lut})[(c.pq_code // {4 ** s}) % 4 + 1]"
+        for s, lut in enumerate(_pq_segment_dots(_PQ_CODEBOOKS, "q.qe"))
+    )
+    ivf, scored = "", "codes c, q"
+    if nprobe is not None:
+        ivf = f"{_IVF_SEED_CTES},\n{_ivf_probe_ctes(nprobe)},\n"
+        scored = ("codes c JOIN assign USING (vec_id), q\n"
+                  "WHERE assign.centroid IN (SELECT i FROM probes)")
     return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings)
-SELECT vec_id,
-       ({_pq_code_terms_sql(cb)})::BIGINT AS pq_code
-FROM v
-ORDER BY vec_id
+WITH {_VQ_CTES},
+{ivf}codes AS (SELECT vec_id, ({_pq_code_terms_sql(_PQ_CODEBOOKS)})::BIGINT AS pq_code
+          FROM v)
+SELECT c.vec_id,
+       round({score}, 6) AS adc_score
+FROM {scored}
+ORDER BY adc_score DESC, c.vec_id
+LIMIT {k}
 """
 
 
-@_register("ann_pq_codes", oracle=_pq_codes_oracle())
+@_register("ann_pq_codes", oracle=f"""
+WITH {_V_CTE}
+SELECT vec_id,
+       ({_pq_code_terms_sql(_PQ_CODEBOOKS)})::BIGINT AS pq_code
+FROM v
+ORDER BY vec_id
+""")
 def q_ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encoding (Jégou et al., TPAMI 2011): each
     64-dim embedding compresses to ONE packed BIGINT (16 segments × 2
@@ -1888,126 +1848,23 @@ def q_ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure projection, and the column an ADC scan reads INSTEAD of the
     raw vectors at 100 TB."""
     emb = _t(spark, sf_dir, "embeddings")
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
     return emb.select(
-        "vec_id", similarity.pq_code_col(cb).alias("pq_code")
+        "vec_id", similarity.pq_code_col(_PQ_CODEBOOKS).alias("pq_code")
     ).orderBy("vec_id")
 
 
-def _pq_adc_topk_oracle(k: int = 10) -> str:
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
-    score_terms = []
-    for s, words in enumerate(cb):
-        sub = len(words[0])
-        lo, hi = s * sub + 1, s * sub + sub
-        lut = ", ".join(
-            f"list_dot_product(q.qe[{lo}:{hi}], {_pq_w_sql(w)})" for w in words
-        )
-        score_terms.append(f"([{lut}])[(c.pq_code // {4 ** s}) % 4 + 1]")
-    score = "\n              + ".join(score_terms)
-    return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-codes AS (SELECT vec_id, ({_pq_code_terms_sql(cb)})::BIGINT AS pq_code FROM v),
-q AS (SELECT e AS qe FROM v WHERE vec_id = 0)
-SELECT c.vec_id,
-       round({score}, 6) AS adc_score
-FROM codes c, q
-ORDER BY adc_score DESC, c.vec_id
-LIMIT {k}
-"""
-
-
-@_register("ann_pq_adc_topk", oracle=_pq_adc_topk_oracle(10))
+@_register("ann_pq_adc_topk", oracle=_pq_adc_topk_oracle())
 def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC (asymmetric distance) top-10: the query builds a tiny
     driver-side lookup table (segments × codes dots against the
     literal codebooks) and every corpus vector is scored from its
     packed code alone — integer unpack + literal-array lookups, the
     raw embeddings never read in the scoring scan."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    return similarity.pq_adc_topk(emb, cb, qvec, k=10)
+    emb, qvec = _ann_query(spark, sf_dir)
+    return similarity.pq_adc_topk(emb, _PQ_CODEBOOKS, qvec, k=10)
 
 
-def _pq_recall_oracle(k: int = 10) -> str:
-    return f"""
-WITH brute AS (SELECT vec_id FROM ({_ANN_BRUTE_ORACLE}) b),
-adc AS (SELECT vec_id FROM ({_pq_adc_topk_oracle(k)}) a)
-SELECT {k}::INT AS k,
-       (SELECT count(*) FROM adc JOIN brute USING (vec_id))::BIGINT AS hits,
-       round((SELECT count(*) FROM adc JOIN brute USING (vec_id)) / {k}.0, 6) AS recall
-"""
-
-
-@_register("ann_pq_recall", oracle=_pq_recall_oracle(10))
-def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of the PQ/ADC path vs brute-force cosine — what the
-    64:1 compression costs on this corpus (PLANS.md §9)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
-    adc = similarity.pq_adc_topk(emb, cb, qvec, k=10).select("vec_id")
-    return adc.join(brute, "vec_id").agg(F.count(F.lit(1)).alias("hits")).select(
-        F.lit(10).alias("k"),
-        "hits",
-        F.round(F.col("hits") / 10.0, 6).alias("recall"),
-    )
-
-
-def _ivf_pq_topk_oracle(nprobe: int = 2, k: int = 10) -> str:
-    """IVFADC replay: the oracled IVF assignment + probe CTEs, the
-    oracled PQ packed-code CTE, ADC scoring restricted to the probed
-    lists."""
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
-    score_terms = []
-    for s, words in enumerate(cb):
-        sub = len(words[0])
-        lo, hi = s * sub + 1, s * sub + sub
-        lut = ", ".join(
-            f"list_dot_product(q.qe[{lo}:{hi}], {_pq_w_sql(w)})" for w in words
-        )
-        score_terms.append(f"([{lut}])[(c.pq_code // {4 ** s}) % 4 + 1]")
-    score = "\n              + ".join(score_terms)
-    return f"""
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-c1 AS (SELECT e FROM v WHERE vec_id = 1),
-c2 AS (SELECT e FROM v WHERE vec_id = 2),
-c3 AS (SELECT e FROM v WHERE vec_id = 3),
-c4 AS (SELECT e FROM v WHERE vec_id = 4),
-q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-assign AS (
-  SELECT vec_id, list_position(dots, list_max(dots))::INT AS centroid
-  FROM (
-    SELECT v.vec_id,
-           [list_dot_product(v.e, c1.e), list_dot_product(v.e, c2.e),
-            list_dot_product(v.e, c3.e), list_dot_product(v.e, c4.e)] AS dots
-    FROM v, c1, c2, c3, c4)
-),
-qd AS (
-  SELECT [list_dot_product(q.qe, c1.e), list_dot_product(q.qe, c2.e),
-          list_dot_product(q.qe, c3.e), list_dot_product(q.qe, c4.e)] AS dots
-  FROM q, c1, c2, c3, c4
-),
-probes AS (
-  SELECT i FROM qd, (SELECT unnest(generate_series(1, 4)) AS i)
-  ORDER BY qd.dots[i] DESC, i
-  LIMIT {nprobe}
-),
-codes AS (SELECT vec_id, ({_pq_code_terms_sql(cb)})::BIGINT AS pq_code FROM v)
-SELECT c.vec_id,
-       round({score}, 6) AS adc_score
-FROM codes c JOIN assign USING (vec_id), q
-WHERE assign.centroid IN (SELECT i FROM probes)
-ORDER BY adc_score DESC, c.vec_id
-LIMIT {k}
-"""
-
-
-@_register("ann_ivf_pq_topk", oracle=_ivf_pq_topk_oracle(nprobe=2, k=10))
+@_register("ann_ivf_pq_topk", oracle=_pq_adc_topk_oracle(nprobe=2))
 def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF×PQ (IVFADC, Jégou et al. TPAMI 2011 §V — VERDICT r3 item
     6): centroid-probe prune to the top-2 inverted lists, then
@@ -2015,59 +1872,27 @@ def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections, no join; the probed scan reads the BIGINT code column
     instead of raw vectors — the production ANN shape both PLANS.md §9
     notes point at."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb, qvec = _ann_query(spark, sf_dir)
     cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    return similarity.ivf_pq_topk(emb, cents, cb, qvec, k=10, nprobe=2)
+    return similarity.ivf_pq_topk(emb, cents, _PQ_CODEBOOKS, qvec, k=10, nprobe=2)
 
 
-def _ivf_pq_recall_oracle(k: int = 10) -> str:
-    branches = []
-    for np_ in (1, 2, 3, 4):
-        branches.append(
-            f"  SELECT {np_}::INT AS nprobe,\n"
-            f"         (SELECT count(*) FROM ({_ivf_pq_topk_oracle(np_, k)}) i\n"
-            f"          JOIN ({_ANN_BRUTE_ORACLE}) b USING (vec_id))::BIGINT AS hits"
-        )
-    body = "\n  UNION ALL\n".join(branches)
-    return (
-        "SELECT nprobe, hits, round(hits / "
-        f"{k}.0, 6) AS recall\nFROM (\n{body}\n)\nORDER BY nprobe\n"
-    )
-
-
-@_register("ann_ivf_pq_recall", oracle=_ivf_pq_recall_oracle(10))
+@_register("ann_ivf_pq_recall", oracle=_nprobe_recall_oracle(_pq_adc_topk_oracle))
 def q_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of IVF×PQ vs brute-force cosine, swept over nprobe
-    1..4 — quantifies what the centroid prune adds/costs ON TOP of the
-    PQ-alone 0.2 recall (ann_pq_recall): pruning can *raise* recall by
-    evicting ADC false positives from other lists, or lower it by
-    cutting true neighbors whose list isn't probed; measured honestly
-    either way (PLANS.md §9)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    1..4. Probing all 4 lists filters out no vector, so the nprobe=4
+    row is plain PQ/ADC top-k's recall (0.2 on this corpus); the other
+    rows show what the centroid prune adds or costs on top of it:
+    pruning can *raise* recall by evicting ADC false positives from
+    other lists, or lower it by cutting true neighbors whose list
+    isn't probed; measured honestly either way (PLANS.md §9)."""
+    emb, qvec = _ann_query(spark, sf_dir)
     cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
-    cb = similarity.pq_codebooks(_PQ_SEGMENTS, _PQ_SUB, _PQ_NCODES)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
-    parts = []
-    for np_ in (1, 2, 3, 4):
-        topk = similarity.ivf_pq_topk(
-            emb, cents, cb, qvec, k=10, nprobe=np_
-        ).select("vec_id")
-        parts.append(
-            topk.join(F.broadcast(brute), "vec_id")
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .select(F.lit(np_).alias("nprobe"), "hits")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "nprobe",
-        F.col("hits").cast("long").alias("hits"),
-        F.round(F.col("hits") / 10.0, 6).alias("recall"),
-    ).orderBy("nprobe")
+    return _recall_rows(emb, qvec, [
+        ({"nprobe": n},
+         similarity.ivf_pq_topk(emb, cents, _PQ_CODEBOOKS, qvec, k=10, nprobe=n))
+        for n in (1, 2, 3, 4)
+    ]).drop("n_retrieved")
 
 
 _STREAM_CONV_STATS_ORACLE = """
@@ -3188,21 +3013,9 @@ def q_ntile_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------- kmeans / vocab / PII / stream dedup
 
-_KMEANS_UPDATE_ORACLE = """
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-c1 AS (SELECT e FROM v WHERE vec_id = 1),
-c2 AS (SELECT e FROM v WHERE vec_id = 2),
-c3 AS (SELECT e FROM v WHERE vec_id = 3),
-c4 AS (SELECT e FROM v WHERE vec_id = 4),
-assign AS (
-  SELECT vec_id, list_position(dots, list_max(dots))::INT AS centroid
-  FROM (
-    SELECT v.vec_id,
-           [list_dot_product(v.e, c1.e), list_dot_product(v.e, c2.e),
-            list_dot_product(v.e, c3.e), list_dot_product(v.e, c4.e)] AS dots
-    FROM v, c1, c2, c3, c4)
-)
+_KMEANS_UPDATE_ORACLE = f"""
+WITH {_V_CTE},
+{_IVF_SEED_CTES}
 SELECT assign.centroid,
        count(*)::BIGINT AS n_members,
        (g.i - 1)::INT AS dim_idx,
@@ -3676,36 +3489,15 @@ def q_streaming_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(qname).orderBy("fingerprint")
 
 
-# The cosine ranking used inside each probed list (shared fragment).
-_IVF_COS_RANK = """
-SELECT v.vec_id,
-       round(list_dot_product(v.e, q.qe)
-             / (sqrt(list_dot_product(v.e, v.e))
-                * sqrt(list_dot_product(q.qe, q.qe))), 6) AS cosine
-"""
-
-_IVF_TRAINED_ORACLE = """
-WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
-           FROM embeddings),
-c1 AS (SELECT e FROM v WHERE vec_id = 1),
-c2 AS (SELECT e FROM v WHERE vec_id = 2),
-c3 AS (SELECT e FROM v WHERE vec_id = 3),
-c4 AS (SELECT e FROM v WHERE vec_id = 4),
-q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
+_IVF_TRAINED_ORACLE = f"""
+WITH {_VQ_CTES},
+{_IVF_SEED_CTES},
 seeds AS (SELECT 1 AS j, c1.e FROM c1 UNION ALL SELECT 2, c2.e FROM c2
           UNION ALL SELECT 3, c3.e FROM c3 UNION ALL SELECT 4, c4.e FROM c4),
-assign0 AS (
-  SELECT vec_id, list_position(dots, list_max(dots))::INT AS centroid
-  FROM (
-    SELECT v.vec_id,
-           [list_dot_product(v.e, c1.e), list_dot_product(v.e, c2.e),
-            list_dot_product(v.e, c3.e), list_dot_product(v.e, c4.e)] AS dots
-    FROM v, c1, c2, c3, c4)
-),
 cent1 AS (
   SELECT centroid, list(val ORDER BY i) AS e FROM (
     SELECT a.centroid AS centroid, g.i AS i, round(avg(v.e[g.i]), 6) AS val
-    FROM v JOIN assign0 a USING (vec_id)
+    FROM v JOIN assign a USING (vec_id)
     CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) g
     GROUP BY a.centroid, g.i)
   GROUP BY centroid
@@ -3722,13 +3514,7 @@ assign1 AS (
                                        m.centroid) AS rn
     FROM v CROSS JOIN cent1f m) WHERE rn = 1
 ),
-probe0 AS (
-  SELECT j AS i FROM (
-    SELECT seeds.j,
-           row_number() OVER (ORDER BY list_dot_product(q.qe, seeds.e) DESC,
-                              seeds.j) AS rn
-    FROM q CROSS JOIN seeds) WHERE rn = 1
-),
+{_ivf_probe_ctes(1)},
 probe1 AS (
   SELECT centroid AS i FROM (
     SELECT m.centroid,
@@ -3736,27 +3522,19 @@ probe1 AS (
                               m.centroid) AS rn
     FROM q CROSS JOIN cent1f m) WHERE rn = 1
 ),
-brute AS (SELECT vec_id FROM ({BRUTE}) b),
 top0 AS (
-  {COS} FROM v JOIN assign0 ON v.vec_id = assign0.vec_id, q
-  WHERE assign0.centroid IN (SELECT i FROM probe0)
-  ORDER BY cosine DESC, v.vec_id LIMIT 10
+{_probed_topk_sql("assign", "centroid", "probes", 10)}
 ),
 top1 AS (
-  {COS} FROM v JOIN assign1 ON v.vec_id = assign1.vec_id, q
-  WHERE assign1.centroid IN (SELECT i FROM probe1)
-  ORDER BY cosine DESC, v.vec_id LIMIT 10
+{_probed_topk_sql("assign1", "centroid", "probe1", 10)}
 )
-SELECT 'seed' AS centroids,
-       (SELECT count(*) FROM top0 JOIN brute USING (vec_id))::BIGINT AS hits,
-       round((SELECT count(*) FROM top0 JOIN brute USING (vec_id)) / 10.0, 6)
-         AS recall
-UNION ALL
-SELECT 'trained',
-       (SELECT count(*) FROM top1 JOIN brute USING (vec_id))::BIGINT,
-       round((SELECT count(*) FROM top1 JOIN brute USING (vec_id)) / 10.0, 6)
-ORDER BY centroids
-""".replace("{BRUTE}", _ANN_BRUTE_ORACLE).replace("{COS}", _IVF_COS_RANK)
+""" + _recall_sweep_sql(
+    [
+        f"  SELECT '{tag}' AS centroids, {_hits_sql('SELECT * FROM ' + top)} AS hits"
+        for tag, top in (("seed", "top0"), ("trained", "top1"))
+    ],
+    "centroids",
+)
 
 
 @_register("ann_ivf_trained_recall", oracle=_IVF_TRAINED_ORACLE)
@@ -3768,89 +3546,23 @@ def q_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain in SQL: assignment → per-dim means (rounded 6 dp, the same
     literals Spark feeds back) → re-assignment → probe → in-list
     cosine ranking → recall join."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb, qvec = _ann_query(spark, sf_dir)
     cents0 = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
     cents1 = similarity.kmeans_centroids(emb, cents0)
-    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
-    parts = []
-    for tag, cents in (("seed", cents0), ("trained", cents1)):
-        top = similarity.ivf_topk(emb, cents, qvec, k=10, nprobe=1).select(
-            "vec_id"
-        )
-        parts.append(
-            top.join(F.broadcast(brute), "vec_id")
-            .agg(F.count(F.lit(1)).alias("hits"))
-            .select(
-                F.lit(tag).alias("centroids"),
-                F.col("hits").cast("long").alias("hits"),
-                F.round(F.col("hits") / 10.0, 6).alias("recall"),
-            )
-        )
-    return parts[0].unionByName(parts[1]).orderBy("centroids")
+    return _recall_rows(emb, qvec, [
+        ({"centroids": tag},
+         similarity.ivf_topk(emb, cents, qvec, k=10, nprobe=1))
+        for tag, cents in (("seed", cents0), ("trained", cents1))
+    ]).drop("n_retrieved")
 
 
 # ---------------------------------------------------------------- API
 
-# The driver's correctness artifact records at most 50 queries() entries
-# per round, in dict order — with 76+ registered, registration order
-# alone left the entire round-4 surface driver-unrecorded while
-# three-rounds-green scalar queries burned the budget (VERDICT r4 item
-# 2). Priority order: never-driver-recorded entries first (the r4+r5
-# additions, checked against the union of CORRECTNESS_r01..r04), then
-# the least-recently-recorded (streaming_conv_stats, last recorded r3),
-# then the r4-recorded legacy set in registration order. The rotation is
-# documented in COVERAGE.md so "N/N correct" maps to artifacts across
-# rounds.
-_DRIVER_PRIORITY = [
-    # round-5 additions (never recorded)
-    "gopher_quality_documents",
-    "exact_substring_dedup_documents",
-    "flagship_sessions_asof",
-    "curation_quota_per_source_salted",
-    "gopher_repetition_documents",
-    "gopher_repetition_full_documents",
-    "c4_line_filter_documents",
-    # round-4 additions absent from every CORRECTNESS_r* artifact
-    "extract_spans_multikind",
-    "curation_stratified_sample",
-    "curation_quota_per_source",
-    "curation_pack_sequences",
-    "curation_decontaminate",
-    "curation_shuffle_permutation",
-    "curation_redact_pii",
-    "curation_pipeline",
-    "bucketed_join_doc_embeddings",
-    "asof_click_view_events",
-    "sessionize_events",
-    "session_stats_events",
-    "streaming_session_window",
-    "streaming_dedup_first_seen",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "json_props_extract_events",
-    "rollup_docs_lang_source",
-    "pivot_user_event_counts",
-    "percentiles_by_event_type",
-    "ntile_quality_chunks",
-    "kmeans_update_step",
-    "vocab_pair_counts",
-    "ann_ivf_pq_recall",
-    "ann_ivf_trained_recall",
-    # recorded last in r3, rotated out of r4's 50
-    "streaming_conv_stats",
-]
-
-
-def _driver_order(d: dict) -> dict:
-    pri = [n for n in _DRIVER_PRIORITY if n in d]
-    rest = [n for n in d if n not in set(pri)]
-    return {n: d[n] for n in pri + rest}
-
-
 def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _driver_order(_QUERIES)
+    """Every entry, in registration order (``__spark_entry__`` orders
+    them for the driver)."""
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> Dict[str, str]:
-    return _driver_order(_ORACLES)
+    return dict(_ORACLES)

@@ -3,7 +3,6 @@
 from .columns import (  # noqa: F401
     clamp_conf_col,
     has_devanagari_col,
-    normalize_text_col,
     payload_kind_col,
     slugify_col,
 )

@@ -75,16 +75,3 @@ def has_devanagari_col(text: Column | str) -> Column:
     twin; parity anchor: /root/reference/app.py:184)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.coalesce(c.rlike("[\\u0900-\\u097F]"), F.lit(False))
-
-
-def normalize_text_col(text: Column | str) -> Column:
-    """Plain-text line normalization (kernel.textutil.normalize_lines
-    twin, joined by "\\n"): per line, strip trailing ASCII whitespace;
-    drop empty lines. Built from higher-order array functions — stays
-    JVM-side.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    lines = F.split(F.coalesce(c, F.lit("")), "\n", -1)
-    trimmed = F.transform(lines, lambda x: F.regexp_replace(x, "[ \\t\\r\\x0B\\f]+$", ""))
-    kept = F.filter(trimmed, lambda x: x != "")
-    return F.array_join(kept, "\n")

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Dict, List
+from typing import Any, Dict
 
 # ASCII whitespace used for *deterministic* trimming. Python's bare
 # str.strip() trims unicode whitespace, which native Spark expressions
@@ -65,22 +65,6 @@ def merge_keep_longer(dst: Dict, src: Dict) -> Dict:
         if k not in dst or len(str(v)) > len(str(dst.get(k, ""))):
             dst[k] = v
     return dst
-
-
-def normalize_lines(text: str | None) -> List[str]:
-    """Plain-text normalization: split on "\\n", strip trailing ASCII
-    whitespace per line, drop lines that become empty (the reference's
-    empty-line filter, /root/reference/app.py:304-306 / 398-401,
-    applied to free text).
-    """
-    if not text:
-        return []
-    out: List[str] = []
-    for ln in text.split("\n"):
-        ln = ln.rstrip(ASCII_TRAIL)
-        if ln:
-            out.append(ln)
-    return out
 
 
 def to_min_json(obj: Any) -> str:

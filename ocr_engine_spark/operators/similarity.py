@@ -9,9 +9,10 @@
 - ``lsh_bucket_col`` / ``lsh_buckets_literal``: random-hyperplane
   LSH — the scale path. Hyperplane weights are derived from
   md5(plane, dim) parity, so the bucketing is engine-portable (exact
-  DuckDB oracle) and needs no stored model. Search computes the
-  query's bucket in plain Python with ``bucket_of`` and ranks only
-  that bucket.
+  DuckDB oracle) and needs no stored model. Search
+  (``lsh_multiprobe_topk``) computes the query's bucket in plain
+  Python with ``bucket_of`` and ranks only the buckets within hamming
+  radius r of it (r = 0: that bucket alone).
 
 Scores are rounded to 6 dp before ranking so results are stable across
 engines' float summation orders; ties break on vec_id.

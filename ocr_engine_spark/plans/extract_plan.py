@@ -89,10 +89,15 @@ def run_extract(spark: SparkSession, cfg: ExtractConfig) -> dict:
         # Audit FROM the written files (write-then-audit): re-scan reads
         # only the 5 metric columns — column pruning makes this cheap
         # relative to re-running the kernels.
+        # The ≤ P metric rows are evaluated once, by an eager local
+        # checkpoint that the append and the count both read. Not
+        # cache(): the cache is built without adaptive coalescing, one
+        # task per shuffle partition. Not a createDataFrame of collected
+        # rows: its append starts Python workers.
         written = spark.read.format(tableio.table_format()).load(cfg.output_path)
         metrics = audit_ops.audit_metrics(
             audit_ops.resume_filter(written, done), run_id
-        )
+        ).localCheckpoint()
         tableio.append_audit(metrics, cfg.audit_path)
         processed = metrics.count()
 

@@ -5,7 +5,13 @@ CORRECTNESS_r{N} run does."""
 
 from __future__ import annotations
 
+import glob
 import inspect
+import json
+import os
+import re
+
+import pytest
 
 
 def test_every_oracle_has_a_query():
@@ -30,8 +36,6 @@ def test_oracle_sql_mentions_only_registered_tables():
         "region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings",
     }
-    import re
-
     for name, sql in oracle_sql().items():
         froms = re.findall(r"(?:FROM|JOIN)\s+([a-z_][a-z0-9_]*)", sql)
         # CTE names and derived tables are fine; real tables must be known
@@ -47,9 +51,6 @@ def test_readme_query_count_matches_catalog():
     """ADVICE r3: the README's 'N of N' coverage claim went stale when
     queries landed after the doc edit. Pin it to the live catalog —
     and require every query to carry an oracle (zero rows-only)."""
-    import os
-    import re
-
     from ocr_engine_spark.catalog import oracle_sql, queries
 
     q, o = queries(), oracle_sql()
@@ -72,17 +73,75 @@ def test_entry_returns_expected_columns():
         assert col in src
 
 
-def test_driver_priority_rotation():
-    """VERDICT r4 item 2: the driver's correctness artifact caps at 50
-    entries, in queries() dict order — never-driver-recorded queries
-    must come FIRST so every catalog entry accumulates a driver row.
-    Pins: (a) every priority name actually exists in the registry (a
-    typo would silently de-prioritize it), (b) the priority block leads
-    the dict, (c) it fits inside the 50-entry driver budget."""
-    from ocr_engine_spark.catalog import _DRIVER_PRIORITY, queries
+def test_register_rejects_a_duplicate_name():
+    """A second registration of a name raises instead of silently
+    replacing the first query and its oracle."""
+    from ocr_engine_spark import catalog
 
-    q = list(queries())
-    missing = [n for n in _DRIVER_PRIORITY if n not in set(q)]
-    assert not missing, missing
-    assert q[: len(_DRIVER_PRIORITY)] == _DRIVER_PRIORITY
-    assert len(_DRIVER_PRIORITY) <= 50
+    name = "__duplicate_registration_probe"
+    try:
+        catalog._register(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
+        with pytest.raises(ValueError, match=name):
+            catalog._register(name, oracle="SELECT 2")
+        assert catalog._ORACLES[name] == "SELECT 1"
+    finally:
+        catalog._QUERIES.pop(name, None)
+        catalog._ORACLES.pop(name, None)
+
+
+def test_bench_headline_names_are_registered_queries():
+    """bench.py looks every HEADLINE name up in the catalog minutes into
+    its run; a name that is not registered must fail here instead."""
+    import bench
+    from ocr_engine_spark.catalog import queries
+
+    q = queries()
+    assert [n for n in bench.HEADLINE if n not in q] == []
+
+
+def _artifact(d, n: str, names) -> None:
+    (d / f"CORRECTNESS_r{n}.json").write_text(
+        json.dumps({name: {"hash_match": True} for name in names})
+    )
+
+
+def test_driver_rotation_from_artifacts(tmp_path):
+    """Never-recorded names first, then by the newest round that
+    records them (numerically: r10 after r9), ties in the given
+    order; files that are not CORRECTNESS_r{N}.json are ignored."""
+    import __spark_entry__ as e
+
+    names = ["a", "b", "c", "d", "e", "f"]
+    assert e._rotation(names, str(tmp_path)) == names
+
+    _artifact(tmp_path, "9", ["a", "b", "c"])
+    _artifact(tmp_path, "10", ["a", "f"])
+    _artifact(tmp_path, "02", ["b", "d"])
+    _artifact(tmp_path, "03_old", ["e"])
+    assert e._rotation(names, str(tmp_path)) == ["e", "d", "b", "c", "a", "f"]
+
+
+def test_driver_rotation_on_committed_artifacts():
+    """queries() and oracle_sql() share one order, and the driver's
+    50-entry artifact window takes the least recently recorded
+    queries: on the committed CORRECTNESS_r01..r05, all 30 queries last
+    recorded in r4 come before any query recorded in r5."""
+    import __spark_entry__ as e
+    from ocr_engine_spark.catalog import queries
+
+    q = list(e.queries())
+    assert q == list(e.oracle_sql())
+    assert sorted(q) == sorted(queries())
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    last: dict = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            with open(path) as f:
+                for name in json.load(f):
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    rounds = [last.get(name, 0) for name in q]
+    assert rounds == sorted(rounds)
+    r4_last = [name for name in q if last.get(name) == 4]
+    assert set(r4_last) <= set(q[:50])

@@ -76,14 +76,6 @@ def test_keep_longer_str_rendering_length():
     assert dst["k"] == 123
 
 
-# ---- normalize_lines ----
-
-def test_normalize_lines():
-    assert T.normalize_lines("a \nb\t\n \n\nc\r") == ["a", "b", "c"]
-    assert T.normalize_lines("") == []
-    assert T.normalize_lines(None) == []
-
-
 # ---- minified JSON (X5 fixture-exact) ----
 
 def test_to_min_json_default_separators_and_unicode():

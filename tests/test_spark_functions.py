@@ -7,7 +7,6 @@ from pyspark.sql import types as T
 from ocr_engine_spark.functions import (
     clamp_conf_col,
     has_devanagari_col,
-    normalize_text_col,
     payload_kind_col,
     slugify_col,
 )
@@ -15,7 +14,6 @@ from ocr_engine_spark.kernel.dispatch import detect_kind
 from ocr_engine_spark.kernel.textutil import (
     clamp_conf,
     has_devanagari,
-    normalize_lines,
     slugify,
 )
 from ocr_engine_spark.sources.synth import gen_transcripts
@@ -69,14 +67,6 @@ def test_devanagari_parity(spark):
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     got = [r[0] for r in df.select(has_devanagari_col("v")).collect()]
     want = [has_devanagari(v) for v in vals]
-    assert got == want
-
-
-def test_normalize_text_parity(spark):
-    vals = ["a \nb\t\n \n\nc\r", "", None, "x", "  lead kept\ntrail \t"]
-    df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = [r[0] for r in df.select(normalize_text_col("v")).collect()]
-    want = ["\n".join(normalize_lines(v)) for v in vals]
     assert got == want
 
 

@@ -102,6 +102,36 @@ def test_full_job_write_audit_and_resume(spark, tiny_transcripts, tmp_path):
     assert_matches_golden(collect_results(spark.read.parquet(out)))
 
 
+def test_audit_aggregation_runs_once(spark, tiny_transcripts, tmp_path, monkeypatch):
+    """run_extract appends the per-bucket audit rows and reports their
+    count from one evaluation of the audit aggregation: an identity
+    stage counting the rows that leave it sees each of the 8 buckets
+    once."""
+    from ocr_engine_spark.operators import audit as audit_ops
+
+    seen = spark.sparkContext.accumulator(0)
+    real = audit_ops.audit_metrics
+
+    def counted(extracted, run_id):
+        metrics = real(extracted, run_id)
+
+        def count_rows(batches):
+            for b in batches:
+                seen.add(len(b))
+                yield b
+
+        return metrics.mapInPandas(count_rows, metrics.schema)
+
+    monkeypatch.setattr(audit_ops, "audit_metrics", counted)
+    cfg = ExtractConfig(
+        input_path=tiny_transcripts, output_path=str(tmp_path / "out"),
+        audit_path=str(tmp_path / "audit"), num_buckets=8, salt_buckets=4,
+    )
+    assert run_extract(spark, cfg)["buckets_processed"] == 8
+    assert seen.value == 8
+    assert spark.read.parquet(cfg.audit_path).count() == 8
+
+
 def test_partial_resume_idempotence(spark, tiny_transcripts, tmp_path):
     """Kill-after-k-buckets resume (SURVEY.md §5.2.4c): simulate a
     partial run by seeding the audit with only some buckets' rows, then
