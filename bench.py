@@ -647,19 +647,19 @@ def _skew_evidence(rows: int) -> dict:
     salt=8 its turns spread over 8 buckets. Runs at HI_CORES in one
     session (warm pass first, double-GC between jobs); task-time
     *ratios* within a job are robust to absolute-speed noise."""
-    import glob
     import tempfile
 
     from ocr_engine_spark.plans.extract_plan import build_extracted
     from ocr_engine_spark.sources import tableio
+    from perfbench.eventlog import stages_by_group
 
     evdir = tempfile.mkdtemp(prefix="bench-eventlog-")
     spark = _session(
         f"local[{HI_CORES}]", shuffle_partitions=max(64, HI_CORES * 2),
         extra={"spark.eventLog.enabled": "true",
                "spark.eventLog.dir": "file://" + evdir,
-               # Spark 4 v2 event logs zstd-compress by default; the
-               # parser below reads plain JSONL
+               # Spark 4 v2 event logs zstd-compress by default;
+               # perfbench.eventlog reads plain JSONL
                "spark.eventLog.compress": "false"},
     )
     wall = {}
@@ -675,34 +675,18 @@ def _skew_evidence(rows: int) -> dict:
     finally:
         spark.stop()
 
-    stages: dict = {}
-    # Spark 4 event log v2 is a DIRECTORY per app containing
-    # events_* part files (+ an appstatus_* marker); handle both
-    # layouts and concatenate parts in order.
-    logs = []
-    for p in sorted(glob.glob(os.path.join(evdir, "*"))):
-        if os.path.isdir(p):
-            logs.extend(sorted(glob.glob(os.path.join(p, "events_*"))))
-        elif not p.endswith(".inprogress"):
-            logs.append(p)
-    for logf in logs:
-        for line in open(logf):
-            if '"SparkListenerTaskEnd"' not in line:
-                continue
-            ev = json.loads(line)
-            ms = (ev.get("Task Metrics") or {}).get("Executor Run Time")
-            if ms is not None:
-                stages.setdefault(ev["Stage ID"], []).append(ms)
-    # the extract stage has exactly NUM_BUCKETS tasks; submission order
-    # of those stages is [warm(salt8), salt1, salt8]
-    big = [sid for sid in sorted(stages) if len(stages[sid]) == NUM_BUCKETS]
+    # the extract stage is the one stage that runs Python; submission
+    # order of those stages is [warm(salt8), salt1, salt8]
+    stages = {key: st for group in stages_by_group(evdir).values()
+              for key, st in group.items()}
+    extract = [stages[key]["tasks"] for key in sorted(stages) if stages[key]["python"]]
     out = {"cores": HI_CORES, "num_buckets": NUM_BUCKETS, "rows": rows,
            "mega_conversations": MEGA, "mega_turns": MEGA_TURNS}
-    if len(big) < 3:
-        out["error"] = f"expected 3 stages with {NUM_BUCKETS} tasks, got {len(big)}"
+    if len(extract) < 3:
+        out["error"] = f"expected 3 Python stages, got {len(extract)}"
         return out
-    for salt, sid in zip((1, 8), big[-2:]):
-        ts = sorted(stages[sid])
+    for salt, tasks in zip((1, 8), extract[-2:]):
+        ts = sorted(t["run_ms"] for t in tasks if t["ok"])
         med = statistics.median(ts)
         out[f"salt{salt}"] = {
             "wall_sec": round(wall[salt], 2),

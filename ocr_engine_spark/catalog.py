@@ -29,6 +29,7 @@ from .operators import curation, dedup, similarity, textstats
 from .plans.extract_plan import build_extracted
 from .sources.tableio import (
     transcripts_from_documents,
+    transcripts_from_documents_malformed,
     transcripts_from_documents_multikind,
 )
 
@@ -69,69 +70,133 @@ def _register(name: str, oracle: Optional[str] = None):
     return deco
 
 
-# ------------------------------------------------- flagship extraction
+# ---------------------------------------------------------- extraction
 
-# The text-arm extraction formula (non-empty rstripped lines joined by
-# \n) — shared by the flagship oracle's rem-0 arm and the span-count
-# oracle.
-_TEXT_EXTRACT_SQL = """array_to_string(
-         list_filter(
-           list_transform(string_split(coalesce(text, ''), chr(10)),
-                          x -> rtrim(x, ' ' || chr(9) || chr(13) || chr(11) || chr(12))),
-           x -> x <> ''),
-         chr(10))"""
+# Three queries run the full extraction pipeline (bucket → shuffle →
+# sort → mapInArrow), one per recast of ``documents`` in
+# sources/tableio.py: multikind (flagship_extract), plain text
+# (extract_spans) and malformed (extract_fallback_malformed). Their
+# oracles replay the recasts and the kernels' rules in DuckDB; each
+# rule below is spelled once and spliced in.
 
-# Replays tableio.transcripts_from_documents_multikind's payload
-# construction arithmetic per dispatch arm — kind AND extracted_text
-# for all four kernels under one hash (text verbatim; html = h1 +
-# density-gated collapsed <p> + table rows; tool = ordered JSON
-# flatten; pdf = two-shard token stream → sorted shards, page blocks).
-_MULTIKIND_EXTRACT_ORACLE = """
+
+def _paragraphs_sql(text: str) -> str:
+    """The text kernel's paragraph blocks of ``text``, as a list: split
+    at \\n, rstrip each line of kernel/textutil.ASCII_TRAIL, keep the
+    runs of non-empty lines, each joined by \\n. Rstripped blank lines
+    are empty, so once the lines are joined back the runs are the
+    pieces between two or more newlines. The ``_joined_sql`` of the
+    list is the text arm's (and the fallback's) extracted_text."""
+    lines = (f"list_transform(string_split(coalesce({text}, ''), chr(10)), "
+             "x -> rtrim(x, ' ' || chr(9) || chr(13) || chr(11) || chr(12)))")
+    return (f"list_filter(string_split_regex(trim(array_to_string({lines}, chr(10)), "
+            "chr(10)), '\n\n+'), x -> x <> '')")
+
+
+def _joined_sql(items: str, sep: str = "chr(10)") -> str:
+    """The list ``items`` joined by ``sep``, and '' for an empty list
+    (where DuckDB's array_to_string returns NULL), as the kernels and
+    Spark's array_join render it."""
+    return f"coalesce(array_to_string({items}, {sep}), '')"
+
+
+# The html recasts put the text ``t`` escaped in one <p>; the html
+# kernel sees its whitespace words ``w`` and its density classifier
+# keeps the <p> iff there are at least 6 words per 80-column line.
+_WORDS_SQL = "list_filter(string_split_regex(t, '[ \t\n\r]+'), x -> x <> '')"
+_DENSE_SQL = """(len(w) > 0
+          AND len(w)::DOUBLE
+              / greatest(ceil(length(array_to_string(w, ' ')) / 80.0), 1) >= 6.0)"""
+
+
+def _pdf_page_sql(lo: str, hi: str) -> str:
+    """One shard page of the multikind pdf recast: tokens
+    ``tk[lo+1 .. hi]``, every 5th carrying an EOL break, so 5-token
+    lines joined by \\n."""
+    return (f"array_to_string(list_transform(generate_series(1, ({hi} - {lo} + 4) // 5),\n"
+            f"           g -> array_to_string(tk[{lo} + (g - 1) * 5 + 1 : least({lo} + g * 5, {hi})], ' ')),\n"
+            "           chr(10))")
+
+
+def _spans_sql(bs: str, ks: str) -> str:
+    """``n_spans`` and ``spans_flat`` (one "idx:kind:start:end" per
+    span, |-joined) of the block texts ``bs`` with block kinds ``ks``:
+    a block starts at the summed lengths of the blocks before it, +1
+    per \\n joiner."""
+    start = f"coalesce(list_sum(list_transform({bs}[1:r-1], b -> length(b) + 1)), 0)"
+    flat = _joined_sql(f"""list_transform(generate_series(1, len({bs})),
+         r -> (r - 1) || ':' || {ks}[r] || ':' || {start}
+              || ':' || ({start} + length({bs}[r])))""", "'|'")
+    return f"len({bs})::INT AS n_spans,\n       {flat} AS spans_flat"
+
+
+def _span_cols():
+    """The Spark side of ``_spans_sql``: span count and the flattened
+    span structs of an extracted row."""
+    flat = F.transform(
+        "spans",
+        lambda s: F.concat_ws(
+            ":",
+            s["span_idx"].cast("string"),
+            s["kind"],
+            s["start"].cast("string"),
+            s["end"].cast("string"),
+        ),
+    )
+    return [F.size("spans").alias("n_spans"),
+            F.array_join(flat, "|").alias("spans_flat")]
+
+
+# flagship_extract: the multikind recast, replayed per dispatch arm
+# (doc_id % 4) as block texts ``bs`` and block kinds ``ks``: html = h1
+# + the density-gated <p> + 2 table rows; tool = the 4 ordered tool_kv
+# flatten lines; pdf = the text's tokens split at h = ceil(n/2) into
+# two shard pages, non-empty pages only; text = its paragraph blocks.
+# Span kinds of rem-0 rows are 'text' unconditionally, which holds
+# because the corpus contains no '<' and no base64 magic prefix
+# (asserted by tests/test_corpus_invariants.py).
+_FLAGSHIP_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, coalesce(text, '') AS t, text AS rawt, lang, source
   FROM documents
 ),
 parts AS (
-  SELECT doc_id, t, rawt, lang, source,
-         list_filter(string_split_regex(t, '[ \t\n\r]+'), x -> x <> '') AS w,
-         list_filter(string_split_regex(t, '[ \t\n]+'), x -> x <> '') AS tk
+  SELECT doc_id, rawt, lang, source,
+         {_WORDS_SQL} AS w,
+         list_filter(string_split_regex(t, '[ \t\n]+'), x -> x <> '') AS tk,
+         {_paragraphs_sql("rawt")} AS paras
   FROM base
 ),
-pdf1 AS (
-  -- pdf arm: tokens split at h = ceil(n/2) into shard pages; every
-  -- 5th token carries an EOL break → page = 5-token lines joined \n
-  SELECT doc_id,
-         array_to_string(list_transform(
-           generate_series(1, ((len(tk) + 1) // 2 + 4) // 5),
-           g -> array_to_string(tk[(g - 1) * 5 + 1 : least(g * 5, (len(tk) + 1) // 2)], ' ')),
-           chr(10)) AS p1,
-         array_to_string(list_transform(
-           generate_series(1, (len(tk) - (len(tk) + 1) // 2 + 4) // 5),
-           g -> array_to_string(tk[(len(tk) + 1) // 2 + (g - 1) * 5 + 1
-                                   : least((len(tk) + 1) // 2 + g * 5, len(tk))], ' ')),
-           chr(10)) AS p2
+arms AS (
+  SELECT doc_id, rawt, lang, source, w, paras,
+         {_DENSE_SQL} AS dense,
+         {_pdf_page_sql("0", "(len(tk) + 1) // 2")} AS p1,
+         {_pdf_page_sql("(len(tk) + 1) // 2", "len(tk)")} AS p2
   FROM parts
 ),
-arms AS (
-  SELECT parts.doc_id,
-         {text_extract} AS text_extract,
-         'Doc ' || parts.doc_id || chr(10) ||
-         CASE WHEN len(w) > 0
-                   AND len(w)::DOUBLE
-                       / greatest(ceil(length(array_to_string(w, ' ')) / 80.0), 1)
-                       >= 6.0
-              THEN array_to_string(w, ' ') || chr(10) ELSE '' END ||
-         'doc | ' || parts.doc_id || chr(10) || 'lang | ' || lang AS html_extract,
-         'doc: ' || parts.doc_id || chr(10) ||
-         'lang: ' || to_json(lang)::VARCHAR || chr(10) ||
-         'src: ' || to_json(source)::VARCHAR || chr(10) ||
-         'note: ' || to_json(rawt)::VARCHAR AS tool_extract,
-         array_to_string(list_filter([
-           CASE WHEN p1 <> '' THEN 'Page 1:' || chr(10) || p1 END,
-           CASE WHEN p2 <> '' THEN 'Page 2:' || chr(10) || p2 END
-         ], x -> x IS NOT NULL), chr(10)) AS pdf_extract,
-         rawt
-  FROM parts JOIN pdf1 ON parts.doc_id = pdf1.doc_id
+blocks AS (
+  SELECT doc_id, rawt,
+         CASE doc_id % 4
+           WHEN 1 THEN ['Doc ' || doc_id]
+                       || CASE WHEN dense THEN [array_to_string(w, ' ')] ELSE [] END
+                       || ['doc | ' || doc_id, 'lang | ' || lang]
+           WHEN 2 THEN ['doc: ' || doc_id,
+                        'lang: ' || to_json(lang)::VARCHAR,
+                        'src: ' || to_json(source)::VARCHAR,
+                        'note: ' || to_json(rawt)::VARCHAR]
+           WHEN 3 THEN list_filter(
+                         [CASE WHEN p1 <> '' THEN 'Page 1:' || chr(10) || p1 END,
+                          CASE WHEN p2 <> '' THEN 'Page 2:' || chr(10) || p2 END],
+                         x -> x IS NOT NULL)
+           ELSE paras
+         END AS bs,
+         CASE doc_id % 4
+           WHEN 1 THEN ['h1'] || CASE WHEN dense THEN ['p'] ELSE [] END || ['tr', 'tr']
+           WHEN 2 THEN ['tool_kv', 'tool_kv', 'tool_kv', 'tool_kv']
+           WHEN 3 THEN list_transform(list_filter([p1, p2], x -> x <> ''), x -> 'pdf_page')
+           ELSE list_transform(paras, x -> 'text')
+         END AS ks
+  FROM arms
 )
 SELECT cast(doc_id AS varchar) AS conv_id,
        0::INT                  AS turn_idx,
@@ -144,181 +209,86 @@ SELECT cast(doc_id AS varchar) AS conv_id,
                    WHEN regexp_matches(rawt, '^[ \t\r\n\x0b\x0c]*<') THEN 'html'
                    ELSE 'text' END
        END AS kind,
-       CASE doc_id % 4
-         WHEN 1 THEN html_extract
-         WHEN 2 THEN tool_extract
-         WHEN 3 THEN pdf_extract
-         ELSE text_extract
-       END AS extracted_text
-FROM arms
+       {_joined_sql("bs")} AS extracted_text,
+       {_spans_sql("bs", "ks")}
+FROM blocks
 ORDER BY conv_id, turn_idx
-""".replace("{text_extract}", _TEXT_EXTRACT_SQL.replace("text", "rawt", 1))
+"""
 
 
-@_register("flagship_extract", oracle=_MULTIKIND_EXTRACT_ORACLE)
+@_register("flagship_extract", oracle=_FLAGSHIP_ORACLE)
 def q_flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full extraction pipeline (bucket → shuffle → sort →
-    mapInArrow) over documents recast as *multi-kind* transcripts
-    (doc_id % 4 → text/html/tool/pdf payload constructors), so the
-    driver hash covers all four dispatch arms of the kernel — HTML
-    boilerplate classification, tool-JSON flatten, and PDF token-stream
-    segmentation included, not just plain text. Span/metrics columns
-    stay pytest-covered; span *counts* are driver-checked by
-    extract_span_counts."""
+    """The full extraction pipeline over documents recast as
+    *multi-kind* transcripts (doc_id % 4 → text/html/tool/pdf payload
+    constructors), so the driver hash covers all four dispatch arms of
+    the kernel: HTML boilerplate classification, tool-JSON flatten and
+    PDF token-stream segmentation, not just plain text. It checks kind,
+    extracted_text and the span structure (kinds and char offsets) of
+    every turn; extract_spans checks the counters on the text arm."""
     df = transcripts_from_documents_multikind(spark, sf_dir)
     out = build_extracted(df, num_buckets=32, salt_buckets=4)
-    return out.select("conv_id", "turn_idx", "kind", "extracted_text").orderBy(
-        "conv_id", "turn_idx"
-    )
+    return out.select(
+        "conv_id", "turn_idx", "kind", "extracted_text", *_span_cols()
+    ).orderBy("conv_id", "turn_idx")
 
 
-@_register(
-    "extract_span_counts",
-    oracle="""
+# extract_spans: the plain-text recast, whose spans are its paragraph
+# blocks, every one kept.
+_TEXT_SPANS_ORACLE = f"""
 SELECT cast(doc_id AS varchar) AS conv_id,
        0::INT AS turn_idx,
-       len(list_filter(generate_series(1, len(ls)),
-           i -> ls[i] <> '' AND (i = 1 OR ls[i - 1] = '')))::INT AS n_spans,
-       len(list_filter(generate_series(1, len(ls)),
-           i -> ls[i] <> '' AND (i = 1 OR ls[i - 1] = '')))::BIGINT AS blocks_kept,
+       {_spans_sql("bs", "list_transform(bs, x -> 'text')")},
+       len(bs)::BIGINT AS blocks_kept,
        0::BIGINT AS blocks_dropped,
        0::INT AS parse_failed
-FROM (
-  SELECT doc_id,
-         list_transform(string_split(coalesce(text, ''), chr(10)),
-                        x -> rtrim(x, ' ' || chr(9) || chr(13) || chr(11) || chr(12))) AS ls
-  FROM documents)
+FROM (SELECT doc_id, {_paragraphs_sql("text")} AS bs FROM documents)
 ORDER BY conv_id, turn_idx
-""",
-)
-def q_extract_span_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checked span *counts* through the full Arrow extraction
-    stage on the text arm: a text payload's spans are its paragraph
-    blocks — runs of consecutive non-empty (rstripped) lines — so
-    n_spans/blocks_kept equal the number of run starts, blocks_dropped
-    and parse_failed are 0. Full span offsets stay pytest-pinned
-    (they're nested structs, not SQL-expressible)."""
+"""
+
+
+@_register("extract_spans", oracle=_TEXT_SPANS_ORACLE)
+def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Span structure and counters of the text arm through the Arrow
+    extraction stage, hash-verified: spans flatten to
+    "idx:kind:start:end" strings whose offsets the oracle recomputes as
+    prefix sums of paragraph-block lengths; blocks_kept equals the
+    span count, blocks_dropped and parse_failed are 0."""
     df = transcripts_from_documents(spark, sf_dir)
     out = build_extracted(df, num_buckets=16, salt_buckets=2)
     return out.select(
         "conv_id",
         "turn_idx",
-        F.size("spans").alias("n_spans"),
+        *_span_cols(),
         "blocks_kept",
         "blocks_dropped",
         "parse_failed",
     ).orderBy("conv_id", "turn_idx")
 
 
-# Span OFFSETS through the driver hash (VERDICT r2 item 3 — the last
-# no_oracle entry retired): the nested span structs flatten to one
-# "idx:kind:start:end" string per span, "|"-joined per turn, which IS
-# SQL-expressible. For the text arm, blocks are the blank-line-grouped
-# paragraph runs and start/end are prefix sums of block lengths (+1 per
-# "\n" joiner) — replayed below with run-start/run-end index lists and
-# an inclusive-slice block rebuild.
-_SPAN_OFFSETS_ORACLE = """
-WITH L AS (
-  SELECT doc_id,
-         list_transform(string_split(coalesce(text, ''), chr(10)),
-                        x -> rtrim(x, ' ' || chr(9) || chr(13) || chr(11) || chr(12))) AS ls
-  FROM documents),
-runs AS (
-  SELECT doc_id, ls,
-         list_filter(generate_series(1, len(ls)),
-                     i -> ls[i] <> '' AND (i = 1 OR ls[i - 1] = '')) AS starts,
-         list_filter(generate_series(1, len(ls)),
-                     i -> ls[i] <> '' AND (i = len(ls) OR ls[i + 1] = '')) AS ends
-  FROM L),
-blocks AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, len(starts)),
-                        r -> array_to_string(ls[starts[r]:ends[r]], chr(10))) AS bs
-  FROM runs),
-spans AS (
-  SELECT doc_id, bs,
-         list_transform(generate_series(1, len(bs)),
-            r -> coalesce(list_sum(list_transform(bs[1:r-1], b -> length(b) + 1)), 0)) AS st
-  FROM blocks)
-SELECT cast(doc_id AS varchar) AS conv_id,
-       0::INT AS turn_idx,
-       len(bs)::INT AS n_spans,
-       array_to_string(list_transform(generate_series(1, len(bs)),
-         r -> (r - 1) || ':text:' || st[r] || ':' || (st[r] + length(bs[r]))), '|')
-         AS spans_flat
-FROM spans
-ORDER BY conv_id, turn_idx
-"""
-
-
-@_register("extract_spans", oracle=_SPAN_OFFSETS_ORACLE)
-def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span kinds AND char offsets from the Arrow extraction stage,
-    hash-verified: spans flatten to "idx:kind:start:end" strings whose
-    offsets the oracle recomputes as prefix sums of paragraph-block
-    lengths. Together with flagship_extract (texts) and
-    extract_span_counts (counters) this puts the full span structure
-    under the driver gate."""
-    df = transcripts_from_documents(spark, sf_dir)
-    out = build_extracted(df, num_buckets=16, salt_buckets=2)
-    spans_flat = F.array_join(
-        F.transform(
-            "spans",
-            lambda s: F.concat_ws(
-                ":",
-                s["span_idx"].cast("string"),
-                s["kind"],
-                s["start"].cast("string"),
-                s["end"].cast("string"),
-            ),
-        ),
-        "|",
-    )
-    return out.select(
-        "conv_id",
-        "turn_idx",
-        F.size("spans").alias("n_spans"),
-        spans_flat.alias("spans_flat"),
-    ).orderBy("conv_id", "turn_idx")
-
-
-# Failure/fallback paths through the driver gate (VERDICT r2 item 4):
-# every multikind payload is well-formed, so parse_failed/dropped only
-# ever hash-verified as constant zeros there. This arm feeds the
-# kernels DELIBERATELY MALFORMED payloads (tableio.transcripts_from_
-# documents_malformed) and the oracle asserts the deterministic
-# fallback ladder per arm: corrupt-base64 pdf → parse_failed=1 +
-# raw-text paragraph fallback; brace-bearing unparseable tool JSON →
-# parse_failed=1 + raw-text fallback; unterminated <script> html →
-# parse_failed=0 with the script interior swallowed (tolerant-parser
+# extract_fallback_malformed: every multikind payload is well-formed,
+# so there parse_failed and blocks_dropped are constant zeros. This
+# recast (tableio.transcripts_from_documents_malformed) feeds the
+# kernels deliberately malformed payloads, and the oracle asserts the
+# deterministic fallback per arm (doc_id % 3): corrupt-base64 pdf and
+# brace-bearing unparseable tool JSON → parse_failed = 1 and the
+# paragraph blocks of the raw payload; unterminated <script> html →
+# parse_failed = 0 with the script interior swallowed (tolerant-parser
 # parity) and the density gate deciding the <p>.
-_MALFORMED_ORACLE = """
+_MALFORMED_PAYLOAD_SQL = """CASE doc_id % 3
+             WHEN 0 THEN 'JVBERi1UT0tF@@' || t
+             WHEN 1 THEN 'tool-output {oops ' || t || ' }'
+           END"""
+
+_MALFORMED_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, coalesce(text, '') AS t FROM documents),
-pay AS (
-  SELECT doc_id, t,
-         CASE doc_id % 3
-           WHEN 0 THEN 'JVBERi1UT0tF@@' || t
-           WHEN 1 THEN 'tool-output {oops ' || t || ' }'
-         END AS fb,
-         list_filter(string_split_regex(t, '[ \t\n\r]+'), x -> x <> '') AS w
-  FROM base),
-fbx AS (
-  SELECT doc_id, t, w,
-         list_transform(string_split(coalesce(fb, ''), chr(10)),
-                        x -> rtrim(x, ' ' || chr(9) || chr(13) || chr(11) || chr(12))) AS ls
-  FROM pay),
 arms AS (
-  SELECT doc_id, t, w, ls,
-         len(list_filter(generate_series(1, len(ls)),
-             i -> ls[i] <> '' AND (i = 1 OR ls[i - 1] = ''))) AS fb_blocks,
-         array_to_string(list_filter(ls, x -> x <> ''), chr(10)) AS fb_text,
-         CASE WHEN len(w) > 0
-                   AND len(w)::DOUBLE
-                       / greatest(ceil(length(array_to_string(w, ' ')) / 80.0), 1)
-                       >= 6.0
-              THEN 1 ELSE 0 END AS p_kept
-  FROM fbx)
+  SELECT doc_id, t, {_WORDS_SQL} AS w,
+         {_paragraphs_sql(_MALFORMED_PAYLOAD_SQL)} AS fb
+  FROM base),
+gated AS (
+  SELECT doc_id, t, w, fb, {_DENSE_SQL}::INT AS p_kept
+  FROM arms)
 SELECT cast(doc_id AS varchar) AS conv_id,
        0::INT AS turn_idx,
        CASE doc_id % 3 WHEN 0 THEN 'pdf' WHEN 1 THEN 'tool' ELSE 'html' END AS kind,
@@ -327,7 +297,7 @@ SELECT cast(doc_id AS varchar) AS conv_id,
          -- empty text → no <p> data chunk at all: the kernel discards
          -- the empty segment before classification (kept=1, dropped=0)
          WHEN 2 THEN CASE WHEN t = '' THEN 1 ELSE 1 + p_kept END
-         ELSE fb_blocks
+         ELSE len(fb)
        END::BIGINT AS blocks_kept,
        CASE doc_id % 3
          WHEN 2 THEN CASE WHEN t = '' THEN 0 ELSE 1 - p_kept END
@@ -336,9 +306,9 @@ SELECT cast(doc_id AS varchar) AS conv_id,
        CASE doc_id % 3
          WHEN 2 THEN 'Doc ' || doc_id ||
               CASE WHEN p_kept = 1 THEN chr(10) || array_to_string(w, ' ') ELSE '' END
-         ELSE fb_text
+         ELSE {_joined_sql("fb")}
        END AS extracted_text
-FROM arms
+FROM gated
 ORDER BY conv_id, turn_idx
 """
 
@@ -348,10 +318,8 @@ def q_extract_fallback_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pipeline over deliberately malformed payloads — the
     driver gate hash-verifies kind, nonzero parse_failed, fallback
     extracted_text and the kept/dropped counters for every failure arm
-    (reference fallback-ladder parity: /root/reference/ocr_any.py:199-
-    213; kernel/dispatch.py:102-115)."""
-    from .sources.tableio import transcripts_from_documents_malformed
-
+    (the reference's fallback-ladder parity; kernel/dispatch.py:102-
+    115)."""
     df = transcripts_from_documents_malformed(spark, sf_dir)
     out = build_extracted(df, num_buckets=16, salt_buckets=2)
     return out.select(
@@ -363,7 +331,6 @@ def q_extract_fallback_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blocks_dropped",
         "extracted_text",
     ).orderBy("conv_id", "turn_idx")
-
 
 # ------------------------------------------- composed field record (J2)
 
@@ -1991,146 +1958,6 @@ def q_streaming_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Span structure — kinds AND offsets — for ALL FOUR kernels: the
-# multikind recast's block lists rebuilt per arm in SQL (html =
-# h1 + density-gated <p> + 2 table rows; tool = 4 ordered tool_kv
-# flatten lines; pdf = up to 2 non-empty pdf_page blocks; text =
-# blank-line paragraph runs), then the same prefix-sum offset
-# machinery as extract_spans. rem-0 kinds are 'text' uncondition-
-# ally: valid because the corpus contains no '<' and no base64 magic
-# prefix (asserted by tests/test_corpus_invariants.py).
-_SPANS_MULTIKIND_ORACLE = """
-WITH base AS (
-  SELECT doc_id, coalesce(text, '') AS t, text AS rawt, lang, source
-  FROM documents
-),
-parts AS (
-  SELECT doc_id, t, rawt, lang, source,
-         list_filter(string_split_regex(t, '[ \t\n\r]+'), x -> x <> '') AS w,
-         list_filter(string_split_regex(t, '[ \t\n]+'), x -> x <> '') AS tk
-  FROM base
-),
-pdf1 AS (
-  SELECT doc_id,
-         array_to_string(list_transform(
-           generate_series(1, ((len(tk) + 1) // 2 + 4) // 5),
-           g -> array_to_string(tk[(g - 1) * 5 + 1 : least(g * 5, (len(tk) + 1) // 2)], ' ')),
-           chr(10)) AS p1,
-         array_to_string(list_transform(
-           generate_series(1, (len(tk) - (len(tk) + 1) // 2 + 4) // 5),
-           g -> array_to_string(tk[(len(tk) + 1) // 2 + (g - 1) * 5 + 1
-                                   : least((len(tk) + 1) // 2 + g * 5, len(tk))], ' ')),
-           chr(10)) AS p2
-  FROM parts
-),
-textruns AS (
-  SELECT doc_id,
-         list_transform(generate_series(1, len(starts)),
-                        r -> array_to_string(ls[starts[r]:ends[r]], chr(10))) AS bs
-  FROM (
-    SELECT doc_id, ls,
-           list_filter(generate_series(1, len(ls)),
-                       i -> ls[i] <> '' AND (i = 1 OR ls[i - 1] = '')) AS starts,
-           list_filter(generate_series(1, len(ls)),
-                       i -> ls[i] <> '' AND (i = len(ls) OR ls[i + 1] = '')) AS ends
-    FROM (
-      SELECT doc_id,
-             list_transform(string_split(coalesce(text, ''), chr(10)),
-                            x -> rtrim(x, ' ' || chr(9) || chr(13) || chr(11) || chr(12))) AS ls
-      FROM documents))
-),
-arms AS (
-  SELECT parts.doc_id,
-         CASE WHEN len(w) > 0
-                   AND len(w)::DOUBLE
-                       / greatest(ceil(length(array_to_string(w, ' ')) / 80.0), 1)
-                       >= 6.0
-              THEN 1 ELSE 0 END AS gate,
-         w, lang, source, rawt, p1, p2, bs
-  FROM parts
-  JOIN pdf1 ON parts.doc_id = pdf1.doc_id
-  JOIN textruns ON parts.doc_id = textruns.doc_id
-),
-blocks AS (
-  SELECT doc_id,
-         CASE doc_id % 4
-           WHEN 1 THEN ['Doc ' || doc_id]
-                       || CASE WHEN gate = 1
-                               THEN [array_to_string(w, ' ')] ELSE [] END
-                       || ['doc | ' || doc_id, 'lang | ' || lang]
-           WHEN 2 THEN ['doc: ' || doc_id,
-                        'lang: ' || to_json(lang)::VARCHAR,
-                        'src: ' || to_json(source)::VARCHAR,
-                        'note: ' || to_json(rawt)::VARCHAR]
-           WHEN 3 THEN list_filter(
-                         [CASE WHEN p1 <> '' THEN 'Page 1:' || chr(10) || p1 END,
-                          CASE WHEN p2 <> '' THEN 'Page 2:' || chr(10) || p2 END],
-                         x -> x IS NOT NULL)
-           ELSE bs
-         END AS bs2,
-         CASE doc_id % 4
-           WHEN 1 THEN ['h1']
-                       || CASE WHEN gate = 1 THEN ['p'] ELSE [] END
-                       || ['tr', 'tr']
-           WHEN 2 THEN ['tool_kv', 'tool_kv', 'tool_kv', 'tool_kv']
-           WHEN 3 THEN list_transform(
-                         list_filter([CASE WHEN p1 <> '' THEN 1 END,
-                                      CASE WHEN p2 <> '' THEN 1 END],
-                                     x -> x IS NOT NULL),
-                         x -> 'pdf_page')
-           ELSE list_transform(bs, x -> 'text')
-         END AS ks
-  FROM arms
-),
-spans AS (
-  SELECT doc_id, bs2, ks,
-         list_transform(generate_series(1, len(bs2)),
-            r -> coalesce(list_sum(list_transform(bs2[1:r-1], b -> length(b) + 1)), 0)) AS st
-  FROM blocks)
-SELECT cast(doc_id AS varchar) AS conv_id,
-       0::INT AS turn_idx,
-       CASE doc_id % 4 WHEN 1 THEN 'html' WHEN 2 THEN 'tool' WHEN 3 THEN 'pdf'
-            ELSE 'text' END AS kind,
-       len(bs2)::INT AS n_spans,
-       array_to_string(list_transform(generate_series(1, len(bs2)),
-         r -> (r - 1) || ':' || ks[r] || ':' || st[r] || ':' || (st[r] + length(bs2[r]))), '|')
-         AS spans_flat
-FROM spans
-ORDER BY conv_id, turn_idx
-"""
-
-
-@_register("extract_spans_multikind", oracle=_SPANS_MULTIKIND_ORACLE)
-def q_extract_spans_multikind(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span kinds + char offsets for ALL FOUR dispatch arms under the
-    driver hash — the html classifier's kept-block sequence
-    (h1/p/tr), the tool flatten's tool_kv lines, the pdf walk's
-    page blocks and the text paragraph runs, each with prefix-sum
-    offsets, hash-verified on live multikind data."""
-    df = transcripts_from_documents_multikind(spark, sf_dir)
-    out = build_extracted(df, num_buckets=32, salt_buckets=4)
-    spans_flat = F.array_join(
-        F.transform(
-            "spans",
-            lambda s: F.concat_ws(
-                ":",
-                s["span_idx"].cast("string"),
-                s["kind"],
-                s["start"].cast("string"),
-                s["end"].cast("string"),
-            ),
-        ),
-        "|",
-    )
-    return out.select(
-        "conv_id",
-        "turn_idx",
-        "kind",
-        F.size("spans").alias("n_spans"),
-        spans_flat.alias("spans_flat"),
-    ).orderBy("conv_id", "turn_idx")
-
-
 # ------------------------------------------- training-data curation
 
 # DuckDB mirror of the curation decision hash (hash60 of "id:salt").
@@ -2577,7 +2404,7 @@ SELECT s.doc_id::VARCHAR AS conv_id, s.grp,
        a.day_docs AS audit_day_docs, a.day_len AS audit_day_len
 FROM sess s ASOF LEFT JOIN audit a ON s.grp = a.grp AND s.ts >= a.ts
 ORDER BY conv_id
-""".replace("{text_extract}", _TEXT_EXTRACT_SQL),
+""".replace("{text_extract}", _joined_sql(_paragraphs_sql("text"))),
 )
 def q_flagship_sessions_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end transcript analytics composing the THREE tiers under

@@ -26,9 +26,6 @@ BREAK_EOL_SURE = 2
 BREAK_SURE_SPACE = 3
 BREAK_LINE_BREAK = 5
 
-_SPACE_BREAKS = (BREAK_SPACE, BREAK_SURE_SPACE)
-_LINE_BREAKS = (BREAK_EOL_SURE, BREAK_LINE_BREAK)
-
 TAIL_RSTRIP = "rstrip"
 TAIL_STRIP = "strip"
 

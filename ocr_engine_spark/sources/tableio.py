@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 from typing import Dict, Iterable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -121,6 +121,18 @@ def transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _html_escape(text: Column) -> Column:
+    """``&``, ``<`` and ``>`` of a string column as HTML entities, so the
+    text lands in a recast's ``<p>`` as character data."""
+    return F.replace(
+        F.replace(
+            F.replace(text, F.lit("&"), F.lit("&amp;")),
+            F.lit("<"), F.lit("&lt;"),
+        ),
+        F.lit(">"), F.lit("&gt;"),
+    )
+
+
 def transcripts_from_documents_multikind(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recast ``documents`` as transcripts with ``doc_id % 4`` selecting
     a deterministic payload constructor, so one driver-gated query
@@ -144,24 +156,17 @@ def transcripts_from_documents_multikind(spark: SparkSession, sf_dir: str) -> Da
     Every constructor is a native Catalyst expression (no UDF), so the
     recast is a pure projection over the scan; the DuckDB oracle
     replays the same construction arithmetic on its side
-    (catalog._multikind_extract_oracle)."""
+    (catalog._FLAGSHIP_ORACLE)."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     text = F.coalesce(F.col("text"), F.lit(""))
     rem = F.col("doc_id") % 4
 
     # --- html (rem 1) -------------------------------------------------
-    esc = F.replace(
-        F.replace(
-            F.replace(text, F.lit("&"), F.lit("&amp;")),
-            F.lit("<"), F.lit("&lt;"),
-        ),
-        F.lit(">"), F.lit("&gt;"),
-    )
     html_payload = F.concat(
         F.lit('<html><head><title>t</title></head><body>'
               '<nav><ul><li><a href="/">Home</a></li></ul></nav>'),
         F.lit("<h1>Doc "), F.col("doc_id").cast("string"), F.lit("</h1>"),
-        F.lit("<p>"), esc, F.lit("</p>"),
+        F.lit("<p>"), _html_escape(text), F.lit("</p>"),
         F.lit("<table><tr><th>doc</th><td>"), F.col("doc_id").cast("string"),
         F.lit("</td></tr><tr><td>lang</td><td>"), F.col("lang"),
         F.lit("</td></tr></table>"),
@@ -269,16 +274,9 @@ def transcripts_from_documents_malformed(spark: SparkSession, sf_dir: str) -> Da
 
     pdf_bad = F.concat(F.lit("JVBERi1UT0tF@@"), text)
     tool_bad = F.concat(F.lit("tool-output {oops "), text, F.lit(" }"))
-    esc = F.replace(
-        F.replace(
-            F.replace(text, F.lit("&"), F.lit("&amp;")),
-            F.lit("<"), F.lit("&lt;"),
-        ),
-        F.lit(">"), F.lit("&gt;"),
-    )
     html_bad = F.concat(
         F.lit("<h1>Doc "), F.col("doc_id").cast("string"), F.lit("</h1>"),
-        F.lit("<p>"), esc, F.lit("</p>"),
+        F.lit("<p>"), _html_escape(text), F.lit("</p>"),
         F.lit('<script>var tag = "<p>never extracted</p>";'),
     )
 
