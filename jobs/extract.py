@@ -45,7 +45,10 @@ def main(argv=None) -> int:
     ap.add_argument("--arrow-batch", type=int, default=4096)
     args = ap.parse_args(argv)
 
-    spark = build_session(master=args.master, arrow_batch=args.arrow_batch)
+    # --buckets bounds the pre-coalesce shuffle partition count, so it
+    # bounds the Python task count; AQE merges down from there.
+    spark = build_session(master=args.master, arrow_batch=args.arrow_batch,
+                          shuffle_partitions=args.buckets)
     t0 = time.time()
     stats = run_extract(
         spark,

@@ -17,6 +17,12 @@ scheduling, or AQE decisions).
   and order across buckets is imposed only at fixture-diff / consumer
   time (SURVEY.md §2.6 O3).
 
+Buckets are logical, tasks physical: ``shuffle_by_bucket`` hashes
+buckets into ``spark.sql.shuffle.partitions`` partitions, and AQE
+coalesces adjacent ones into size-targeted tasks, so one Python task
+holds one or many *whole* buckets. The bucket count sets the grain of
+audit, resume and the partitioned write, not the task count.
+
 AQE's skew handling only splits *join/agg* shuffle partitions; a
 skewed map-stage input to a Python stage is our own problem — hence
 the explicit salt (SURVEY.md §4.2).
@@ -43,6 +49,12 @@ def with_bucket(df: DataFrame, num_buckets: int, salt_buckets: int = 1) -> DataF
 def shuffle_by_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     """Shuffle on the bucket column — THE one shuffle of the pipeline.
 
+    It takes no partition count, which is what lets AQE coalesce it
+    (a count-taking repartition is never coalesced); coalescing never
+    splits a shuffle partition, so each bucket lands wholly in one
+    task. ``num_buckets`` no longer sets the task count; it is kept so
+    existing two-argument callers still work.
+
     Deliberately does NOT sort here: the extraction stage is per-turn
     pure, so the Python stage can start consuming shuffle blocks as
     they stream in. A pre-extraction sortWithinPartitions would be a
@@ -51,7 +63,7 @@ def shuffle_by_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     sorting *after* extraction (``sort_within_buckets``) gives the same
     deterministic order while overlapping the sort with Python
     compute."""
-    return df.repartition(num_buckets, F.col("bucket"))
+    return df.repartition(F.col("bucket"))
 
 
 def sort_within_buckets(df: DataFrame) -> DataFrame:

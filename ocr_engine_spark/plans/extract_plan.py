@@ -4,7 +4,10 @@
       └─ column prune: (conv_id, turn_idx, role, text)       [scan-level pruning]
       └─ bucket = pmod(hash(conv_id) + salt(turn_idx), P)    [deterministic work unit]
       └─ resume filter: bucket ∉ completed(run_id)           [checkpoint/resume]
-      └─ repartition(P, bucket)                              [THE shuffle]
+      └─ repartition(bucket)                                 [THE shuffle: hashed into
+                                                              spark.sql.shuffle.partitions,
+                                                              AQE merges those into fewer
+                                                              tasks of whole buckets]
       └─ mapInArrow(extract_batches)                         [the one Python crossing —
                                                               streams off the shuffle
                                                               fetch, no sort barrier]

@@ -13,7 +13,11 @@ def build_session(app_name: str = "ocr-engine-spark", master: str | None = None,
                   extra: dict | None = None) -> SparkSession:
     """Defaults chosen for the extraction workload:
 
-    - AQE on: runtime partition coalescing after the bucket shuffle;
+    - AQE on: runtime partition coalescing after the bucket shuffle.
+      That shuffle (``salt.shuffle_by_bucket``) hashes ``bucket`` into
+      ``spark.sql.shuffle.partitions`` (``shuffle_partitions``)
+      partitions, and AQE merges them into fewer, size-targeted Python
+      tasks, each holding whole buckets;
     - Arrow batch size bounds Python-stage memory per task;
     - parquet vectorized reader + pushdown are Spark defaults, kept
       explicit here as documentation of reliance;

@@ -82,3 +82,49 @@ FROM (SELECT {_paragraphs_sql("t")} AS bs FROM (SELECT ?::VARCHAR AS t))"""
                      for s in res["spans"]),
         )
         assert con.execute(sql, [t]).fetchone() == want, repr(t)
+
+
+def test_density_gate_matches_the_html_kernel():
+    """Every non-empty driver document has 7 or more words per
+    80-column line, so the oracles' density rule (catalog._DENSE_SQL)
+    never meets the html kernel's drop branch there. Pin it against the
+    kernel's classifier on <p> texts whose density falls just below, at
+    and just above MIN_TEXT_DENSITY = 6.0: word counts 6k-1, 6k and
+    6k+1 over single-space joined lengths 80k-1, 80k and 80k+1, with
+    long words and mixed whitespace between them."""
+    import duckdb
+
+    from ocr_engine_spark.catalog import _DENSE_SQL, _WORDS_SQL
+    from ocr_engine_spark.kernel.dispatch import extract_turn
+
+    rng = random.Random(11)
+    seps = [" ", " ", " ", "  ", "\t", "\n", " \r\n "]
+
+    def words(n, letters, long_word):
+        # n words of >= 1 letter each, `letters` letters in all
+        if long_word:
+            lens = [1] * (n - 1) + [letters - (n - 1)]
+            rng.shuffle(lens)
+        else:
+            cuts = sorted(rng.sample(range(1, letters), n - 1))
+            lens = [b - a for a, b in zip([0] + cuts, cuts + [letters])]
+        return ["".join(rng.choices("abcdefghij", k=m)) for m in lens]
+
+    texts = []
+    for k in range(1, 41):
+        for n in (6 * k - 1, 6 * k, 6 * k + 1):
+            for length in (80 * k - 1, 80 * k, 80 * k + 1):
+                ws = words(n, length - (n - 1), long_word=k % 3 == 0)
+                texts.append("".join(w + rng.choice(seps) for w in ws).rstrip())
+
+    con = duckdb.connect()
+    sql = f"""
+SELECT CASE WHEN {_DENSE_SQL} THEN array_to_string(w, ' ') END
+FROM (SELECT {_WORDS_SQL} AS w FROM (SELECT ?::VARCHAR AS t))"""
+    kept = 0
+    for t in texts:
+        res = extract_turn("user", f"<body><nav>Home</nav><h1>Doc 1</h1><p>{t}</p></body>")
+        want = next((s["text"] for s in res["spans"] if s["kind"] == "p"), None)
+        assert con.execute(sql, [t]).fetchone() == (want,), repr(t)
+        kept += want is not None
+    assert 0 < kept < len(texts)

@@ -207,3 +207,22 @@ def test_dynamic_overwrite_is_scoped_to_the_write(spark, tiny_transcripts, tmp_p
         spark.conf.unset(key)
     assert stats["buckets_processed"] == 1
     assert_matches_golden(collect_results(spark.read.parquet(out)))
+
+
+def test_each_bucket_in_one_task_and_no_empty_task(spark, tiny_transcripts):
+    """The bucket shuffle lets AQE merge buckets into fewer tasks: every
+    bucket still sits wholly in one task, and every task holds rows
+    (partition ids used are exactly 0..n-1), with or without the
+    resume filter removing half of the buckets."""
+    df = read_transcripts(spark, tiny_transcripts)
+    for done in (None, [0, 2, 4, 6, 8, 10, 12, 14]):
+        placed = (build_extracted(df, num_buckets=16, salt_buckets=4, done_buckets=done)
+                  .withColumn("pid", F.spark_partition_id())
+                  .select("bucket", "pid").collect())
+        pids_of = {}
+        for r in placed:
+            pids_of.setdefault(r["bucket"], set()).add(r["pid"])
+        assert all(len(p) == 1 for p in pids_of.values()), pids_of
+        assert set(pids_of) == set(range(16)) - set(done or [])
+        used = {r["pid"] for r in placed}
+        assert used == set(range(len(used))), sorted(used)
