@@ -7,17 +7,16 @@ views (``documents events lineitem orders part ...``). Column names
 and types are aligned on both sides (the driver hashes values after
 sorting columns by name). Doubles are rounded to 6 dp on both sides;
 hashes are md5-derived so the engines agree bit-for-bit.
-
-Entries with ``oracle=None`` are genuinely non-SQL-expressible (the
-Arrow extraction kernels' span structures, streaming) and get the
-driver's rows-only check; their full semantics are covered by the
-golden-fixture pytest suite instead.
 """
 
 from __future__ import annotations
 
 import functools
 import os
+import shutil
+import tempfile
+import time
+import uuid
 from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,44 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _memory_stream(spark: SparkSession, inputs, build, mode: str,
+                   drained: Optional[Callable[[dict], bool]] = None) -> DataFrame:
+    """Run a stream to completion into a memory sink and return the
+    sink table. ``inputs`` are appended in order to a scratch input
+    dir, ``build(in_dir)`` is the streaming DataFrame over it, and the
+    query runs with availableNow in output ``mode``. A query that never
+    terminates by itself is stopped once ``drained`` holds for its last
+    progress (or after 180 s). The scratch dir, with the input and the
+    checkpoint, is removed before this returns or raises."""
+    tmp = tempfile.mkdtemp(prefix="ocr-stream-")
+    try:
+        in_dir = os.path.join(tmp, "in")
+        for df in inputs:
+            df.write.mode("append").parquet(in_dir)
+        qname = "stream_" + uuid.uuid4().hex[:8]
+        q = (
+            build(in_dir).writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(mode)
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if drained is None:
+                q.awaitTermination()
+            else:
+                deadline = time.time() + 180
+                while (q.isActive and time.time() < deadline
+                       and not (q.lastProgress and drained(q.lastProgress))):
+                    time.sleep(1.0)
+        finally:
+            q.stop()
+        return spark.table(qname)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 # DuckDB mirrors of the shared expression fragments (textfns twins).
 TOKENS_SQL = (
     "list_filter(string_split(regexp_replace(lower(coalesce(text, '')), "
@@ -57,14 +94,13 @@ _QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: Dict[str, str] = {}
 
 
-def _register(name: str, oracle: Optional[str] = None):
+def _register(name: str, oracle: str):
     if name in _QUERIES:
         raise ValueError(f"catalog query {name!r} is already registered")
 
     def deco(fn):
         _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLES[name] = oracle
+        _ORACLES[name] = oracle
         return fn
 
     return deco
@@ -101,12 +137,29 @@ def _joined_sql(items: str, sep: str = "chr(10)") -> str:
 
 
 # The html recasts put the text ``t`` escaped in one <p>; the html
-# kernel sees its whitespace words ``w`` and its density classifier
+# kernel sees its whitespace words ``w`` (str.split(): every character
+# for which str.isspace() is true separates) and its density classifier
 # keeps the <p> iff there are at least 6 words per 80-column line.
-_WORDS_SQL = "list_filter(string_split_regex(t, '[ \t\n\r]+'), x -> x <> '')"
+_WORDS_SQL = (r"list_filter(string_split_regex(t, '[\t-\r\x{1c}-\x{20}\x{85}\x{a0}\x{1680}"
+              r"\x{2000}-\x{200a}\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+'), x -> x <> '')")
 _DENSE_SQL = """(len(w) > 0
           AND len(w)::DOUBLE
               / greatest(ceil(length(array_to_string(w, ' ')) / 80.0), 1) >= 6.0)"""
+
+
+def _payload_kind_sql(text: str) -> str:
+    """The dispatch kind (functions.columns.payload_kind_col) of a
+    multikind recast row whose document text is ``text``: the arm
+    doc_id % 4 fixes html, tool and pdf; the text arm is sniffed."""
+    return f"""CASE doc_id % 4
+         WHEN 1 THEN 'html'
+         WHEN 2 THEN 'tool'
+         WHEN 3 THEN 'pdf'
+         ELSE CASE WHEN {text} IS NULL OR {text} = '' THEN 'text'
+                   WHEN {text} LIKE 'JVBERi1UT0tF%' THEN 'pdf'
+                   WHEN regexp_matches({text}, '^[ \t\r\n\x0b\x0c]*<') THEN 'html'
+                   ELSE 'text' END
+       END"""
 
 
 def _pdf_page_sql(lo: str, hi: str) -> str:
@@ -200,15 +253,7 @@ blocks AS (
 )
 SELECT cast(doc_id AS varchar) AS conv_id,
        0::INT                  AS turn_idx,
-       CASE doc_id % 4
-         WHEN 1 THEN 'html'
-         WHEN 2 THEN 'tool'
-         WHEN 3 THEN 'pdf'
-         ELSE CASE WHEN rawt IS NULL OR rawt = '' THEN 'text'
-                   WHEN rawt LIKE 'JVBERi1UT0tF%' THEN 'pdf'
-                   WHEN regexp_matches(rawt, '^[ \t\r\n\x0b\x0c]*<') THEN 'html'
-                   ELSE 'text' END
-       END AS kind,
+       {_payload_kind_sql("rawt")} AS kind,
        {_joined_sql("bs")} AS extracted_text,
        {_spans_sql("bs", "ks")}
 FROM blocks
@@ -477,17 +522,9 @@ def q_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "p1_payload_kind",
-    oracle="""
+    oracle=f"""
 SELECT cast(doc_id AS varchar) AS conv_id,
-       CASE doc_id % 4
-         WHEN 1 THEN 'html'
-         WHEN 2 THEN 'tool'
-         WHEN 3 THEN 'pdf'
-         ELSE CASE WHEN text IS NULL OR text = '' THEN 'text'
-                   WHEN text LIKE 'JVBERi1UT0tF%' THEN 'pdf'
-                   WHEN regexp_matches(text, '^[ \t\r\n\x0b\x0c]*<') THEN 'html'
-                   ELSE 'text' END
-       END AS kind
+       {_payload_kind_sql("text")} AS kind
 FROM documents
 ORDER BY conv_id
 """,
@@ -688,25 +725,28 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.langid(_t(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-@_register(
-    "quality_documents",
-    oracle=f"""
-SELECT doc_id,
-       len(t)::BIGINT AS n_tokens,
+def _quality_sql(src: str, cols: str = "doc_id") -> str:
+    """``cols``, n_tokens and the textstats.quality score of every row
+    of ``src``: 0.4 · token count (saturating at 100) + 0.3 · (1 − 4 ×
+    the share of characters that are neither ASCII alphanumeric nor
+    whitespace, floored at 0) + 0.3 · (5 × the stopword share of
+    tokens, capped at 1), rounded to 6 dp."""
+    return f"""SELECT {cols}, len(t)::BIGINT AS n_tokens,
        round(0.4 * least(len(t) / 100.0, 1.0)
            + 0.3 * greatest(0.0, 1.0 - (punct::DOUBLE / total) * 4.0)
            + 0.3 * least(len(list_filter(t,
                  x -> x IN ('the','a','an','and','or','of','to','in','is','it')
                ))::DOUBLE / greatest(len(t), 1) * 5.0, 1.0), 6) AS quality
 FROM (
-  SELECT doc_id, {TOKENS_SQL} AS t,
+  SELECT {cols}, {TOKENS_SQL} AS t,
          greatest(length(coalesce(text, '')), 1) AS total,
          length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''),
              '[^a-zA-Z0-9 \t\n\r]', '', 'g')) AS punct
-  FROM documents)
-ORDER BY doc_id
-""",
-)
+  FROM {src})"""
+
+
+@_register("quality_documents",
+           oracle=_quality_sql("documents") + "\nORDER BY doc_id\n")
 def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         textstats.quality(_t(spark, sf_dir, "documents"))
@@ -772,13 +812,34 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _shingle_sets_cte(docs: str = "documents") -> str:
+    """``sets_``: the distinct word 3-shingles ``sh`` of each row of
+    ``docs``."""
+    return f"""sets_ AS (
+  SELECT doc_id, {SHINGLES_SQL.format(t='t')} AS sh
+  FROM (SELECT doc_id, {TOKENS_SQL} AS t FROM {docs})
+)"""
+
+
+def _jaccard_pairs_sql(threshold: float) -> str:
+    """The pairs of ``cand`` whose ``sets_`` shingle-set Jaccard,
+    rounded to 6 dp, is at least ``threshold`` (dedup.jaccard_verify)."""
+    return f"""SELECT id_a, id_b, jaccard FROM (
+  SELECT id_a, id_b, round(n_both::DOUBLE / (n_a + n_b - n_both), 6) AS jaccard
+  FROM (SELECT cand.id_a, cand.id_b, len(sa.sh) AS n_a, len(sb.sh) AS n_b,
+               len(list_intersect(sa.sh, sb.sh)) AS n_both
+        FROM cand
+        JOIN sets_ sa ON sa.doc_id = cand.id_a
+        JOIN sets_ sb ON sb.doc_id = cand.id_b))
+WHERE jaccard >= {threshold}
+ORDER BY id_a, id_b
+"""
+
+
 @_register(
     "ngram_jaccard_pairs_documents",
     oracle=f"""
-WITH sets_ AS (
-  SELECT doc_id, {SHINGLES_SQL.format(t='t')} AS sh
-  FROM (SELECT doc_id, {TOKENS_SQL} AS t FROM documents WHERE doc_id < 150)
-),
+WITH {_shingle_sets_cte("documents WHERE doc_id < 150")},
 inv0 AS (SELECT doc_id, unnest(sh) AS shingle FROM sets_),
 stop AS (SELECT shingle FROM inv0 GROUP BY shingle HAVING count(*) <= 3),
 inv AS (SELECT inv0.* FROM inv0 JOIN stop USING (shingle)),
@@ -786,16 +847,7 @@ cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
 )
-SELECT id_a, id_b,
-       round(len(list_intersect(sa.sh, sb.sh))::DOUBLE
-             / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6) AS jaccard
-FROM cand
-JOIN sets_ sa ON sa.doc_id = id_a
-JOIN sets_ sb ON sb.doc_id = id_b
-WHERE round(len(list_intersect(sa.sh, sb.sh))::DOUBLE
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6) >= 0.01
-ORDER BY id_a, id_b
-""",
+{_jaccard_pairs_sql(0.01)}""",
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard verification tier with the stop-shingle df-cap on
@@ -886,23 +938,10 @@ def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _near_dup_scale_oracle(num_perm: int = 16, bands: int = 4,
                            threshold: float = 0.05) -> str:
-    j = (
-        "round(len(list_intersect(sa.sh, sb.sh))::DOUBLE"
-        " / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6)"
-    )
     return f"""
 WITH cand AS ({_lsh_candidates_oracle(num_perm, bands)}),
-sets_ AS (
-  SELECT doc_id, {SHINGLES_SQL.format(t='t')} AS sh
-  FROM (SELECT doc_id, {TOKENS_SQL} AS t FROM documents)
-)
-SELECT cand.id_a, cand.id_b, {j} AS jaccard
-FROM cand
-JOIN sets_ sa ON sa.doc_id = cand.id_a
-JOIN sets_ sb ON sb.doc_id = cand.id_b
-WHERE {j} >= {threshold}
-ORDER BY id_a, id_b
-"""
+{_shingle_sets_cte()}
+{_jaccard_pairs_sql(threshold)}"""
 
 
 @_register("near_dup_scale_path", oracle=_near_dup_scale_oracle(16, 4, 0.05))
@@ -1651,19 +1690,11 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # timezone-independent on both engines. num_buckets=1 because the
 # bucket key is xxhash64 (not replayable in DuckDB); the bucketed
 # variant stays pytest-covered (tests/test_streaming.py).
-_STREAM_METRICS_ORACLE = """
+_STREAM_METRICS_ORACLE = f"""
 WITH base AS (
   SELECT doc_id,
          (doc_id % 120) // 10 * 10 AS wmin,
-         CASE doc_id % 4
-           WHEN 1 THEN 'html'
-           WHEN 2 THEN 'tool'
-           WHEN 3 THEN 'pdf'
-           ELSE CASE WHEN text IS NULL OR text = '' THEN 'text'
-                     WHEN text LIKE 'JVBERi1UT0tF%' THEN 'pdf'
-                     WHEN regexp_matches(text, '^[ \t\r\n\x0b\x0c]*<') THEN 'html'
-                     ELSE 'text' END
-         END AS kind
+         {_payload_kind_sql("text")} AS kind
   FROM documents)
 SELECT wmin::INT AS window_start_min,
        (wmin + 10)::INT AS window_end_min,
@@ -1687,9 +1718,6 @@ def q_streaming_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-minute windowed aggregation, and collected from a memory sink.
     Complete output mode: with availableNow the final watermark never
     passes the last windows, so append mode would withhold them."""
-    import tempfile
-    import uuid
-
     from .streaming.extract_stream import (
         build_metrics_stream,
         read_transcripts_stream,
@@ -1703,32 +1731,19 @@ def q_streaming_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{epoch} + make_interval(0, 0, 0, 0, 0, cast(conv_id AS int) % 120, 0)"
         ),
     )
-    tmp = tempfile.mkdtemp(prefix="ocr-stream-metrics-")
-    in_dir = os.path.join(tmp, "in")
-    src.write.mode("overwrite").parquet(in_dir)
-
-    stream = read_transcripts_stream(spark, in_dir)
-    metrics = build_metrics_stream(
-        stream, num_buckets=1, salt_buckets=1,
-        window_duration="10 minutes", watermark="30 minutes",
+    sink = _memory_stream(
+        spark, [src],
+        lambda in_dir: build_metrics_stream(
+            read_transcripts_stream(spark, in_dir), num_buckets=1,
+            salt_buckets=1, window_duration="10 minutes", watermark="30 minutes",
+        ),
+        "complete",
     )
-    qname = "stream_metrics_" + uuid.uuid4().hex[:8]
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     mins = lambda c: (  # noqa: E731 — minutes since the corpus epoch
         (F.unix_timestamp(c) - F.unix_timestamp(F.expr(epoch))) / 60
     ).cast("int")
     return (
-        spark.table(qname)
-        .select(
+        sink.select(
             mins(F.col("window_start")).alias("window_start_min"),
             mins(F.col("window_end")).alias("window_end_min"),
             F.col("bucket"),
@@ -1891,9 +1906,6 @@ def q_streaming_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (final = 1) — the eviction path itself lands under the hash.
     Multi-batch interleavings and cross-batch accumulation stay
     pytest-covered (tests/test_streaming.py)."""
-    import tempfile
-    import uuid
-
     from .streaming.extract_stream import (
         build_conv_stats_stream,
         read_transcripts_stream,
@@ -1915,43 +1927,25 @@ def q_streaming_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="ocr-stream-convstats-")
-    in_dir = os.path.join(tmp, "in")
-    src.repartition(1).write.mode("overwrite").parquet(in_dir)
 
-    stats = build_conv_stats_stream(
-        read_transcripts_stream(spark, in_dir), idle_ttl_ms=1
-    )
-    qname = "stream_convstats_" + uuid.uuid4().hex[:8]
-    q = (
-        stats.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # availableNow + applyInPandasWithState never self-terminates: the
-    # trigger keeps scheduling empty state-cleanup batches even after
-    # every group is evicted (observed: state drains in batch 1, loop
-    # continues with numRowsTotal == 0 indefinitely). Poll progress
-    # until the data batch ran AND the state store is empty — at that
-    # point the sink holds both the update and eviction rows — then
-    # stop explicitly.
-    import time as _time
+    def drained(p: dict) -> bool:
+        # availableNow + applyInPandasWithState never self-terminates:
+        # the trigger keeps scheduling empty state-cleanup batches even
+        # after every group is evicted (observed: state drains in batch
+        # 1, loop continues with numRowsTotal == 0 indefinitely). Once
+        # the data batch ran AND the state store is empty, the sink
+        # holds both the update and eviction rows.
+        so = (p.get("stateOperators") or [{}])[0]
+        return (p.get("batchId") or 0) >= 2 and (so.get("numRowsTotal") or 0) == 0
 
-    deadline = _time.time() + 180
-    while _time.time() < deadline and q.isActive:
-        p = q.lastProgress
-        if p and (p.get("batchId") or 0) >= 2:
-            so = (p.get("stateOperators") or [{}])[0]
-            if (so.get("numRowsTotal") or 0) == 0:
-                break
-        _time.sleep(1.0)
-    q.stop()
-    q.awaitTermination(60)
     return (
-        spark.table(qname)
+        _memory_stream(
+            spark, [src.repartition(1)],
+            lambda in_dir: build_conv_stats_stream(
+                read_transcripts_stream(spark, in_dir), idle_ttl_ms=1
+            ),
+            "append", drained,
+        )
         .select("conv_id", "turns_seen", "chars_in", "max_turn_idx",
                 "batches", "final")
         .orderBy("conv_id", "final")
@@ -1965,12 +1959,20 @@ def _decision_hash_sql(salt: str) -> str:
     return HASH60_SQL.format(x=f"doc_id::VARCHAR || ':{salt}'")
 
 
+# Each curation stage's rule is spelled once below, and the composed
+# curation_pipeline oracle chains them as the Spark side chains the
+# operators.
+
+# curation.stratified_sample(docs, {"en": 40}), as a WHERE predicate.
+_SAMPLE_PRED = (f"{_decision_hash_sql('sample')} % 100\n"
+                "      < CASE WHEN lang = 'en' THEN 40 ELSE 100 END")
+
+
 @_register(
     "curation_stratified_sample",
     oracle=f"""
 SELECT doc_id, lang FROM documents
-WHERE {_decision_hash_sql('sample')} % 100
-      < CASE WHEN lang = 'en' THEN 40 ELSE 100 END
+WHERE {_SAMPLE_PRED}
 ORDER BY doc_id
 """,
 )
@@ -1987,27 +1989,18 @@ def q_curation_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUOTA_ORACLE = f"""
-SELECT source, doc_id, quality, rk FROM (
+def _quota_sql(src: str, k: int) -> str:
+    """curation.quota_per_source over ``src``: per source, the top-``k``
+    rows by quality score, ties to the lowest doc_id, ranked ``rk``."""
+    return f"""SELECT source, doc_id, quality, rk FROM (
   SELECT source, doc_id, quality,
          row_number() OVER (PARTITION BY source
                             ORDER BY quality DESC, doc_id ASC) AS rk
-  FROM (
-    SELECT source, doc_id,
-           round(0.4 * least(len(t) / 100.0, 1.0)
-               + 0.3 * greatest(0.0, 1.0 - (punct::DOUBLE / total) * 4.0)
-               + 0.3 * least(len(list_filter(t,
-                     x -> x IN ('the','a','an','and','or','of','to','in','is','it')
-                   ))::DOUBLE / greatest(len(t), 1) * 5.0, 1.0), 6) AS quality
-    FROM (
-      SELECT source, doc_id, {{tok}} AS t,
-             greatest(length(coalesce(text, '')), 1) AS total,
-             length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''),
-                 '[^a-zA-Z0-9 \t\n\r]', '', 'g')) AS punct
-      FROM documents)))
-WHERE rk <= 5
-ORDER BY source, rk
-""".replace("{tok}", TOKENS_SQL)
+  FROM ({_quality_sql(src, "source, doc_id")}))
+WHERE rk <= {k}"""
+
+
+_QUOTA_ORACLE = _quota_sql("documents", 5) + "\nORDER BY source, rk\n"
 
 
 @_register("curation_quota_per_source", oracle=_QUOTA_ORACLE)
@@ -2037,10 +2030,11 @@ def q_curation_quota_per_source_salted(
     )
 
 
-@_register(
-    "curation_pack_sequences",
-    oracle=f"""
-SELECT doc_id, lang, pack_shard, n_tokens, cum_tokens::BIGINT AS cum_tokens,
+def _pack_sql(src: str) -> str:
+    """curation.pack_sequences(budget=512, shard_rows=200) over ``src``:
+    running token sums per (lang, 200-id shard) in doc_id order, and
+    the 512-token bin each row starts in."""
+    return f"""SELECT doc_id, lang, pack_shard, n_tokens, cum_tokens::BIGINT AS cum_tokens,
        floor((cum_tokens - n_tokens) / 512.0)::BIGINT AS bin_idx
 FROM (
   SELECT doc_id, lang, pack_shard, n_tokens,
@@ -2050,10 +2044,11 @@ FROM (
   FROM (
     SELECT doc_id, lang, floor(doc_id / 200.0)::BIGINT AS pack_shard,
            len({TOKENS_SQL})::BIGINT AS n_tokens
-    FROM documents))
-ORDER BY doc_id
-""",
-)
+    FROM {src}))"""
+
+
+@_register("curation_pack_sequences",
+           oracle=_pack_sql("documents") + "\nORDER BY doc_id\n")
 def q_curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard-local greedy sequence packing into 512-token bins: the
     deterministic batch-assembly step; every window partition bounded
@@ -2064,15 +2059,21 @@ def q_curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "curation_decontaminate",
-    oracle=f"""
-WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
+# curation.decontaminate(docs, bench_mod=97): ``hits`` has one row per
+# document that shares a word 3-shingle with the benchmark subset
+# doc_id % 97 = 0, with ``n`` its distinct shared shingles.
+_CONTAMINATED_CTES = f"""tok AS (SELECT doc_id, {TOKENS_SQL} AS t FROM documents),
 sh AS (SELECT doc_id, unnest({SHINGLES_SQL.format(t='t')}) AS shingle FROM tok),
 bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
 hits AS (SELECT sh.doc_id, count(DISTINCT sh.shingle) AS n
          FROM sh JOIN bench ON sh.shingle = bench.shingle
-         GROUP BY sh.doc_id)
+         GROUP BY sh.doc_id)"""
+
+
+@_register(
+    "curation_decontaminate",
+    oracle=f"""
+WITH {_CONTAMINATED_CTES}
 SELECT d.doc_id, h.n IS NOT NULL AS contaminated,
        coalesce(h.n, 0)::BIGINT AS n_hit_shingles
 FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
@@ -2086,16 +2087,17 @@ def q_curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.decontaminate(docs, bench_mod=97).orderBy("doc_id")
 
 
-@_register(
-    "curation_shuffle_permutation",
-    oracle=f"""
-SELECT doc_id,
+def _permutation_sql(src: str) -> str:
+    """curation.shuffle_permutation over ``src``: each row's 1-based
+    position in (decision hash, doc_id) order."""
+    return f"""SELECT doc_id,
        row_number() OVER (ORDER BY {_decision_hash_sql('shuffle')}, doc_id)
          AS shuffle_pos
-FROM documents
-ORDER BY doc_id
-""",
-)
+FROM {src}"""
+
+
+@_register("curation_shuffle_permutation",
+           oracle=_permutation_sql("documents") + "\nORDER BY doc_id\n")
 def q_curation_shuffle_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-order permutation — a total
     row_number over hash order computed without a single-partition
@@ -2104,54 +2106,16 @@ def q_curation_shuffle_permutation(spark: SparkSession, sf_dir: str) -> DataFram
     return curation.shuffle_permutation(docs).orderBy("doc_id")
 
 
-_CURATION_PIPELINE_ORACLE = """
+_CURATION_PIPELINE_ORACLE = f"""
 WITH sampled AS (
   SELECT doc_id, text, lang, source FROM documents
-  WHERE <HASH_SAMPLE> % 100 < CASE WHEN lang = 'en' THEN 40 ELSE 100 END
-),
-tokall AS (SELECT doc_id, <TOKENS> AS t FROM documents),
-shing AS (SELECT doc_id, unnest(<SHINGLES>) AS shingle FROM tokall),
-bench AS (SELECT DISTINCT shingle FROM shing WHERE doc_id % 97 = 0),
-contaminated AS (
-  SELECT DISTINCT s.doc_id FROM shing s JOIN bench USING (shingle)),
-clean AS (
-  SELECT s.* FROM sampled s LEFT JOIN contaminated c USING (doc_id)
-  WHERE c.doc_id IS NULL),
-scored AS (
-  SELECT source, doc_id,
-         round(0.4 * least(len(t) / 100.0, 1.0)
-             + 0.3 * greatest(0.0, 1.0 - (punct::DOUBLE / total) * 4.0)
-             + 0.3 * least(len(list_filter(t,
-                   x -> x IN ('the','a','an','and','or','of','to','in','is','it')
-                 ))::DOUBLE / greatest(len(t), 1) * 5.0, 1.0), 6) AS quality
-  FROM (
-    SELECT source, doc_id, <TOKENS> AS t,
-           greatest(length(coalesce(text, '')), 1) AS total,
-           length(coalesce(text, '')) - length(regexp_replace(coalesce(text, ''),
-               '[^a-zA-Z0-9 \t\n\r]', '', 'g')) AS punct
-    FROM clean)),
-quota AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, row_number() OVER (PARTITION BY source
-                                      ORDER BY quality DESC, doc_id) AS rk
-    FROM scored) WHERE rk <= 15),
-surv AS (SELECT c.* FROM clean c JOIN quota USING (doc_id)),
-packed AS (
-  SELECT doc_id, lang, pack_shard, n_tokens, cum_tokens::BIGINT AS cum_tokens,
-         floor((cum_tokens - n_tokens) / 512.0)::BIGINT AS bin_idx
-  FROM (
-    SELECT doc_id, lang, pack_shard, n_tokens,
-           sum(n_tokens) OVER (PARTITION BY lang, pack_shard ORDER BY doc_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS cum_tokens
-    FROM (
-      SELECT doc_id, lang, floor(doc_id / 200.0)::BIGINT AS pack_shard,
-             len(<TOKENS>)::BIGINT AS n_tokens
-      FROM surv))),
-perm AS (
-  SELECT doc_id, row_number() OVER (ORDER BY <HASH_SHUFFLE>, doc_id)
-           AS shuffle_pos
-  FROM surv)
+  WHERE {_SAMPLE_PRED}),
+{_CONTAMINATED_CTES},
+clean AS (SELECT * FROM sampled WHERE doc_id NOT IN (SELECT doc_id FROM hits)),
+quota AS ({_quota_sql("clean", 15)}),
+surv AS (SELECT clean.* FROM clean JOIN quota USING (doc_id)),
+packed AS ({_pack_sql("surv")}),
+perm AS ({_permutation_sql("surv")})
 SELECT p.doc_id, p.lang, p.pack_shard, p.n_tokens, p.cum_tokens, p.bin_idx,
        perm.shuffle_pos
 FROM packed p JOIN perm USING (doc_id)
@@ -2159,7 +2123,7 @@ ORDER BY doc_id
 """
 
 
-@_register("curation_pipeline")
+@_register("curation_pipeline", oracle=_CURATION_PIPELINE_ORACLE)
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The five curation operators COMPOSED end-to-end — the shape a
     real pre-training corpus build takes: stratified sample (en→40%) →
@@ -2190,15 +2154,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-_ORACLES["curation_pipeline"] = (
-    _CURATION_PIPELINE_ORACLE
-    .replace("<HASH_SAMPLE>", HASH60_SQL.format(x="doc_id::VARCHAR || ':sample'"))
-    .replace("<HASH_SHUFFLE>", HASH60_SQL.format(x="doc_id::VARCHAR || ':shuffle'"))
-    .replace("<SHINGLES>", SHINGLES_SQL.format(t="t"))
-    .replace("<TOKENS>", TOKENS_SQL)
-)
 
 
 @_register(
@@ -2317,20 +2272,27 @@ def q_asof_click_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("click_id")
 
 
-_SESSION_CORE_SQL = """
-  SELECT event_id, user_id, value,
-         epoch_us(ts) AS tus,
-         sum(CASE WHEN prev IS NULL OR epoch_us(ts) - prev > {gap_us}
+def _gap_sessions_sql(src: str, key: str, order_id: str, gap_s: int,
+                      cmp: str = ">") -> str:
+    """Every row of ``src`` with ``tus`` = epoch_us(ts) and its
+    ``session_idx`` (operators.sessions.sessionize): per ``key``, in
+    (ts, ``order_id``) order, a row opens the next session when it is
+    the first or its gap to the previous row is ``cmp`` ``gap_s``."""
+    return f"""
+  SELECT *, epoch_us(ts) AS tus,
+         sum(CASE WHEN prev IS NULL OR epoch_us(ts) - prev {cmp} {gap_s * 1_000_000}
                   THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
+           OVER (PARTITION BY {key} ORDER BY ts, {order_id}
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
            AS session_idx
   FROM (
-    SELECT event_id, user_id, ts, value,
-           lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev
-    FROM events)
-""".replace("{gap_us}", str(21600 * 1_000_000))
+    SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY {key}
+                                      ORDER BY ts, {order_id}) AS prev
+    FROM {src})
+"""
+
+
+_SESSION_CORE_SQL = _gap_sessions_sql("events", "user_id", "event_id", 21600)
 
 
 @_register(
@@ -2373,9 +2335,9 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "flagship_sessions_asof",
-    oracle="""
+    oracle=f"""
 WITH ext AS (
-  SELECT doc_id, {text_extract} AS et FROM documents
+  SELECT doc_id, {_joined_sql(_paragraphs_sql("text"))} AS et FROM documents
 ), evs AS (
   SELECT doc_id, (doc_id % 7)::INT AS grp,
          TIMESTAMP '2024-01-01 00:00:00'
@@ -2387,24 +2349,13 @@ WITH ext AS (
          count(*)::BIGINT AS day_docs,
          sum(text_len)::BIGINT AS day_len
   FROM evs GROUP BY 1, 2
-), sess AS (
-  SELECT doc_id, grp, ts, text_len,
-         sum(CASE WHEN prev IS NULL OR epoch_us(ts) - prev > 18000000000
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY grp ORDER BY ts, doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_idx
-  FROM (
-    SELECT *, lag(epoch_us(ts)) OVER (PARTITION BY grp
-                                      ORDER BY ts, doc_id) AS prev
-    FROM evs)
-)
+), sess AS ({_gap_sessions_sql("evs", "grp", "doc_id", 18000)})
 SELECT s.doc_id::VARCHAR AS conv_id, s.grp,
        s.session_idx::BIGINT AS session_idx, s.text_len,
        a.day_docs AS audit_day_docs, a.day_len AS audit_day_len
 FROM sess s ASOF LEFT JOIN audit a ON s.grp = a.grp AND s.ts >= a.ts
 ORDER BY conv_id
-""".replace("{text_extract}", _joined_sql(_paragraphs_sql("text"))),
+""",
 )
 def q_flagship_sessions_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end transcript analytics composing the THREE tiers under
@@ -2475,25 +2426,15 @@ def q_flagship_sessions_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session_window merge rule: an event exactly `gap` after its
 # predecessor starts a NEW session (window end is exclusive) — note
 # the >= vs the batch sessionizer's strict >.
-_SESSION_WINDOW_ORACLE = """
-WITH sess AS (
-  SELECT user_id, value, epoch_us(ts) AS tus,
-         sum(CASE WHEN prev IS NULL OR epoch_us(ts) - prev >= {gap_us}
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-  FROM (
-    SELECT event_id, user_id, ts, value,
-           lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev
-    FROM events))
+_SESSION_WINDOW_ORACLE = f"""
 SELECT user_id, min(tus)::BIGINT AS start_us,
-       (max(tus) + {gap_us})::BIGINT AS end_us,
+       (max(tus) + {21600 * 1_000_000})::BIGINT AS end_us,
        count(*)::BIGINT AS n_events,
        round(sum(value), 6) AS value_sum
-FROM sess GROUP BY user_id, s
+FROM ({_gap_sessions_sql("events", "user_id", "event_id", 21600, ">=")})
+GROUP BY user_id, session_idx
 ORDER BY user_id, start_us
-""".replace("{gap_us}", str(21600 * 1_000_000))
+"""
 
 
 @_register("streaming_session_window", oracle=_SESSION_WINDOW_ORACLE)
@@ -2505,9 +2446,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     with session_window's >= boundary; together with
     sessionize_events this pins batch vs streaming session semantics
     INCLUDING their one-instant boundary difference."""
-    import tempfile
-    import uuid
-
     from .streaming.extract_stream import (
         EVENTS_STREAM_DDL,
         build_session_window_stream,
@@ -2521,23 +2459,14 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
-    tmp = tempfile.mkdtemp(prefix="ocr-stream-sess-")
-    in_dir = os.path.join(tmp, "in")
-    ev.write.mode("overwrite").parquet(in_dir)
-
-    stream = spark.readStream.schema(EVENTS_STREAM_DDL).parquet(in_dir)
-    sessions = build_session_window_stream(stream, gap="6 hours")
-    qname = "stream_sess_" + uuid.uuid4().hex[:8]
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).orderBy("user_id", "start_us")
+    return _memory_stream(
+        spark, [ev],
+        lambda in_dir: build_session_window_stream(
+            spark.readStream.schema(EVENTS_STREAM_DDL).parquet(in_dir),
+            gap="6 hours",
+        ),
+        "complete",
+    ).orderBy("user_id", "start_us")
 
 
 # --------------------------------------------- TPC-H classics + JSON
@@ -2889,73 +2818,17 @@ def q_vocab_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "gopher_repetition_documents",
-    oracle=f"""
-WITH base AS (
-  SELECT doc_id, {{tok}} AS t,
-         list_filter(list_transform(string_split(coalesce(text, ''), chr(10)),
-                                    x -> trim(x)), x -> x <> '') AS ls
-  FROM documents),
-grams AS (
-  SELECT doc_id,
-         len(ls)::INT AS n_lines,
-         CASE WHEN len(ls) > 0
-              THEN round(1.0 - len(list_distinct(ls))::DOUBLE / len(ls), 6)
-              ELSE 0.0 END AS dup_line_frac,
-         list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                        i -> t[i] || ' ' || t[i+1]) AS g2,
-         list_transform(generate_series(1, greatest(len(t) - 4, 0)),
-                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' '
-                             || t[i+3] || ' ' || t[i+4]) AS g5
-  FROM base),
-g2c AS (SELECT doc_id, g, count(*) AS c
-        FROM (SELECT doc_id, unnest(g2) AS g FROM grams) GROUP BY 1, 2),
-top2 AS (SELECT doc_id, g, c FROM (
-           SELECT doc_id, g, c,
-                  row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY c DESC, g ASC) AS rn
-           FROM g2c) WHERE rn = 1),
-den2 AS (SELECT doc_id, sum(c * len(g)) AS d FROM g2c GROUP BY 1),
-g5c AS (SELECT doc_id, g, count(*) AS c
-        FROM (SELECT doc_id, unnest(g5) AS g FROM grams) GROUP BY 1, 2),
-d5 AS (SELECT doc_id,
-              sum(c * len(g)) AS den,
-              sum(CASE WHEN c >= 2 THEN c * len(g) ELSE 0 END) AS dup
-       FROM g5c GROUP BY 1)
-SELECT g.doc_id, g.n_lines, g.dup_line_frac,
-       coalesce(t.g, '') AS top_2gram,
-       CASE WHEN coalesce(den2.d, 0) > 0
-            THEN round(t.c * len(t.g)::DOUBLE / den2.d, 6)
-            ELSE 0.0 END AS top_2gram_frac,
-       CASE WHEN coalesce(d5.den, 0) > 0
-            THEN round(d5.dup::DOUBLE / d5.den, 6)
-            ELSE 0.0 END AS dup_5gram_frac
-FROM grams g LEFT JOIN top2 t USING (doc_id)
-             LEFT JOIN den2 ON g.doc_id = den2.doc_id
-             LEFT JOIN d5 ON g.doc_id = d5.doc_id
-ORDER BY doc_id
-""".replace("{tok}", TOKENS_SQL),
-)
-def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three representative Gopher-style repetition metrics (Rae et
-    al. 2021 app. A1.1, stream-fraction variants — see
-    ``textstats.repetition_stats_full``): duplicate-line fraction,
-    most-frequent word 2-gram + the character fraction it covers,
-    duplicate-5-gram character fraction. Six columns of the one
-    repetition operator; column pruning leaves only the line, 2-gram
-    and 5-gram arrays to build. Spark side is ZERO-shuffle; the oracle
-    replays the semantics with the opposite mechanism (unnest → GROUP
-    BY), so the hash pins the metrics, not the formulation."""
-    docs = _t(spark, sf_dir, "documents")
-    return textstats.repetition_stats_full(docs).select(
-        "doc_id", "n_lines", "dup_line_frac", "top_2gram",
-        "top_2gram_frac", "dup_5gram_frac",
-    ).orderBy("doc_id")
+def _trimmed_items_sql(sep: str = "chr(10)") -> str:
+    """The ``sep``-separated pieces of ``text``, each trimmed, the empty
+    ones dropped: the line (and paragraph) lists of textstats and
+    curation.c4_line_filter."""
+    return (f"list_filter(list_transform(string_split(coalesce(text, ''), {sep}),\n"
+            "                                    x -> trim(x)), x -> x <> '')")
 
 
 def _gopher_full_oracle() -> str:
-    """Generate the 13-metric oracle for the full Gopher A1.1 family.
+    """Generate the 13-metric oracle for the full Gopher A1.1 family,
+    plus the line count and the top 2-gram itself.
     Deliberately the OPPOSITE mechanism to the Spark side (unnest →
     GROUP BY → window/top per doc vs per-row sorted-array folds), so
     the hash pins the metric definitions, not the formulation."""
@@ -2975,8 +2848,8 @@ def _gopher_full_oracle() -> str:
         )
     for k in top_ks:
         ctes.append(
-            f"t{k} AS (SELECT doc_id, topchars, den FROM ("
-            f"SELECT doc_id, c * len(g) AS topchars, "
+            f"t{k} AS (SELECT doc_id, g, topchars, den FROM ("
+            f"SELECT doc_id, g, c * len(g) AS topchars, "
             f"sum(c * len(g)) OVER (PARTITION BY doc_id) AS den, "
             f"row_number() OVER (PARTITION BY doc_id "
             f"ORDER BY c DESC, g ASC) AS rn FROM gc{k}) WHERE rn = 1)"
@@ -3022,12 +2895,9 @@ def _gopher_full_oracle() -> str:
     joins_sql = "\n".join(joins)
     return f"""
 WITH base AS (
-  SELECT doc_id, {{tok}} AS t,
-         list_filter(list_transform(string_split(coalesce(text, ''), chr(10)),
-                                    x -> trim(x)), x -> x <> '') AS ls,
-         list_filter(list_transform(string_split(coalesce(text, ''),
-                                                 chr(10) || chr(10)),
-                                    x -> trim(x)), x -> x <> '') AS ps
+  SELECT doc_id, {TOKENS_SQL} AS t,
+         {_trimmed_items_sql()} AS ls,
+         {_trimmed_items_sql("chr(10) || chr(10)")} AS ps
   FROM documents),
 grams AS (
   SELECT doc_id,
@@ -3035,6 +2905,7 @@ grams AS (
   FROM base),
 {ctes_sql}
 SELECT b.doc_id,
+       len(b.ls)::INT AS n_lines,
        CASE WHEN len(b.ls) > 0
             THEN round(1.0 - len(list_distinct(b.ls))::DOUBLE / len(b.ls), 6)
             ELSE 0.0 END AS dup_line_frac,
@@ -3043,11 +2914,12 @@ SELECT b.doc_id,
             THEN round(1.0 - len(list_distinct(b.ps))::DOUBLE / len(b.ps), 6)
             ELSE 0.0 END AS dup_para_frac,
        {dup_item("p", "dup_para_char_frac")},
+       coalesce(t2.g, '') AS top_2gram,
        {cols_sql}
 FROM base b
 {joins_sql}
 ORDER BY b.doc_id
-""".replace("{tok}", TOKENS_SQL)
+"""
 
 
 @_register("gopher_repetition_full_documents", oracle=_gopher_full_oracle())
@@ -3057,13 +2929,15 @@ def q_gopher_repetition_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     transfer): duplicate line/paragraph fractions by item AND by
     character coverage, top-{2,3,4}-gram character fractions,
     duplicate-{5..10}-gram character fractions — 13 metrics per
-    document. Spark side is ZERO-shuffle (one sorted-array fold per
-    metric, each fold carrying its own denominator); the oracle replays
-    every metric via unnest → GROUP BY — mechanism-independent hash."""
+    document — plus the non-empty line count and the most frequent
+    word 2-gram (ties to the smallest). Spark side is ZERO-shuffle (one
+    sorted-array fold per metric, each fold carrying its own
+    denominator); the oracle replays every metric via unnest → GROUP BY
+    — mechanism-independent hash."""
     docs = _t(spark, sf_dir, "documents")
     return textstats.repetition_stats_full(docs).select(
-        "doc_id", "dup_line_frac", "dup_line_char_frac", "dup_para_frac",
-        "dup_para_char_frac",
+        "doc_id", "n_lines", "dup_line_frac", "dup_line_char_frac",
+        "dup_para_frac", "dup_para_char_frac", "top_2gram",
         *[f"top_{k}gram_frac" for k in (2, 3, 4)],
         *[f"dup_{k}gram_frac" for k in range(5, 11)],
     ).orderBy("doc_id")
@@ -3071,13 +2945,12 @@ def q_gopher_repetition_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "c4_line_filter_documents",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT doc_id,
-         list_filter(list_transform(string_split(coalesce(text, ''), chr(10)),
-                                    x -> trim(x)), x -> x <> '') AS ls,
+         {_trimmed_items_sql()} AS ls,
          NOT (contains(lower(coalesce(text, '')), 'lorem ipsum')
-              OR contains(coalesce(text, ''), '{')) AS doc_ok
+              OR contains(coalesce(text, ''), '{{')) AS doc_ok
   FROM documents),
 k AS (
   SELECT doc_id, ls, doc_ok,
@@ -3103,14 +2976,22 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.c4_line_filter(docs).orderBy("doc_id")
 
 
+def _gopher_gate_sql(min_words: int, min_stop_hits: int) -> str:
+    """The Gopher quality pass flag over the ``sig`` columns, with the
+    word-count floor and required-stopword hits as parameters."""
+    return f"""(n_words >= {min_words} AND n_words <= 100000
+        AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+        AND hash_word_ratio <= 0.1 AND ellipsis_word_ratio <= 0.1
+        AND bullet_line_frac <= 0.9 AND ellipsis_line_frac <= 0.3
+        AND alpha_word_frac >= 0.8 AND stop_hits >= {min_stop_hits})"""
+
+
 @_register(
     "gopher_quality_documents",
-    oracle="""
+    oracle=f"""
 WITH base AS (
-  SELECT doc_id, coalesce(text, '') AS t, {tok} AS toks,
-         list_filter(list_transform(string_split(coalesce(text, ''),
-                                                 chr(10)),
-                                    x -> trim(x)), x -> x <> '') AS ls
+  SELECT doc_id, coalesce(text, '') AS t, {TOKENS_SQL} AS toks,
+         {_trimmed_items_sql()} AS ls
   FROM documents),
 sig AS (
   SELECT doc_id,
@@ -3125,7 +3006,7 @@ sig AS (
                / greatest(len(toks), 1), 6) AS ellipsis_word_ratio,
          round(len(list_filter(ls, x -> regexp_matches(x, '^[-*•]')))
                ::DOUBLE / greatest(len(ls), 1), 6) AS bullet_line_frac,
-         round(len(list_filter(ls, x -> regexp_matches(x, '\\.{3}$')))
+         round(len(list_filter(ls, x -> regexp_matches(x, '\\.{{3}}$')))
                ::DOUBLE / greatest(len(ls), 1), 6) AS ellipsis_line_frac,
          round(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
                ::DOUBLE / greatest(len(toks), 1), 6) AS alpha_word_frac,
@@ -3136,18 +3017,10 @@ sig AS (
 SELECT doc_id, n_words, mean_word_len, hash_word_ratio,
        ellipsis_word_ratio, bullet_line_frac, ellipsis_line_frac,
        alpha_word_frac, stop_hits,
-       (n_words >= 50 AND n_words <= 100000
-        AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-        AND hash_word_ratio <= 0.1 AND ellipsis_word_ratio <= 0.1
-        AND bullet_line_frac <= 0.9 AND ellipsis_line_frac <= 0.3
-        AND alpha_word_frac >= 0.8 AND stop_hits >= 2) AS passes_gopher,
-       (n_words >= 25 AND n_words <= 100000
-        AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-        AND hash_word_ratio <= 0.1 AND ellipsis_word_ratio <= 0.1
-        AND bullet_line_frac <= 0.9 AND ellipsis_line_frac <= 0.3
-        AND alpha_word_frac >= 0.8 AND stop_hits >= 1) AS passes_adapted
+       {_gopher_gate_sql(50, 2)} AS passes_gopher,
+       {_gopher_gate_sql(25, 1)} AS passes_adapted
 FROM sig ORDER BY doc_id
-""".replace("{tok}", TOKENS_SQL),
+""",
 )
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher quality-signal battery (Rae et al. 2021 app. A1.1,
@@ -3284,36 +3157,22 @@ def q_streaming_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch and must be dropped by dropDuplicatesWithinWatermark
     state, not by within-batch dedup. The surviving (fingerprint,
     normalized text) set equals the corpus' distinct set."""
-    import tempfile
-    import uuid
-
     from .streaming.extract_stream import (
         build_dedup_stream,
         read_transcripts_stream,
     )
 
     base = transcripts_from_documents(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="ocr-stream-dedup-")
-    in_dir = os.path.join(tmp, "in")
-    base.coalesce(1).write.mode("overwrite").parquet(in_dir)
     dups = base.filter(F.col("conv_id").cast("long") % 10 == 0).withColumn(
         "conv_id", F.concat(F.lit("dup-"), F.col("conv_id"))
     )
-    dups.coalesce(1).write.mode("append").parquet(in_dir)
-
-    stream = read_transcripts_stream(spark, in_dir, max_files_per_trigger=1)
-    deduped = build_dedup_stream(stream)
-    qname = "stream_dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname).orderBy("fingerprint")
+    return _memory_stream(
+        spark, [base.coalesce(1), dups.coalesce(1)],
+        lambda in_dir: build_dedup_stream(
+            read_transcripts_stream(spark, in_dir, max_files_per_trigger=1)
+        ),
+        "append",
+    ).orderBy("fingerprint")
 
 
 _IVF_TRAINED_ORACLE = f"""

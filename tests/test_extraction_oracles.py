@@ -1,8 +1,9 @@
-"""The three extraction catalog queries (one per recast of
-``documents``) must return exactly the rows of their DuckDB oracles,
-compared the way scripts/check_correctness.py compares them. A broken
-oracle rewrite or a kernel change fails here, not only in a manual
-gate run."""
+"""Catalog queries must return exactly the rows of their DuckDB
+oracles, compared the way scripts/check_correctness.py compares them:
+the three extraction queries (one per recast of ``documents``) and
+every query whose oracle splices in a shared rule fragment. A broken
+fragment or a kernel change fails here, not only in a manual gate
+run."""
 
 import importlib.util
 import os
@@ -14,13 +15,13 @@ SF_DIR = "/root/testdata/sf0.001"
 ROOT = os.path.join(os.path.dirname(__file__), "..")
 
 
-def _rowset():
+def _check_correctness():
     spec = importlib.util.spec_from_file_location(
         "check_correctness", os.path.join(ROOT, "scripts", "check_correctness.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod._rowset
+    return mod
 
 
 @pytest.mark.skipif(
@@ -28,29 +29,37 @@ def _rowset():
     reason="driver testdata not present",
 )
 @pytest.mark.parametrize(
-    "name", ["flagship_extract", "extract_spans", "extract_fallback_malformed"]
+    "name",
+    [
+        "flagship_extract", "extract_spans", "extract_fallback_malformed",
+        "p1_payload_kind", "streaming_windowed_metrics",
+        "quality_documents", "ngram_jaccard_pairs_documents",
+        "near_dup_scale_path",
+        "curation_stratified_sample", "curation_quota_per_source",
+        "curation_quota_per_source_salted", "curation_pack_sequences",
+        "curation_decontaminate", "curation_shuffle_permutation",
+        "curation_pipeline",
+        "sessionize_events", "session_stats_events", "flagship_sessions_asof",
+        "streaming_session_window", "streaming_conv_stats",
+        "streaming_dedup_first_seen",
+        "gopher_repetition_full_documents", "c4_line_filter_documents",
+        "gopher_quality_documents",
+    ],
 )
 def test_extraction_query_matches_its_oracle(spark, name):
-    import duckdb
-
     from ocr_engine_spark.catalog import oracle_sql, queries
 
-    rowset = _rowset()
+    cc = _check_correctness()
     sdf = queries()[name](spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{os.path.join(SF_DIR, 'documents.parquet')}')"
-    )
-    res = con.execute(oracle_sql()[name])
+    res = cc.duckdb_views(SF_DIR).execute(oracle_sql()[name])
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
 
     assert sorted(sdf.columns) == sorted(ocols)
     assert len(srows) == len(orows) > 0
-    assert rowset(sdf.columns, srows) == rowset(ocols, orows)
+    assert cc._rowset(sdf.columns, srows) == cc._rowset(ocols, orows)
 
 
 def test_text_rules_match_the_text_kernel():
@@ -98,7 +107,11 @@ def test_density_gate_matches_the_html_kernel():
     from ocr_engine_spark.kernel.dispatch import extract_turn
 
     rng = random.Random(11)
-    seps = [" ", " ", " ", "  ", "\t", "\n", " \r\n "]
+    # str.split() separators beyond [ \t\n\r]: str.isspace() is true for each
+    unicode_ws = list("\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0\u1680"
+                      "\u2028\u2029\u202f\u205f\u3000") + [
+        chr(c) for c in range(0x2000, 0x200b)]
+    seps = [" ", " ", " ", "  ", "\t", "\n", " \r\n "] + unicode_ws
 
     def words(n, letters, long_word):
         # n words of >= 1 letter each, `letters` letters in all
@@ -128,3 +141,20 @@ FROM (SELECT {_WORDS_SQL} AS w FROM (SELECT ?::VARCHAR AS t))"""
         assert con.execute(sql, [t]).fetchone() == (want,), repr(t)
         kept += want is not None
     assert 0 < kept < len(texts)
+
+
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(SF_DIR, "events.parquet")),
+    reason="driver testdata not present",
+)
+def test_catalog_stream_leaves_no_scratch_dir(spark, tmp_path, monkeypatch):
+    """A catalog streaming query materializes its input and checkpoint
+    in a scratch dir; once its rows are collected nothing of it is
+    left."""
+    import tempfile
+
+    from ocr_engine_spark.catalog import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert queries()["streaming_session_window"](spark, SF_DIR).collect()
+    assert list(tmp_path.iterdir()) == []

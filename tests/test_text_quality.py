@@ -130,15 +130,18 @@ def test_repetition_full_short_and_null_docs(spark):
 
 
 def test_gopher_repetition_query_builds_only_its_arrays(spark, tmp_path):
-    """The 6-column query selects from the one repetition operator;
-    column pruning must drop the paragraph array and every gram array
-    but the 2- and 5-grams (k >= 3 grams are the concat_ws arrays)."""
-    from ocr_engine_spark import catalog
+    """A six-column projection of the one repetition operator: column
+    pruning must drop the paragraph array and every gram array but the
+    2- and 5-grams (k >= 3 grams are the concat_ws arrays)."""
+    from ocr_engine_spark.operators.textstats import repetition_stats_full
 
     spark.createDataFrame(
         [(1, "a b c d e\n\nf g")], "doc_id long, text string"
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    q = catalog.q_gopher_repetition(spark, str(tmp_path))
+    q = repetition_stats_full(
+        spark.read.parquet(str(tmp_path / "documents.parquet"))
+    ).select("doc_id", "n_lines", "dup_line_frac", "top_2gram",
+             "top_2gram_frac", "dup_5gram_frac")
     plan = q._jdf.queryExecution().optimizedPlan().toString()
     assert "_paras" not in plan
     assert plan.count("concat_ws") == 1
