@@ -5,6 +5,14 @@ hashes so every stage has an exact DuckDB oracle.
 Scale notes per operator are in each docstring — the common theme: the
 only all-pairs computation ever performed is *within LSH buckets*
 (candidates), never across the corpus.
+
+Each rule is spelled once: ``_pairs_sharing_key`` is the candidate
+self-join (with its optional document-frequency cap) for MinHash bands,
+n-gram shingles and winnowing fingerprints; ``_with_pair_sets`` joins
+per-doc sets onto both sides of a pair for the Jaccard and containment
+verifies; ``_shingle_sets`` builds the shingle arrays they verify
+against. SimHash and embedding pairs carry a payload through their
+join and keep their own.
 """
 
 from __future__ import annotations
@@ -42,7 +50,11 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     Tokens are materialized in their own projection before shingling so
     the tokenizer regex runs once per row, and the scan is spread to
     cluster parallelism first — shingle+hash work is CPU-bound and must
-    not be serialized onto a handful of input splits."""
+    not be serialized onto a handful of input splits. Shingles are
+    exploded inline, not from ``_shingle_sets``: an explode of a column
+    makes Spark infer a ``size > 0`` filter under the round-robin
+    exchange, which re-shingles every row there and stops
+    ``near_dup_scale_path`` reusing that exchange for its verify."""
     sh = spread_to_parallelism(docs).select(
         F.col(id_col), X.tokens_col(text_col).alias("toks")
     ).select(
@@ -56,12 +68,46 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def _pairs_sharing_key(keyed: DataFrame, key: str, id_col: str,
+                       max_df: int | None = None) -> DataFrame:
+    """Candidate pairs: distinct (id_a, id_b) with id_a < id_b over
+    rows of ``keyed`` that share a ``key`` value. Scale: one self-join
+    on the key, so the fan-out is the key's group sizes, never n².
+
+    ``max_df`` is the document-frequency cap: key values held by more
+    than ``max_df`` rows are dropped *before* the self-join (each doc
+    holds a value once, so count(*) is the document frequency; the
+    partial-aggregating groupBy collapses map-side). A value with df=d
+    alone emits d·(d-1)/2 pairs, so ubiquitous values would dominate
+    the join quadratically (PLANS.md §7)."""
+    if max_df is not None:
+        keep = (
+            keyed.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= max_df)
+            .select(key)
+        )
+        keyed = keyed.join(keep, key)
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        )
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         num_perm: int = 16, bands: int = 4) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band
-    bucket. Scale: the self-join is on (band_idx, band_key) — only
-    docs agreeing on a full band collide, so the join fan-out is the
-    bucket sizes, not n²."""
+    bucket. Scale: the self-join is on the (band_idx, band_key) struct
+    — only docs agreeing on a full band collide, so the join fan-out
+    is the bucket sizes, not n²."""
     rows = num_perm // bands
     band_cols = []
     for b in range(bands):
@@ -73,20 +119,46 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
         band_cols.append(F.struct(F.lit(b).alias("band_idx"), key.alias("band_key")))
     banded = signatures.select(
         F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
+    )
+    return _pairs_sharing_key(banded, "band", id_col)
+
+
+def _shingle_sets(docs: DataFrame, id_col: str, text_col: str,
+                  k_shingle: int) -> DataFrame:
+    """Per-doc shingle arrays (id, sh), tokens materialized first as in
+    ``minhash_signatures``."""
+    return spread_to_parallelism(docs).select(
+        F.col(id_col), X.tokens_col(text_col).alias("toks")
+    ).select(
+        F.col(id_col),
+        X.shingles_from_tokens(F.col("toks"), k_shingle).alias("sh"),
+    )
+
+
+def _with_pair_sets(pairs: DataFrame, sets_: DataFrame, id_col: str) -> DataFrame:
+    """Join each doc's per-doc columns of ``sets_`` onto both sides of
+    (id_a, id_b) pairs, suffixed ``_a`` / ``_b`` — two hash joins
+    against the (much smaller) candidate set."""
+    for s in ("a", "b"):
+        side = sets_.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in sets_.columns if c != id_col],
+        )
+        pairs = pairs.join(side, f"id_{s}")
+    return pairs
+
+
+def _jaccard_over_sets(pairs: DataFrame, sets_: DataFrame, id_col: str,
+                       threshold: float) -> DataFrame:
+    """Exact shingle-set Jaccard, rounded to 6 dp, of each candidate
+    pair over the (id, sh) arrays of ``sets_``; pairs below
+    ``threshold`` are dropped."""
+    shared = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = F.round(shared / (F.size("sh_a") + F.size("sh_b") - shared), 6)
     return (
-        a.join(
-            b,
-            (F.col(f"a.band_idx") == F.col(f"b.band_idx"))
-            & (F.col(f"a.band_key") == F.col(f"b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+        _with_pair_sets(pairs, sets_, id_col)
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -94,32 +166,11 @@ def jaccard_verify(pairs: DataFrame, docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", k_shingle: int = 3,
                    threshold: float = 0.5) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs. The shingle
-    arrays are joined in by id — two hash joins against the (much
-    smaller) candidate set; at scale the candidate side is the small
-    one and broadcasts."""
-    sets_ = spread_to_parallelism(docs).select(
-        F.col(id_col), X.tokens_col(text_col).alias("toks")
-    ).select(
-        F.col(id_col),
-        X.shingles_from_tokens(F.col("toks"), k_shingle).alias("sh"),
+    arrays are joined in by id — at scale the candidate side is the
+    small one and broadcasts."""
+    return _jaccard_over_sets(
+        pairs, _shingle_sets(docs, id_col, text_col, k_shingle), id_col, threshold
     )
-    out = (
-        pairs.join(sets_.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sets_.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / (
-                    F.size("sh_a") + F.size("sh_b")
-                    - F.size(F.array_intersect("sh_a", "sh_b"))
-                ),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-    return out.filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -132,43 +183,16 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     path). Join strategy: shingle-inverted-index join (pairs sharing ≥1
     shingle) instead of a cross join, so disjoint docs never pair.
 
-    ``max_df`` is the stop-shingle cap: shingles whose document
-    frequency exceeds it are dropped from the inverted index *before*
-    the self-join (the standard fan-out bound — a shingle with df=d
-    contributes d·(d-1)/2 candidate pairs, so ubiquitous shingles
-    dominate the join quadratically). Candidates change only for pairs
-    whose sole shared shingles are ubiquitous; the exact Jaccard verify
-    still runs on full shingle sets. PLANS.md §7 has the fan-out
-    arithmetic."""
+    ``max_df`` is the stop-shingle cap (``_pairs_sharing_key``).
+    Candidates change only for pairs whose sole shared shingles are
+    ubiquitous; the exact Jaccard verify still runs on the full
+    shingle sets — the same sets the inverted index is exploded from,
+    built once."""
     base = docs if max_id is None else docs.filter(F.col(id_col) < max_id)
-    sets_ = spread_to_parallelism(base).select(
-        F.col(id_col), X.tokens_col(text_col).alias("toks")
-    ).select(
-        F.col(id_col),
-        X.shingles_from_tokens(F.col("toks"), k_shingle).alias("sh"),
-    )
+    sets_ = _shingle_sets(base, id_col, text_col, k_shingle)
     inv = sets_.select(F.col(id_col), F.explode("sh").alias("shingle"))
-    if max_df is not None:
-        # per-doc shingles are distinct, so count(*) == document
-        # frequency; the partial-aggregating groupBy collapses map-side.
-        keep = (
-            inv.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        inv = inv.join(keep, "shingle")
-    cand = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return jaccard_verify(cand, base, id_col, text_col, k_shingle, threshold)
+    cand = _pairs_sharing_key(inv, "shingle", id_col, max_df)
+    return _jaccard_over_sets(cand, sets_, id_col, threshold)
 
 
 def winnow_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -186,9 +210,9 @@ def winnow_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     - **candidates**: inverted-index self-join on fingerprint with a
       document-frequency cap — common k-grams ("tion of ", …) produce
       fingerprints shared by hundreds of unrelated docs (measured df up
-      to 328/500 at sf0.01), and a fingerprint with df=d alone emits
-      d·(d-1)/2 pairs, the same quadratic hazard as hot shingles
-      (PLANS.md §7); capped fingerprints carry no duplication evidence;
+      to 328/500 at sf0.01), the same quadratic hazard as hot shingles
+      (``_pairs_sharing_key``); capped fingerprints carry no
+      duplication evidence;
     - **verify**: exact containment over the FULL fingerprint sets
       (array_intersect of the per-doc fingerprint arrays), so the cap
       only prunes candidates, never distorts surviving scores."""
@@ -199,44 +223,14 @@ def winnow_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
         F.collect_list("fingerprint").alias("fps"),
         F.count(F.lit(1)).alias("n"),
     )
-    keep = (
-        fp.groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
-        .select("fingerprint")
-    )
-    inv = fp.join(keep, "fingerprint")
-    cand = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.fingerprint") == F.col("b.fingerprint"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    cand = _pairs_sharing_key(fp, "fingerprint", id_col, max_df)
     shared = F.size(F.array_intersect("fps_a", "fps_b"))
-    out = (
-        cand.join(
-            sets_.withColumnRenamed(id_col, "id_a")
-            .withColumnRenamed("fps", "fps_a").withColumnRenamed("n", "n_a"),
-            "id_a",
-        )
-        .join(
-            sets_.withColumnRenamed(id_col, "id_b")
-            .withColumnRenamed("fps", "fps_b").withColumnRenamed("n", "n_b"),
-            "id_b",
-        )
-        .select(
-            "id_a", "id_b",
-            shared.cast("long").alias("shared"),
-            F.round(
-                F.greatest(shared / F.col("n_a"), shared / F.col("n_b")), 6
-            ).alias("containment"),
-        )
+    out = _with_pair_sets(cand, sets_, id_col).select(
+        "id_a", "id_b",
+        shared.cast("long").alias("shared"),
+        F.round(
+            F.greatest(shared / F.col("n_a"), shared / F.col("n_b")), 6
+        ).alias("containment"),
     )
     return out.filter(F.col("containment") >= threshold)
 
@@ -250,7 +244,7 @@ def embedding_near_pairs(emb: DataFrame, planes, threshold: float = 0.5,
     is on the bucket key — 2^planes buckets bound the fan-out; the
     all-pairs work happens only inside buckets, never across the
     corpus. Scores rounded to 6 dp for engine-exact oracle parity."""
-    from .similarity import _dot, _norm, lsh_bucket_col
+    from .similarity import _cosine, lsh_bucket_col
 
     # bucket is a projected column — NOT a join back to the source: the
     # corpus is scanned once per join side, no broadcast of itself.
@@ -264,14 +258,10 @@ def embedding_near_pairs(emb: DataFrame, planes, threshold: float = 0.5,
     b = withb.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket"
     )
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))),
-        6,
-    )
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cos.alias("cosine"))
+        .select("id_a", "id_b", _cosine(F.col("va"), F.col("vb")).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 

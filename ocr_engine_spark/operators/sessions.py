@@ -25,26 +25,35 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _us(c) -> F.Column:
-    return F.unix_micros(F.col(c).cast("timestamp"))
+def _with_session_idx(events: DataFrame, gap_s: int, key: str, ts: str,
+                      id_col: str, *carry: str) -> DataFrame:
+    """The gap-session rule, the Spark twin of
+    ``catalog._gap_sessions_sql``: (id, key, ``carry``..., _tus,
+    session_idx), where _tus is ``ts`` in epoch µs (it orders
+    identically to ``ts`` at µs precision) and session_idx is the
+    running count of session starts over (_tus, id)."""
+    base = events.select(
+        F.col(id_col), F.col(key), *carry,
+        F.unix_micros(F.col(ts).cast("timestamp")).alias("_tus"),
+    )
+    w = Window.partitionBy(key).orderBy("_tus", id_col)
+    prev = F.lag("_tus").over(w)
+    new_s = F.when(
+        prev.isNull() | (F.col("_tus") - prev > gap_s * 1_000_000), 1
+    ).otherwise(0)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return base.withColumn("_new", new_s).select(
+        id_col, key, *carry, "_tus",
+        F.sum("_new").over(run).cast("long").alias("session_idx"),
+    )
 
 
 def sessionize(events: DataFrame, gap_s: int = 21600, key: str = "user_id",
                ts: str = "ts", id_col: str = "event_id") -> DataFrame:
     """Per-event session assignment: (key, session_idx) with
     session_idx 1-based in event-time order (ties by id)."""
-    w = Window.partitionBy(key).orderBy(ts, id_col)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = F.lag(_us(ts)).over(w)
-    new_s = F.when(
-        prev.isNull() | (_us(ts) - prev > gap_s * 1_000_000), 1
-    ).otherwise(0)
-    return events.select(
-        F.col(id_col), F.col(key), F.col(ts),
-        new_s.alias("_new"),
-    ).select(
-        id_col, key,
-        F.sum("_new").over(run).cast("long").alias("session_idx"),
+    return _with_session_idx(events, gap_s, key, ts, id_col).select(
+        id_col, key, "session_idx"
     )
 
 
@@ -55,20 +64,7 @@ def session_stats(events: DataFrame, gap_s: int = 21600,
     """Per-session aggregates: event count, duration (µs), value sum.
     One additional exchange on (key, session_idx) after the window —
     partial-aggregated map-side."""
-    base = events.select(
-        F.col(id_col), F.col(key), F.col(value_col), _us(ts).alias("_tus")
-    )
-    # _tus (epoch µs) orders identically to ts at µs precision
-    w = Window.partitionBy(key).orderBy("_tus", id_col)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = F.lag("_tus").over(w)
-    new_s = F.when(
-        prev.isNull() | (F.col("_tus") - prev > gap_s * 1_000_000), 1
-    ).otherwise(0)
-    tagged = base.withColumn("_new", new_s).select(
-        id_col, key, value_col, "_tus",
-        F.sum("_new").over(run).cast("long").alias("session_idx"),
-    )
+    tagged = _with_session_idx(events, gap_s, key, ts, id_col, value_col)
     return tagged.groupBy(key, "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
         (F.max("_tus") - F.min("_tus")).alias("duration_us"),

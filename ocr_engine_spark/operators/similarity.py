@@ -6,16 +6,23 @@
   ``ORDER BY score LIMIT k`` which Spark executes as TakeOrdered
   (per-partition top-k, tiny shuffle of k·partitions rows — no global
   sort).
-- ``lsh_bucket_col`` / ``lsh_buckets_literal``: random-hyperplane
-  LSH — the scale path. Hyperplane weights are derived from
-  md5(plane, dim) parity, so the bucketing is engine-portable (exact
-  DuckDB oracle) and needs no stored model. Search
-  (``lsh_multiprobe_topk``) computes the query's bucket in plain
-  Python with ``bucket_of`` and ranks only the buckets within hamming
-  radius r of it (r = 0: that bucket alone).
+- ``lsh_bucket_col``: random-hyperplane LSH — the scale path, and
+  the one bucketing expression (``lsh_buckets_literal`` projects it,
+  ``lsh_multiprobe_topk`` filters on it). Hyperplane weights are
+  derived from md5(plane, dim) parity, so the bucketing is
+  engine-portable (exact DuckDB oracle) and needs no stored model.
+  Search computes the query's bucket in plain Python with
+  ``bucket_of`` and ranks only the buckets within hamming radius r of
+  it (r = 0: that bucket alone).
+- Every pruned search is one literal IN-list filter on one scan in
+  front of one of two rankings: ``cosine_topk`` (LSH multi-probe, IVF)
+  or ``pq_adc_topk`` (IVF×PQ). No search joins back to its source, so
+  each is zero-shuffle up to the final TakeOrdered.
 
-Scores are rounded to 6 dp before ranking so results are stable across
-engines' float summation orders; ties break on vec_id.
+Scores are rounded to 6 dp before ranking (``_cosine``; the ADC score
+likewise) so results are stable across engines' float summation
+orders; ties break on vec_id. Driver-side vectors enter plans as
+``_lit_vec`` literals.
 """
 
 from __future__ import annotations
@@ -38,11 +45,23 @@ def _norm(a) -> F.Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cosine(a, b) -> F.Column:
+    """Cosine of two array columns rounded to 6 dp — the score every
+    exact ranking and the embedding near-dup verify compare."""
+    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+
+
+def _lit_vec(xs: Sequence[float]) -> F.Column:
+    """A driver-side vector (query, hyperplane, codeword, centroid or
+    lookup row) compiled into the plan as a literal double array."""
+    return F.array(*[F.lit(float(x)) for x in xs])
+
+
 def cosine_scores(emb: DataFrame, query: Sequence[float],
                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    q = F.array(*[F.lit(float(v)) for v in query])
-    score = _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q))
-    return emb.select(F.col(id_col), F.round(score, 6).alias("cosine"))
+    return emb.select(
+        F.col(id_col), _cosine(F.col(vec_col), _lit_vec(query)).alias("cosine")
+    )
 
 
 def cosine_topk(emb: DataFrame, query: Sequence[float], k: int = 10,
@@ -74,12 +93,11 @@ def plane_weight_lists(num_planes: int = 8, dims: int = 64) -> List[List[int]]:
 def lsh_bucket_col(planes: List[List[int]], vec_col: str = "embedding") -> F.Column:
     """The sign-bucket as a plain column expression: per plane, an
     ordered zip_with/aggregate fold (deterministic FP summation order).
-    Being a Column — not a DataFrame — callers attach it with one
-    projection instead of a self-join back to the source."""
+    Being a Column — not a DataFrame — callers project it or filter on
+    it in one pass instead of a self-join back to the source."""
     bucket = F.lit(0).cast("long")
     for j, w in enumerate(planes):
-        wcol = F.array(*[F.lit(float(x)) for x in w])
-        dot = _dot(F.col(vec_col), wcol)
+        dot = _dot(F.col(vec_col), _lit_vec(w))
         bucket = bucket + F.when(dot > 0, F.lit(2 ** j).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -132,18 +150,18 @@ def lsh_multiprobe_topk(emb: DataFrame, planes: List[List[int]],
                         query: Sequence[float], k: int = 10, radius: int = 1,
                         id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """ANN with multi-probe LSH: cosine top-k within the query's bucket
-    plus every bucket within hamming distance ``radius`` of it. Still
-    zero-shuffle up to the final TakeOrdered: the probe set is a
-    driver-computed literal IN-list over the projected bucket column,
-    so the scan prunes to Σ C(planes, r)/2^planes of the corpus while
-    recovering the recall the single-bucket path gives up."""
+    plus every bucket within hamming distance ``radius`` of it.
+    Zero-shuffle up to the final TakeOrdered: the probe set is a
+    driver-computed literal IN-list over the bucket column, one filter
+    on one scan, so the scan prunes to Σ C(planes, r)/2^planes of the
+    corpus while recovering the recall the single-bucket path gives
+    up."""
     qb = bucket_of(query, planes)
     probe = [qb ^ m for m in multiprobe_masks(len(planes), radius)]
-    buckets = lsh_buckets_literal(emb, planes, id_col, vec_col)
-    cand = emb.join(
-        buckets.filter(F.col("bucket").isin(probe)).select(id_col), id_col
+    return cosine_topk(
+        emb.filter(lsh_bucket_col(planes, vec_col).isin(probe)),
+        query, k, id_col, vec_col,
     )
-    return cosine_topk(cand, query, k, id_col, vec_col)
 
 
 def pq_codebooks(num_segments: int = 16, sub_dims: int = 4,
@@ -183,10 +201,7 @@ def pq_code_col(codebooks: List[List[List[float]]],
     for s, words in enumerate(codebooks):
         dots = F.array(
             *[
-                _dot(
-                    F.slice(F.col(vec_col), s * sub + 1, sub),
-                    F.array(*[F.lit(float(x)) for x in w]),
-                )
+                _dot(F.slice(F.col(vec_col), s * sub + 1, sub), _lit_vec(w))
                 for w in words
             ]
         )
@@ -215,9 +230,7 @@ def pq_adc_score_col(lut: List[List[float]], code_col: str = "pq_code") -> F.Col
     score = F.lit(0.0)
     for s, row in enumerate(lut):
         code0 = (F.col(code_col) / F.lit(4 ** s).cast("long")).cast("long") % 4
-        score = score + F.element_at(
-            F.array(*[F.lit(float(v)) for v in row]), (code0 + 1).cast("int")
-        )
+        score = score + F.element_at(_lit_vec(row), (code0 + 1).cast("int"))
     return score
 
 
@@ -246,12 +259,7 @@ def ivf_assign_col(centroids: List[List[float]], vec_col: str = "embedding") -> 
     assignment is one projection over the scan — no join, no shuffle.
     Deterministic double arithmetic (ordered fold) keeps the argmax
     engine-exact vs the DuckDB oracle."""
-    dots = F.array(
-        *[
-            _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
-            for c in centroids
-        ]
-    )
+    dots = F.array(*[_dot(F.col(vec_col), _lit_vec(c)) for c in centroids])
     return F.array_position(dots, F.array_max(dots)).cast("int")
 
 
@@ -297,12 +305,9 @@ def ivf_topk(emb: DataFrame, centroids: List[List[float]],
     exact cosine within them. The scan predicate (centroid IN probes)
     prunes the corpus before any ranking work."""
     probes = ivf_probe_lists(centroids, query, nprobe)
-    assigned = emb.select(
-        F.col(id_col), F.col(vec_col),
-        ivf_assign_col(centroids, vec_col).alias("centroid"),
-    )
     return cosine_topk(
-        assigned.filter(F.col("centroid").isin(probes)), query, k, id_col, vec_col
+        emb.filter(ivf_assign_col(centroids, vec_col).isin(probes)),
+        query, k, id_col, vec_col,
     )
 
 
@@ -330,14 +335,10 @@ def ivf_topk_sweep(emb: DataFrame, centroids: List[List[float]],
         F.array(*[F.lit(int(c)) for c in order]),
         F.array(*[F.lit(i + 1) for i in range(n)]),
     )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    cosine = F.round(
-        _dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * _norm(q)), 6
-    )
     scored = emb.select(
         F.col(id_col),
         rank_map[ivf_assign_col(centroids, vec_col)].alias("probe_rank"),
-        cosine.alias("cosine"),
+        _cosine(F.col(vec_col), _lit_vec(query)).alias("cosine"),
     )
     swept = scored.select(
         F.explode(F.sequence(F.col("probe_rank"), F.lit(n))).alias("nprobe"),
@@ -365,19 +366,12 @@ def ivf_pq_topk(emb: DataFrame, centroids: List[List[float]],
     production scale ``centroid`` and ``pq_code`` are materialized
     columns (partition by centroid) and the scan touches only the
     probed partitions' code column: ~256 B/vector → ~4 B/vector over
-    ~nprobe/num_lists of the data."""
+    ~nprobe/num_lists of the data. Spelled as exactly that: the probe
+    filter in front of ``pq_adc_topk``."""
     probes = ivf_probe_lists(centroids, query, nprobe)
-    lut = pq_adc_lut(query, codebooks)
-    coded = emb.select(
-        F.col(id_col),
-        ivf_assign_col(centroids, vec_col).alias("centroid"),
-        pq_code_col(codebooks, vec_col).alias("pq_code"),
-    )
-    return (
-        coded.filter(F.col("centroid").isin(probes))
-        .select(id_col, F.round(pq_adc_score_col(lut), 6).alias("adc_score"))
-        .orderBy(F.col("adc_score").desc(), F.col(id_col))
-        .limit(k)
+    return pq_adc_topk(
+        emb.filter(ivf_assign_col(centroids, vec_col).isin(probes)),
+        codebooks, query, k, id_col, vec_col,
     )
 
 

@@ -1,7 +1,8 @@
 """Catalog queries must return exactly the rows of their DuckDB
 oracles, compared the way scripts/check_correctness.py compares them:
-the three extraction queries (one per recast of ``documents``) and
-every query whose oracle splices in a shared rule fragment. A broken
+the three extraction queries (one per recast of ``documents``), every
+query whose oracle splices in a shared rule fragment, and every query
+over the near-duplicate, ANN and session operators. A broken
 fragment or a kernel change fails here, not only in a manual gate
 run."""
 
@@ -34,7 +35,13 @@ def _check_correctness():
         "flagship_extract", "extract_spans", "extract_fallback_malformed",
         "p1_payload_kind", "streaming_windowed_metrics",
         "quality_documents", "ngram_jaccard_pairs_documents",
-        "near_dup_scale_path",
+        "near_dup_scale_path", "minhash_lsh_candidates",
+        "winnow_containment_documents", "simhash_near_pairs_documents",
+        "dedup_embedding_near_pairs",
+        "ann_cosine_topk", "ann_lsh_buckets", "ann_lsh_multiprobe_topk",
+        "ann_lsh_multiprobe_recall", "ann_ivf_topk", "ann_ivf_recall",
+        "ann_pq_adc_topk", "ann_ivf_pq_topk", "ann_ivf_pq_recall",
+        "ann_ivf_trained_recall",
         "curation_stratified_sample", "curation_quota_per_source",
         "curation_quota_per_source_salted", "curation_pack_sequences",
         "curation_decontaminate", "curation_shuffle_permutation",
@@ -47,19 +54,26 @@ def _check_correctness():
     ],
 )
 def test_extraction_query_matches_its_oracle(spark, name):
+    assert _matches_oracle(spark, SF_DIR, name) > 0
+
+
+def _matches_oracle(spark, sf_dir, name):
+    """Assert ``queries()[name]`` over ``sf_dir`` returns the rows of
+    ``oracle_sql()[name]``; return the row count."""
     from ocr_engine_spark.catalog import oracle_sql, queries
 
     cc = _check_correctness()
-    sdf = queries()[name](spark, SF_DIR)
+    sdf = queries()[name](spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
 
-    res = cc.duckdb_views(SF_DIR).execute(oracle_sql()[name])
+    res = cc.duckdb_views(sf_dir).execute(oracle_sql()[name])
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
 
     assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows) > 0
+    assert len(srows) == len(orows)
     assert cc._rowset(sdf.columns, srows) == cc._rowset(ocols, orows)
+    return len(srows)
 
 
 def test_text_rules_match_the_text_kernel():
@@ -91,6 +105,61 @@ FROM (SELECT {_paragraphs_sql("t")} AS bs FROM (SELECT ?::VARCHAR AS t))"""
                      for s in res["spans"]),
         )
         assert con.execute(sql, [t]).fetchone() == want, repr(t)
+
+
+def _multiline_documents(path):
+    """A documents.parquet whose texts hold many lines, blank lines,
+    whitespace-only lines, one-character lines, repeated lines and
+    paragraphs, with 50-90 words each of which 0-30% are digit-only,
+    so the alphabetic-word fraction spans the Gopher gate's 0.8."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(13)
+    vocab = ["the", "be", "to", "of", "and", "that", "have", "with",
+             "spark", "table", "window", "query", "merge", "stream", "batch"]
+    odd = ["   ", "\t", " \t ", "", "a", "7", ".", "-", "#"]
+    rows = []
+    for doc_id in range(240):
+        n = rng.randint(50, 90)
+        n_num = round(n * rng.uniform(0.0, 0.3))
+        toks = [str(rng.randint(0, 9999)) for _ in range(n_num)]
+        toks += rng.choices(vocab, k=n - n_num)
+        rng.shuffle(toks)
+        lines = []
+        while toks:
+            m = rng.randint(1, 12)
+            line, toks = " ".join(toks[:m]), toks[m:]
+            line += rng.choice(["", ".", ".", "!", "...", "?"])
+            if rng.random() < 0.15:
+                line = "- " + line
+            if rng.random() < 0.05:
+                line += " javascript."
+            lines.append(rng.choice(["", " ", "  "]) + line + rng.choice(["", " "]))
+            if rng.random() < 0.2:
+                lines.append(rng.choice(lines))
+            if rng.random() < 0.4:
+                lines.append(rng.choice(odd))
+        text = "\n".join(lines)
+        if rng.random() < 0.05:
+            text += "\nlorem ipsum {."
+        rows.append({"doc_id": doc_id, "text": text, "lang": "en",
+                     "source": f"src{doc_id % 3}", "n_chars": len(text)})
+    pq.write_table(pa.Table.from_pylist(rows), str(path / "documents.parquet"))
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["gopher_repetition_full_documents", "c4_line_filter_documents",
+     "gopher_quality_documents"],
+)
+def test_multiline_text_rules_match_their_oracles(spark, tmp_path, name):
+    """The driver corpus has no newline, so the line, paragraph and
+    Gopher-gate rules of these oracles meet only one-line rows there.
+    Pin each text-quality query against its oracle on multi-line
+    documents."""
+    _multiline_documents(tmp_path)
+    assert _matches_oracle(spark, str(tmp_path), name) == 240
 
 
 def test_density_gate_matches_the_html_kernel():

@@ -83,3 +83,32 @@ def test_ivf_probe_lists_tie_breaks_lowest_index():
 
     cents = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]
     assert ivf_probe_lists(cents, [1.0, 0.0], 2) == [1, 2]
+
+
+def test_multiprobe_topk_is_one_filtered_scan(spark, tmp_path):
+    """Multi-probe search filters on the bucket expression over the
+    one scan: ``embeddings`` is read once and the plan has no join
+    back to the source and no exchange before the final TakeOrdered."""
+    from ocr_engine_spark.operators.similarity import (
+        lsh_multiprobe_topk,
+        plane_weight_lists,
+    )
+
+    rows = [(i, [float((i * 7 + d * 3) % 11 - 5) for d in range(8)])
+            for i in range(64)]
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>").write.parquet(path)
+    planes = plane_weight_lists(4, 8)
+    query = rows[0][1]
+    out = lsh_multiprobe_topk(spark.read.parquet(path), planes, query, k=5, radius=1)
+
+    qe = out._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    assert optimized.count("Relation") == 1
+    assert "Join" not in optimized
+    assert "Exchange" not in qe.executedPlan().toString()
+
+    probe = {bucket_of(query, planes) ^ m for m in multiprobe_masks(4, 1)}
+    got = [r["vec_id"] for r in out.collect()]
+    assert 0 < len(got) <= 5
+    assert all(bucket_of(rows[i][1], planes) in probe for i in got)

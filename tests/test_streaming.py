@@ -146,6 +146,8 @@ def test_stateful_conv_stats_ttl_eviction(spark, stream_dirs, tmp_path):
 def test_stateful_conv_stats_stream(spark, stream_dirs):
     """applyInPandasWithState running totals must equal the batch
     groupBy over the same input after draining the backlog."""
+    import time
+
     from ocr_engine_spark.streaming.extract_stream import (
         build_conv_stats_stream,
     )
@@ -159,7 +161,19 @@ def test_stateful_conv_stats_stream(spark, stream_dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # availableNow + applyInPandasWithState never terminates by itself,
+    # and processAllAvailable never returns either: it keeps running
+    # no-data state-cleanup batches. Wait until the batches have read
+    # every input row, then stop the query.
+    total = spark.read.parquet(stream_dirs["src"]).count()
+    try:
+        deadline = time.time() + 120
+        while (q.isActive and time.time() < deadline
+               and sum(p["numInputRows"] for p in q.recentProgress) < total):
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert not q.isActive
     # latest emitted row per conv (multiple micro-batches re-emit)
     got = {
         r.conv_id: (r.turns_seen, r.chars_in, r.max_turn_idx)
