@@ -790,7 +790,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_oracle(num_perm: int = 16) -> str:
     mins = ",\n       ".join(
-        f"min(('0x' || substr(md5('{i}:' || shingle), 1, 15))::BIGINT) AS m{i}"
+        "min(" + HASH60_SQL.format(x=f"'{i}:' || shingle") + f") AS m{i}"
         for i in range(num_perm)
     )
     return f"""
@@ -869,7 +869,7 @@ def _simhash_core(bits: int = 60) -> str:
     )
     return f"""
 WITH tok AS (
-  SELECT doc_id, ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
+  SELECT doc_id, {HASH60_SQL.format(x="token")} AS h
   FROM (SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents)
 ),
 votes AS (
@@ -983,12 +983,14 @@ _V_CTE = """v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
            FROM embeddings)"""
 _VQ_CTES = _V_CTE + ",\nq AS (SELECT e AS qe FROM v WHERE vec_id = 0)"
 
-# Cosine of each ``v`` row against ``q``, rounded as in
-# similarity.cosine_scores.
-_COS_RANK = """SELECT v.vec_id,
-       round(list_dot_product(v.e, q.qe)
-             / (sqrt(list_dot_product(v.e, v.e))
-                * sqrt(list_dot_product(q.qe, q.qe))), 6) AS cosine"""
+def _cosine_sql(a: str, b: str) -> str:
+    """Cosine of two DOUBLE lists rounded to 6 dp (similarity._cosine)."""
+    return (f"round(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+            f" * sqrt(list_dot_product({b}, {b}))), 6)")
+
+
+# Cosine of each ``v`` row against ``q``.
+_COS_RANK = f"SELECT v.vec_id, {_cosine_sql('v.e', 'q.qe')} AS cosine"
 
 _ANN_BRUTE_ORACLE = f"""
 WITH {_VQ_CTES}
@@ -1090,7 +1092,9 @@ ORDER BY vec_id
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     planes = similarity.plane_weight_lists(8, 64)
-    return similarity.lsh_buckets_literal(emb, planes).orderBy("vec_id")
+    return emb.select(
+        "vec_id", similarity.lsh_bucket_col(planes).alias("bucket")
+    ).orderBy("vec_id")
 
 
 def _lsh_multiprobe_topk_oracle(num_planes: int = 8, dims: int = 64,
@@ -1306,12 +1310,11 @@ def _embedding_pairs_oracle(num_planes: int = 8, dims: int = 64,
     return f"""
 WITH {_V_CTE},
 b AS (SELECT vec_id, e, ({fold})::BIGINT AS bucket FROM v)
-SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-       round(list_dot_product(a.e, bb.e)
-             / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(bb.e, bb.e))), 6) AS cosine
-FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
-WHERE round(list_dot_product(a.e, bb.e)
-            / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(bb.e, bb.e))), 6) >= {threshold}
+SELECT id_a, id_b, cosine
+FROM (SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
+             {_cosine_sql("a.e", "bb.e")} AS cosine
+      FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id)
+WHERE cosine >= {threshold}
 ORDER BY id_a, id_b
 """
 
@@ -1485,7 +1488,7 @@ FROM (
   FROM (
     SELECT doc_id,
            list_transform(generate_series(1, greatest(length(nt) - 7, 0)),
-                          i -> ('0x' || substr(md5(substr(nt, i, 8)), 1, 15))::BIGINT) AS hs
+                          i -> {HASH60_SQL.format(x="substr(nt, i, 8)")}) AS hs
     FROM (SELECT doc_id, {NORMALIZED_SQL} AS nt FROM documents)))
 """
 
@@ -1650,19 +1653,13 @@ def _nprobe_recall_oracle(topk_oracle: Callable[[int, int], str],
     return _recall_sweep_sql(branches, "nprobe", k)
 
 
-@_register("ann_ivf_recall", oracle=_nprobe_recall_oracle(_ivf_topk_oracle))
-def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@10 of IVF search vs brute-force, swept over nprobe 1..4
-    (VERDICT r2 item 5): nprobe=4 probes every inverted list and must
-    hit recall 1.0; the sweep quantifies the probe-count/recall trade
-    (PLANS.md §9). Since r4 the whole sweep is ONE embeddings scan +
-    ONE assignment pass (``similarity.ivf_topk_sweep`` — probe sets are
-    nested, so a sequence-explode fans each vector to its member
-    sweeps; VERDICT r3 item 5 — the per-branch form scanned 8×)."""
-    emb, qvec = _ann_query(spark, sf_dir)
-    cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
+def _sweep_recall(spark: SparkSession, emb: DataFrame, qvec,
+                  sweep: DataFrame) -> DataFrame:
+    """(nprobe, hits, recall) for nprobe 1..4 of an
+    ``ivf_topk_sweep``: ``hits`` is how many of the sweep's ids at
+    that nprobe are in the brute-force cosine top-10, ``recall =
+    hits / 10``."""
     brute = similarity.cosine_topk(emb, qvec, k=10).select("vec_id")
-    sweep = similarity.ivf_topk_sweep(emb, cents, qvec, k=10)
     nprobes = spark.range(1, 5).select(F.col("id").cast("int").alias("nprobe"))
     hits = (
         sweep.join(F.broadcast(brute), "vec_id")
@@ -1678,6 +1675,22 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("nprobe")
     )
+
+
+@_register("ann_ivf_recall", oracle=_nprobe_recall_oracle(_ivf_topk_oracle))
+def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """recall@10 of IVF search vs brute-force, swept over nprobe 1..4
+    (VERDICT r2 item 5): nprobe=4 probes every inverted list and must
+    hit recall 1.0; the sweep quantifies the probe-count/recall trade
+    (PLANS.md §9). Since r4 the whole sweep is ONE embeddings scan +
+    ONE assignment pass (``similarity.ivf_topk_sweep`` — probe sets are
+    nested, so a sequence-explode fans each vector to its member
+    sweeps; VERDICT r3 item 5 — the per-branch form scanned 8×)."""
+    emb, qvec = _ann_query(spark, sf_dir)
+    cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
+    return _sweep_recall(spark, emb, qvec, similarity.ivf_topk_sweep(
+        emb, cents, qvec, similarity.cosine_to_col(qvec), k=10
+    ))
 
 
 # ------------------------------------------- streaming metrics parity
@@ -1867,14 +1880,16 @@ def q_ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows show what the centroid prune adds or costs on top of it:
     pruning can *raise* recall by evicting ADC false positives from
     other lists, or lower it by cutting true neighbors whose list
-    isn't probed; measured honestly either way (PLANS.md §9)."""
+    isn't probed; measured honestly either way (PLANS.md §9). Like
+    ``ann_ivf_recall``, the whole sweep is one ``ivf_topk_sweep`` over
+    one coded projection, scored by ADC instead of cosine."""
     emb, qvec = _ann_query(spark, sf_dir)
     cents = similarity.centroid_vectors(emb, _IVF_CENTROID_IDS)
-    return _recall_rows(emb, qvec, [
-        ({"nprobe": n},
-         similarity.ivf_pq_topk(emb, cents, _PQ_CODEBOOKS, qvec, k=10, nprobe=n))
-        for n in (1, 2, 3, 4)
-    ]).drop("n_retrieved")
+    coded = emb.withColumn("pq_code", similarity.pq_code_col(_PQ_CODEBOOKS))
+    score = similarity.pq_adc_score_col(similarity.pq_adc_lut(qvec, _PQ_CODEBOOKS))
+    return _sweep_recall(
+        spark, emb, qvec, similarity.ivf_topk_sweep(coded, cents, qvec, score, k=10)
+    )
 
 
 _STREAM_CONV_STATS_ORACLE = """
@@ -2189,14 +2204,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        dot = F.aggregate(
-            F.zip_with(
-                "embedding", "embedding",
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
         joined = (
             spark.table("bj_documents")
             .join(spark.table("bj_embeddings"), "doc_id")
@@ -2204,7 +2211,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id",
                 "lang",
                 X.ws_token_count_col("text").cast("long").alias("n_tokens"),
-                F.round(F.sqrt(dot), 6).alias("emb_norm"),
+                F.round(similarity.norm_col(F.col("embedding")), 6).alias("emb_norm"),
             )
         )
         # Planning (not execution) is what the no-broadcast conf gates:
@@ -3045,8 +3052,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH base AS (SELECT doc_id, {tok} AS t FROM documents),
 w AS (
   SELECT doc_id, i AS pos,
-         ('0x' || substr(md5(array_to_string(t[i:i+7], ' ')), 1, 15))::BIGINT
-           AS fp
+         {hash60} AS fp
   FROM (SELECT doc_id, t,
                unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i
         FROM base)),
@@ -3068,7 +3074,9 @@ SELECT b.doc_id,
             ELSE 0.0 END AS dup_token_coverage
 FROM base b LEFT JOIN agg a USING (doc_id)
 ORDER BY b.doc_id
-""".replace("{tok}", TOKENS_SQL),
+""".replace("{tok}", TOKENS_SQL).replace(
+        "{hash60}", HASH60_SQL.format(x="array_to_string(t[i:i+7], ' ')")
+    ),
 )
 def q_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup, windowed-fingerprint form (Lee et al.,

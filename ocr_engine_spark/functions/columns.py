@@ -18,6 +18,11 @@ from ..kernel.pdfstream import B64_MAGIC_PREFIX
 _WS_CLASS = "[ \\t\\r\\n\\x0B\\f]"
 
 
+def as_col(x: Column | str) -> Column:
+    """A column given as itself or by name."""
+    return F.col(x) if isinstance(x, str) else x
+
+
 def payload_kind_col(role: Column | str, text: Column | str) -> Column:
     """Payload-kind dispatch (kernel.dispatch.detect_kind twin; parity
     anchor: reference type dispatch /root/reference/app.py:635-645).
@@ -26,8 +31,7 @@ def payload_kind_col(role: Column | str, text: Column | str) -> Column:
     tool; first non-ASCII-whitespace char "<" → html; default text.
     Pure CASE/WHEN — whole-stage-codegen friendly, no UDF.
     """
-    role_c = F.col(role) if isinstance(role, str) else role
-    text_c = F.col(text) if isinstance(text, str) else text
+    role_c, text_c = as_col(role), as_col(text)
     return (
         F.when(text_c.isNull() | (text_c == ""), F.lit("text"))
         .when(text_c.startswith(B64_MAGIC_PREFIX), F.lit("pdf"))
@@ -47,7 +51,7 @@ def slugify_col(label: Column | str) -> Column:
     leading/trailing strip uses the same ASCII-whitespace class as the
     kernel.
     """
-    c = F.col(label) if isinstance(label, str) else label
+    c = as_col(label)
     lowered = F.lower(F.regexp_replace(F.coalesce(c, F.lit("")), f"^{_WS_CLASS}+|{_WS_CLASS}+$", ""))
     slug = F.regexp_replace(lowered, "[^a-z0-9]+", "_")
     slug = F.regexp_replace(slug, "^_+|_+$", "")
@@ -60,7 +64,7 @@ def clamp_conf_col(x: Column | str) -> Column:
     """Confidence clamp (kernel.textutil.clamp_conf twin; parity
     anchor: /root/reference/app.py:226-231): unparseable → 0.5, else
     clamp to [0, 1] (NaN passes through, matching the reference)."""
-    c = F.col(x) if isinstance(x, str) else x
+    c = as_col(x)
     v = c.cast("string").try_cast("double")
     return (
         F.when(v.isNull(), F.lit(0.5))
@@ -73,5 +77,5 @@ def clamp_conf_col(x: Column | str) -> Column:
 def has_devanagari_col(text: Column | str) -> Column:
     """Devanagari tagging predicate (kernel.textutil.has_devanagari
     twin; parity anchor: /root/reference/app.py:184)."""
-    c = F.col(text) if isinstance(text, str) else text
+    c = as_col(text)
     return F.coalesce(c.rlike("[\\u0900-\\u097F]"), F.lit(False))

@@ -36,10 +36,11 @@ from pyspark.sql import functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, ts: str,
-              payload: Sequence[str], prefix: str = "asof_") -> DataFrame:
+              payload: Sequence[str]) -> DataFrame:
     """As-of join ``left`` to ``right`` on ``key`` with event time
-    ``ts``. Returns every left row plus ``prefix + c`` columns for each
-    ``c`` in ``payload`` (null when no right row at-or-before exists).
+    ``ts``. Returns every left row plus an ``asof_`` + ``c`` column for
+    each ``c`` in ``payload`` (null when no right row at-or-before
+    exists).
     """
     ptype = right.select(F.struct(*payload).alias("_p")).schema["_p"].dataType
     lcols = left.columns
@@ -71,6 +72,6 @@ def asof_join(left: DataFrame, right: DataFrame, key: str, ts: str,
         .where(F.col("_is_l") == 1)
     )
     out_payload = [
-        F.col("_carry")[c].alias(prefix + c) for c in payload
+        F.col("_carry")[c].alias("asof_" + c) for c in payload
     ]
     return carried.select(*lcols, *out_payload)

@@ -24,7 +24,8 @@ DuckDB-SQL oracle mirror in ``ocr_engine_spark.catalog``:
 deterministic hash decisions (md5-derived, engine-portable — a rerun
 makes identical choices, so the pipeline is resumable and auditable),
 no global windows, benchmark/offset sides broadcast, corpus side
-touched by exactly one scan.
+touched by exactly one scan. Operators read the documents table's
+``doc_id``, ``text``, ``lang`` and ``source`` columns.
 """
 
 from __future__ import annotations
@@ -37,50 +38,37 @@ from ..functions import textfns as X
 SAMPLE_MOD = 100
 
 
-def _decision_hash(id_col: str, salt: str):
+def _decision_hash(salt: str):
     """Engine-portable per-row decision hash in [0, 2^60): first 15
-    hex chars of md5(id || ':' || salt) as a BIGINT. Deterministic in
-    the row alone — independent of partitioning, parallelism, and
+    hex chars of md5(doc_id || ':' || salt) as a BIGINT. Deterministic
+    in the row alone — independent of partitioning, parallelism, and
     execution order, so sampling/shuffle decisions are reproducible
     across reruns and cluster sizes (the property that makes curation
     auditable at 100 TB)."""
     return X.hash60_col(
-        F.concat(F.col(id_col).cast("string"), F.lit(":" + salt))
+        F.concat(F.col("doc_id").cast("string"), F.lit(":" + salt))
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    rates: dict,
-    default_pct: int = 100,
-    id_col: str = "doc_id",
-    stratum_col: str = "lang",
-    salt: str = "sample",
-) -> DataFrame:
+def stratified_sample(docs: DataFrame, rates: dict,
+                      default_pct: int = 100) -> DataFrame:
     """Deterministic stratified sampling: keep a row iff
-    ``hash60(id:salt) % 100 < rates[stratum]`` (percent, default
+    ``hash60(doc_id:'sample') % 100 < rates[lang]`` (percent, default
     ``default_pct``). The standard corpus-mixing move: down-sample
     over-represented strata to hit a target language/domain mix.
 
     Scale: a pure scan-side filter — no shuffle, no state, pushdown
     keeps only surviving rows flowing. The keep decision depends only
-    on (id, salt), never on which executor sees the row.
+    on the doc_id, never on which executor sees the row.
     """
     rate = F.lit(default_pct)
     for k, v in sorted(rates.items()):
-        rate = F.when(F.col(stratum_col) == k, F.lit(int(v))).otherwise(rate)
-    kept = F.pmod(_decision_hash(id_col, salt), F.lit(SAMPLE_MOD)) < rate
+        rate = F.when(F.col("lang") == k, F.lit(int(v))).otherwise(rate)
+    kept = F.pmod(_decision_hash("sample"), F.lit(SAMPLE_MOD)) < rate
     return docs.where(kept)
 
 
-def quota_per_source(
-    docs: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
-    salt_buckets: int = 1,
-) -> DataFrame:
+def quota_per_source(docs: DataFrame, n: int, salt_buckets: int = 1) -> DataFrame:
     """Per-source quota: keep each source's top-``n`` documents by
     quality score (ties → lowest id). Caps any one domain's share of
     the corpus — the domain-mixing knob next to
@@ -95,36 +83,29 @@ def quota_per_source(
     IDENTICAL for any salt (the survivor set provably contains the
     true top-n: a row in the true top-n is in the top-n of its own
     shard), pinned by test."""
-    q = X.quality_score_col(text_col)
-    scored = docs.select(source_col, id_col, q.alias("quality"))
-    order = (F.desc("quality"), F.col(id_col).asc())
+    q = X.quality_score_col("text")
+    scored = docs.select("source", "doc_id", q.alias("quality"))
+    order = (F.desc("quality"), F.col("doc_id").asc())
     if salt_buckets > 1:
-        shard_w = Window.partitionBy(source_col, "_salt").orderBy(*order)
+        shard_w = Window.partitionBy("source", "_salt").orderBy(*order)
         scored = (
             scored.withColumn(
-                "_salt",
-                F.pmod(_decision_hash(id_col, "quota"), F.lit(salt_buckets)),
+                "_salt", F.pmod(_decision_hash("quota"), F.lit(salt_buckets))
             )
             .withColumn("_srk", F.row_number().over(shard_w))
             .where(F.col("_srk") <= n)
             .drop("_salt", "_srk")
         )
-    w = Window.partitionBy(source_col).orderBy(*order)
+    w = Window.partitionBy("source").orderBy(*order)
     return scored.withColumn("rk", F.row_number().over(w)).where(
         F.col("rk") <= n
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = 512,
-    shard_rows: int = 200,
-    id_col: str = "doc_id",
-    stratum_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 512,
+                   shard_rows: int = 200) -> DataFrame:
     """Shard-local greedy sequence packing: within each
-    ``(stratum, pack_shard)`` group (shard = id // shard_rows), walk
+    ``(lang, pack_shard)`` group (shard = doc_id // shard_rows), walk
     documents in id order and assign each to the bin where its running
     token count starts: ``bin = floor(cum_tokens_before / budget)``.
     The deterministic batch-assembly step that turns a curated corpus
@@ -135,26 +116,26 @@ def pack_sequences(
     Sharding by id keeps every window partition at ≤ shard_rows rows
     (bounded memory, embarrassingly parallel), at the cost of at most
     one under-filled trailing bin per shard — exactly the trade real
-    packers make. One shuffle on (stratum, shard).
+    packers make. One shuffle on (lang, shard).
     """
-    toks = X.ws_token_count_col(text_col)
-    shard = (F.col(id_col) / F.lit(shard_rows)).cast("long")
+    toks = X.ws_token_count_col("text")
+    shard = (F.col("doc_id") / F.lit(shard_rows)).cast("long")
     w = (
-        Window.partitionBy(stratum_col, "pack_shard")
-        .orderBy(id_col)
+        Window.partitionBy("lang", "pack_shard")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         docs.select(
-            id_col,
-            stratum_col,
+            "doc_id",
+            "lang",
             shard.alias("pack_shard"),
             toks.cast("long").alias("n_tokens"),
         )
         .withColumn("cum_tokens", F.sum("n_tokens").over(w))
         .select(
-            id_col,
-            stratum_col,
+            "doc_id",
+            "lang",
             "pack_shard",
             "n_tokens",
             "cum_tokens",
@@ -165,12 +146,7 @@ def pack_sequences(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    bench_mod: int = 97,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, bench_mod: int = 97) -> DataFrame:
     """Benchmark-overlap decontamination: flag every document sharing
     at least one word 3-shingle with the benchmark set (here: the
     deterministic subset ``id % bench_mod == 0``, standing in for an
@@ -185,22 +161,22 @@ def decontaminate(
     count by id. The only shuffle is the final per-id aggregation of
     hit counts, keyed on the corpus' own id (uniform).
     """
-    toks = X.tokens_col(text_col)
+    toks = X.tokens_col("text")
     sh = docs.select(
-        id_col, F.explode(X.shingles_from_tokens(toks, 3)).alias("shingle")
+        "doc_id", F.explode(X.shingles_from_tokens(toks)).alias("shingle")
     )
     bench = (
-        sh.where(F.col(id_col) % bench_mod == 0)
+        sh.where(F.col("doc_id") % bench_mod == 0)
         .select("shingle")
         .distinct()
     )
     hits = (
         sh.join(F.broadcast(bench), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("shingle").alias("n_hit_shingles"))
     )
-    return docs.select(id_col).join(hits, id_col, "left").select(
-        id_col,
+    return docs.select("doc_id").join(hits, "doc_id", "left").select(
+        "doc_id",
         F.col("n_hit_shingles").isNotNull().alias("contaminated"),
         F.coalesce("n_hit_shingles", F.lit(0)).cast("long").alias(
             "n_hit_shingles"
@@ -208,14 +184,10 @@ def decontaminate(
     )
 
 
-def shuffle_permutation(
-    docs: DataFrame,
-    salt: str = "shuffle",
-    buckets: int = 256,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shuffle_permutation(docs: DataFrame, buckets: int = 256) -> DataFrame:
     """Deterministic global training-order permutation:
-    ``shuffle_pos = rank of hash60(id:salt)`` (1-based, dense, total).
+    ``shuffle_pos = rank of hash60(doc_id:'shuffle')`` (1-based, dense,
+    total).
     Semantically a global ``row_number() OVER (ORDER BY hash)`` — but
     computed WITHOUT a single-partition window:
 
@@ -232,8 +204,8 @@ def shuffle_permutation(
     No task ever sees more than ~rows/buckets rows; raise ``buckets``
     with the data.
     """
-    key = _decision_hash(id_col, salt)
-    d = docs.select(F.col(id_col), key.alias("skey")).withColumn(
+    key = _decision_hash("shuffle")
+    d = docs.select(F.col("doc_id"), key.alias("skey")).withColumn(
         "bucket", F.shiftright("skey", 60 - int(buckets).bit_length() + 1)
     )
     counts = {
@@ -245,12 +217,12 @@ def shuffle_permutation(
         offsets.append((b, acc))
         acc += counts.get(b, 0)
     off_df = d.sparkSession.createDataFrame(offsets, "bucket INT, offset LONG")
-    w = Window.partitionBy("bucket").orderBy("skey", id_col)
+    w = Window.partitionBy("bucket").orderBy("skey", "doc_id")
     return (
         d.join(F.broadcast(off_df), "bucket")
         .withColumn("pos_in_bucket", F.row_number().over(w))
         .select(
-            id_col,
+            "doc_id",
             (F.col("offset") + F.col("pos_in_bucket")).alias("shuffle_pos"),
         )
     )
@@ -266,8 +238,7 @@ PII_PATTERNS = (
 )
 
 
-def redact_pii(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """PII scrubbing: replace email / phone-shaped / long-digit-run
     matches with typed placeholder tags and count what was redacted
     per category. The pre-training privacy pass next to
@@ -278,7 +249,7 @@ def redact_pii(docs: DataFrame, id_col: str = "doc_id",
     the patterns is fixed so a phone inside an email never
     double-counts (each pattern runs on the previous pattern's
     output)."""
-    out = F.coalesce(F.col(text_col), F.lit(""))
+    out = F.coalesce(F.col("text"), F.lit(""))
     counts = []
     for tag, rx in PII_PATTERNS:
         counts.append(
@@ -287,11 +258,10 @@ def redact_pii(docs: DataFrame, id_col: str = "doc_id",
             .alias("n_" + tag.strip("<>"))
         )
         out = F.regexp_replace(out, rx, tag)
-    return docs.select(F.col(id_col), out.alias("redacted"), *counts)
+    return docs.select(F.col("doc_id"), out.alias("redacted"), *counts)
 
 
-def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def c4_line_filter(docs: DataFrame) -> DataFrame:
     """C4-inspired heuristic cleaning (after Raffel et al. 2020 §2.2),
     applied line-by-line then document-wide. It is not the C4 rule
     set: lines need at least 3 words where the paper asks for 5, and
@@ -316,13 +286,10 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
     explode, no Arrow crossing. Line decisions are per-row, so the
     operator is partition- and parallelism-invariant by construction.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     lower = F.lower(text)
     doc_ok = (~lower.contains("lorem ipsum")) & (~text.contains("{"))
-    lines = F.filter(
-        F.transform(F.split(text, "\n"), lambda x: F.trim(x)),
-        lambda x: x != "",
-    )
+    lines = X.trimmed_items_col("text", "\n")
 
     def _keep(x):
         words = F.size(F.filter(F.split(x, " "), lambda w: w != ""))
@@ -336,7 +303,7 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
         F.array().cast("array<string>")
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).cast("int").alias("n_lines"),
         F.size(kept).cast("int").alias("n_kept"),
         doc_ok.alias("doc_ok"),

@@ -13,6 +13,9 @@ per-doc sets onto both sides of a pair for the Jaccard and containment
 verifies; ``_shingle_sets`` builds the shingle arrays they verify
 against. SimHash and embedding pairs carry a payload through their
 join and keep their own.
+
+Operators read the ``doc_id`` and ``text`` columns of the documents
+table (``vec_id`` and ``embedding`` of the embeddings table).
 """
 
 from __future__ import annotations
@@ -24,28 +27,26 @@ from ..functions import textfns as X
 from .util import spread_to_parallelism
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup via content fingerprint: one hash-aggregate, keeper
     = min(id). Scale: single shuffle on the fingerprint; partial aggs
     collapse duplicates map-side."""
     return (
         spread_to_parallelism(docs)
-        .select(F.col(id_col), X.fingerprint_col(text_col).alias("fingerprint"))
+        .select(F.col("doc_id"), X.fingerprint_col("text").alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", k_shingle: int = 3,
-                       num_perm: int = 16) -> DataFrame:
-    """MinHash signatures: shingle → num_perm salted 60-bit hashes →
-    min per salt. One explode + one partial-aggregating groupBy; the
-    shuffle carries (doc, num_perm longs), independent of doc length.
+def minhash_signatures(docs: DataFrame, num_perm: int = 16) -> DataFrame:
+    """MinHash signatures: word 3-shingle → num_perm salted 60-bit
+    hashes → min per salt. One explode + one partial-aggregating
+    groupBy; the shuffle carries (doc, num_perm longs), independent of
+    doc length.
 
     Tokens are materialized in their own projection before shingling so
     the tokenizer regex runs once per row, and the scan is spread to
@@ -56,23 +57,24 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     exchange, which re-shingles every row there and stops
     ``near_dup_scale_path`` reusing that exchange for its verify."""
     sh = spread_to_parallelism(docs).select(
-        F.col(id_col), X.tokens_col(text_col).alias("toks")
+        F.col("doc_id"), X.tokens_col("text").alias("toks")
     ).select(
-        F.col(id_col),
-        F.explode(X.shingles_from_tokens(F.col("toks"), k_shingle)).alias("shingle"),
+        F.col("doc_id"),
+        F.explode(X.shingles_from_tokens(F.col("toks"))).alias("shingle"),
     )
     aggs = [
         F.min(X.hash60_col(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"m{i}")
         for i in range(num_perm)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _pairs_sharing_key(keyed: DataFrame, key: str, id_col: str,
+def _pairs_sharing_key(keyed: DataFrame, key: str,
                        max_df: int | None = None) -> DataFrame:
-    """Candidate pairs: distinct (id_a, id_b) with id_a < id_b over
-    rows of ``keyed`` that share a ``key`` value. Scale: one self-join
-    on the key, so the fan-out is the key's group sizes, never n².
+    """Candidate pairs: distinct (id_a, id_b) of doc_ids with id_a <
+    id_b over rows of ``keyed`` that share a ``key`` value. Scale: one
+    self-join on the key, so the fan-out is the key's group sizes,
+    never n².
 
     ``max_df`` is the document-frequency cap: key values held by more
     than ``max_df`` rows are dropped *before* the self-join (each doc
@@ -93,17 +95,15 @@ def _pairs_sharing_key(keyed: DataFrame, key: str, id_col: str,
         a.join(
             b,
             (F.col(f"a.{key}") == F.col(f"b.{key}"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        num_perm: int = 16, bands: int = 4) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, num_perm: int = 16,
+                        bands: int = 4) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band
     bucket. Scale: the self-join is on the (band_idx, band_key) struct
     — only docs agreeing on a full band collide, so the join fan-out
@@ -118,64 +118,58 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
         )
         band_cols.append(F.struct(F.lit(b).alias("band_idx"), key.alias("band_key")))
     banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
+        F.col("doc_id"), F.explode(F.array(*band_cols)).alias("band")
     )
-    return _pairs_sharing_key(banded, "band", id_col)
+    return _pairs_sharing_key(banded, "band")
 
 
-def _shingle_sets(docs: DataFrame, id_col: str, text_col: str,
-                  k_shingle: int) -> DataFrame:
-    """Per-doc shingle arrays (id, sh), tokens materialized first as in
-    ``minhash_signatures``."""
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """Per-doc shingle arrays (doc_id, sh), tokens materialized first
+    as in ``minhash_signatures``."""
     return spread_to_parallelism(docs).select(
-        F.col(id_col), X.tokens_col(text_col).alias("toks")
+        F.col("doc_id"), X.tokens_col("text").alias("toks")
     ).select(
-        F.col(id_col),
-        X.shingles_from_tokens(F.col("toks"), k_shingle).alias("sh"),
+        F.col("doc_id"),
+        X.shingles_from_tokens(F.col("toks")).alias("sh"),
     )
 
 
-def _with_pair_sets(pairs: DataFrame, sets_: DataFrame, id_col: str) -> DataFrame:
+def _with_pair_sets(pairs: DataFrame, sets_: DataFrame) -> DataFrame:
     """Join each doc's per-doc columns of ``sets_`` onto both sides of
     (id_a, id_b) pairs, suffixed ``_a`` / ``_b`` — two hash joins
     against the (much smaller) candidate set."""
     for s in ("a", "b"):
         side = sets_.select(
-            F.col(id_col).alias(f"id_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in sets_.columns if c != id_col],
+            F.col("doc_id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in sets_.columns if c != "doc_id"],
         )
         pairs = pairs.join(side, f"id_{s}")
     return pairs
 
 
-def _jaccard_over_sets(pairs: DataFrame, sets_: DataFrame, id_col: str,
+def _jaccard_over_sets(pairs: DataFrame, sets_: DataFrame,
                        threshold: float) -> DataFrame:
     """Exact shingle-set Jaccard, rounded to 6 dp, of each candidate
-    pair over the (id, sh) arrays of ``sets_``; pairs below
+    pair over the (doc_id, sh) arrays of ``sets_``; pairs below
     ``threshold`` are dropped."""
     shared = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = F.round(shared / (F.size("sh_a") + F.size("sh_b") - shared), 6)
     return (
-        _with_pair_sets(pairs, sets_, id_col)
+        _with_pair_sets(pairs, sets_)
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
-def jaccard_verify(pairs: DataFrame, docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", k_shingle: int = 3,
+def jaccard_verify(pairs: DataFrame, docs: DataFrame,
                    threshold: float = 0.5) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs. The shingle
     arrays are joined in by id — at scale the candidate side is the
     small one and broadcasts."""
-    return _jaccard_over_sets(
-        pairs, _shingle_sets(docs, id_col, text_col, k_shingle), id_col, threshold
-    )
+    return _jaccard_over_sets(pairs, _shingle_sets(docs), threshold)
 
 
-def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k_shingle: int = 3,
-                        threshold: float = 0.1,
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.1,
                         max_id: int | None = None,
                         max_df: int | None = None) -> DataFrame:
     """Exact all-pairs n-gram Jaccard — the verification-tier operator
@@ -188,15 +182,14 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     ubiquitous; the exact Jaccard verify still runs on the full
     shingle sets — the same sets the inverted index is exploded from,
     built once."""
-    base = docs if max_id is None else docs.filter(F.col(id_col) < max_id)
-    sets_ = _shingle_sets(base, id_col, text_col, k_shingle)
-    inv = sets_.select(F.col(id_col), F.explode("sh").alias("shingle"))
-    cand = _pairs_sharing_key(inv, "shingle", id_col, max_df)
-    return _jaccard_over_sets(cand, sets_, id_col, threshold)
+    base = docs if max_id is None else docs.filter(F.col("doc_id") < max_id)
+    sets_ = _shingle_sets(base)
+    inv = sets_.select(F.col("doc_id"), F.explode("sh").alias("shingle"))
+    cand = _pairs_sharing_key(inv, "shingle", max_df)
+    return _jaccard_over_sets(cand, sets_, threshold)
 
 
-def winnow_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text", k: int = 8,
+def winnow_containment_pairs(docs: DataFrame, k: int = 8,
                              window: int = 4, threshold: float = 0.5,
                              max_df: int = 100) -> DataFrame:
     """Sub-document duplication via winnowing-fingerprint containment
@@ -218,14 +211,14 @@ def winnow_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
       only prunes candidates, never distorts surviving scores."""
     from .textstats import winnow_fingerprints
 
-    fp = winnow_fingerprints(docs, id_col, text_col, k, window)
-    sets_ = fp.groupBy(id_col).agg(
+    fp = winnow_fingerprints(docs, k, window)
+    sets_ = fp.groupBy("doc_id").agg(
         F.collect_list("fingerprint").alias("fps"),
         F.count(F.lit(1)).alias("n"),
     )
-    cand = _pairs_sharing_key(fp, "fingerprint", id_col, max_df)
+    cand = _pairs_sharing_key(fp, "fingerprint", max_df)
     shared = F.size(F.array_intersect("fps_a", "fps_b"))
-    out = _with_pair_sets(cand, sets_, id_col).select(
+    out = _with_pair_sets(cand, sets_).select(
         "id_a", "id_b",
         shared.cast("long").alias("shared"),
         F.round(
@@ -235,9 +228,8 @@ def winnow_containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     return out.filter(F.col("containment") >= threshold)
 
 
-def embedding_near_pairs(emb: DataFrame, planes, threshold: float = 0.5,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+def embedding_near_pairs(emb: DataFrame, planes,
+                         threshold: float = 0.5) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: random-hyperplane LSH
     bucket as the candidate filter (vectors agreeing on every plane
     sign), exact cosine ≥ threshold as the verify. Scale: the self-join
@@ -249,14 +241,13 @@ def embedding_near_pairs(emb: DataFrame, planes, threshold: float = 0.5,
     # bucket is a projected column — NOT a join back to the source: the
     # corpus is scanned once per join side, no broadcast of itself.
     withb = emb.select(
-        F.col(id_col), F.col(vec_col),
-        lsh_bucket_col(planes, vec_col).alias("bucket"),
+        F.col("vec_id"), F.col("embedding"), lsh_bucket_col(planes).alias("bucket"),
     )
     a = withb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket"
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), "bucket"
     )
     b = withb.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket"
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"), "bucket"
     )
     return (
         a.join(b, "bucket")
@@ -266,11 +257,10 @@ def embedding_near_pairs(emb: DataFrame, planes, threshold: float = 0.5,
     )
 
 
-def simhash_near_pairs(simhashes: DataFrame, id_col: str = "doc_id",
-                       max_hamming: int = 3, bits: int = 60,
+def simhash_near_pairs(simhashes: DataFrame, max_hamming: int = 3,
                        chunks: int | None = None) -> DataFrame:
     """SimHash near-dup pairs with a *complete* chunk-banded candidate
-    filter: split the ``bits``-bit hash into ``chunks`` contiguous
+    filter: split the 60-bit hash into ``chunks`` contiguous
     chunks and take exact-chunk equality as the candidate condition,
     then verify exact ``bit_count(xor) <= max_hamming``.
 
@@ -294,11 +284,11 @@ def simhash_near_pairs(simhashes: DataFrame, id_col: str = "doc_id",
             f"chunks={chunks} cannot guarantee recall for "
             f"max_hamming={max_hamming}; need chunks >= max_hamming + 1"
         )
-    if chunks > bits:
-        raise ValueError(f"chunks={chunks} exceeds bits={bits}")
-    # Uneven widths when bits % chunks != 0: first (bits % chunks)
+    if chunks > X.HASH_BITS:
+        raise ValueError(f"chunks={chunks} exceeds bits={X.HASH_BITS}")
+    # Uneven widths when 60 % chunks != 0: the first (60 % chunks)
     # chunks get one extra bit.
-    base, rem = divmod(bits, chunks)
+    base, rem = divmod(X.HASH_BITS, chunks)
     chunk_cols = []
     offset = 0
     for c in range(chunks):
@@ -314,19 +304,19 @@ def simhash_near_pairs(simhashes: DataFrame, id_col: str = "doc_id",
         )
         offset += width
     banded = simhashes.select(
-        F.col(id_col), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("c")
-    ).select(id_col, "simhash", "c.chunk_idx", "c.chunk_val")
+        F.col("doc_id"), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("c")
+    ).select("doc_id", "simhash", "c.chunk_idx", "c.chunk_val")
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
             b,
             (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
             & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
             .cast("int")
             .alias("hamming"),
@@ -336,9 +326,7 @@ def simhash_near_pairs(simhashes: DataFrame, id_col: str = "doc_id",
     return cand.filter(F.col("hamming") <= max_hamming)
 
 
-def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text",
-                             k: int = 8) -> DataFrame:
+def exact_substring_coverage(docs: DataFrame, k: int = 8) -> DataFrame:
     """Exact-substring dedup in its distributed windowed-fingerprint
     form (Lee et al., "Deduplicating Training Data Makes Language
     Models Better", ACL 2022 — their single-node suffix array replaced
@@ -376,9 +364,9 @@ def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
         raise ValueError(f"k={k}: window must span at least 2 tokens")
     base = (
         spread_to_parallelism(docs)
-        .select(F.col(id_col), X.tokens_col(text_col).alias("toks"))
+        .select(F.col("doc_id"), X.tokens_col("text").alias("toks"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("toks"),
             F.size("toks").alias("n_tokens"),
         )
@@ -389,7 +377,7 @@ def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
         F.sequence(F.lit(1), F.col("n_tokens") - (k - 1)),
     ).otherwise(F.array().cast("array<int>"))
     wins = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 starts,
@@ -406,7 +394,7 @@ def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
         .select("fp")
     )
     dup = wins.join(dup_fps, "fp")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     cov = dup.withColumn(
         "cvr",
         F.least(
@@ -414,21 +402,21 @@ def exact_substring_coverage(docs: DataFrame, id_col: str = "doc_id",
             F.coalesce(F.lead("pos").over(w) - F.col("pos"), F.lit(k)),
         ),
     )
-    agg = cov.groupBy(id_col).agg(
+    agg = cov.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_dup_windows"),
         F.sum("cvr").alias("covered"),
     )
     return (
         base.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_tokens").cast("int").alias("n_tokens"),
             F.greatest(F.col("n_tokens") - (k - 1), F.lit(0))
             .cast("int")
             .alias("n_windows"),
         )
-        .join(agg, id_col, "left")
+        .join(agg, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_tokens",
             "n_windows",
             F.coalesce("n_dup_windows", F.lit(0)).cast("int")

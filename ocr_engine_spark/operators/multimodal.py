@@ -120,6 +120,32 @@ def decode_video_header(payload: bytes) -> Tuple[int, int, int, int]:
 
 # ------------------------------------------------------------- operators
 
+def _per_media(media: DataFrame, kind: str, ddl: str, rows_of) -> DataFrame:
+    """The one per-item media loop: a ``mapInPandas`` over the
+    (media_id, payload) of the ``kind`` rows, emitting the rows that
+    ``rows_of(media_id, payload)`` returns for each item, in ``ddl``'s
+    column order. An item whose ``rows_of`` raises emits nothing, so a
+    corrupt blob never kills a partition; an operator that reports
+    failures catches its own."""
+    import pandas as pd
+
+    cols = T.StructType.fromDDL(ddl).fieldNames()
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                try:
+                    rows.extend(rows_of(mid, payload))
+                except Exception:
+                    continue
+            yield pd.DataFrame(rows, columns=cols)
+
+    return media.filter(F.col("kind") == kind).select(
+        "media_id", "payload"
+    ).mapInPandas(run, ddl)
+
+
 IMAGE_FEATURES_DDL = (
     "media_id string, width int, height int, mean_intensity double, "
     "hist8 array<long>, decode_failed int"
@@ -128,37 +154,24 @@ IMAGE_FEATURES_DDL = (
 
 def image_features(media: DataFrame) -> DataFrame:
     """Decode + per-image features (dimensions, mean gray intensity,
-    8-bin histogram). One mapInPandas stage; decode failures are
-    counted, never fatal (the 100 TB posture: a corrupt blob must not
+    8-bin histogram). Decode failures are counted (``decode_failed =
+    1``), never fatal (the 100 TB posture: a corrupt blob must not
     kill a partition)."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, px = decode_image(bytes(payload))
-                    hist = [0] * 8
-                    total = 0
-                    for b in px:
-                        hist[b >> 5] += 1
-                        total += b
-                    mean = total / len(px) if px else 0.0
-                    rows.append((mid, w, h, mean, hist, 0))
-                except Exception:
-                    rows.append((mid, 0, 0, 0.0, [0] * 8, 1))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "mean_intensity",
-                    "hist8", "decode_failed",
-                ],
-            )
+    def features(mid, payload):
+        try:
+            w, h, px = decode_image(bytes(payload))
+        except Exception:
+            return [(mid, 0, 0, 0.0, [0] * 8, 1)]
+        hist = [0] * 8
+        total = 0
+        for b in px:
+            hist[b >> 5] += 1
+            total += b
+        mean = total / len(px) if px else 0.0
+        return [(mid, w, h, mean, hist, 0)]
 
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(run, IMAGE_FEATURES_DDL)
+    return _per_media(media, "image", IMAGE_FEATURES_DDL, features)
 
 
 RESIZE_DDL = "media_id string, payload binary, width int, height int"
@@ -167,31 +180,18 @@ RESIZE_DDL = "media_id string, payload binary, width int, height int"
 def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize, binary→binary (re-encoded in the FAKE
     container). Demonstrates the bytes-in/bytes-out Arrow path."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, px = decode_image(bytes(payload))
-                    out = bytearray()
-                    for y in range(out_h):
-                        sy = y * h // out_h
-                        base = sy * w
-                        for x in range(out_w):
-                            out.append(px[base + x * w // out_w])
-                    blob = b"FIMG" + struct.pack(">HH", out_w, out_h) + bytes(out)
-                    rows.append((mid, blob, out_w, out_h))
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows, columns=["media_id", "payload", "width", "height"]
-            )
+    def resized(mid, payload):
+        w, h, px = decode_image(bytes(payload))
+        out = bytearray()
+        for y in range(out_h):
+            base = (y * h // out_h) * w
+            for x in range(out_w):
+                out.append(px[base + x * w // out_w])
+        blob = b"FIMG" + struct.pack(">HH", out_w, out_h) + bytes(out)
+        return [(mid, blob, out_w, out_h)]
 
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(run, RESIZE_DDL)
+    return _per_media(media, "image", RESIZE_DDL, resized)
 
 
 FRAMES_DDL = "media_id string, frame_idx int, frame binary, width int, height int"
@@ -201,30 +201,18 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     """Video → every Nth frame as its own row (1→N fan-out inside the
     pandas iterator; no explode, no shuffle). Each frame is re-wrapped
     as a standalone FAKE image so downstream image operators compose."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    blob = bytes(payload)
-                    fps, n_frames, w, h = decode_video_header(blob)
-                    fsz = w * h
-                    for fi in range(0, n_frames, every_n):
-                        px = blob[12 + fi * fsz : 12 + (fi + 1) * fsz]
-                        frame = b"FIMG" + struct.pack(">HH", w, h) + px
-                        rows.append((mid, fi, frame, w, h))
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame", "width", "height"],
-            )
+    def frames(mid, payload):
+        blob = bytes(payload)
+        _fps, n_frames, w, h = decode_video_header(blob)
+        fsz = w * h
+        return [
+            (mid, fi, b"FIMG" + struct.pack(">HH", w, h)
+             + blob[12 + fi * fsz : 12 + (fi + 1) * fsz], w, h)
+            for fi in range(0, n_frames, every_n)
+        ]
 
-    return media.filter(F.col("kind") == "video").select(
-        "media_id", "payload"
-    ).mapInPandas(run, FRAMES_DDL)
+    return _per_media(media, "video", FRAMES_DDL, frames)
 
 
 AUDIO_FEATURES_DDL = (
@@ -237,34 +225,16 @@ def audio_features(media: DataFrame) -> DataFrame:
     """Audio → (rate, length, duration, RMS of centered i8 PCM)."""
     import math
 
-    import pandas as pd
+    def features(mid, payload):
+        rate, pcm = decode_audio(bytes(payload))
+        acc = 0
+        for b in pcm:
+            v = b - 128
+            acc += v * v
+        rms = math.sqrt(acc / len(pcm)) if pcm else 0.0
+        return [(mid, rate, len(pcm), len(pcm) * 1000 // max(rate, 1), rms)]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, pcm = decode_audio(bytes(payload))
-                    acc = 0
-                    for b in pcm:
-                        v = b - 128
-                        acc += v * v
-                    rms = math.sqrt(acc / len(pcm)) if pcm else 0.0
-                    rows.append(
-                        (mid, rate, len(pcm), len(pcm) * 1000 // max(rate, 1), rms)
-                    )
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "duration_ms", "rms",
-                ],
-            )
-
-    return media.filter(F.col("kind") == "audio").select(
-        "media_id", "payload"
-    ).mapInPandas(run, AUDIO_FEATURES_DDL)
+    return _per_media(media, "audio", AUDIO_FEATURES_DDL, features)
 
 
 # ------------------------------------------------ synthetic media source

@@ -57,16 +57,14 @@ def sessionize(events: DataFrame, gap_s: int = 21600, key: str = "user_id",
     )
 
 
-def session_stats(events: DataFrame, gap_s: int = 21600,
-                  key: str = "user_id", ts: str = "ts",
-                  id_col: str = "event_id",
-                  value_col: str = "value") -> DataFrame:
-    """Per-session aggregates: event count, duration (µs), value sum.
-    One additional exchange on (key, session_idx) after the window —
+def session_stats(events: DataFrame, gap_s: int = 21600) -> DataFrame:
+    """Per-session aggregates of the events table: event count,
+    duration (µs), value sum per (user_id, session_idx). One additional
+    exchange on (user_id, session_idx) after the window —
     partial-aggregated map-side."""
-    tagged = _with_session_idx(events, gap_s, key, ts, id_col, value_col)
-    return tagged.groupBy(key, "session_idx").agg(
+    tagged = _with_session_idx(events, gap_s, "user_id", "ts", "event_id", "value")
+    return tagged.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
         (F.max("_tus") - F.min("_tus")).alias("duration_us"),
-        F.round(F.sum(value_col), 6).alias("value_sum"),
+        F.round(F.sum("value"), 6).alias("value_sum"),
     )

@@ -7,7 +7,7 @@
   (per-partition top-k, tiny shuffle of k·partitions rows — no global
   sort).
 - ``lsh_bucket_col``: random-hyperplane LSH — the scale path, and
-  the one bucketing expression (``lsh_buckets_literal`` projects it,
+  the one bucketing expression (``ann_lsh_buckets`` projects it,
   ``lsh_multiprobe_topk`` filters on it). Hyperplane weights are
   derived from md5(plane, dim) parity, so the bucketing is
   engine-portable (exact DuckDB oracle) and needs no stored model.
@@ -22,7 +22,8 @@
 Scores are rounded to 6 dp before ranking (``_cosine``; the ADC score
 likewise) so results are stable across engines' float summation
 orders; ties break on vec_id. Driver-side vectors enter plans as
-``_lit_vec`` literals.
+``_lit_vec`` literals. Every operator reads the ``vec_id`` and
+``embedding`` columns of the embeddings table.
 """
 
 from __future__ import annotations
@@ -41,14 +42,15 @@ def _dot(a, b) -> F.Column:
     )
 
 
-def _norm(a) -> F.Column:
+def norm_col(a) -> F.Column:
+    """Euclidean norm of an array column (ordered fold)."""
     return F.sqrt(_dot(a, a))
 
 
 def _cosine(a, b) -> F.Column:
     """Cosine of two array columns rounded to 6 dp — the score every
     exact ranking and the embedding near-dup verify compare."""
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), 6)
+    return F.round(_dot(a, b) / (norm_col(a) * norm_col(b)), 6)
 
 
 def _lit_vec(xs: Sequence[float]) -> F.Column:
@@ -57,18 +59,15 @@ def _lit_vec(xs: Sequence[float]) -> F.Column:
     return F.array(*[F.lit(float(x)) for x in xs])
 
 
-def cosine_scores(emb: DataFrame, query: Sequence[float],
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    return emb.select(
-        F.col(id_col), _cosine(F.col(vec_col), _lit_vec(query)).alias("cosine")
-    )
+def cosine_to_col(query: Sequence[float]) -> F.Column:
+    """Each embedding's rounded cosine to the driver-side ``query``."""
+    return _cosine(F.col("embedding"), _lit_vec(query))
 
 
-def cosine_topk(emb: DataFrame, query: Sequence[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(emb: DataFrame, query: Sequence[float], k: int = 10) -> DataFrame:
     return (
-        cosine_scores(emb, query, id_col, vec_col)
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        emb.select(F.col("vec_id"), cosine_to_col(query).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -90,14 +89,14 @@ def plane_weight_lists(num_planes: int = 8, dims: int = 64) -> List[List[int]]:
     ]
 
 
-def lsh_bucket_col(planes: List[List[int]], vec_col: str = "embedding") -> F.Column:
+def lsh_bucket_col(planes: List[List[int]]) -> F.Column:
     """The sign-bucket as a plain column expression: per plane, an
     ordered zip_with/aggregate fold (deterministic FP summation order).
     Being a Column — not a DataFrame — callers project it or filter on
     it in one pass instead of a self-join back to the source."""
     bucket = F.lit(0).cast("long")
     for j, w in enumerate(planes):
-        dot = _dot(F.col(vec_col), _lit_vec(w))
+        dot = _dot(F.col("embedding"), _lit_vec(w))
         bucket = bucket + F.when(dot > 0, F.lit(2 ** j).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -120,13 +119,6 @@ def bucket_of(vec: Sequence[float], planes: List[List[int]]) -> int:
     return b
 
 
-def lsh_buckets_literal(emb: DataFrame, planes: List[List[int]],
-                        id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Sign-bucket with literal hyperplanes. Scale: one projection over
-    the scan, no joins, no shuffle at all."""
-    return emb.select(F.col(id_col), lsh_bucket_col(planes, vec_col).alias("bucket"))
-
-
 def multiprobe_masks(num_planes: int, radius: int = 1) -> List[int]:
     """All sign-bit flip masks with popcount ≤ ``radius`` over
     ``num_planes`` bits, sorted. Multi-probe LSH (Lv et al., VLDB'07
@@ -147,8 +139,8 @@ def multiprobe_masks(num_planes: int, radius: int = 1) -> List[int]:
 
 
 def lsh_multiprobe_topk(emb: DataFrame, planes: List[List[int]],
-                        query: Sequence[float], k: int = 10, radius: int = 1,
-                        id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                        query: Sequence[float], k: int = 10,
+                        radius: int = 1) -> DataFrame:
     """ANN with multi-probe LSH: cosine top-k within the query's bucket
     plus every bucket within hamming distance ``radius`` of it.
     Zero-shuffle up to the final TakeOrdered: the probe set is a
@@ -158,10 +150,7 @@ def lsh_multiprobe_topk(emb: DataFrame, planes: List[List[int]],
     up."""
     qb = bucket_of(query, planes)
     probe = [qb ^ m for m in multiprobe_masks(len(planes), radius)]
-    return cosine_topk(
-        emb.filter(lsh_bucket_col(planes, vec_col).isin(probe)),
-        query, k, id_col, vec_col,
-    )
+    return cosine_topk(emb.filter(lsh_bucket_col(planes).isin(probe)), query, k)
 
 
 def pq_codebooks(num_segments: int = 16, sub_dims: int = 4,
@@ -188,8 +177,7 @@ def pq_codebooks(num_segments: int = 16, sub_dims: int = 4,
     ]
 
 
-def pq_code_col(codebooks: List[List[List[float]]],
-                vec_col: str = "embedding") -> F.Column:
+def pq_code_col(codebooks: List[List[List[float]]]) -> F.Column:
     """Pack a vector's PQ code into ONE BIGINT: per segment, the
     argmax-dot codeword index (ties → lowest, deterministic fold), 2
     bits per segment. At 100 TB this is the point: a 64-dim float
@@ -201,7 +189,7 @@ def pq_code_col(codebooks: List[List[List[float]]],
     for s, words in enumerate(codebooks):
         dots = F.array(
             *[
-                _dot(F.slice(F.col(vec_col), s * sub + 1, sub), _lit_vec(w))
+                _dot(F.slice(F.col("embedding"), s * sub + 1, sub), _lit_vec(w))
                 for w in words
             ]
         )
@@ -223,65 +211,58 @@ def pq_adc_lut(query: Sequence[float],
     return lut
 
 
-def pq_adc_score_col(lut: List[List[float]], code_col: str = "pq_code") -> F.Column:
-    """ADC similarity from the packed code: Σ_s lut[s][code_s] — pure
-    integer unpack + literal-array lookups, never touching the raw
-    vectors."""
+def pq_adc_score_col(lut: List[List[float]]) -> F.Column:
+    """ADC similarity from the packed ``pq_code``: Σ_s lut[s][code_s]
+    rounded to 6 dp — pure integer unpack + literal-array lookups,
+    never touching the raw vectors."""
     score = F.lit(0.0)
     for s, row in enumerate(lut):
-        code0 = (F.col(code_col) / F.lit(4 ** s).cast("long")).cast("long") % 4
+        code0 = (F.col("pq_code") / F.lit(4 ** s).cast("long")).cast("long") % 4
         score = score + F.element_at(_lit_vec(row), (code0 + 1).cast("int"))
-    return score
+    return F.round(score, 6)
 
 
 def pq_adc_topk(emb: DataFrame, codebooks: List[List[List[float]]],
-                query: Sequence[float], k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                query: Sequence[float], k: int = 10) -> DataFrame:
     """PQ/ADC approximate top-k: encode (projection) → score against
     the query's lookup table (projection) → TakeOrdered. The encode
     step here is inline for the test tier; at production scale
     ``pq_code`` is a materialized column and the scan reads ONLY it."""
     lut = pq_adc_lut(query, codebooks)
-    coded = emb.select(F.col(id_col), pq_code_col(codebooks, vec_col).alias("pq_code"))
+    coded = emb.select(F.col("vec_id"), pq_code_col(codebooks).alias("pq_code"))
     return (
-        coded.select(
-            id_col, F.round(pq_adc_score_col(lut), 6).alias("adc_score")
-        )
-        .orderBy(F.col("adc_score").desc(), F.col(id_col))
+        coded.select("vec_id", pq_adc_score_col(lut).alias("adc_score"))
+        .orderBy(F.col("adc_score").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def ivf_assign_col(centroids: List[List[float]], vec_col: str = "embedding") -> F.Column:
+def ivf_assign_col(centroids: List[List[float]]) -> F.Column:
     """IVF list assignment as a column: 1-based index of the centroid
     with the max dot product (ties → lowest index). Centroids are
     literals (broadcast-free: they compile into the plan), so
     assignment is one projection over the scan — no join, no shuffle.
     Deterministic double arithmetic (ordered fold) keeps the argmax
     engine-exact vs the DuckDB oracle."""
-    dots = F.array(*[_dot(F.col(vec_col), _lit_vec(c)) for c in centroids])
+    dots = F.array(*[_dot(F.col("embedding"), _lit_vec(c)) for c in centroids])
     return F.array_position(dots, F.array_max(dots)).cast("int")
 
 
-def centroid_vectors(emb: DataFrame, ids: Sequence[int],
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> List[List[float]]:
+def centroid_vectors(emb: DataFrame, ids: Sequence[int]) -> List[List[float]]:
     """Deterministic data-derived 'trained' centroids: the embeddings
     of fixed vec_ids (a seedable stand-in for k-means — the IVF
     plumbing, not the training, is the scale-relevant part)."""
     rows = (
-        emb.filter(F.col(id_col).isin(list(ids)))
-        .select(id_col, vec_col)
+        emb.filter(F.col("vec_id").isin(list(ids)))
+        .select("vec_id", "embedding")
         .collect()
     )
     by_id = {r[0]: list(r[1]) for r in rows}
     return [[float(x) for x in by_id[i]] for i in ids]
 
 
-def ivf_assignments(emb: DataFrame, centroids: List[List[float]],
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    return emb.select(
-        F.col(id_col), ivf_assign_col(centroids, vec_col).alias("centroid")
-    )
+def ivf_assignments(emb: DataFrame, centroids: List[List[float]]) -> DataFrame:
+    return emb.select(F.col("vec_id"), ivf_assign_col(centroids).alias("centroid"))
 
 
 def ivf_probe_lists(centroids: List[List[float]], query: Sequence[float],
@@ -298,30 +279,30 @@ def ivf_probe_lists(centroids: List[List[float]], query: Sequence[float],
 
 
 def ivf_topk(emb: DataFrame, centroids: List[List[float]],
-             query: Sequence[float], k: int = 10, nprobe: int = 1,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+             query: Sequence[float], k: int = 10, nprobe: int = 1) -> DataFrame:
     """IVF search: rank centroids by dot with the query (driver-side,
     centroids are tiny), scan only the top-``nprobe`` inverted lists,
     exact cosine within them. The scan predicate (centroid IN probes)
     prunes the corpus before any ranking work."""
     probes = ivf_probe_lists(centroids, query, nprobe)
-    return cosine_topk(
-        emb.filter(ivf_assign_col(centroids, vec_col).isin(probes)),
-        query, k, id_col, vec_col,
-    )
+    return cosine_topk(emb.filter(ivf_assign_col(centroids).isin(probes)), query, k)
 
 
 def ivf_topk_sweep(emb: DataFrame, centroids: List[List[float]],
-                   query: Sequence[float], k: int = 10,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Per-nprobe IVF top-k for EVERY nprobe 1..len(centroids) from ONE
-    scan (VERDICT r3 item 5 — the per-branch form re-scanned embeddings
-    8×). Probe sets are nested (probes(n) = first n of the query's
-    centroid ranking), so a vector whose centroid has probe rank r is a
+                   query: Sequence[float], score: F.Column,
+                   k: int = 10) -> DataFrame:
+    """Per-nprobe IVF top-k by ``score`` (``cosine_to_col(query)`` for
+    exact IVF, ``pq_adc_score_col`` over a ``pq_code`` column for
+    IVF×PQ) for EVERY nprobe 1..len(centroids) from ONE scan (VERDICT
+    r3 item 5 — the per-branch form re-scanned embeddings 8×). Probe
+    sets are nested (probes(n) = first n of the query's centroid
+    ranking), so a vector whose centroid has probe rank r is a
     candidate for every nprobe ≥ r: one projection computes
-    (probe_rank, cosine), a sequence-explode fans each row to its
-    member sweeps, one window ranks per nprobe. Returns
-    (nprobe, vec_id, cosine) rows with per-nprobe rank ≤ k.
+    (probe_rank, score), a sequence-explode fans each row to its
+    member sweeps, one window ranks per nprobe (ties to the lower
+    vec_id). Returns (nprobe, vec_id, score) rows with per-nprobe rank
+    ≤ k — for each nprobe, exactly ``ivf_topk`` / ``ivf_pq_topk`` at
+    that nprobe.
 
     Scale note: the window partitions on nprobe (num_lists keys), so
     this sweep is a *diagnostic* over modest corpora; the production
@@ -336,16 +317,16 @@ def ivf_topk_sweep(emb: DataFrame, centroids: List[List[float]],
         F.array(*[F.lit(i + 1) for i in range(n)]),
     )
     scored = emb.select(
-        F.col(id_col),
-        rank_map[ivf_assign_col(centroids, vec_col)].alias("probe_rank"),
-        _cosine(F.col(vec_col), _lit_vec(query)).alias("cosine"),
+        F.col("vec_id"),
+        rank_map[ivf_assign_col(centroids)].alias("probe_rank"),
+        score.alias("score"),
     )
     swept = scored.select(
         F.explode(F.sequence(F.col("probe_rank"), F.lit(n))).alias("nprobe"),
-        F.col(id_col),
-        F.col("cosine"),
+        F.col("vec_id"),
+        F.col("score"),
     )
-    w = Window.partitionBy("nprobe").orderBy(F.col("cosine").desc(), F.col(id_col))
+    w = Window.partitionBy("nprobe").orderBy(F.col("score").desc(), F.col("vec_id"))
     return (
         swept.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -355,8 +336,7 @@ def ivf_topk_sweep(emb: DataFrame, centroids: List[List[float]],
 
 def ivf_pq_topk(emb: DataFrame, centroids: List[List[float]],
                 codebooks: List[List[List[float]]], query: Sequence[float],
-                k: int = 10, nprobe: int = 1,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+                k: int = 10, nprobe: int = 1) -> DataFrame:
     """IVF×PQ — the production ANN composition (IVFADC, Jégou et al.
     TPAMI 2011 §V): prune inverted lists with the centroid probe, then
     ADC-score the packed PQ codes of the SURVIVING lists only. Both
@@ -370,14 +350,11 @@ def ivf_pq_topk(emb: DataFrame, centroids: List[List[float]],
     filter in front of ``pq_adc_topk``."""
     probes = ivf_probe_lists(centroids, query, nprobe)
     return pq_adc_topk(
-        emb.filter(ivf_assign_col(centroids, vec_col).isin(probes)),
-        codebooks, query, k, id_col, vec_col,
+        emb.filter(ivf_assign_col(centroids).isin(probes)), codebooks, query, k
     )
 
 
-def kmeans_update(emb: DataFrame, centroids: List[List[float]],
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+def kmeans_update(emb: DataFrame, centroids: List[List[float]]) -> DataFrame:
     """One Lloyd's-iteration update step: assign every vector to its
     nearest (max-dot) centroid, then recompute each centroid as the
     per-dimension mean of its members. Returns one row per
@@ -396,12 +373,11 @@ def kmeans_update(emb: DataFrame, centroids: List[List[float]],
     multiply the shuffle input ×d before combining."""
     dim = len(centroids[0])
     aggs = [
-        F.avg(F.element_at(F.col(vec_col), i).cast("double")).alias(f"_d{i}")
+        F.avg(F.element_at(F.col("embedding"), i).cast("double")).alias(f"_d{i}")
         for i in range(1, dim + 1)
     ]
     g = (
-        emb.select(ivf_assign_col(centroids, vec_col).alias("centroid"),
-                   F.col(vec_col))
+        emb.select(ivf_assign_col(centroids).alias("centroid"), F.col("embedding"))
         .groupBy("centroid")
         .agg(F.count(F.lit(1)).alias("n_members"), *aggs)
     )
@@ -413,9 +389,7 @@ def kmeans_update(emb: DataFrame, centroids: List[List[float]],
     )
 
 
-def kmeans_centroids(emb: DataFrame, centroids: List[List[float]],
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> List[List[float]]:
+def kmeans_centroids(emb: DataFrame, centroids: List[List[float]]) -> List[List[float]]:
     """Collect one :func:`kmeans_update` result as the next literal
     centroid set — a k·d parameter fetch (k centroids × d dims of
     doubles), NOT a data collect; this is the per-iteration driver
@@ -424,7 +398,7 @@ def kmeans_centroids(emb: DataFrame, centroids: List[List[float]],
     fallback). Coordinates come back rounded to 6 dp (kmeans_update's
     engine-portable rounding), so downstream assignment is exactly
     reproducible on any engine fed the same literals."""
-    rows = kmeans_update(emb, centroids, id_col, vec_col).collect()
+    rows = kmeans_update(emb, centroids).collect()
     byc: dict = {}
     for r in rows:
         byc.setdefault(r["centroid"], {})[r["dim_idx"]] = float(r["centroid_val"])

@@ -1,7 +1,8 @@
 """Text-analysis operators over a document table (brief: language-ID,
 quality scoring, token counting, fingerprinting). All native Catalyst
-— no Python in any of these paths; each has a DuckDB oracle in
-``ocr_engine_spark.oracles``."""
+— no Python in any of these paths except ``winnow_fingerprints``;
+each has a DuckDB oracle in ``ocr_engine_spark.catalog``. Operators
+read the ``doc_id`` and ``text`` columns of the documents table."""
 
 from __future__ import annotations
 
@@ -12,39 +13,38 @@ from ..functions import textfns as X
 from .util import spread_to_parallelism
 
 
-def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     return spread_to_parallelism(docs).select(
-        F.col(id_col),
-        X.ws_token_count_col(text_col).alias("ws_tokens"),
-        X.bpe_ish_token_count_col(text_col).alias("bpe_tokens"),
+        F.col("doc_id"),
+        X.ws_token_count_col("text").alias("ws_tokens"),
+        X.bpe_ish_token_count_col("text").alias("bpe_tokens"),
     )
 
 
-def langid(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def langid(docs: DataFrame) -> DataFrame:
     return spread_to_parallelism(docs).select(
-        F.col(id_col),
-        X.langid_col(text_col).alias("lang_pred"),
-        X.devanagari_char_count_col(text_col).cast("int").alias("dev_chars"),
-        X.cjk_char_count_col(text_col).cast("int").alias("cjk_chars"),
+        F.col("doc_id"),
+        X.langid_col("text").alias("lang_pred"),
+        X.devanagari_char_count_col("text").cast("int").alias("dev_chars"),
+        X.cjk_char_count_col("text").cast("int").alias("cjk_chars"),
     )
 
 
-def quality(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality(docs: DataFrame) -> DataFrame:
     return spread_to_parallelism(docs).select(
-        F.col(id_col),
-        X.ws_token_count_col(text_col).alias("n_tokens"),
-        X.quality_score_col(text_col).alias("quality"),
+        F.col("doc_id"),
+        X.ws_token_count_col("text").alias("n_tokens"),
+        X.quality_score_col("text").alias("quality"),
     )
 
 
-def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     return spread_to_parallelism(docs).select(
-        F.col(id_col), X.fingerprint_col(text_col).alias("fingerprint")
+        F.col("doc_id"), X.fingerprint_col("text").alias("fingerprint")
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 60) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash over the normalized token stream, 60-bit engine-portable
     hashes. Shape: explode tokens → per-bit ±1 vote sums (single
     partial-aggregating groupBy) → fold votes into one BIGINT.
@@ -52,18 +52,17 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     Scale: the shuffle moves pre-aggregated (doc, 60 ints) rows, not
     tokens — map-side combine does the heavy lifting."""
     toks = spread_to_parallelism(docs).select(
-        F.col(id_col), F.explode(X.tokens_col(text_col)).alias("token")
+        F.col("doc_id"), F.explode(X.tokens_col("text")).alias("token")
     ).withColumn("h", X.hash60_col("token"))
-    votes, finish = X.simhash_cols(F.col("h"), bits)
+    votes, finish = X.simhash_cols(F.col("h"))
     return (
-        toks.groupBy(id_col)
+        toks.groupBy("doc_id")
         .agg(*votes)
-        .select(F.col(id_col), finish().alias("simhash"))
+        .select(F.col("doc_id"), finish().alias("simhash"))
     )
 
 
-def top_terms(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text", top_k: int = 3) -> DataFrame:
+def top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
     """Per-document top-k keywords by a BM25-style rational idf score:
 
         score = tf · (N − df + 0.5) / (df + 0.5)
@@ -81,16 +80,16 @@ def top_terms(docs: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     toks = spread_to_parallelism(docs).select(
-        F.col(id_col), F.explode(X.tokens_col(text_col)).alias("term")
+        F.col("doc_id"), F.explode(X.tokens_col("text")).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(df_, "term")
         .crossJoin(F.broadcast(n))
         .select(
-            F.col(id_col), "term", "tf", "df",
+            F.col("doc_id"), "term", "tf", "df",
             (
                 F.col("tf")
                 * (F.col("n_docs") - F.col("df") + 0.5)
@@ -98,22 +97,21 @@ def top_terms(docs: DataFrame, id_col: str = "doc_id",
             ).alias("raw_score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("raw_score").desc(), F.col("term")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
         .select(
-            F.col(id_col), "term", "tf", "df",
+            F.col("doc_id"), "term", "tf", "df",
             F.round("raw_score", 6).alias("score"),
             F.col("rank").cast("int").alias("rank"),
         )
     )
 
 
-def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", k: int = 8,
+def winnow_fingerprints(docs: DataFrame, k: int = 8,
                         window: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003
     shape): hash every k-char gram of the normalized text, slide a
@@ -140,14 +138,14 @@ def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
 
     import pandas as pd
 
-    id_type = docs.schema[id_col].dataType.simpleString()
-    ddl = f"{id_col} {id_type}, fingerprint long"
+    id_type = docs.schema["doc_id"].dataType.simpleString()
+    ddl = f"doc_id {id_type}, fingerprint long"
     ws_rx = _re.compile(r"[ \t\n\r]+")
 
     def run(pdfs):
         for pdf in pdfs:
             ids, fps = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
                 nt = ws_rx.sub(" ", (t or "").lower()).strip(" ")
                 m = len(nt) - k + 1
                 if m <= 0:
@@ -163,15 +161,14 @@ def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
                         seen.add(v)
                         ids.append(i)
                         fps.append(v)
-            yield pd.DataFrame({id_col: ids, "fingerprint": fps})
+            yield pd.DataFrame({"doc_id": ids, "fingerprint": fps})
 
     return spread_to_parallelism(docs).select(
-        F.col(id_col), F.col(text_col)
+        F.col("doc_id"), F.col("text")
     ).mapInPandas(run, ddl)
 
 
-def vocab_pair_counts(docs: DataFrame, k: int = 50, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def vocab_pair_counts(docs: DataFrame, k: int = 50) -> DataFrame:
     """Adjacent token-pair frequencies, top-``k`` by (count desc, pair
     asc) — the counting core of one BPE/vocab-induction merge step
     (count all adjacent symbol pairs, take the most frequent). Pairs
@@ -183,9 +180,7 @@ def vocab_pair_counts(docs: DataFrame, k: int = 50, id_col: str = "doc_id",
     (pair, partial count) — vocabulary-sized, not corpus-sized. The
     top-k is ORDER BY + LIMIT, which Spark runs as TakeOrdered
     (per-partition heaps, k rows shuffled — no global sort)."""
-    from ..functions import textfns as X
-
-    toks = X.tokens_col(text_col)
+    toks = X.tokens_col("text")
     n = F.size(toks)
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
@@ -201,8 +196,7 @@ def vocab_pair_counts(docs: DataFrame, k: int = 50, id_col: str = "doc_id",
     )
 
 
-def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def repetition_stats_full(docs: DataFrame) -> DataFrame:
     """The repetition-filter family of Gopher (Rae et al. 2021,
     appendix A1.1, Table A1), as **stream-fraction variants** of its 13
     metrics — the one repetition operator; callers select the columns
@@ -245,22 +239,14 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
     ("\\n\\n"), trimmed, empties dropped — mirrored verbatim in the
     oracle.
     """
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-
-    def _items(sep: str):
-        return F.filter(
-            F.transform(F.split(txt, sep), lambda x: F.trim(x)),
-            lambda x: x != "",
-        )
-
     # stage 0: tokens, lines and paragraphs once per row — every gram
     # array below indexes the token array, which must not be re-split
     # per element
     base = spread_to_parallelism(docs).select(
-        F.col(id_col),
-        X.tokens_col(text_col).alias("_t"),
-        _items("\n").alias("_lines"),
-        _items("\n\n").alias("_paras"),
+        F.col("doc_id"),
+        X.tokens_col("text").alias("_t"),
+        X.trimmed_items_col("text", "\n").alias("_lines"),
+        X.trimmed_items_col("text", "\n\n").alias("_paras"),
     )
     t, lines, paras = F.col("_t"), F.col("_lines"), F.col("_paras")
     n = F.size(t)
@@ -294,7 +280,7 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
 
     # stage 1: every sorted array once; the cheap scalar fracs inline
     staged = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).cast("int").alias("n_lines"),
         _dup_item_frac(lines).alias("dup_line_frac"),
         _dup_item_frac(paras).alias("dup_para_frac"),
@@ -353,7 +339,7 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
 
     # stage 2: one fold column per metric family
     folded = staged.select(
-        F.col(id_col), F.col("n_lines"), F.col("dup_line_frac"),
+        F.col("doc_id"), F.col("n_lines"), F.col("dup_line_frac"),
         F.col("dup_para_frac"),
         _dup_fold(F.col("_ls")).alias("_lf"),
         _dup_fold(F.col("_ps")).alias("_pf"),
@@ -376,7 +362,7 @@ def repetition_stats_full(docs: DataFrame, id_col: str = "doc_id",
 
     # stage 3: cheap field arithmetic
     return folded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_lines"),
         F.col("dup_line_frac"),
         _dup_frac("_lf").alias("dup_line_char_frac"),
@@ -393,36 +379,30 @@ GOPHER_REQUIRED_STOPWORDS = ("the", "be", "to", "of", "and",
                              "that", "have", "with")
 
 
-def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", min_words: int = 50,
-                           max_words: int = 100_000) -> DataFrame:
+def gopher_quality_signals(docs: DataFrame) -> DataFrame:
     """The Gopher quality-signal battery (Rae et al. 2021 app. A1.1,
-    Table A1 — the filters BESIDE the repetition family): word-count
-    bounds, mean word length in [3, 10], '#' and '...' symbol-to-word
-    ratios ≤ 0.1, ≤90% bullet-started lines, ≤30% ellipsis-ended
-    lines, ≥80% words containing an alphabetic character, and ≥2 hits
-    from the 8 required stopwords — plus the combined pass flag a
-    Gopher-style gate would threshold on.
+    Table A1 — the filters BESIDE the repetition family): 50 to
+    100,000 words, mean word length in [3, 10], '#' and '...'
+    symbol-to-word ratios ≤ 0.1, ≤90% bullet-started lines, ≤30%
+    ellipsis-ended lines, ≥80% words containing an alphabetic
+    character, and ≥2 hits from the 8 required stopwords — plus the
+    combined pass flag a Gopher-style gate would threshold on.
 
     Pure scan-side projection: token/line arrays are materialized once
     per row and every signal is an HOF fold or regex count over them —
     no shuffle, no UDF; at 100 TB this widens the scan and nothing
     else. The DuckDB oracle replays each signal with list functions,
     so the numbers (and the boolean) are engine-bit-identical."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
     out = (
         spread_to_parallelism(docs)
         .select(
-            F.col(id_col),
-            c.alias("_t"),
-            X.tokens_col(text_col).alias("_toks"),
-            F.filter(
-                F.transform(F.split(c, "\n"), lambda x: F.trim(x)),
-                lambda x: x != "",
-            ).alias("_ls"),
+            F.col("doc_id"),
+            F.coalesce(F.col("text"), F.lit("")).alias("_t"),
+            X.tokens_col("text").alias("_toks"),
+            X.trimmed_items_col("text", "\n").alias("_ls"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("_t"),
             F.col("_ls"),
             F.col("_toks"),
@@ -435,10 +415,8 @@ def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
     wordlen_sum = F.aggregate(
         "_toks", F.lit(0), lambda acc, x: acc + F.length(x)
     )
-    hash_cnt = F.length("_t") - F.length(F.regexp_replace("_t", "#", ""))
-    ellipsis_cnt = (
-        F.length("_t") - F.length(F.regexp_replace("_t", "\\.\\.\\.", ""))
-    ) / F.lit(3)
+    hash_cnt = X.match_chars_col("_t", "#")
+    ellipsis_cnt = X.match_chars_col("_t", "\\.\\.\\.") / F.lit(3)
     bullet_lines = F.size(F.filter("_ls", lambda x: x.rlike("^[-*•]")))
     ellipsis_lines = F.size(F.filter("_ls", lambda x: x.rlike("\\.{3}$")))
     alpha_words = F.size(F.filter("_toks", lambda x: x.rlike("[a-z]")))
@@ -449,7 +427,7 @@ def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
         )
     )
     sig = out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("int").alias("n_words"),
         F.round(wordlen_sum.cast("double") / n1, 6).alias("mean_word_len"),
         F.round(hash_cnt.cast("double") / n1, 6).alias("hash_word_ratio"),
@@ -468,7 +446,7 @@ def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
     def gate(min_w: int, min_stops: int):
         return (
             (F.col("n_words") >= min_w)
-            & (F.col("n_words") <= max_words)
+            & (F.col("n_words") <= 100_000)
             & (F.col("mean_word_len") >= 3.0)
             & (F.col("mean_word_len") <= 10.0)
             & (F.col("hash_word_ratio") <= 0.1)
@@ -485,6 +463,6 @@ def gopher_quality_signals(docs: DataFrame, id_col: str = "doc_id",
     # relaxes only the corpus-shaped knobs (≥25 words, ≥1 stopword)
     # so the conjunction logic is exercised in BOTH directions by the
     # oracle hash — the signal columns pin the arithmetic either way.
-    return sig.withColumn("passes_gopher", gate(min_words, 2)).withColumn(
-        "passes_adapted", gate(min(25, min_words), 1)
+    return sig.withColumn("passes_gopher", gate(50, 2)).withColumn(
+        "passes_adapted", gate(25, 1)
     )

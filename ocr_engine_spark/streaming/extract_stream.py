@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions import textfns as X
+from ..functions.columns import payload_kind_col
 from ..operators.extract import extract_arrow
 from ..operators.salt import with_bucket
 from ..sources.tableio import TRANSCRIPTS_SCHEMA
@@ -48,6 +50,13 @@ def read_transcripts_stream(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
+def _bucketed(stream: DataFrame, num_buckets: int, salt_buckets: int) -> DataFrame:
+    """The transcripts columns both streams read, with the batch
+    plan's deterministic bucket column."""
+    pruned = stream.select("conv_id", "turn_idx", "role", "text", "ts")
+    return with_bucket(pruned, num_buckets, salt_buckets)
+
+
 def build_extract_stream(stream: DataFrame, num_buckets: int = 32,
                          salt_buckets: int = 4) -> DataFrame:
     """The extraction plan on a streaming DataFrame: column prune →
@@ -58,10 +67,7 @@ def build_extract_stream(stream: DataFrame, num_buckets: int = 32,
     would add a per-micro-batch shuffle for no correctness gain —
     the bucket column, not task placement, is the work-unit identity.)
     """
-    pruned = stream.select("conv_id", "turn_idx", "role", "text", "ts")
-    bucketed = with_bucket(pruned, num_buckets, salt_buckets)
-    extracted = extract_arrow(bucketed)
-    return extracted
+    return extract_arrow(_bucketed(stream, num_buckets, salt_buckets))
 
 
 def start_extract_stream(stream_out: DataFrame, output_path: str,
@@ -100,16 +106,9 @@ def build_metrics_stream(stream: DataFrame, num_buckets: int = 32,
     than from extraction output: the Arrow stage prunes ``ts``, and the
     classifier counts needed here are derivable without the kernels —
     keeping this aggregation 100% JVM-side."""
-    pruned = stream.select("conv_id", "turn_idx", "role", "text", "ts")
-    bucketed = with_bucket(pruned, num_buckets, salt_buckets)
-    return _metrics_from_input(bucketed, window_duration, watermark)
-
-
-def _metrics_from_input(bucketed: DataFrame, window_duration: str,
-                        watermark: str) -> DataFrame:
-    from ..functions.columns import payload_kind_col
-
-    tagged = bucketed.withColumn("kind", payload_kind_col("role", "text"))
+    tagged = _bucketed(stream, num_buckets, salt_buckets).withColumn(
+        "kind", payload_kind_col("role", "text")
+    )
     return (
         tagged.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window_duration).alias("win"), F.col("bucket"))
@@ -199,17 +198,16 @@ def build_conv_stats_stream(stream: DataFrame,
     )
 
 
-def build_dedup_stream(stream: DataFrame, watermark: str = "1 hour",
-                       text_col: str = "text") -> DataFrame:
+def build_dedup_stream(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup: one surviving row per content
     fingerprint across ALL micro-batches — the incremental twin of the
     batch ``dedup.exact_dedup_groups``. ``dropDuplicatesWithinWatermark``
     on the fingerprint is state-backed: a fingerprint seen in any
-    earlier micro-batch is dropped (state retained for the watermark
-    delay), which is first-seen-wins ingestion dedup. Plain
-    ``dropDuplicates(["fingerprint"])`` would never evict its state —
-    watermark cleanup there requires the event-time column IN the
-    dedup key, which would defeat the dedup; the WithinWatermark
+    earlier micro-batch is dropped (state retained for the 1-hour
+    watermark delay on ``ts``), which is first-seen-wins ingestion
+    dedup. Plain ``dropDuplicates(["fingerprint"])`` would never evict
+    its state — watermark cleanup there requires the event-time column
+    IN the dedup key, which would defeat the dedup; the WithinWatermark
     variant exists for exactly this shape.
 
     The emitted columns are (fingerprint, text_norm): every duplicate
@@ -221,15 +219,13 @@ def build_dedup_stream(stream: DataFrame, watermark: str = "1 hour",
     groupBy hash across executors; the event-time watermark bounds it
     for true streams. At 100 TB ingest the state store holds
     fingerprints (16 B each), never documents."""
-    from ..functions import textfns as X
-
     fp = stream.select(
-        X.fingerprint_col(text_col).alias("fingerprint"),
-        X.normalized_text_col(text_col).alias("text_norm"),
+        X.fingerprint_col("text").alias("fingerprint"),
+        X.normalized_text_col("text").alias("text_norm"),
         F.col("ts"),
     )
     return (
-        fp.withWatermark("ts", watermark)
+        fp.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["fingerprint"])
         .select("fingerprint", "text_norm")
     )
@@ -241,8 +237,7 @@ EVENTS_STREAM_DDL = (
 )
 
 
-def build_session_window_stream(stream: DataFrame, gap: str = "6 hours",
-                                watermark: str = "1 hour") -> DataFrame:
+def build_session_window_stream(stream: DataFrame, gap: str = "6 hours") -> DataFrame:
     """Native Structured-Streaming sessionization:
     ``F.session_window(ts, gap)`` merges events whose [ts, ts+gap)
     windows overlap, maintaining per-key session state across
@@ -252,9 +247,9 @@ def build_session_window_stream(stream: DataFrame, gap: str = "6 hours",
     successor exactly ``gap`` later starts a NEW session here
     (window end is exclusive), while the batch rule keeps strictly
     ``> gap`` only. Emitted per session: key, start/end (end = last
-    event + gap), event count, value sum."""
+    event + gap), event count, value sum, with a 1-hour watermark."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "1 hour")
         .groupBy(
             F.session_window("ts", gap).alias("win"), F.col("user_id")
         )

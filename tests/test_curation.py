@@ -108,7 +108,7 @@ def test_shuffle_permutation_total_and_matches_global_window(spark):
     got = {r["doc_id"]: r["shuffle_pos"] for r in out.collect()}
     assert sorted(got.values()) == list(range(1, 301))
     # equivalence to the single-partition global window it replaces
-    key = curation._decision_hash("doc_id", "shuffle")
+    key = curation._decision_hash("shuffle")
     ref = docs.select(
         "doc_id",
         F.row_number()

@@ -2,9 +2,11 @@
 oracles, compared the way scripts/check_correctness.py compares them:
 the three extraction queries (one per recast of ``documents``), every
 query whose oracle splices in a shared rule fragment, and every query
-over the near-duplicate, ANN and session operators. A broken
-fragment or a kernel change fails here, not only in a manual gate
-run."""
+over the operators, column functions and stream builders
+(``operators/``, ``functions/``, ``streaming/``). A broken fragment,
+operator or kernel change fails here, not only in a manual gate run.
+``bucketed_join_doc_embeddings`` writes managed tables and is covered
+by tests/test_tableio_format.py instead."""
 
 import importlib.util
 import os
@@ -51,6 +53,17 @@ def _check_correctness():
         "streaming_dedup_first_seen",
         "gopher_repetition_full_documents", "c4_line_filter_documents",
         "gopher_quality_documents",
+        "tokens_documents", "langid_documents", "fingerprint_documents",
+        "dedup_exact_documents", "minhash_signatures_documents",
+        "simhash_documents", "top_terms_documents",
+        "winnow_fingerprints_documents", "vocab_pair_counts",
+        "exact_substring_dedup_documents", "p8_devanagari_documents",
+        "p2_word_filter_documents", "field_record_documents",
+        "x1_slugify_part", "x2_clamp_events",
+        "ann_ivf_assignments", "ann_pq_codes", "kmeans_update_step",
+        "curation_redact_pii", "asof_click_view_events",
+        "multimodal_image_features", "multimodal_frame_sample",
+        "multimodal_resize_images", "multimodal_audio_features",
     ],
 )
 def test_extraction_query_matches_its_oracle(spark, name):

@@ -31,7 +31,9 @@ def test_sweep_matches_per_nprobe_topk(spark, emb):
     q = _vec(999)
     sweep = {
         (r["nprobe"], r["vec_id"])
-        for r in similarity.ivf_topk_sweep(emb, cents, q, k=5).collect()
+        for r in similarity.ivf_topk_sweep(
+            emb, cents, q, similarity.cosine_to_col(q), k=5
+        ).collect()
     }
     for np_ in (1, 2, 3, 4):
         want = {
@@ -40,6 +42,26 @@ def test_sweep_matches_per_nprobe_topk(spark, emb):
         }
         got = {t for t in sweep if t[0] == np_}
         assert got == want, f"nprobe={np_}"
+
+
+def test_pq_sweep_matches_per_nprobe_ivf_pq_topk(spark, emb):
+    """The IVF×PQ recall sweep scores one coded projection by ADC; each
+    nprobe's rows must be ``ivf_pq_topk``'s at that nprobe."""
+    cents = [_vec(100), _vec(101), _vec(102), _vec(103)]
+    cb = similarity.pq_codebooks(2, 4, 4)
+    q = _vec(999)
+    coded = emb.withColumn("pq_code", similarity.pq_code_col(cb))
+    score = similarity.pq_adc_score_col(similarity.pq_adc_lut(q, cb))
+    sweep = {
+        (r["nprobe"], r["vec_id"], r["score"])
+        for r in similarity.ivf_topk_sweep(coded, cents, q, score, k=5).collect()
+    }
+    for np_ in (1, 2, 3, 4):
+        want = {
+            (np_, r["vec_id"], r["adc_score"])
+            for r in similarity.ivf_pq_topk(emb, cents, cb, q, k=5, nprobe=np_).collect()
+        }
+        assert {t for t in sweep if t[0] == np_} == want, f"nprobe={np_}"
 
 
 def test_ivf_pq_all_lists_equals_pq_alone(spark, emb):

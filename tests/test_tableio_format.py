@@ -4,6 +4,7 @@ runtime jar in this sandbox, so ORC (bundled with Spark) is the swap
 proof: every read/write goes through ``tableio.table_format()``, and
 the outputs must be row-identical to the parquet path."""
 
+import math
 import os
 
 import pytest
@@ -125,7 +126,13 @@ def test_bucketed_join_query_raises_when_an_exchange_is_planned(
     docs.write.parquet(str(tmp_path / "documents.parquet"))
     emb.write.parquet(str(tmp_path / "embeddings.parquet"))
     q = queries()["bucketed_join_doc_embeddings"]
-    assert q(spark, str(tmp_path)).count() == 40  # co-located: builds
+    got = {  # co-located: builds, and computes each row
+        r["doc_id"]: (r["n_tokens"], r["emb_norm"])
+        for r in q(spark, str(tmp_path)).collect()
+    }
+    assert got == {
+        i: (2, pytest.approx(math.sqrt(i * i + 1), abs=1e-6)) for i in range(40)
+    }
 
     key = "spark.sql.sources.bucketing.enabled"
     prev = spark.conf.get(key)
