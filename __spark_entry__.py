@@ -33,7 +33,10 @@ def entry(spark: SparkSession) -> DataFrame:
     mapInArrow Arrow stage) over /root/testdata/sf0.001 documents
     recast as multi-kind transcripts (text/html/tool/pdf payload
     constructors — all four kernels run in the smoke). Returns
-    per-turn extracted text + ordered spans + classifier metrics."""
+    per-turn extracted text + ordered spans (in the FIXTURES.md §2
+    shape, text derived from the stored offsets) + classifier
+    metrics."""
+    from ocr_engine_spark.functions.columns import spans_with_text_col
     from ocr_engine_spark.plans.extract_plan import build_extracted
     from ocr_engine_spark.sources.tableio import (
         transcripts_from_documents_multikind,
@@ -42,7 +45,8 @@ def entry(spark: SparkSession) -> DataFrame:
     df = transcripts_from_documents_multikind(spark, "/root/testdata/sf0.001")
     out = build_extracted(df, num_buckets=16, salt_buckets=2)
     return out.select(
-        "conv_id", "turn_idx", "kind", "extracted_text", "spans",
+        "conv_id", "turn_idx", "kind", "extracted_text",
+        spans_with_text_col().alias("spans"),
         "blocks_kept", "blocks_dropped", "parse_failed",
     ).orderBy("conv_id", "turn_idx")
 

@@ -45,7 +45,8 @@ def _memory_stream(spark: SparkSession, inputs, build, mode: str,
     dir, ``build(in_dir)`` is the streaming DataFrame over it, and the
     query runs with availableNow in output ``mode``. A query that never
     terminates by itself is stopped once ``drained`` holds for its last
-    progress (or after 180 s). The scratch dir, with the input and the
+    progress (or after 180 s), at the first moment no batch is running
+    (or after 30 s more). The scratch dir, with the input and the
     checkpoint, is removed before this returns or raises."""
     tmp = tempfile.mkdtemp(prefix="ocr-stream-")
     try:
@@ -69,6 +70,14 @@ def _memory_stream(spark: SparkSession, inputs, build, mode: str,
                 while (q.isActive and time.time() < deadline
                        and not (q.lastProgress and drained(q.lastProgress))):
                     time.sleep(1.0)
+                # Stop between two batches: a stop during a batch
+                # cancels its job mid-way through the state store
+                # commit. The no-data batches run back to back, so the
+                # idle gap is short and is polled without a sleep.
+                deadline = time.time() + 30
+                while (q.isActive and time.time() < deadline
+                       and q.status["isTriggerActive"]):
+                    pass
         finally:
             q.stop()
         return spark.table(qname)

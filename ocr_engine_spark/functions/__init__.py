@@ -5,4 +5,5 @@ from .columns import (  # noqa: F401
     has_devanagari_col,
     payload_kind_col,
     slugify_col,
+    spans_with_text_col,
 )

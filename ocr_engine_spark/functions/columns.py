@@ -79,3 +79,23 @@ def has_devanagari_col(text: Column | str) -> Column:
     twin; parity anchor: /root/reference/app.py:184)."""
     c = as_col(text)
     return F.coalesce(c.rlike("[\\u0900-\\u097F]"), F.lit(False))
+
+
+def spans_with_text_col() -> Column:
+    """The FIXTURES.md §2 span shape ``(span_idx, kind, text, start,
+    end)`` of an extraction row, derived from its stored ``spans``
+    offsets: each span's text is ``extracted_text[start:end]``. Spark's
+    ``substring`` and Python's slicing both count code points, so the
+    derived text equals the kernel's span text for any input, astral
+    characters included. A null span stays null, so the type is the
+    stored one with ``text`` put back, nullability included."""
+    return F.transform(
+        "spans",
+        lambda s: F.when(s.isNotNull(), F.struct(
+            s["span_idx"].alias("span_idx"),
+            s["kind"].alias("kind"),
+            F.substring("extracted_text", s["start"] + 1, s["end"] - s["start"]).alias("text"),
+            s["start"].alias("start"),
+            s["end"].alias("end"),
+        )),
+    )

@@ -39,7 +39,11 @@ from ..kernel.dispatch import extract_turn
 
 # The output schema, declared once (FIXTURES.md §2 + metrics columns,
 # led by the bucket passthrough): Spark's return type for mapInArrow;
-# the Arrow schema the batches are built with is derived from it.
+# the Arrow schema the batches are built with is derived from it. Spans
+# are stored as offsets only: a span's text is always
+# extracted_text[start:end], so storing it would write every extracted
+# character twice. functions.columns.spans_with_text_col derives the
+# FIXTURES.md §2 span shape back from the stored table.
 OUT_SCHEMA = T.StructType(
     [
         T.StructField("bucket", T.IntegerType()),
@@ -54,7 +58,6 @@ OUT_SCHEMA = T.StructType(
                     [
                         T.StructField("span_idx", T.IntegerType()),
                         T.StructField("kind", T.StringType()),
-                        T.StructField("text", T.StringType()),
                         T.StructField("start", T.IntegerType()),
                         T.StructField("end", T.IntegerType()),
                     ]
@@ -84,6 +87,8 @@ def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBat
             res = extract_turn(role, text)
             kinds.append(res["kind"])
             etexts.append(res["extracted_text"])
+            # pa.array drops each span's "text" key: it is not a field
+            # of the span struct type
             spans_col.append(res["spans"])
             kept.append(res["blocks_kept"])
             dropped.append(res["blocks_dropped"])

@@ -10,7 +10,10 @@
                                                               tasks of whole buckets]
       └─ mapInArrow(extract_batches)                         [the one Python crossing —
                                                               streams off the shuffle
-                                                              fetch, no sort barrier]
+                                                              fetch, no sort barrier;
+                                                              spans leave it as offsets
+                                                              into extracted_text, their
+                                                              text is derived on read]
       └─ sortWithinPartitions(bucket, conv_id, turn_idx)     [THE sort, on the OUTPUT:
                                                               turn order per bucket, and
                                                               the bucket order the

@@ -89,6 +89,34 @@ def _matches_oracle(spark, sf_dir, name):
     return len(srows)
 
 
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(SF_DIR, "documents.parquet")),
+    reason="sf0.001 testdata not present",
+)
+def test_drained_stream_stops_between_batches(spark, monkeypatch):
+    """streaming_conv_stats never terminates by itself and is stopped
+    once drained: the stop must land between two micro-batches, so no
+    batch's job is cancelled half-way through its state store commit,
+    and the rows still match the oracle."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        started.append(real_start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    assert _matches_oracle(spark, SF_DIR, "streaming_conv_stats") > 0
+    (q,) = started
+    assert q.exception() is None
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert jobs
+    assert {str(tracker.getJobInfo(j).status) for j in jobs} == {"SUCCEEDED"}
+
+
 def test_text_rules_match_the_text_kernel():
     """The driver corpus has no newline and no blank text, so the
     paragraph-run and span-offset rules of the oracles meet only

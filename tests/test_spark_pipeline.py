@@ -1,17 +1,26 @@
 """Spark pipeline golden tests (SURVEY.md §5.2.2): the distributed
 pipeline at local[2], tiny Arrow batches and salted buckets must be
-byte-equal per turn to the committed sequential-oracle fixtures."""
+byte-equal per turn to the committed sequential-oracle fixtures. The
+table stores span offsets; the fixture diff reads spans through the
+derived FIXTURES.md §2 view (functions.columns.spans_with_text_col)."""
 
+import base64
 import glob
+import json
 import os
 import re
 import shutil
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ocr_engine_spark.functions.columns import spans_with_text_col
+from ocr_engine_spark.kernel.dispatch import extract_turn
 from ocr_engine_spark.kernel.oracle import read_golden_jsonl
+from ocr_engine_spark.kernel.pdfstream import MAGIC
 from ocr_engine_spark.kernel.textutil import to_min_json
+from ocr_engine_spark.operators.salt import with_bucket
 from ocr_engine_spark.plans.extract_plan import ExtractConfig, build_extracted, run_extract
 from ocr_engine_spark.sources.tableio import AUDIT_SCHEMA, read_transcripts
 
@@ -19,7 +28,8 @@ FIXTURE = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden_tiny
 
 
 def collect_results(df):
-    rows = df.orderBy("conv_id", "turn_idx").collect()
+    rows = (df.withColumn("spans", spans_with_text_col())
+            .orderBy("conv_id", "turn_idx").collect())
     out = []
     for r in rows:
         spans = [
@@ -64,6 +74,56 @@ def test_pipeline_byte_equal_to_golden(spark, tiny_transcripts):
     assert_matches_golden(collect_results(extracted))
 
 
+# CJK, emoji outside the BMP, a combining mark and a no-break space:
+# two, three and four UTF-8 bytes per code point, and two UTF-16 code
+# units per emoji. The second tool turn is unparseable JSON, so it
+# takes the raw-text fallback.
+WIDE = "漢字テキスト 😀🎉 e\u0301\xa0x"
+
+
+def _pdf_payload(pages):
+    stream = {"shards": [{"name": "out-000.json", "pages": [
+        {"blocks": [{"paragraphs": [{"words": [{"t": w, "br": 1} for w in page.split(" ")]}]}]}
+        for page in pages]}]}
+    return base64.b64encode((MAGIC + json.dumps(stream, ensure_ascii=False)).encode()).decode()
+
+
+WIDE_TURNS = [
+    ("user", f"{WIDE}\n{WIDE} again\n\nlast 🎉 {WIDE}"),
+    ("assistant", f"<h1>{WIDE}</h1><p>{WIDE} one two three four five six seven eight</p>"
+                  f"<table><tr><td>😀</td><td>{WIDE}</td></tr></table>"),
+    ("tool", json.dumps({"note": WIDE, "tags": ["😀", WIDE], "n": 1}, ensure_ascii=False)),
+    ("tool", f"{WIDE} {{broken: 😀 }}\n\n{WIDE}"),
+    ("user", _pdf_payload([WIDE, f"🎉 {WIDE}"])),
+]
+
+
+def test_derived_spans_count_code_points(spark):
+    """The derived span view has FIXTURES.md §2's span type and equals
+    the kernel's spans, text included, on turns of every payload kind
+    whose kept blocks carry multibyte and astral characters ahead of
+    later spans' offsets."""
+    want = [extract_turn(role, text) for role, text in WIDE_TURNS]
+    kinds = [w["kind"] for w in want]
+    assert kinds == ["text", "html", "tool", "tool", "pdf"], kinds
+    for w in want:
+        assert len(w["spans"]) > 1 and "😀" in w["spans"][0]["text"], w
+    df = spark.createDataFrame(
+        [("c", i, role, text) for i, (role, text) in enumerate(WIDE_TURNS)],
+        "conv_id string, turn_idx int, role string, text string",
+    )
+    out = build_extracted(df, num_buckets=4, salt_buckets=2)
+    assert out.withColumn("spans", spans_with_text_col()).schema["spans"].dataType == T.ArrayType(
+        T.StructType([T.StructField("span_idx", T.IntegerType()),
+                      T.StructField("kind", T.StringType()),
+                      T.StructField("text", T.StringType()),
+                      T.StructField("start", T.IntegerType()),
+                      T.StructField("end", T.IntegerType())]))
+    rows = collect_results(out)
+    assert [r["extracted_text"] for r in rows] == [w["extracted_text"] for w in want]
+    assert [r["spans_json"] for r in rows] == [to_min_json(w["spans"]) for w in want]
+
+
 def test_salting_invariance(spark, tiny_transcripts):
     """Output is identical for ANY bucket/salt configuration
     (SURVEY.md §5.2.4b)."""
@@ -87,12 +147,27 @@ def test_full_job_write_audit_and_resume(spark, tiny_transcripts, tmp_path):
     written = spark.read.parquet(out)
     assert_matches_golden(collect_results(written))
 
-    # audit invariants: every turn accounted for, checksum present
-    audit_df = spark.read.parquet(audit)
-    arows = audit_df.collect()
+    # audit invariants, each checked against a side the audit does not
+    # read: every bucket's turns_out is that bucket's row count in the
+    # input, bucketed here on its own, and the checksums XOR to the
+    # golden rows' checksum
+    arows = spark.read.parquet(audit).collect()
     assert len(arows) == 8
-    assert sum(r["turns_in"] for r in arows) == written.count()
-    assert all(r["turns_in"] == r["turns_out"] for r in arows)
+    input_counts = {
+        r["bucket"]: r["count"]
+        for r in with_bucket(read_transcripts(spark, tiny_transcripts), 8, 4)
+        .groupBy("bucket").count().collect()
+    }
+    assert {r["bucket"]: r["turns_out"] for r in arows} == input_counts
+    golden = spark.createDataFrame(
+        [(g["conv_id"], g["turn_idx"], g["extracted_text"]) for g in read_golden_jsonl(FIXTURE)],
+        "conv_id string, turn_idx int, extracted_text string",
+    )
+    want = golden.agg(F.bit_xor(F.xxhash64("conv_id", "turn_idx", "extracted_text"))).first()[0]
+    got = 0
+    for r in arows:
+        got ^= r["checksum"]
+    assert got == want
     assert sum(r["parse_failures"] for r in arows) > 0  # generator includes failures
 
     # resume: second run must skip everything and change nothing
@@ -173,13 +248,18 @@ def test_one_sort_leading_with_bucket(spark, tiny_transcripts):
 
 def test_written_bucket_files_keep_turn_order(spark, tiny_transcripts, tmp_path):
     """Every data file the job writes is in (conv_id, turn_idx) order —
-    read as written, with no orderBy in between."""
+    read as written, with no orderBy in between — and stores each span
+    as offsets into extracted_text only: span text is derived on read,
+    never written."""
     out = str(tmp_path / "out")
     run_extract(spark, ExtractConfig(input_path=tiny_transcripts, output_path=out,
                                      num_buckets=8, salt_buckets=4))
     files = glob.glob(os.path.join(out, "bucket=*", "*.parquet"))
     assert len({os.path.dirname(f) for f in files}) == 8
     for f in files:
+        span = pq.read_schema(f).field("spans").type.value_type
+        assert [span.field(i).name for i in range(span.num_fields)] == [
+            "span_idx", "kind", "start", "end"], f
         rows = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
         keys = [(r["conv_id"], r["turn_idx"]) for r in rows]
         assert keys == sorted(keys), f

@@ -3,7 +3,8 @@ metrics (SURVEY.md §1.2 streaming tier).
 
 The kernels are pure per turn, so the stream (file source →
 mapInArrow → checkpointed parquet sink) must emit byte-identical
-``extracted_text`` to the batch plan over the same rows.
+``extracted_text`` and span offsets to the batch plan over the same
+rows.
 """
 
 from __future__ import annotations
@@ -52,11 +53,11 @@ def test_stream_matches_batch(spark, stream_dirs):
 
     batch_in = spark.read.parquet(stream_dirs["src"])
     batch = {
-        (r.conv_id, r.turn_idx): (r.extracted_text, r.blocks_kept)
+        (r.conv_id, r.turn_idx): (r.extracted_text, r.spans, r.blocks_kept)
         for r in build_extracted(batch_in, num_buckets=8, salt_buckets=2).collect()
     }
     streamed = {
-        (r.conv_id, r.turn_idx): (r.extracted_text, r.blocks_kept)
+        (r.conv_id, r.turn_idx): (r.extracted_text, r.spans, r.blocks_kept)
         for r in spark.read.parquet(stream_dirs["out"]).collect()
     }
     assert set(streamed) == set(batch)
