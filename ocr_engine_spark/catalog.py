@@ -15,6 +15,7 @@ import functools
 import os
 import shutil
 import tempfile
+import threading
 import time
 import uuid
 from typing import Callable, Dict, Optional
@@ -40,47 +41,57 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _memory_stream(spark: SparkSession, inputs, build, mode: str,
                    drained: Optional[Callable[[dict], bool]] = None) -> DataFrame:
-    """Run a stream to completion into a memory sink and return the
-    sink table. ``inputs`` are appended in order to a scratch input
-    dir, ``build(in_dir)`` is the streaming DataFrame over it, and the
-    query runs with availableNow in output ``mode``. A query that never
-    terminates by itself is stopped once ``drained`` holds for its last
-    progress (or after 180 s), at the first moment no batch is running
-    (or after 30 s more). The scratch dir, with the input and the
+    """Run a stream to completion and return its output rows.
+    ``inputs`` are appended in order to a scratch input dir,
+    ``build(in_dir)`` is the streaming DataFrame over it, and the query
+    runs with availableNow in output ``mode`` into a memory sink. A
+    query that never terminates by itself passes ``drained`` and runs
+    in append mode: its sink collects every batch's rows to the driver,
+    and the first batch that finds ``drained`` true of the previous
+    batch's progress stops the query once its own rows are in, so no
+    batch is running when the stop lands (a stop during a batch cancels
+    its job mid-way through the state store commit). After 180 s it is
+    stopped wherever it is. The scratch dir, with the input and the
     checkpoint, is removed before this returns or raises."""
     tmp = tempfile.mkdtemp(prefix="ocr-stream-")
     try:
         in_dir = os.path.join(tmp, "in")
         for df in inputs:
             df.write.mode("append").parquet(in_dir)
-        qname = "stream_" + uuid.uuid4().hex[:8]
-        q = (
-            build(in_dir).writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
+        stream = build(in_dir)
+        writer = (
+            stream.writeStream.outputMode(mode)
             .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             .trigger(availableNow=True)
-            .start()
         )
-        try:
-            if drained is None:
+        if drained is None:
+            qname = "stream_" + uuid.uuid4().hex[:8]
+            q = writer.format("memory").queryName(qname).start()
+            try:
                 q.awaitTermination()
-            else:
-                deadline = time.time() + 180
-                while (q.isActive and time.time() < deadline
-                       and not (q.lastProgress and drained(q.lastProgress))):
-                    time.sleep(1.0)
-                # Stop between two batches: a stop during a batch
-                # cancels its job mid-way through the state store
-                # commit. The no-data batches run back to back, so the
-                # idle gap is short and is polled without a sleep.
-                deadline = time.time() + 30
-                while (q.isActive and time.time() < deadline
-                       and q.status["isTriggerActive"]):
-                    pass
+            finally:
+                q.stop()
+            return spark.table(qname)
+
+        rows, started = [], []
+
+        def sink(batch: DataFrame, _batch_id: int) -> None:
+            rows.extend(batch.collect())
+            q = started[0] if started else None
+            if q is not None and q.lastProgress and drained(q.lastProgress):
+                # stop() waits for this batch to return, so it runs on
+                # its own thread. The trigger loop reads isActive before
+                # it starts a batch: once it is false here, none follows.
+                threading.Thread(target=q.stop).start()
+                while q.isActive:
+                    time.sleep(0.01)
+
+        started.append(writer.foreachBatch(sink).start())
+        try:
+            started[0].awaitTermination(180)
         finally:
-            q.stop()
-        return spark.table(qname)
+            started[0].stop()
+        return spark.createDataFrame(rows, stream.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -178,7 +178,13 @@ def _gen_pdf(rng: random.Random) -> str:
                 blocks.append({"paragraphs": paras})
             pages.append({"blocks": blocks})
         shards.append({"name": names[si], "pages": pages})
-    payload = MAGIC + json.dumps({"shards": shards}, ensure_ascii=False)
+    return pdf_payload({"shards": shards})
+
+
+def pdf_payload(stream: dict) -> str:
+    """A PDF turn's text: base64 of the token-stream magic followed by
+    ``stream`` as JSON."""
+    payload = MAGIC + json.dumps(stream, ensure_ascii=False)
     return base64.b64encode(payload.encode("utf-8")).decode("ascii")
 
 

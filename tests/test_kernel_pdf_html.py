@@ -2,17 +2,13 @@
 dispatch + span invariants."""
 
 import base64
-import json
 
 import pytest
 
 from ocr_engine_spark.kernel import dispatch as D
 from ocr_engine_spark.kernel import htmlblocks as H
 from ocr_engine_spark.kernel import pdfstream as P
-
-
-def enc(stream: dict) -> str:
-    return base64.b64encode((P.MAGIC + json.dumps(stream)).encode()).decode()
+from ocr_engine_spark.sources.synth import pdf_payload
 
 
 # ---- pdfstream ----
@@ -26,12 +22,12 @@ def test_shards_sorted_by_name_global_page_index():
                 {"words": [{"t": "first", "br": None}]}]}]}]},
         ]
     }
-    pages = P.extract_pages(enc(stream))
+    pages = P.extract_pages(pdf_payload(stream))
     assert pages == [(1, "first"), (2, "second")]
 
 
 def test_empty_doc_page_count_one():
-    assert P.extract_pages(enc({"shards": []})) == [(1, "")]
+    assert P.extract_pages(pdf_payload({"shards": []})) == [(1, "")]
 
 
 def test_empty_page_gap_fill():
@@ -39,7 +35,7 @@ def test_empty_page_gap_fill():
         {"blocks": []},
         {"blocks": [{"paragraphs": [{"words": [{"t": "x", "br": 5}]}]}]},
     ]}]}
-    assert P.extract_pages(enc(stream)) == [(1, ""), (2, "x")]
+    assert P.extract_pages(pdf_payload(stream)) == [(1, ""), (2, "x")]
 
 
 def test_paragraph_tail_rstrip_per_paragraph():
@@ -49,7 +45,7 @@ def test_paragraph_tail_rstrip_per_paragraph():
     ]}]}]}]}
     # first paragraph tail "no break " → rstrip → "no break";
     # second paragraph separate line
-    assert P.extract_pages(enc(stream)) == [(1, "no break\nnext")]
+    assert P.extract_pages(pdf_payload(stream)) == [(1, "no break\nnext")]
 
 
 def test_bad_payloads_raise():
@@ -62,7 +58,7 @@ def test_bad_payloads_raise():
 
 
 def test_b64_magic_prefix_constant():
-    assert enc({"shards": []}).startswith(P.B64_MAGIC_PREFIX)
+    assert pdf_payload({"shards": []}).startswith(P.B64_MAGIC_PREFIX)
     assert base64.b64encode(b"%PDF-TOKE").decode() == P.B64_MAGIC_PREFIX
 
 
@@ -147,9 +143,9 @@ def test_html_whitespace_collapse():
 # ---- dispatch + spans ----
 
 def test_detect_kind_priority():
-    pdf_payload = enc({"shards": []})
-    assert D.detect_kind("user", pdf_payload) == "pdf"
-    assert D.detect_kind("tool", pdf_payload) == "pdf"  # magic beats role
+    pdf = pdf_payload({"shards": []})
+    assert D.detect_kind("user", pdf) == "pdf"
+    assert D.detect_kind("tool", pdf) == "pdf"  # magic beats role
     assert D.detect_kind("tool", '{"a": 1}') == "tool"
     assert D.detect_kind("assistant", "  <div>x</div>") == "html"
     assert D.detect_kind("user", "plain") == "text"
@@ -179,7 +175,7 @@ def test_extract_turn_pdf_pages():
                                                 {"t": "world", "br": 5}]}]}]},
         {"blocks": []},
     ]}]}
-    res = D.extract_turn("user", enc(stream))
+    res = D.extract_turn("user", pdf_payload(stream))
     assert res["kind"] == "pdf"
     assert res["extracted_text"] == "Page 1:\nhello world"
     assert res["blocks_kept"] == 1 and res["blocks_dropped"] == 1

@@ -4,7 +4,6 @@ byte-equal per turn to the committed sequential-oracle fixtures. The
 table stores span offsets; the fixture diff reads spans through the
 derived FIXTURES.md §2 view (functions.columns.spans_with_text_col)."""
 
-import base64
 import glob
 import json
 import os
@@ -18,10 +17,10 @@ from pyspark.sql import types as T
 from ocr_engine_spark.functions.columns import spans_with_text_col
 from ocr_engine_spark.kernel.dispatch import extract_turn
 from ocr_engine_spark.kernel.oracle import read_golden_jsonl
-from ocr_engine_spark.kernel.pdfstream import MAGIC
 from ocr_engine_spark.kernel.textutil import to_min_json
 from ocr_engine_spark.operators.salt import with_bucket
 from ocr_engine_spark.plans.extract_plan import ExtractConfig, build_extracted, run_extract
+from ocr_engine_spark.sources.synth import pdf_payload
 from ocr_engine_spark.sources.tableio import AUDIT_SCHEMA, read_transcripts
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden_tiny.jsonl")
@@ -80,21 +79,15 @@ def test_pipeline_byte_equal_to_golden(spark, tiny_transcripts):
 # takes the raw-text fallback.
 WIDE = "漢字テキスト 😀🎉 e\u0301\xa0x"
 
-
-def _pdf_payload(pages):
-    stream = {"shards": [{"name": "out-000.json", "pages": [
-        {"blocks": [{"paragraphs": [{"words": [{"t": w, "br": 1} for w in page.split(" ")]}]}]}
-        for page in pages]}]}
-    return base64.b64encode((MAGIC + json.dumps(stream, ensure_ascii=False)).encode()).decode()
-
-
 WIDE_TURNS = [
     ("user", f"{WIDE}\n{WIDE} again\n\nlast 🎉 {WIDE}"),
     ("assistant", f"<h1>{WIDE}</h1><p>{WIDE} one two three four five six seven eight</p>"
                   f"<table><tr><td>😀</td><td>{WIDE}</td></tr></table>"),
     ("tool", json.dumps({"note": WIDE, "tags": ["😀", WIDE], "n": 1}, ensure_ascii=False)),
     ("tool", f"{WIDE} {{broken: 😀 }}\n\n{WIDE}"),
-    ("user", _pdf_payload([WIDE, f"🎉 {WIDE}"])),
+    ("user", pdf_payload({"shards": [{"name": "out-000.json", "pages": [
+        {"blocks": [{"paragraphs": [{"words": [{"t": w, "br": 1} for w in page.split(" ")]}]}]}
+        for page in [WIDE, f"🎉 {WIDE}"]]}]})),
 ]
 
 
@@ -148,9 +141,9 @@ def test_full_job_write_audit_and_resume(spark, tiny_transcripts, tmp_path):
     assert_matches_golden(collect_results(written))
 
     # audit invariants, each checked against a side the audit does not
-    # read: every bucket's turns_out is that bucket's row count in the
-    # input, bucketed here on its own, and the checksums XOR to the
-    # golden rows' checksum
+    # read: every bucket's turns_in and turns_out are that bucket's row
+    # count in the input, bucketed here on its own, and the checksums
+    # XOR to the golden rows' checksum
     arows = spark.read.parquet(audit).collect()
     assert len(arows) == 8
     input_counts = {
@@ -158,6 +151,7 @@ def test_full_job_write_audit_and_resume(spark, tiny_transcripts, tmp_path):
         for r in with_bucket(read_transcripts(spark, tiny_transcripts), 8, 4)
         .groupBy("bucket").count().collect()
     }
+    assert {r["bucket"]: r["turns_in"] for r in arows} == input_counts
     assert {r["bucket"]: r["turns_out"] for r in arows} == input_counts
     golden = spark.createDataFrame(
         [(g["conv_id"], g["turn_idx"], g["extracted_text"]) for g in read_golden_jsonl(FIXTURE)],
