@@ -217,10 +217,8 @@ HEADLINE = [
     "ngram_jaccard_pairs_documents",
     "ann_cosine_topk",
     "ann_lsh_buckets",
-    "dedup_embedding_near_pairs",
     "a6_prompt_assembly_documents",
     "a3_gap_fill_lineitem",
-    "multimodal_image_features",
     "minhash_lsh_candidates",
     "winnow_fingerprints_documents",
     "ann_ivf_assignments",

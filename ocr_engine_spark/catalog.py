@@ -1324,179 +1324,6 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_orderkey", "line_no")
 
 
-def _embedding_pairs_oracle(num_planes: int = 8, dims: int = 64,
-                            threshold: float = 0.5) -> str:
-    fold = _lsh_fold_sql(similarity.plane_weight_lists(num_planes, dims), "e")
-    return f"""
-WITH {_V_CTE},
-b AS (SELECT vec_id, e, ({fold})::BIGINT AS bucket FROM v)
-SELECT id_a, id_b, cosine
-FROM (SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-             {_cosine_sql("a.e", "bb.e")} AS cosine
-      FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id)
-WHERE cosine >= {threshold}
-ORDER BY id_a, id_b
-"""
-
-
-@_register("dedup_embedding_near_pairs", oracle=_embedding_pairs_oracle(8, 64, 0.2))
-def q_embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    planes = similarity.plane_weight_lists(8, 64)
-    return dedup.embedding_near_pairs(
-        _t(spark, sf_dir, "embeddings"), planes, threshold=0.2
-    ).orderBy("id_a", "id_b")
-
-
-# ------------------------------------------------- multimodal columns
-#
-# The synthetic media table (operators.multimodal.synth_media) is fully
-# arithmetic — every FAKE-container byte derives from (seed, media_id)
-# — so the driver oracles replay the generator math AND the decoded
-# statistics (mean intensity, RMS) from generate_series, with no file
-# dependency: the Spark side must synthesize, Arrow-decode, and
-# aggregate the actual binary payloads to reproduce the same numbers.
-
-_MM_N, _MM_SEED = 300, 7
-
-
-def _mm_image_oracle() -> str:
-    return f"""
-SELECT printf('m-%06d', i) AS media_id,
-       (16 + i % 17)::INT AS width,
-       (16 + i % 13)::INT AS height,
-       round(list_sum(list_transform(
-               generate_series(0, (16 + i % 17) * (16 + i % 13) - 1),
-               j -> ((({_MM_SEED} + i) * 1103515245 + j * 12345) >> 7) & 255
-             ))::DOUBLE / ((16 + i % 17) * (16 + i % 13)), 6) AS mean_intensity,
-       0::INT AS decode_failed
-FROM range({_MM_N}) t(i)
-WHERE i % 3 = 0
-ORDER BY media_id
-"""
-
-
-def _mm_frames_oracle() -> str:
-    return f"""
-SELECT media_id, frame_idx::INT AS frame_idx, width, height, frame_bytes
-FROM (
-  SELECT printf('m-%06d', i) AS media_id,
-         unnest(generate_series(0, (4 + i % 5) - 1, 2)) AS frame_idx,
-         (8 + i % 5)::INT AS width,
-         8::INT AS height,
-         (8 + (8 + i % 5) * 8)::INT AS frame_bytes
-  FROM range({_MM_N}) t(i)
-  WHERE i % 3 = 2)
-ORDER BY media_id, frame_idx
-"""
-
-
-def _mm_resize_oracle(out_w: int = 8, out_h: int = 6) -> str:
-    return f"""
-SELECT printf('m-%06d', i) AS media_id,
-       {out_w}::INT AS width,
-       {out_h}::INT AS height,
-       (8 + {out_w * out_h})::INT AS payload_bytes,
-       list_sum(list_transform(generate_series(0, {out_h - 1}),
-         y -> list_sum(list_transform(generate_series(0, {out_w - 1}),
-           x -> ((({_MM_SEED} + i) * 1103515245
-                  + ((y * (16 + i % 13) // {out_h}) * (16 + i % 17)
-                     + x * (16 + i % 17) // {out_w}) * 12345) >> 7) & 255
-         ))))::BIGINT AS pixel_sum
-FROM range({_MM_N}) t(i)
-WHERE i % 3 = 0
-ORDER BY media_id
-"""
-
-
-def _mm_audio_oracle() -> str:
-    return f"""
-SELECT printf('m-%06d', i) AS media_id,
-       8000::INT AS sample_rate,
-       (400 + i % 300)::BIGINT AS n_samples,
-       ((400 + i % 300) * 1000 // 8000)::BIGINT AS duration_ms,
-       round(sqrt(list_sum(list_transform(
-               generate_series(0, (400 + i % 300) - 1),
-               j -> ((((({_MM_SEED} + i) * 69069 + j * 362437) >> 5) & 255) - 128)
-                    * ((((({_MM_SEED} + i) * 69069 + j * 362437) >> 5) & 255) - 128)
-             ))::DOUBLE / (400 + i % 300)), 6) AS rms
-FROM range({_MM_N}) t(i)
-WHERE i % 3 = 1
-ORDER BY media_id
-"""
-
-
-@_register("multimodal_image_features", oracle=_mm_image_oracle())
-def q_multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary image payloads → mapInPandas decode + features,
-    hash-verified against the generator-math oracle (dimensions AND
-    decoded mean intensity)."""
-    from .operators import multimodal as mm
-
-    media = mm.synth_media(spark, _MM_N, seed=_MM_SEED, partitions=8)
-    return (
-        mm.image_features(media)
-        .select("media_id", "width", "height",
-                F.round("mean_intensity", 6).alias("mean_intensity"),
-                "decode_failed")
-        .orderBy("media_id")
-    )
-
-
-@_register("multimodal_frame_sample", oracle=_mm_frames_oracle())
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video payloads → every-2nd-frame fan-out inside the Arrow stage;
-    fan-out cardinality, indices, dimensions and per-frame byte sizes
-    hash-verified against the container-header math."""
-    from .operators import multimodal as mm
-
-    media = mm.synth_media(spark, _MM_N, seed=_MM_SEED, partitions=8)
-    return (
-        mm.sample_frames(media, every_n=2)
-        .select("media_id", "frame_idx", "width", "height",
-                F.length("frame").cast("int").alias("frame_bytes"))
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-@_register("multimodal_resize_images", oracle=_mm_resize_oracle(8, 6))
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-to-binary nearest-neighbor resize through the Arrow
-    stage; output dimensions, container size and the resized pixel
-    checksum hash-verified against the nearest-neighbor index math."""
-    from .operators import multimodal as mm
-
-    media = mm.synth_media(spark, _MM_N, seed=_MM_SEED, partitions=8)
-    resized = mm.resize_images(media, 8, 6)
-    # pixel_sum over the payload *bytes* (skip the 8-byte header) —
-    # aggregate(sequence) over unhex'd binary stays JVM-side.
-    pixel_sum = F.aggregate(
-        F.sequence(F.lit(9), F.length("payload")),
-        F.lit(0).cast("long"),
-        lambda acc, i: acc
-        + F.conv(F.hex(F.substring(F.col("payload"), i, 1)), 16, 10).cast("long"),
-    )
-    return resized.select(
-        "media_id", "width", "height",
-        F.length("payload").cast("int").alias("payload_bytes"),
-        pixel_sum.alias("pixel_sum"),
-    ).orderBy("media_id")
-
-
-@_register("multimodal_audio_features", oracle=_mm_audio_oracle())
-def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio payloads → rate/duration/RMS via mapInPandas, hash-verified
-    against the generator-math oracle (decoded PCM RMS included)."""
-    from .operators import multimodal as mm
-
-    media = mm.synth_media(spark, _MM_N, seed=_MM_SEED, partitions=8)
-    return (
-        mm.audio_features(media)
-        .select("media_id", "sample_rate", "n_samples", "duration_ms",
-                F.round("rms", 6).alias("rms"))
-        .orderBy("media_id")
-    )
-
-
 # Winnowing fingerprint rows as a reusable CTE body (k=8, window=4).
 _WINNOW_CORE_SQL = f"""
 SELECT doc_id, unnest(fps) AS fingerprint
@@ -2189,65 +2016,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-@_register(
-    "bucketed_join_doc_embeddings",
-    oracle="""
-SELECT d.doc_id, d.lang,
-       len(<TOKENS>)::BIGINT AS n_tokens,
-       round(sqrt(list_dot_product(
-           list_transform(e.embedding, x -> x::DOUBLE),
-           list_transform(e.embedding, x -> x::DOUBLE))), 6) AS emb_norm
-FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-ORDER BY d.doc_id
-""".replace("<TOKENS>", TOKENS_SQL.replace("text", "d.text")),
-)
-def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-located join via write-time bucketing: documents and
-    embeddings are each saved bucketed 8-ways on the join key, then
-    joined with broadcast disabled — the planner elides BOTH exchanges
-    (bucketing metadata proves co-partitioning; asserted on the plan
-    by tests/test_tableio_format.py). The 100 TB shape: pay one
-    shuffle at ingest for tables that are joined repeatedly, never
-    shuffle them again. Result hash-verified against the plain SQL
-    join."""
-    from .functions import textfns as X
-    from .sources.tableio import write_bucketed_table
-
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings").withColumnRenamed(
-        "vec_id", "doc_id"
-    )
-    write_bucketed_table(docs, "bj_documents", 8)
-    write_bucketed_table(emb, "bj_embeddings", 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = (
-            spark.table("bj_documents")
-            .join(spark.table("bj_embeddings"), "doc_id")
-            .select(
-                "doc_id",
-                "lang",
-                X.ws_token_count_col("text").cast("long").alias("n_tokens"),
-                F.round(similarity.norm_col(F.col("embedding")), 6).alias("emb_norm"),
-            )
-        )
-        # Planning (not execution) is what the no-broadcast conf gates:
-        # force the physical plan NOW and assert the co-location
-        # invariant in the gate itself — the bucketed join must elide
-        # every Exchange (the final orderBy's range exchange sits
-        # outside `joined`). VERDICT r4: the previous collect() here
-        # double-executed the query just to force planning. A raise,
-        # not an assert, so the check survives `python -O`; it matches
-        # ANY Exchange, since every exchange breaks co-location.
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan:
-            raise RuntimeError(f"bucketed join planned an Exchange:\n{plan}")
-        return joined.orderBy("doc_id")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 @_register(

@@ -11,11 +11,11 @@ self-join (with its optional document-frequency cap) for MinHash bands,
 n-gram shingles and winnowing fingerprints; ``_with_pair_sets`` joins
 per-doc sets onto both sides of a pair for the Jaccard and containment
 verifies; ``_shingle_sets`` builds the shingle arrays they verify
-against. SimHash and embedding pairs carry a payload through their
-join and keep their own.
+against. SimHash pairs carry a payload through their join and keep
+their own.
 
 Operators read the ``doc_id`` and ``text`` columns of the documents
-table (``vec_id`` and ``embedding`` of the embeddings table).
+table.
 """
 
 from __future__ import annotations
@@ -226,35 +226,6 @@ def winnow_containment_pairs(docs: DataFrame, k: int = 8,
         ).alias("containment"),
     )
     return out.filter(F.col("containment") >= threshold)
-
-
-def embedding_near_pairs(emb: DataFrame, planes,
-                         threshold: float = 0.5) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: random-hyperplane LSH
-    bucket as the candidate filter (vectors agreeing on every plane
-    sign), exact cosine ≥ threshold as the verify. Scale: the self-join
-    is on the bucket key — 2^planes buckets bound the fan-out; the
-    all-pairs work happens only inside buckets, never across the
-    corpus. Scores rounded to 6 dp for engine-exact oracle parity."""
-    from .similarity import _cosine, lsh_bucket_col
-
-    # bucket is a projected column — NOT a join back to the source: the
-    # corpus is scanned once per join side, no broadcast of itself.
-    withb = emb.select(
-        F.col("vec_id"), F.col("embedding"), lsh_bucket_col(planes).alias("bucket"),
-    )
-    a = withb.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), "bucket"
-    )
-    b = withb.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"), "bucket"
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", _cosine(F.col("va"), F.col("vb")).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
 
 
 def simhash_near_pairs(simhashes: DataFrame, max_hamming: int = 3,

@@ -247,24 +247,24 @@ def gen_conversation(seed: int, conv_id: str, n_turns: int) -> List[Dict]:
     return rows
 
 
-def turns_for(ci: int, seed: int = 42, zipf_s: float = 1.2, cap: int = 5000,
+def turns_for(ci: int, seed: int = 42, cap: int = 5000,
               mega: int = 1, mega_turns: int = 0) -> int:
     """Turn count for conversation index ``ci`` — pure function of
     (ci, seed), so any worker can compute it independently (this is
-    what lets bench.py generate the corpus distributed)."""
+    what lets bench.py generate the corpus distributed). Pareto shape
+    1.2, capped at ``cap``."""
     if ci < mega and mega_turns:
         return mega_turns
     rng = _conv_rng(seed, f"size:{ci}")
-    return min(cap, max(1, int(rng.paretovariate(zipf_s))))
+    return min(cap, max(1, int(rng.paretovariate(1.2))))
 
 
-def turn_counts(n_convs: int, seed: int = 42, zipf_s: float = 1.2,
-                cap: int = 5000, mega: int = 1, mega_turns: int = 0) -> List[int]:
+def turn_counts(n_convs: int, seed: int = 42, cap: int = 5000, mega: int = 1,
+                mega_turns: int = 0) -> List[int]:
     """Bounded-Pareto turn counts; the first ``mega`` conversations are
     forced to ``mega_turns`` (skew realism, SURVEY.md §7.3.4)."""
     return [
-        turns_for(ci, seed=seed, zipf_s=zipf_s, cap=cap, mega=mega,
-                  mega_turns=mega_turns)
+        turns_for(ci, seed=seed, cap=cap, mega=mega, mega_turns=mega_turns)
         for ci in range(n_convs)
     ]
 

@@ -76,7 +76,7 @@ def write_transcripts_parquet(spark: SparkSession, rows: Iterable[Dict], path: s
 
 def generate_transcripts_distributed(spark: SparkSession, n_convs: int,
                                      seed: int = 42, mega: int = 0,
-                                     mega_turns: int = 0, cap: int = 5000,
+                                     mega_turns: int = 0,
                                      partitions: int = 64) -> DataFrame:
     """Generate the synthetic transcript corpus *on the executors*:
     conversation generation is order-independent per conv_id (synth.py
@@ -92,8 +92,8 @@ def generate_transcripts_distributed(spark: SparkSession, n_convs: int,
         for pdf in pdfs:
             rows = []
             for ci in pdf["id"]:
-                n = synth.turns_for(int(ci), seed=seed, cap=cap,
-                                    mega=mega, mega_turns=mega_turns)
+                n = synth.turns_for(int(ci), seed=seed, mega=mega,
+                                    mega_turns=mega_turns)
                 rows.extend(synth.gen_conversation(seed, f"conv-{int(ci):06d}", n))
             if not rows:
                 continue
@@ -304,37 +304,3 @@ def read_audit(spark: SparkSession, path: str) -> Optional[DataFrame]:
 
 def append_audit(df: DataFrame, path: str) -> None:
     df.write.mode("append").format(table_format()).save(path)
-
-
-def write_bucketed_table(df: DataFrame, name: str, buckets: int,
-                         key: str = "doc_id") -> None:
-    """Write ``df`` as a BUCKETED table: rows hash-partitioned on
-    ``key`` into ``buckets`` files per partition at WRITE time, with
-    the bucketing recorded in the catalog. Equi-joins and aggregations
-    on ``key`` between tables bucketed the same way then run with
-    ZERO exchange — the co-located-join move for 100 TB tables that
-    are joined repeatedly (documents ⋈ embeddings by id: pay one
-    shuffle at ingest, never again). Iceberg's production equivalent
-    is the ``bucket(N, key)`` partition transform + storage-partitioned
-    joins; Spark's bucketBy requires saveAsTable (the catalog carries
-    the bucketing metadata the planner needs to elide the exchange).
-    Rows are also sorted within buckets so merge joins skip their sort.
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    # a FRESH session's in-memory catalog doesn't know about a prior
-    # run's managed-table directory, and saveAsTable refuses to adopt
-    # it (LOCATION_ALREADY_EXISTS) — clear the orphaned location too
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    loc = wh[len("file:"):] if wh.startswith("file:") else wh
-    if loc:
-        import shutil
-
-        shutil.rmtree(os.path.join(loc, name.lower()), ignore_errors=True)
-    (
-        df.write.mode("overwrite")
-        .format(table_format())
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(name)
-    )

@@ -4,9 +4,7 @@ the three extraction queries (one per recast of ``documents``), every
 query whose oracle splices in a shared rule fragment, and every query
 over the operators, column functions and stream builders
 (``operators/``, ``functions/``, ``streaming/``). A broken fragment,
-operator or kernel change fails here, not only in a manual gate run.
-``bucketed_join_doc_embeddings`` writes managed tables and is covered
-by tests/test_tableio_format.py instead."""
+operator or kernel change fails here, not only in a manual gate run."""
 
 import importlib.util
 import os
@@ -39,7 +37,6 @@ def _check_correctness():
         "quality_documents", "ngram_jaccard_pairs_documents",
         "near_dup_scale_path", "minhash_lsh_candidates",
         "winnow_containment_documents", "simhash_near_pairs_documents",
-        "dedup_embedding_near_pairs",
         "ann_cosine_topk", "ann_lsh_buckets", "ann_lsh_multiprobe_topk",
         "ann_lsh_multiprobe_recall", "ann_ivf_topk", "ann_ivf_recall",
         "ann_pq_adc_topk", "ann_ivf_pq_topk", "ann_ivf_pq_recall",
@@ -62,8 +59,6 @@ def _check_correctness():
         "x1_slugify_part", "x2_clamp_events",
         "ann_ivf_assignments", "ann_pq_codes", "kmeans_update_step",
         "curation_redact_pii", "asof_click_view_events",
-        "multimodal_image_features", "multimodal_frame_sample",
-        "multimodal_resize_images", "multimodal_audio_features",
     ],
 )
 def test_extraction_query_matches_its_oracle(spark, name):

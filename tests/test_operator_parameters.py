@@ -1,24 +1,13 @@
-"""Every defaulted parameter of a public operator, column function or
-stream builder must be set by some call in the repository. A parameter
-that no caller sets is an option nobody uses: it doubles the
-configurations a reader has to trust and has no test, so it belongs in
-the body as a constant."""
+"""Every defaulted parameter of a public function in the package must
+be set by some call in the repository. A parameter that no caller sets
+is an option nobody uses: it doubles the configurations a reader has
+to trust and has no test, so it belongs in the body as a constant."""
 
 import ast
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "ocr_engine_spark"
-# The extraction operators are the perf benchmark's surface and keep
-# their own signatures.
-NOT_SCANNED = {"extract.py", "salt.py", "audit.py"}
-
-
-def _scanned_modules():
-    for sub in ("operators", "functions", "streaming"):
-        for path in sorted((PKG / sub).glob("*.py")):
-            if path.name not in NOT_SCANNED:
-                yield path
 
 
 def _calls_by_name():
@@ -50,7 +39,7 @@ def _sets(call: ast.Call, pos, name: str) -> bool:
 def unset_parameters():
     calls = _calls_by_name()
     out = []
-    for path in _scanned_modules():
+    for path in sorted(PKG.rglob("*.py")):
         for fn in ast.parse(path.read_text(encoding="utf-8")).body:
             if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
                 continue

@@ -4,11 +4,14 @@ byte-equal per turn to the committed sequential-oracle fixtures. The
 table stores span offsets; the fixture diff reads spans through the
 derived FIXTURES.md §2 view (functions.columns.spans_with_text_col)."""
 
+import ast
 import glob
 import json
 import os
 import re
 import shutil
+import subprocess
+import sys
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
@@ -24,6 +27,7 @@ from ocr_engine_spark.sources.synth import pdf_payload
 from ocr_engine_spark.sources.tableio import AUDIT_SCHEMA, read_transcripts
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden_tiny.jsonl")
+JOB = os.path.join(os.path.dirname(__file__), "..", "jobs", "extract.py")
 
 
 def collect_results(df):
@@ -300,3 +304,34 @@ def test_each_bucket_in_one_task_and_no_empty_task(spark, tiny_transcripts):
         assert set(pids_of) == set(range(16)) - set(done or [])
         used = {r["pid"] for r in placed}
         assert used == set(range(len(used))), sorted(used)
+
+
+def test_extract_job_entry_point_writes_and_resumes(spark, tiny_transcripts, tmp_path):
+    """jobs/extract.py as a subprocess from a cwd outside the repo and
+    with no PYTHONPATH: its Python workers find the package only
+    through the PYTHONPATH the job exports. The first run processes
+    every bucket and writes build_extracted's rows; an identical second
+    run skips every bucket and appends no audit row."""
+    out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "2g"
+    cmd = [sys.executable, os.path.abspath(JOB), "--input", tiny_transcripts,
+           "--output", out, "--audit", audit, "--buckets", "4", "--master", "local[2]"]
+
+    def run_job():
+        proc = subprocess.run(cmd, cwd=str(tmp_path), env=env, capture_output=True,
+                              text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        return ast.literal_eval(proc.stdout.strip().splitlines()[-1])
+
+    stats1 = run_job()
+    assert (stats1["buckets_processed"], stats1["resumed_buckets_skipped"]) == (4, 0)
+    cols = ["conv_id", "turn_idx", "extracted_text"]
+    want = build_extracted(read_transcripts(spark, tiny_transcripts), 4, 4).select(cols)
+    got = spark.read.parquet(out).select(cols)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    stats2 = run_job()
+    assert (stats2["buckets_processed"], stats2["resumed_buckets_skipped"]) == (0, 4)
+    assert stats2["run_id"] == stats1["run_id"]
+    assert spark.read.parquet(audit).where(F.col("run_id") == stats1["run_id"]).count() == 4
