@@ -202,11 +202,6 @@ COVERAGE_SF_DIR = os.environ.get(
 HEADLINE = [
     "flagship_extract",
     "p1_payload_kind",
-    "x1_slugify_part",
-    "a5_keep_longer_orders",
-    "a2_ordered_concat_lineitem",
-    "o2_row_number_events",
-    "f6_json_probe_events",
     "tokens_documents",
     "quality_documents",
     "fingerprint_documents",
@@ -217,8 +212,6 @@ HEADLINE = [
     "ngram_jaccard_pairs_documents",
     "ann_cosine_topk",
     "ann_lsh_buckets",
-    "a6_prompt_assembly_documents",
-    "a3_gap_fill_lineitem",
     "minhash_lsh_candidates",
     "winnow_fingerprints_documents",
     "ann_ivf_assignments",
@@ -236,7 +229,6 @@ HEADLINE = [
     "kmeans_update_step",
     "asof_click_view_events",
     "session_stats_events",
-    "tpch_q1_pricing_summary",
     # round-5: the three-tier composition (extraction → audit rollup →
     # as-of → sessionization) — the flagship story end-to-end
     "flagship_sessions_asof",

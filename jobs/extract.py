@@ -10,11 +10,15 @@ Locally: ``python jobs/extract.py --input ... --output ...``.
 Resume: re-run the same command after a failure — completed buckets
 (per the audit table) are skipped, incomplete ones are overwritten
 idempotently.
+
+The job prints its run stats as one JSON line on stdout (``run_id``,
+``resumed_buckets_skipped``, ``buckets_processed``, ``wall_sec``).
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -62,7 +66,7 @@ def main(argv=None) -> int:
         ),
     )
     stats["wall_sec"] = round(time.time() - t0, 3)
-    print(stats)
+    print(json.dumps(stats))
     return 0
 
 

@@ -3,10 +3,11 @@
 
 Each entry pairs a Spark callable ``(spark, sf_dir) -> DataFrame`` with
 an ANSI/DuckDB oracle SQL string over the driver's pre-registered
-views (``documents events lineitem orders part ...``). Column names
-and types are aligned on both sides (the driver hashes values after
-sorting columns by name). Doubles are rounded to 6 dp on both sides;
-hashes are md5-derived so the engines agree bit-for-bit.
+views; the catalog reads only ``documents``, ``events`` and
+``embeddings``. Column names and types are aligned on both sides (the
+driver hashes values after sorting columns by name). Doubles are
+rounded to 6 dp on both sides; hashes are md5-derived so the engines
+agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -499,46 +500,7 @@ def q_field_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- scalar kernels (§2.8)
-
-@_register(
-    "x1_slugify_part",
-    oracle="""
-SELECT p_partkey,
-       substr(
-         CASE WHEN s = '' THEN 'field' ELSE s END, 1, 80) AS slug
-FROM (
-  SELECT p_partkey,
-         regexp_replace(regexp_replace(lower(trim(p_name)), '[^a-z0-9]+', '_', 'g'),
-                        '^_+|_+$', '', 'g') AS s
-  FROM part)
-ORDER BY p_partkey
-""",
-)
-def q_slugify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "part")
-        .select("p_partkey", slugify_col("p_name").alias("slug"))
-        .orderBy("p_partkey")
-    )
-
-
-@_register(
-    "x2_clamp_events",
-    oracle="""
-SELECT event_id,
-       CASE WHEN v < 0 THEN 0.0::DOUBLE WHEN v > 1 THEN 1.0::DOUBLE ELSE v END AS conf
-FROM (SELECT event_id, value / 25.0 - 0.2 AS v FROM events)
-ORDER BY event_id
-""",
-)
-def q_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        clamp_conf_col(F.col("value") / 25.0 - 0.2).alias("conf"),
-    ).orderBy("event_id")
-
+# ------------------------------------------- predicates (§2.2)
 
 @_register(
     "p1_payload_kind",
@@ -558,119 +520,6 @@ def q_payload_kind(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         "conv_id", payload_kind_col("role", "text").alias("kind")
     ).orderBy("conv_id")
-
-
-# ------------------------------------------- folds / merges / windows
-
-@_register(
-    "a5_keep_longer_orders",
-    oracle="""
-SELECT o_custkey, v AS best_value
-FROM (
-  SELECT o_custkey, o_orderpriority || '#' || o_orderkey AS v,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY length(o_orderpriority || '#' || o_orderkey) DESC,
-                                     o_orderkey ASC) AS rn
-  FROM orders)
-WHERE rn = 1
-ORDER BY o_custkey
-""",
-)
-def q_keep_longer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """merge_keep_longer as a native reduce (SURVEY.md §2.5 A5,
-    /root/reference/ocr_any.py:229-235): strictly-longer wins, ties →
-    first arrival (lowest orderkey) — via max_by over
-    (length, -arrival_seq). Length variance comes from priority-string
-    and orderkey digit lengths, so ties are plentiful and the
-    first-wins tiebreak is genuinely exercised."""
-    orders = _t(spark, sf_dir, "orders")
-    v = F.concat_ws("#", F.col("o_orderpriority"), F.col("o_orderkey"))
-    return (
-        orders.select("o_custkey", v.alias("v"), "o_orderkey")
-        .groupBy("o_custkey")
-        .agg(
-            F.expr("max_by(v, struct(length(v), -o_orderkey))").alias("best_value")
-        )
-        .orderBy("o_custkey")
-    )
-
-
-@_register(
-    "a2_ordered_concat_lineitem",
-    oracle="""
-SELECT l_orderkey,
-       string_agg(item, chr(10) ORDER BY l_linenumber, item) AS doc
-FROM (
-  SELECT l_orderkey, l_linenumber,
-         l_returnflag || l_linestatus || ':' || floor(l_quantity)::BIGINT AS item
-  FROM lineitem)
-GROUP BY l_orderkey
-ORDER BY l_orderkey
-""",
-)
-def q_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered per-group concat (SURVEY.md §2.5 A2): collect structs,
-    array_sort (deterministic — no collect_list order reliance), then
-    join. Partial aggregation applies; no window needed."""
-    li = _t(spark, sf_dir, "lineitem")
-    item = F.concat(
-        F.col("l_returnflag"), F.col("l_linestatus"), F.lit(":"),
-        F.floor("l_quantity").cast("string"),
-    )
-    return (
-        li.select("l_orderkey", "l_linenumber", item.alias("item"))
-        .groupBy("l_orderkey")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("l_linenumber", "item"))),
-                    lambda x: x["item"],
-                ),
-                "\n",
-            ).alias("doc")
-        )
-        .orderBy("l_orderkey")
-    )
-
-
-@_register(
-    "o2_row_number_events",
-    oracle="""
-SELECT event_id, user_id,
-       cast(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) AS rn
-FROM events
-ORDER BY event_id
-""",
-)
-def q_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id", "user_id", F.row_number().over(w).cast("long").alias("rn")
-    ).orderBy("event_id")
-
-
-@_register(
-    "f6_json_probe_events",
-    oracle="""
-SELECT event_id,
-       try_cast(json_extract_string(nullif(regexp_extract(props, '(?s)\\{.*\\}', 0), ''), '$.k')
-                AS BIGINT) AS k
-FROM events
-ORDER BY event_id
-""",
-)
-def q_json_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first_json_object semantics natively (SURVEY.md §2.3 F6): first
-    DOTALL {.*} match, then JSON field get; parse failure → null."""
-    ev = _t(spark, sf_dir, "events")
-    probed = F.regexp_extract(F.col("props"), r"(?s)\{.*\}", 0)
-    return ev.select(
-        "event_id",
-        F.get_json_object(probed, "$.k").cast("long").alias("k"),
-    ).orderBy("event_id")
 
 
 @_register(
@@ -1179,84 +1028,6 @@ def q_ann_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "a6_prompt_assembly_documents",
-    oracle="""
-SELECT doc_id,
-       CASE WHEN len(blocks) = 0 THEN 'Page 1:' || chr(10)
-            ELSE array_to_string(blocks, chr(10) || chr(10) || '---' || chr(10) || chr(10))
-       END AS prompt
-FROM (
-  SELECT doc_id,
-         list_filter(
-           list_transform(generate_series(1, len(ls)),
-                          i -> CASE WHEN trim(ls[i]) <> ''
-                               THEN 'Page ' || i || ':' || chr(10) || trim(ls[i]) END),
-           x -> x IS NOT NULL) AS blocks
-  FROM (SELECT doc_id, string_split(coalesce(text, ''), chr(10)) AS ls FROM documents))
-ORDER BY doc_id
-""",
-)
-def q_prompt_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpretation-prompt assembly (SURVEY.md §2.5 A6, reference
-    app.py:543-566): non-blank lines become "Page N:\\n<line>" blocks
-    joined by "\\n\\n---\\n\\n", with the reference's "Page 1:\\n"
-    fallback for blank docs. Pure projection — zip_with over the line
-    array, zero shuffle."""
-    docs = _t(spark, sf_dir, "documents")
-    lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n", -1)
-    idx = F.sequence(F.lit(1), F.size(lines))
-    blocks = F.filter(
-        F.zip_with(
-            lines, idx,
-            lambda l, i: F.when(
-                F.trim(l) != "",
-                F.concat(F.lit("Page "), i.cast("string"), F.lit(":\n"), F.trim(l)),
-            ),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    prompt = F.when(F.size(blocks) == 0, F.lit("Page 1:\n")).otherwise(
-        F.array_join(blocks, "\n\n---\n\n")
-    )
-    return docs.select("doc_id", prompt.alias("prompt")).orderBy("doc_id")
-
-
-@_register(
-    "x4_fields_parse_orders",
-    oracle="""
-SELECT o_orderkey,
-       len(fs)::BIGINT AS n_fields,
-       fs[1]  AS first_field,
-       fs[-1] AS last_field
-FROM (
-  SELECT o_orderkey,
-         list_filter(string_split_regex(lower(coalesce(o_orderpriority, '')), '[-,;\\s]+'),
-                     x -> x <> '') AS fs
-  FROM orders)
-ORDER BY o_orderkey
-""",
-)
-def q_fields_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fields_to_extract parsing (SURVEY.md §2.8 X3/X4, reference
-    app.py:689-716): split on separator runs, lowercase, drop
-    empties."""
-    orders = _t(spark, sf_dir, "orders")
-    fs = F.filter(
-        F.split(F.lower(F.coalesce(F.col("o_orderpriority"), F.lit(""))), r"[-,;\s]+"),
-        lambda x: x != "",
-    )
-    # try_element_at: under ANSI mode element_at throws
-    # INVALID_ARRAY_INDEX on an all-separator/empty priority string,
-    # where the oracle's fs[1]/fs[-1] return NULL (ADVICE r1).
-    return orders.select(
-        "o_orderkey",
-        F.size(fs).cast("long").alias("n_fields"),
-        F.try_element_at(fs, F.lit(1)).alias("first_field"),
-        F.try_element_at(fs, F.lit(-1)).alias("last_field"),
-    ).orderBy("o_orderkey")
-
-
-@_register(
     "p8_devanagari_documents",
     oracle="""
 SELECT doc_id, regexp_matches(coalesce(text, ''), '[ऀ-ॿ]') AS has_devanagari
@@ -1274,54 +1045,6 @@ def q_devanagari(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", has_devanagari_col("text").alias("has_devanagari"))
         .orderBy("doc_id")
     )
-
-
-@_register(
-    "a3_gap_fill_lineitem",
-    oracle="""
-SELECT l_orderkey, idx AS line_no,
-       coalesce(max(CASE WHEN l_linenumber = idx THEN l_returnflag || l_linestatus END), '') AS page_text
-FROM lineitem,
-     LATERAL (SELECT unnest(generate_series(1, (SELECT max(l_linenumber)
-                                                FROM lineitem li2
-                                                WHERE li2.l_orderkey = lineitem.l_orderkey))) AS idx)
-GROUP BY l_orderkey, idx
-ORDER BY l_orderkey, line_no
-""",
-)
-def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense page relabel + gap fill (SURVEY.md §2.5 A3, reference
-    app.py:453-459): emit positions 1..max per group, missing → ''.
-    Shape: one partial-aggregating groupBy builds (max, pos→text map)
-    per group, then sequence+transform explodes the dense range — no
-    window, no second shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    # line numbers may repeat per order in this synthetic tier: resolve
-    # to max(value) per (order, line) first — same rule as the oracle's
-    # max(CASE ...) — so the map build sees unique keys.
-    per_line = li.groupBy("l_orderkey", "l_linenumber").agg(
-        F.max(F.concat(F.col("l_returnflag"), F.col("l_linestatus"))).alias("v")
-    )
-    per_order = per_line.groupBy("l_orderkey").agg(
-        F.max("l_linenumber").alias("max_ln"),
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("l_linenumber"), F.col("v")))
-        ).alias("m"),
-    )
-    dense = per_order.select(
-        "l_orderkey",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.col("max_ln")),
-                lambda i: F.coalesce(F.try_element_at("m", i), F.lit("")),
-            )
-        ).alias("pos0", "page_text"),
-    )
-    return dense.select(
-        "l_orderkey",
-        (F.col("pos0") + 1).cast("long").alias("line_no"),
-        "page_text",
-    ).orderBy("l_orderkey", "line_no")
 
 
 # Winnowing fingerprint rows as a reusable CTE body (k=8, window=4).
@@ -2262,304 +1985,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "complete",
     ).orderBy("user_id", "start_us")
-
-
-# --------------------------------------------- TPC-H classics + JSON
-
-# Money math is done in DECIMAL so both engines accumulate EXACTLY and
-# the value hash is meaningful — double sums over 60k rows diverge in
-# the last digits between summation orders. Final values convert to
-# double only after the exact sum (2-decimal totals < 2^53 are exact
-# doubles), and averages are derived sum/count, rounded 6.
-_D = "DECIMAL(18,2)"
-
-_TPCH_Q1_ORACLE = f"""
-SELECT l_returnflag, l_linestatus,
-       (sum(l_quantity::{_D}))::DOUBLE AS sum_qty,
-       (sum(l_extendedprice::{_D}))::DOUBLE AS sum_base_price,
-       (sum(l_extendedprice::{_D} * (1 - l_discount::{_D})))::DOUBLE
-         AS sum_disc_price,
-       (sum(l_extendedprice::{_D} * (1 - l_discount::{_D})
-            * (1 + l_tax::{_D})))::DOUBLE AS sum_charge,
-       round((sum(l_quantity::{_D}))::DOUBLE / count(*), 6) AS avg_qty,
-       round((sum(l_extendedprice::{_D}))::DOUBLE / count(*), 6) AS avg_price,
-       round((sum(l_discount::{_D}))::DOUBLE / count(*), 6) AS avg_disc,
-       count(*)::BIGINT AS count_order
-FROM lineitem
-WHERE l_shipdate <= timestamp '2000-12-01'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-@_register("tpch_q1_pricing_summary", oracle=_TPCH_Q1_ORACLE)
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 (pricing summary report) over the driver's lineitem:
-    one scan with the shipdate filter PUSHED to parquet, one
-    partial-aggregated exchange carrying 4 decimal sums + a count per
-    (returnflag, linestatus). Money sums are decimal-exact (see module
-    comment) — the whole-stage-codegen aggregate of a columnar scan,
-    the canonical OLAP plan."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")
-    )
-    d = lambda c: F.col(c).cast(_D)  # noqa: E731
-    g = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(d("l_quantity")).alias("_sq"),
-        F.sum(d("l_extendedprice")).alias("_sbp"),
-        F.sum(d("l_extendedprice") * (F.lit(1) - d("l_discount"))).alias("_sdp"),
-        F.sum(
-            d("l_extendedprice") * (F.lit(1) - d("l_discount"))
-            * (F.lit(1) + d("l_tax"))
-        ).alias("_sc"),
-        F.sum(d("l_discount")).alias("_sd"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-    return g.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.col("_sq").cast("double").alias("sum_qty"),
-        F.col("_sbp").cast("double").alias("sum_base_price"),
-        F.col("_sdp").cast("double").alias("sum_disc_price"),
-        F.col("_sc").cast("double").alias("sum_charge"),
-        F.round(F.col("_sq").cast("double") / F.col("count_order"), 6).alias("avg_qty"),
-        F.round(F.col("_sbp").cast("double") / F.col("count_order"), 6).alias("avg_price"),
-        F.round(F.col("_sd").cast("double") / F.col("count_order"), 6).alias("avg_disc"),
-        "count_order",
-    ).orderBy("l_returnflag", "l_linestatus")
-
-
-_TPCH_Q3_ORACLE = f"""
-SELECT l.l_orderkey,
-       (sum(l.l_extendedprice::{_D} * (1 - l.l_discount::{_D})))::DOUBLE
-         AS revenue,
-       o.o_orderdate::DATE::VARCHAR AS o_orderdate,
-       o.o_orderpriority
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < timestamp '1998-06-01'
-  AND l.l_shipdate > timestamp '1998-06-01'
-GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-ORDER BY revenue DESC, o_orderdate, l_orderkey
-LIMIT 10
-"""
-
-
-@_register("tpch_q3_shipping_priority", oracle=_TPCH_Q3_ORACLE)
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 (shipping priority, adapted to the driver's schema:
-    o_orderpriority stands in for o_shippriority): selective dimension
-    filters pushed to both scans, customer side BROADCAST into orders,
-    the join result partially aggregated before the top-10 TakeOrdered.
-    Revenue is decimal-exact."""
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp")
-    )
-    d = lambda c: F.col(c).cast(_D)  # noqa: E731
-    j = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
-    )
-    return (
-        j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(d("l_extendedprice") * (F.lit(1) - d("l_discount")))
-            .cast("double")
-            .alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format(F.col("o_orderdate").cast("timestamp"), "yyyy-MM-dd")
-            .alias("o_orderdate"),
-            "o_orderpriority",
-        )
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-@_register(
-    "json_props_extract_events",
-    oracle="""
-SELECT event_type,
-       count(*)::BIGINT AS n,
-       sum(CASE WHEN json_extract_string(props, '$.k')::INT > 50
-                THEN 1 ELSE 0 END)::BIGINT AS k_over_50,
-       round(avg(json_extract_string(props, '$.k')::INT), 6) AS k_avg
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-""",
-)
-def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured column handling: the events.props JSON string
-    queried with a JSON path (native get_json_object — JVM-side
-    Jackson, no UDF), aggregated per event type. At 100 TB the move is
-    identical — JSON path extraction is a scan-side projection;
-    repeated heavy access argues for materializing the field as a
-    typed column at ingest (schema evolution, not a different plan)."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((k > 50).cast("long")).alias("k_over_50"),
-            F.round(F.avg(k), 6).alias("k_avg"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# ---------------------------------------- relational-surface queries
-
-@_register(
-    "rollup_docs_lang_source",
-    oracle="""
-SELECT coalesce(lang, '(all)') AS lang,
-       coalesce(source, '(all)') AS source,
-       count(*)::BIGINT AS n_docs,
-       sum(n_chars)::BIGINT AS chars
-FROM documents
-GROUP BY ROLLUP (lang, source)
-ORDER BY lang, source
-""",
-)
-def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical corpus report via ROLLUP — (lang, source), per-lang
-    subtotals, grand total in ONE pass: Spark expands the grouping
-    sets inside a single partial-aggregated exchange rather than
-    unioning three scans."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.rollup("lang", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("chars"),
-        )
-        .select(
-            F.coalesce("lang", F.lit("(all)")).alias("lang"),
-            F.coalesce("source", F.lit("(all)")).alias("source"),
-            "n_docs",
-            "chars",
-        )
-        .orderBy("lang", "source")
-    )
-
-
-_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-@_register(
-    "pivot_user_event_counts",
-    oracle=f"""
-SELECT user_id,
-       {", ".join(
-           f"sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)::BIGINT AS n_{t}"
-           for t in _EVENT_TYPES)}
-FROM events
-GROUP BY user_id
-ORDER BY user_id
-""",
-)
-def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event-type pivot. The pivot values are DECLARED (the
-    five known types), so Spark skips the extra distinct-values scan
-    and plans one partial-aggregated exchange — at 100 TB an undeclared
-    pivot would scan twice."""
-    ev = _t(spark, sf_dir, "events")
-    out = (
-        ev.groupBy("user_id")
-        .pivot("event_type", list(_EVENT_TYPES))
-        .agg(F.count(F.lit(1)))
-    )
-    return out.select(
-        "user_id",
-        *[
-            F.coalesce(F.col(t), F.lit(0)).cast("long").alias(f"n_{t}")
-            for t in _EVENT_TYPES
-        ],
-    ).orderBy("user_id")
-
-
-@_register(
-    "percentiles_by_event_type",
-    oracle="""
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 6) AS p50,
-       round(quantile_cont(value, 0.95), 6) AS p95,
-       round(quantile_cont(value, 0.99), 6) AS p99
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-""",
-)
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles per group (Spark ``percentile``
-    ≡ DuckDB ``quantile_cont``). Exact percentile buffers the group's
-    values — the scale path is ``approx_percentile`` (t-digest-style
-    mergeable sketch, pytest-pinned vs a rank-error bound below)
-    whose result is NOT engine-portable, so the exact form carries
-    the oracle."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-            F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
-            F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-        )
-        .orderBy("event_type")
-    )
-
-
-@_register(
-    "ntile_quality_chunks",
-    oracle="""
-SELECT chunk, count(*)::BIGINT AS n_docs,
-       min(doc_id)::BIGINT AS min_id, max(doc_id)::BIGINT AS max_id
-FROM (
-  SELECT doc_id, ntile(16) OVER (ORDER BY doc_id) AS chunk
-  FROM documents)
-GROUP BY chunk
-ORDER BY chunk
-""",
-)
-def q_ntile_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balanced 16-way chunking via ntile — the pre-sharding move for
-    equal-size work units. The global-order window is the documented
-    anti-pattern at scale; the scale path is
-    ``curation.shuffle_permutation``'s bucketed enumeration (then
-    ``chunk = (pos - 1) * 16 / rows``), which this query's output
-    shape matches — the oracle pins the semantics the scale path must
-    reproduce."""
-    docs = _t(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    chunked = docs.select(
-        "doc_id",
-        F.ntile(16).over(Window.orderBy("doc_id")).alias("chunk"),
-    )
-    return (
-        chunked.groupBy("chunk")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
-        )
-        .orderBy("chunk")
-    )
 
 
 # ------------------------------- kmeans / vocab / PII / stream dedup

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Dict
+from typing import Any
 
 # ASCII whitespace used for *deterministic* trimming. Python's bare
 # str.strip() trims unicode whitespace, which native Spark expressions
@@ -50,21 +50,6 @@ def clamp_conf(x: Any) -> float:
     # NOTE: NaN parses and falls through both comparisons, so NaN is
     # returned as-is — matching the reference exactly.
     return 0.0 if v < 0 else 1.0 if v > 1 else v
-
-
-def merge_keep_longer(dst: Dict, src: Dict) -> Dict:
-    """Per-key keep-longer merge. Parity: reference
-    ``merge_keep_longer`` (/root/reference/ocr_any.py:229-235): falsy
-    source values never overwrite; replacement only on *strictly*
-    longer ``str()`` rendering — i.e. first-wins on ties, arrival
-    order significant. Mutates and returns ``dst``.
-    """
-    for k, v in (src or {}).items():
-        if not v:
-            continue
-        if k not in dst or len(str(v)) > len(str(dst.get(k, ""))):
-            dst[k] = v
-    return dst
 
 
 def to_min_json(obj: Any) -> str:

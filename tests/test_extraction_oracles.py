@@ -56,7 +56,6 @@ def _check_correctness():
         "winnow_fingerprints_documents", "vocab_pair_counts",
         "exact_substring_dedup_documents", "p8_devanagari_documents",
         "p2_word_filter_documents", "field_record_documents",
-        "x1_slugify_part", "x2_clamp_events",
         "ann_ivf_assignments", "ann_pq_codes", "kmeans_update_step",
         "curation_redact_pii", "asof_click_view_events",
     ],

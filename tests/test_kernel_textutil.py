@@ -1,4 +1,4 @@
-"""Unit tests: slugify / clamp / keep-longer / JSON probe / flatten
+"""Unit tests: slugify / clamp / JSON probe / flatten
 (SURVEY.md §5.2.3 edge-case list)."""
 
 import math
@@ -52,28 +52,6 @@ def test_clamp_unparseable_is_half():
 def test_clamp_nan_passthrough():
     # parity quirk: NaN parses and survives both comparisons
     assert math.isnan(T.clamp_conf(float("nan")))
-
-
-# ---- merge_keep_longer (/root/reference/ocr_any.py:229-235) ----
-
-def test_keep_longer_strictly_greater():
-    dst = {"k": "abc"}
-    T.merge_keep_longer(dst, {"k": "xyz"})  # same length → first wins
-    assert dst["k"] == "abc"
-    T.merge_keep_longer(dst, {"k": "wxyz"})  # longer → replaced
-    assert dst["k"] == "wxyz"
-
-
-def test_keep_longer_falsy_never_overwrites():
-    dst = {"k": "abc"}
-    T.merge_keep_longer(dst, {"k": "", "j": 0, "i": None})
-    assert dst == {"k": "abc"}
-
-
-def test_keep_longer_str_rendering_length():
-    dst = {"k": 5}
-    T.merge_keep_longer(dst, {"k": 123})  # len("123") > len("5")
-    assert dst["k"] == 123
 
 
 # ---- minified JSON (X5 fixture-exact) ----

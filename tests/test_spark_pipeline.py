@@ -4,7 +4,6 @@ byte-equal per turn to the committed sequential-oracle fixtures. The
 table stores span offsets; the fixture diff reads spans through the
 derived FIXTURES.md §2 view (functions.columns.spans_with_text_col)."""
 
-import ast
 import glob
 import json
 import os
@@ -311,7 +310,8 @@ def test_extract_job_entry_point_writes_and_resumes(spark, tiny_transcripts, tmp
     with no PYTHONPATH: its Python workers find the package only
     through the PYTHONPATH the job exports. The first run processes
     every bucket and writes build_extracted's rows; an identical second
-    run skips every bucket and appends no audit row."""
+    run skips every bucket and appends no audit row. Each run's last
+    stdout line is its stats as JSON."""
     out, audit = str(tmp_path / "out"), str(tmp_path / "audit")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEMORY"] = "2g"
@@ -322,7 +322,7 @@ def test_extract_job_entry_point_writes_and_resumes(spark, tiny_transcripts, tmp
         proc = subprocess.run(cmd, cwd=str(tmp_path), env=env, capture_output=True,
                               text=True, timeout=600)
         assert proc.returncode == 0, proc.stderr[-4000:]
-        return ast.literal_eval(proc.stdout.strip().splitlines()[-1])
+        return json.loads(proc.stdout.strip().splitlines()[-1])
 
     stats1 = run_job()
     assert (stats1["buckets_processed"], stats1["resumed_buckets_skipped"]) == (4, 0)
